@@ -43,6 +43,24 @@ object Bench {
     "dedup_edit_incremental" -> 5.0,
     "q_bucket_join" -> 18.0, "q_incremental_agg" -> 5.5)
 
+  /** A JSON number with ms precision, or `null` for a non-finite value.
+    * Fixed formatting keeps the line compact (full double toString made
+    * it ~9 KB, past bounded stdout captures), and `Locale.ROOT` keeps the
+    * decimal point a point under any JVM default locale. */
+  def fmt(v: Double): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The NUMERIC scale factor of a data dir, for the JSON `"sf"` field:
+    * the number after `sf` in the dir's own name (`/data/sf2/sf0.1` is
+    * 0.1, `/tmp/graft_sf1` is 1), with a leading digit required so it
+    * is a valid JSON number; `null` when the name carries none. The dir
+    * rides separately under `"sf_dir"`. */
+  def sfOf(dir: String): String =
+    Option(Paths.get(dir).getFileName)
+      .flatMap(name => "sf([0-9]+(?:\\.[0-9]+)?)".r.findFirstMatchIn(name.toString))
+      .map(_.group(1)).getOrElse("null")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -104,8 +122,10 @@ object Bench {
     val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_RUNS", "9").toInt
       .max(passes)
     val targetSpread = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPREAD", "0.15").toDouble
+    // undefined (fewer than two passes, or a zero total) is +Inf: it
+    // keeps the loop running and is emitted as null
     def spreadOf(ts: Seq[Double]): Double =
-      if (ts.size < 2 || ts.min <= 0) Double.MaxValue
+      if (ts.size < 2 || ts.min <= 0) Double.PositiveInfinity
       else (ts.max - ts.min) / ts.min
     // pass i order: even = forward, odd = reverse — position-in-run bias
     // shows up as a forward/reverse total gap rather than silently
@@ -128,13 +148,6 @@ object Bench {
       s((s.size - 1) / 2)
     }
     val results = names.map(n => n -> median(window.map(_(n))))
-    // ms-precision fixed formatting: full double toString made the line
-    // ~9 KB; a compact line survives bounded stdout captures (every
-    // driver BENCH artifact through r13 shows `parsed: null` with a
-    // 2000-char tail — the line must be as short as the registry allows)
-    def fmt(v: Double): String =
-      if (v.isNaN || v.isInfinite || v == Double.MaxValue) "-1.000"
-      else f"$v%.3f"
     def obj(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -143,13 +156,8 @@ object Bench {
     }
     val setupJson = (if (setup.isEmpty) "" else s""","setup":${obj(setup)}""") +
       (if (setupOver.isEmpty) "" else s""","setup_over_budget":${obj(setupOver)}""")
-    // "sf" is the NUMERIC scale factor (r14 measurement fix: it was the
-    // dir path string through r13, which fails any float(sf) validation
-    // a driver applies); the dir rides separately under "sf_dir".
-    val sfNum = "sf([0-9]*\\.?[0-9]+)".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse("0")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(results)},"sf":$sfNum,"sf_dir":"$sfDir","stat":"median_of_$passes","orders":${obj(orders)},"spread":${fmt(windowSpread)},"passes_run":$i$setupJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(results)},"sf":${sfOf(sfDir)},"sf_dir":"$sfDir","stat":"median_of_$passes","orders":${obj(orders)},"spread":${fmt(windowSpread)},"passes_run":$i$setupJson}"""
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     try Files.writeString(Paths.get(outPath), line + "\n")

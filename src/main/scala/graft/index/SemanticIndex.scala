@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -165,24 +165,26 @@ final class SemanticIndex private (
 
   /**
    * Batch search: every query in `queries` (query_id, embedding) gets
-   * its top-k from ONE shared scan of the records — the query batch is
-   * broadcast, the corpus never shuffles, and per-query top-k is a
-   * rank window over #queries × #records scored rows. For q queries
-   * this replaces q corpus passes with one.
+   * its top-k from ONE shared scan of the records, in one fused pass:
+   * each record's embedding is decoded once and scored against all q
+   * queries, and each query keeps a bounded k-heap ranked like
+   * [[search]] ([[graft.functions.SearchManyTopK]]). A task therefore
+   * emits at most q×k rows however many records it reads, the corpus
+   * never shuffles, and a single small merge assigns `rank` 1..k. For
+   * q queries this replaces q corpus passes with one.
+   *
+   * The query batch is COLLECTED to the driver when `searchMany` is
+   * called (it is a constant of the returned plan), so it must stay
+   * broadcast-sized; the records side stays lazy. Rows that repeat a
+   * `query_id` share one top-k under that id. Output: `query_id` (its
+   * input type), `item`, `score`, `rank`.
    */
   def searchMany(queries: DataFrame, k: Int = 10): DataFrame = {
-    registerAll(spark)
-    val qCols = queries.columns
-    val q = queries.select(col(qCols(0)).as("query_id"), col(qCols(1)).as("qvec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(ITEM))
-    records
-      .crossJoin(org.apache.spark.sql.functions.broadcast(q))
-      .select(col("query_id"), col(ITEM),
-        vec_dot(col(EMBEDDING), col("qvec")).as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    registerAll(spark) // like every search entry point: graft's SQL functions stay callable
+    val top = SearchManyTopK(GraftSqlBridge.expression(col(ITEM)),
+      GraftSqlBridge.expression(col(EMBEDDING)), QueryBatch.collect(queries), k)
+    records.agg(GraftSqlBridge.column(top.toAggregateExpression()).as("hits"))
+      .select(inline(col("hits")))
   }
 
   /** Text-query search (reference `SearchAsync(query, count)`):

@@ -157,6 +157,10 @@ class DedupSpec extends SparkSpec {
 
   test("dedupCosine setup runs ONE driver action: mean and band sizing share a pass") {
     graft.functions.registerAll(spark)
+    // listener events arrive asynchronously: drain the bus before the
+    // counter is registered, read or reset, so it counts exactly the
+    // executions in between and none left over from earlier work
+    def drain(): Unit = org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     @volatile var execs = 0
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
@@ -165,6 +169,7 @@ class DedupSpec extends SparkSpec {
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
+    drain()
     spark.listenerManager.register(ql)
     try {
       // building the query runs the setup aggregation eagerly; a
@@ -175,7 +180,7 @@ class DedupSpec extends SparkSpec {
       // executions — the pin is "at most one", plus "exactly one" on a
       // corpus frame this session has never metered
       DedupQueries.dedupCosine(spark, sfDir)
-      Thread.sleep(1000) // let a hypothetical second execution surface
+      drain()
       assert(execs <= 1, s"setup must be at most one scan of the corpus, saw $execs executions")
       execs = 0
       // a FRESH corpus plan (distinct filter) cannot hit the memo: the
@@ -187,9 +192,7 @@ class DedupSpec extends SparkSpec {
           graft.functions.hash_embed(col("text"), 64).as("embedding"))
       DedupQueries.cosinePairs(fresh, "vec_id", "embedding", 0.95,
         bands = 16, dim = 64, minAutoBits = 12)
-      val deadline = System.currentTimeMillis + 10000
-      while (System.currentTimeMillis < deadline && execs < 1) Thread.sleep(50)
-      Thread.sleep(1000)
+      drain()
       assert(execs == 1, s"cold setup must be one scan of the corpus, saw $execs executions")
     } finally spark.listenerManager.unregister(ql)
   }

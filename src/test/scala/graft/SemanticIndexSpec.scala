@@ -250,4 +250,159 @@ class SemanticIndexSpec extends SparkSpec {
       assert(i >= 0 && e > i, s"field order drifted in $r")
     }
   }
+
+  // ---------------------------------------------------------------------
+  // searchMany ≡ one search per query (bit-equal ordered (item, score))
+  // ---------------------------------------------------------------------
+
+  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.types._
+
+  private val vecType = ArrayType(FloatType)
+
+  /** An index over explicit (item, embedding) rows, spread over three
+    * partitions so the partial heaps are serialized and merged. */
+  private def vecIndex(itemType: DataType, rows: (Any, Array[Float])*): SemanticIndex = {
+    val schema = StructType(Seq(StructField("item", itemType), StructField("embedding", vecType)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, e) => Row(i, e) }, 3), schema)
+    SemanticIndex.fromRecords(spark, df)
+  }
+
+  private def queryFrame(idType: DataType, rows: (Any, Array[Float])*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (i, q) => Row(i, q) }, 2),
+      StructType(Seq(StructField("query_id", idType), StructField("qvec", vecType))))
+
+  /** (item, score bits) in rank order; NaN and -0.0 keep their bits, a
+    * null score is None. */
+  private def hits(rows: Seq[Row]): Seq[(Any, Option[Long])] = rows.map { r =>
+    val s = r.getAs[Any]("score")
+    r.getAs[Any]("item") ->
+      Option(s).map(v => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]))
+  }
+
+  /** searchMany's rows per query_id, checked to be ranked 1..n. */
+  private def byQuery(df: DataFrame): Map[Any, Seq[Row]] =
+    df.collect().toSeq.groupBy(_.getAs[Any]("query_id")).map { case (id, rs) =>
+      val sorted = rs.sortBy(_.getAs[Int]("rank"))
+      assert(sorted.map(_.getAs[Int]("rank")) == (1 to sorted.size), s"query $id ranks")
+      id -> sorted
+    }
+
+  /** For every query: the same ordered (item, score) list as search. */
+  private def assertMatchesSearch(idx: SemanticIndex, idType: DataType, k: Int,
+      queries: (Any, Array[Float])*): Unit = {
+    val got = byQuery(idx.searchMany(queryFrame(idType, queries: _*), k))
+    assert(got.keySet == queries.map(_._1).toSet)
+    queries.foreach { case (id, q) =>
+      assert(hits(got(id)) == hits(idx.search(q, k).collect().toSeq), s"query $id")
+    }
+  }
+
+  private val tieRows: Seq[(Any, Array[Float])] = Seq(
+    "d" -> Array(1f, 0f), "b" -> Array(1f, 0f), "a" -> Array(0.5f, 0.5f),
+    "c" -> Array(1f, 0f), "e" -> Array(0f, 1f), "f" -> Array(-1f, 0f))
+
+  test("searchMany ≡ search: tied scores break on item inside the cut") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    assertMatchesSearch(idx, LongType, 2, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f))
+    assertMatchesSearch(idx, LongType, 4, 1L -> Array(1f, 0f), 2L -> Array(1f, 1f))
+  }
+
+  test("searchMany ≡ search: k larger than the corpus returns every record") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    assertMatchesSearch(idx, LongType, 50, 1L -> Array(0.3f, -2f), 2L -> Array(1f, 0f))
+    assert(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), 50).count() == tieRows.size)
+    // heap slots grow with the records kept, not with k
+    assert(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), Int.MaxValue).count() ==
+      tieRows.size)
+  }
+
+  test("searchMany ≡ search: struct items tie-break in Spark's struct order") {
+    val item = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    val idx = vecIndex(item,
+      Row(2L, "b") -> Array(1f, 0f), Row(1L, "z") -> Array(1f, 0f), Row(1L, null) -> Array(1f, 0f),
+      Row(2L, "a") -> Array(1f, 0f), Row(3L, "c") -> Array(0f, 1f))
+    assertMatchesSearch(idx, LongType, 3, 7L -> Array(1f, 0f), 8L -> Array(0f, 2f))
+  }
+
+  test("searchMany ≡ search: Long and String query ids keep their type") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    assertMatchesSearch(idx, StringType, 3, "q1" -> Array(1f, 0f), "q2" -> Array(0f, 1f))
+    assert(idx.searchMany(queryFrame(StringType, "q" -> Array(1f, 0f)), 1)
+      .schema("query_id").dataType == StringType)
+    assert(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), 1)
+      .schema("query_id").dataType == LongType)
+  }
+
+  test("searchMany: an empty query batch yields no rows and the full schema") {
+    val out = vecIndex(StringType, tieRows: _*).searchMany(queryFrame(LongType), 3)
+    assert(out.columns.toSeq == Seq("query_id", "item", "score", "rank"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("searchMany ≡ search: zero query vector and zero record vector") {
+    val idx = vecIndex(StringType, tieRows :+ ("z" -> Array(0f, 0f)): _*)
+    assertMatchesSearch(idx, LongType, 4, 1L -> Array(0f, 0f), 2L -> Array(-1f, 0f))
+  }
+
+  test("searchMany ≡ search: NaN ranks above every number, a null embedding last") {
+    val idx = vecIndex(StringType, tieRows ++ Seq("nan" -> Array(Float.NaN, 0f),
+      "nul" -> null, "inf" -> Array(Float.PositiveInfinity, 0f)): _*)
+    assertMatchesSearch(idx, LongType, 3, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f))
+    assertMatchesSearch(idx, LongType, 20, 1L -> Array(1f, 0f), 2L -> Array(-1f, 1f))
+    val top = byQuery(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), 20))(1L)
+    assert(top.head.getAs[String]("item") == "nan")
+    assert(top.last.getAs[String]("item") == "nul" && top.last.isNullAt(top.last.fieldIndex("score")))
+  }
+
+  test("searchMany: a repeated query_id merges both vectors' candidates into one top-k") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    val qs = Seq[(Any, Array[Float])](1L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(-1f, 0f))
+    val got = byQuery(idx.searchMany(queryFrame(LongType, qs: _*), 4))
+    // the crossJoin + row_number window this operator replaced
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("item"))
+    val window = byQuery(idx.records.crossJoin(queryFrame(LongType, qs: _*))
+      .select(col("query_id"), col("item"),
+        graft.functions.vec_dot(col("embedding"), col("qvec")).as("score"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 4))
+    assert(got.keySet == Set(1L, 2L))
+    assert(got.map { case (id, rs) => id -> hits(rs) } == window.map { case (id, rs) => id -> hits(rs) })
+    // both vectors feed id 1: b, c, d score 1 on the first, e on the second
+    assert(hits(got(1L)).map(_._1) == Seq("b", "c", "d", "e"))
+    assert(got(1L).map(_.getAs[Double]("score")) == Seq(1.0, 1.0, 1.0, 1.0))
+    assert(hits(got(2L)) == hits(idx.search(Array(-1f, 0f), 4).collect().toSeq))
+  }
+
+  test("searchMany: a query/record dimension mismatch raises vec_dot's error") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    def cause(t: Throwable): Throwable =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .find(_.isInstanceOf[IllegalArgumentException]).getOrElse(t)
+    val viaSearch = cause(intercept[Exception](idx.search(Array(1f, 0f, 0f), 2).collect()))
+    val viaMany = cause(intercept[Exception](
+      idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
+    assert(viaMany.isInstanceOf[IllegalArgumentException], viaMany)
+    assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
+    assert(viaMany.getMessage == viaSearch.getMessage)
+  }
+
+  test("searchMany ≡ search on a seeded corpus with many ties") {
+    val rnd = new scala.util.Random(7)
+    def v() = Array.fill(6)((rnd.nextInt(3) - 1).toFloat)
+    val idx = vecIndex(StringType, (0 until 300).map(i => (f"it$i%03d": Any) -> v()): _*)
+    val qs = (0 until 5).map(j => (j: Any) -> v())
+    assertMatchesSearch(idx, IntegerType, 7, qs: _*)
+    assertMatchesSearch(idx, IntegerType, 40, qs: _*)
+  }
+
+  test("searchMany plan is one partial aggregate: no crossJoin, no window") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    val plan = idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), 2)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("ObjectHashAggregate") && plan.contains("search_many"), plan)
+    Seq("Window", "NestedLoopJoin", "CartesianProduct").foreach(op =>
+      assert(!plan.contains(op), s"$op in:\n$plan"))
+  }
 }
