@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: one JSON line with per-query steady-state seconds.
@@ -43,13 +42,14 @@ object Bench {
     "dedup_edit_incremental" -> 5.0,
     "q_bucket_join" -> 18.0, "q_incremental_agg" -> 5.5)
 
-  /** A JSON number with ms precision, or `null` for a non-finite value.
-    * Fixed formatting keeps the line compact (full double toString made
-    * it ~9 KB, past bounded stdout captures), and `Locale.ROOT` keeps the
-    * decimal point a point under any JVM default locale. */
-  def fmt(v: Double): String =
+  /** A JSON number with `digits` decimals (ms precision for seconds by
+    * default), or `null` for a non-finite value. Fixed formatting keeps
+    * the line compact (full double toString made it ~9 KB, past bounded
+    * stdout captures), and `Locale.ROOT` keeps the decimal point a point
+    * under any JVM default locale. */
+  def fmt(v: Double, digits: Int = 3): String =
     if (v.isNaN || v.isInfinite) "null"
-    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
   /** The NUMERIC scale factor of a data dir, for the JSON `"sf"` field:
     * the number after `sf` in the dir's own name (`/data/sf2/sf0.1` is
@@ -63,14 +63,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-bench")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -149,7 +142,7 @@ object Bench {
     }
     val results = names.map(n => n -> median(window.map(_(n))))
     def obj(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+      kvs.map { case (k, v) => Verify.jstr(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val orders: Seq[(String, Double)] = passTotals.toSeq.zipWithIndex.map { case (t, j) =>
       (if (j % 2 == 0) s"forward_$j" else s"reverse_$j") -> t
@@ -157,7 +150,7 @@ object Bench {
     val setupJson = (if (setup.isEmpty) "" else s""","setup":${obj(setup)}""") +
       (if (setupOver.isEmpty) "" else s""","setup_over_budget":${obj(setupOver)}""")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(results)},"sf":${sfOf(sfDir)},"sf_dir":"$sfDir","stat":"median_of_$passes","orders":${obj(orders)},"spread":${fmt(windowSpread)},"passes_run":$i$setupJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(results)},"sf":${sfOf(sfDir)},"sf_dir":${Verify.jstr(sfDir)},"stat":"median_of_$passes","orders":${obj(orders)},"spread":${fmt(windowSpread)},"passes_run":$i$setupJson}"""
     println(line)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     try Files.writeString(Paths.get(outPath), line + "\n")

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Bench.fmt
+import graft.Verify.jstr
 
 /**
  * Recall-at-DEPTH artifact (r12 — the r11 verdict's #3): the §5.5
@@ -50,15 +53,7 @@ object RecallLadder {
       (a.take(i), a.drop(i + 1))
     }
     require(ladder.nonEmpty, "need at least one rung label=dir")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+    val spark = SparkEntry.session("graft-recall-ladder")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_RECALL_QUERIES", "16").toInt
     val baseDir = ladder.head._2
 
@@ -156,10 +151,9 @@ object RecallLadder {
       System.err.println(s"[recall] $label done (${rows.size} rows so far)")
     }
 
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val body = rows.map { r =>
       s"""{"rung":${jstr(r.rung)},"mode":${jstr(r.mode)},"index":${jstr(r.index)},""" +
-        f""""point":${jstr(r.point)},"frac_read":${r.fracRead}%.4f,"recall_at_10":${r.recall}%.3f}"""
+        s""""point":${jstr(r.point)},"frac_read":${fmt(r.fracRead, 4)},"recall_at_10":${fmt(r.recall)}}"""
     }.mkString("[", ",", "]")
     val line = s"""{"metric":"recall_ladder","queries_per_rung":${nQueries},"rows":$body}"""
     println(line)

@@ -53,12 +53,7 @@ object RecallSweep {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.registerAll(spark)
+    val spark = SparkEntry.session("graft-recall-sweep")
 
     val clustered = args.contains("clustered")
     val dir =

@@ -5,8 +5,10 @@ import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, Future, TimeoutException}
 import scala.concurrent.duration._
 
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+
+import graft.Verify.jstr
 
 /**
  * Committed, re-runnable SCALE-PROBE artifact (r11 — the r10 verdict's
@@ -127,14 +129,7 @@ object ScaleProbe {
       if (steps.nonEmpty) steps
       else Seq("sf0.1" -> "/root/testdata/sf0.1", "sf1" -> "/tmp/graft_sf1")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-scaleprobe")
     val only = sys.env.get("SPARK_GRAFT_SCALE_KEYS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -154,15 +149,11 @@ object ScaleProbe {
     // rows land here
     val dnfDiag = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-
     def diagOf(group: String, name: String): String = {
+      // late stage events would be missing from the snapshot; a timed-out
+      // key's jobs may still be posting, so a drain that times out is
+      // tolerated
+      scala.util.Try(ListenerBusBridge.drain(spark.sparkContext))
       val snap = telemetry.snapshot(group)
       val decisions = Seq("jaccard_pairs", "containment", "near_incremental",
           "index_build")
@@ -263,12 +254,12 @@ object ScaleProbe {
         if Bench.setupBudgets.get(n).exists(t > _) => s"$label/$n" -> t }
     }
 
-    // jstr (defined above boundedRun) handles the minimal JSON string
-    // escaping (r11 ADVICE: dir paths and labels are caller-controlled)
+    // dir paths and labels are caller-controlled: every string goes
+    // through the shared escaper, every number through Bench.fmt
     def obj(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     def objD(kvs: Seq[(String, Double)]): String =
-      obj(kvs.map { case (k, v) => k -> v.toString })
+      obj(kvs.map { case (k, v) => k -> Bench.fmt(v) })
     val keysJson = obj(names.map { n =>
       val walls = ladder.map { case (label, _) =>
         label -> perDir.find(_._1 == label).get._2(n) }
@@ -283,8 +274,8 @@ object ScaleProbe {
       verdicts.filter(_._2 == v).map(kv => jstr(kv._1)).mkString(",")
     val line =
       s"""{"metric":"scale_probe","ladder":${obj(ladder.map { case (l, d) => l -> jstr(d) })},""" +
-        s""""rows_documents":${objD(dirRows.map { case (l, r) => l -> r.toDouble })},""" +
-        s""""data_ratio":[${dataRatios.mkString(",")}],""" +
+        s""""rows_documents":${obj(dirRows.map { case (l, r) => l -> r.toString })},""" +
+        s""""data_ratio":[${dataRatios.map(Bench.fmt(_)).mkString(",")}],""" +
         s""""runs_per_key":$runs,"timeout_sec":$timeoutSec,""" +
         s""""keys":$keysJson,""" +
         s""""setup":${obj(setupJson)},""" +
