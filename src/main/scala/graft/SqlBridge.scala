@@ -13,6 +13,11 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The ANSI `DIVIDE_BY_ZERO` error a zero divisor raises under
+    * `spark.sql.ansi.enabled` — for kernels that replace a division. */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Spark's per-session random UUID (`private[sql]`) — the stable
     * cache key [[graft.operators.SessionMemo]] uses; an identity hash
     * can be recycled after GC, a UUID cannot. */

@@ -50,6 +50,9 @@ object FunctionCatalog {
       (es: Seq[Expression]) => CharShingles(es(0), int(es(1)))),
     ("word_ngrams", "distinct word n-grams of a string",
       (es: Seq[Expression]) => WordNgrams(es(0), int(es(1)))),
+    ("set_jaccard", "exact Jaccard similarity of two arrays read as sets",
+      (es: Seq[Expression]) => SetJaccard(es(0), es(1),
+        org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)),
     ("text_norm", "canonical normalization of a string",
       (es: Seq[Expression]) => NormalizeText(es.head)),
     ("tok_chunks", "non-overlapping w-token chunks of a string",

@@ -3,6 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.sql.types._
 
 /**
@@ -247,4 +250,156 @@ case class PairSetContains(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PairSetContains =
     copy(left = newLeft, right = newRight)
+}
+
+/**
+ * `set_jaccard(a, b)` — exact Jaccard similarity |A∩B| / |A∪B| of two
+ * arrays read as sets (a repeated element counts once, null counts as
+ * one element): the verify kernel of every set-dedup path. One pass per
+ * side: A's distinct elements go into an open-addressing table, each B
+ * element probes it once (B-only elements join the table, so B's
+ * repeats dedupe too), and |A∪B| = |A| + |B| − |A∩B| over the distinct
+ * counts. The `size(array_intersect) / size(array_union)` formulation
+ * it replaces built two hash sets and two result arrays per pair. Two
+ * empty arrays have no union: the result is null, or the ANSI
+ * divide-by-zero error when `failOnEmpty` (taken from
+ * `spark.sql.ansi.enabled` when the expression is built) — the outcome
+ * of the division it replaces. A null array gives null. Elements are
+ * strings (binary collation) or integers, the same type on both sides.
+ */
+case class SetJaccard(left: Expression, right: Expression, failOnEmpty: Boolean)
+    extends BinaryExpression {
+  override def prettyName: String = "set_jaccard"
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  private lazy val kind: Int = left.dataType match {
+    case ArrayType(et, _) => SetJaccard.kindOf(et)
+    case _ => -1
+  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _)) if l == r && SetJaccard.kindOf(l) >= 0 =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        "set_jaccard requires two arrays of the same string or integer element " +
+          s"type, got (${l.catalogString}, ${r.catalogString})")
+    }
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val j = SetJaccard.ratio(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], kind)
+    if (!j.isNaN) j
+    else if (failOnEmpty) throw org.apache.spark.sql.GraftSqlBridge.divideByZero()
+    else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val j = ctx.freshName("j")
+      val empty =
+        if (failOnEmpty) "throw org.apache.spark.sql.GraftSqlBridge.divideByZero();"
+        else s"${ev.isNull} = true;"
+      s"""
+         |double $j = graft.functions.SetJaccard.ratio($a, $b, $kind);
+         |if (Double.isNaN($j)) { $empty } else { ${ev.value} = $j; }
+       """.stripMargin
+    })
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SetJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
+object SetJaccard {
+  /** Element kind: 0 string, 1 byte, 2 short, 3 int, 4 long; -1 unsupported. */
+  def kindOf(dt: DataType): Int = dt match {
+    case StringType => 0 // the binary collation only
+    case ByteType => 1
+    case ShortType => 2
+    case IntegerType => 3
+    case LongType => 4
+    case _ => -1
+  }
+
+  private def long(x: ArrayData, i: Int, kind: Int): Long = kind match {
+    case 1 => x.getByte(i).toLong
+    case 2 => x.getShort(i).toLong
+    case 3 => x.getInt(i).toLong
+    case _ => x.getLong(i)
+  }
+
+  // strings of an UnsafeArrayData are read in place: the element's
+  // offset-and-size word locates its bytes, so no UTF8String is built
+  private def hash(x: ArrayData, i: Int, kind: Int): Int =
+    if (kind != 0) {
+      var h = long(x, i, kind) * 0x9E3779B97F4A7C15L
+      h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL; h ^= h >>> 29
+      h.toInt
+    } else x match {
+      case u: UnsafeArrayData =>
+        val os = u.getLong(i)
+        Murmur3_x86_32.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset + (os >> 32),
+          os.toInt, 42)
+      case _ => x.getUTF8String(i).hashCode()
+    }
+
+  private def same(x: ArrayData, i: Int, y: ArrayData, j: Int, kind: Int): Boolean =
+    if (kind != 0) long(x, i, kind) == long(y, j, kind)
+    else (x, y) match {
+      case (u: UnsafeArrayData, v: UnsafeArrayData) =>
+        val os = u.getLong(i)
+        val ot = v.getLong(j)
+        os.toInt == ot.toInt && ByteArrayMethods.arrayEquals(
+          u.getBaseObject, u.getBaseOffset + (os >> 32),
+          v.getBaseObject, v.getBaseOffset + (ot >> 32), os.toInt)
+      case _ => x.getUTF8String(i) == y.getUTF8String(j)
+    }
+
+  /** |A∩B| / |A∪B| of two non-null arrays, NaN when both are empty.
+    * Shared by interpreted eval and codegen. */
+  def ratio(a: ArrayData, b: ArrayData, kind: Int): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var cap = 16
+    while (cap < 2 * (na + nb)) cap <<= 1
+    val mask = cap - 1
+    // slot entry: i + 1 for A's element i, -(j + 1) for B's element j
+    // (absent from A), 0 for empty; hashes short-cut the equality test
+    val entry = new Array[Int](cap)
+    val hashes = new Array[Int](cap)
+    val hit = new Array[Boolean](cap)
+    var distinctA = 0
+    var onlyB = 0
+    var inter = 0
+    var nullA = false
+    var nullB = false
+    var i = 0
+    while (i < na) {
+      if (a.isNullAt(i)) nullA = true
+      else {
+        val h = hash(a, i, kind)
+        var s = h & mask
+        while (entry(s) != 0 && !(hashes(s) == h && same(a, entry(s) - 1, a, i, kind)))
+          s = (s + 1) & mask
+        if (entry(s) == 0) { entry(s) = i + 1; hashes(s) = h; distinctA += 1 }
+      }
+      i += 1
+    }
+    var j = 0
+    while (j < nb) {
+      if (b.isNullAt(j)) nullB = true
+      else {
+        val h = hash(b, j, kind)
+        var s = h & mask
+        var e = entry(s)
+        while (e != 0 && !(hashes(s) == h &&
+            (if (e > 0) same(a, e - 1, b, j, kind) else same(b, -e - 1, b, j, kind)))) {
+          s = (s + 1) & mask
+          e = entry(s)
+        }
+        if (e == 0) { entry(s) = -(j + 1); hashes(s) = h; onlyB += 1 }
+        else if (e > 0 && !hit(s)) { hit(s) = true; inter += 1 }
+      }
+      j += 1
+    }
+    if (nullA && nullB) inter += 1
+    val union = distinctA + onlyB + (if (nullA || nullB) 1 else 0)
+    if (union == 0) Double.NaN else inter.toDouble / union
+  }
 }

@@ -80,6 +80,9 @@ package object functions {
   def word_ngrams(text: Column, n: Int): Column =
     call_function("word_ngrams", text, lit(n))
 
+  /** Exact Jaccard similarity of two arrays read as sets (double). */
+  def set_jaccard(a: Column, b: Column): Column = call_function("set_jaccard", a, b)
+
   /** Canonical text normalization (trim/collapse-ws/lower/NFC/strip
     * accents) of a string column (string). */
   def text_norm(text: Column): Column = call_function("text_norm", text)

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
  */
 final case class CorpusSketch(
     groups: DataFrame,
-    members: DataFrame,
     tauMicros: Long,
     postings: Option[(DataFrame, graft.functions.LongPairSet)],
     dense: Option[(DataFrame, Array[Long])])
@@ -36,7 +35,8 @@ final case class CorpusSketch(
  *  - `members` — one `(rep, doc_id)` ROW per indexed document (~16 B).
  *    Membership is deliberately a frame, not a `collect_list` array
  *    column: a 10⁸-copy boilerplate cluster would otherwise persist (and
- *    re-load) as one multi-GB row.
+ *    re-load) as one multi-GB row. [[compact]] reads it to re-map
+ *    members onto merged reps; a probe never does.
  *  - sparse mode: `postings` — PPJoin prefix postings `(el, pid, rk,
  *    n)` (~24 B × (1−τ)·|set| per rep) ordered by the FROZEN `hot`
  *    element set (≤ 64 Ki longs, duplicated into each generation); a
@@ -54,6 +54,15 @@ final case class CorpusSketch(
  * Shingle sets (≥5× the text bytes) are deliberately NOT stored: the
  * exact verify re-derives them from the source table for just the
  * candidate reps, which is a left_semi-pruned scan, not a corpus pass.
+ *
+ * **Rep invariant.** A group's `rep` is the minimum doc_id of its
+ * members, in every generation: build and append collapse by
+ * `min(doc_id)`, and compact keeps `min(rep)` per fingerprint. So
+ * `rep <= doc_id` for every member row, every rep is a member of its
+ * own group, and the smallest indexed doc_id holding a set is the
+ * smallest `rep` over the group rows carrying its fingerprint. The
+ * probe's pick rests on this: the best match is a rep, found without
+ * expanding members.
  *
  * **Commit protocol.** Every mutation is ALL-OR-NOTHING: the writer
  * materializes a complete generation directory (all tables) and then
@@ -74,7 +83,7 @@ final case class CorpusSketch(
  * [[append]] adds new documents WITHOUT reading or rewriting existing
  * rows (one new generation; nothing existing moves). A set already
  * present then simply has two group rows sharing a fingerprint — the
- * probe handles that (both match; the best-pick window dedups) — so no
+ * probe handles that (both match; the pick keeps the smaller rep) — so no
  * merge pass is ever forced; [[compact]] merges the generations during
  * a scheduled rewrite when a long-lived index has accumulated enough of
  * them to matter.
@@ -90,7 +99,7 @@ final class DedupIndex private (
     * from different committed snapshots (the atomicity the commit
     * protocol promises; per-table resolution would race). */
   private def readTables(gens: Seq[String], table: String): DataFrame =
-    spark.read.parquet(gens.map(g => s"$path/$g/$table"): _*)
+    DedupIndex.readTable(spark, gens.map(g => s"$path/$g/$table"), table)
 
   /** The persisted sketch groups `(fp1, fp2, rep, sigb, nonempty)` —
     * the union of every live generation (one-shot snapshot). */
@@ -98,7 +107,7 @@ final class DedupIndex private (
 
   /** The persisted membership frame `(rep, doc_id)` — reps are
     * generation-local: an appended batch maps its members to its own
-    * representative, and the probe's best-pick window reconciles
+    * representative, and the probe's pick (the smaller rep) reconciles
     * fingerprint-sharing generations. */
   def members: DataFrame = readTables(manifest._4, "members")
 
@@ -117,7 +126,7 @@ final class DedupIndex private (
     hotSetAt(manifest._4)
 
   private def hotSetAt(gens: Seq[String]): graft.functions.LongPairSet = {
-    val els = spark.read.parquet(s"$path/${gens.head}/hot").collect()
+    val els = readTables(gens.take(1), "hot").collect()
     val set = graft.functions.LongPairSet(math.max(els.length, 1))
     els.foreach { r => val e = r.getLong(0); set.add(e, e) }
     set
@@ -128,8 +137,8 @@ final class DedupIndex private (
   def dictEls: Array[Long] = dictElsAt(manifest._4)
 
   private def dictElsAt(gens: Seq[String]): Array[Long] =
-    spark.read.parquet(s"$path/${gens.last}/dict")
-      .orderBy(col("bit")).collect().map(_.getLong(0))
+    readTables(gens.takeRight(1), "dict").collect()
+      .sortBy(_.getInt(1)).map(_.getLong(0))
 
   /** The probe-ready sketch (see [[CorpusSketch]]) — ONE manifest
     * resolution covers every table, so the sketch is an atomic
@@ -137,12 +146,11 @@ final class DedupIndex private (
   def sketch(): CorpusSketch = {
     val (_, tm, m, gens) = manifest
     val g = readTables(gens, "groups")
-    val mem = readTables(gens, "members")
     if (m == "dense")
-      CorpusSketch(g, mem, tm, None,
+      CorpusSketch(g, tm, None,
         Some((readTables(gens, "bitmaps"), dictElsAt(gens))))
     else
-      CorpusSketch(g, mem, tm,
+      CorpusSketch(g, tm,
         Some((readTables(gens, "postings"), hotSetAt(gens))), None)
   }
 
@@ -153,7 +161,13 @@ final class DedupIndex private (
   /** Probe: per incoming doc, the best near-dup match in the indexed
     * corpus (max jaccard ≥ tau, min id) or null. `corpus` is the source
     * table the index was built from — consulted only for candidate
-    * verification. */
+    * verification. The probe runs when this is called: one small
+    * collect reads the frozen hot set (sparse) or dictionary (dense),
+    * then three Spark actions run (batch fingerprints, candidates,
+    * verify — see [[graft.queries.DedupQueries.probeNearIncremental]]),
+    * and the result comes back as a local frame, one row per incoming
+    * row in doc_id order. The match is always a group rep (the rep
+    * invariant above), so `members` is never read. */
   def probe(corpus: DataFrame, incoming: DataFrame, tau: Double = 0.5): DataFrame =
     graft.queries.DedupQueries.probeNearIncremental(
       sketch(), corpus, incoming, tau)
@@ -219,12 +233,13 @@ final class DedupIndex private (
     } else {
       // ONE copy of the frozen hot set per generation (reading the
       // union of all generations here would double the table per
-      // append — 2^n growth over a daily index's lifetime)
-      val frozenHot = spark.read.parquet(s"$path/${live.head}/hot")
-      val (g, mem, p) = DedupIndex.sketchSparse(docs, hotSetAt(live), tm)
+      // append — 2^n growth over a daily index's lifetime); the set
+      // read for the postings is the set written
+      val hot = hotSetAt(live)
+      val (g, mem, p) = DedupIndex.sketchSparse(docs, hot, tm)
       DedupIndex.writeGeneration(path, gen, Seq(
         "groups" -> g, "members" -> mem, "postings" -> p,
-        "hot" -> frozenHot))
+        "hot" -> DedupIndex.hotFrame(spark, hot)))
     }
     DedupIndex.commitManifest(spark, path, seq + 1, tm, m, live :+ gen)
   }
@@ -235,7 +250,7 @@ final class DedupIndex private (
     * sigb, so first() is exact), members re-map onto the merged rep via
     * an (old rep → fp → new rep) join, and the candidate tables
     * (postings/bitmaps) remap + dedupe the same way. Probe results are
-    * unchanged — the best-pick window was already reconciling
+    * unchanged — the probe's pick was already reconciling
     * generations; compact just stops a long-lived daily index from
     * re-processing the same fingerprint k times. The rewrite lands as
     * one new generation and one manifest commit; generations this flip
@@ -290,7 +305,7 @@ final class DedupIndex private (
           .join(repMap, "old_rep")
           .select(col("el"), col("rep").as("pid"), col("rk"), col("n")).distinct()
         Seq("groups" -> merged, "members" -> remapped, "postings" -> post,
-          "hot" -> spark.read.parquet(s"$path/${live.head}/hot"))
+          "hot" -> readTables(live.take(1), "hot"))
       }
     DedupIndex.writeGeneration(path, gen, tables)
     g.unpersist(false); m.unpersist(false)
@@ -402,6 +417,21 @@ object DedupIndex {
     import spark.implicits._
     hot.elements1.toDF("el")
   }
+
+  /** The fixed schema of every index table. Reads pass it instead of
+    * inferring one, which would cost a footer-reading Spark job per
+    * table read. */
+  private val TableSchemas = Map(
+    "groups" -> "fp1 BIGINT, fp2 BIGINT, rep BIGINT, sigb BINARY, nonempty BOOLEAN",
+    "members" -> "rep BIGINT, doc_id BIGINT",
+    "postings" -> "el BIGINT, pid BIGINT, rk INT, n INT",
+    "bitmaps" -> "pid BIGINT, n INT, bm BINARY",
+    "dict" -> "el BIGINT, bit INT",
+    "hot" -> "el BIGINT")
+
+  private def readTable(spark: SparkSession, paths: Seq[String],
+      table: String): DataFrame =
+    spark.read.schema(TableSchemas(table)).parquet(paths: _*)
 
   def load(spark: SparkSession, path: String): DedupIndex =
     new DedupIndex(spark, path)

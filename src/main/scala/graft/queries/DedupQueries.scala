@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -43,10 +44,10 @@ object DedupQueries {
     * elimination). Needs [[registerAll]]. */
   def wordNgrams(text: Column, n: Int): Column = word_ngrams(text, n)
 
-  /** Exact Jaccard similarity of two array columns (double). */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+  /** Exact Jaccard similarity of two array columns read as sets
+    * (double) — the one-pass [[graft.functions.SetJaccard]] kernel.
+    * Needs [[registerAll]]. */
+  def jaccard(a: Column, b: Column): Column = set_jaccard(a, b)
 
   /** Two independently-salted xxhash64 views of a value, as columns
     * `fp1`/`fp2` — the shared 128-bit fingerprint for exact-identity
@@ -330,8 +331,6 @@ object DedupQueries {
   private val containCandCache = new graft.operators.CacheSlot
   private val containSetsCache = new graft.operators.CacheSlot
   private val probeCandCache = new graft.operators.CacheSlot
-  private val probeSetsICache = new graft.operators.CacheSlot
-  private val probeSetsECache = new graft.operators.CacheSlot
 
   /** Candidate-pair frames up to this row count broadcast into the
     * verify joins (the repo-wide 256 Ki broadcast cap); bigger frames
@@ -1766,8 +1765,6 @@ object DedupQueries {
     import graft.operators.{DedupRegime, PpJoin}
     val tm = PpJoin.tauMicros(tau)
     val exG = collapseGroups(exDocs, setCol)
-    val members = memberByRep(memberFrame(exDocs, setCol))
-      .select(col("rep"), col("doc_id"))
     // allowBanded = false: the probe is batch × corpus, where posting
     // fan-out is bounded by the batch, not the corpus² — the exact
     // engines stay viable (the saturation flag still surfaces)
@@ -1775,11 +1772,11 @@ object DedupQueries {
       "near_incremental", allowBanded = false)
     pick.dict match {
       case Some((els, dict)) =>
-        graft.index.CorpusSketch(exG, members, tm, None,
+        graft.index.CorpusSketch(exG, tm, None,
           Some((repBitmaps(exDocs, exG, setCol, dict, els.length), els)))
       case None =>
         val hot = pick.hot.getOrElse(PpJoin.hotSet(exDocs, setCol))
-        graft.index.CorpusSketch(exG, members, tm,
+        graft.index.CorpusSketch(exG, tm,
           Some((repPostings(exDocs, exG, setCol, tm, hot), hot)), None)
     }
   }
@@ -1790,115 +1787,256 @@ object DedupQueries {
     * O(batch work): the batch computes its own bitmaps/postings
     * map-side under the sketch's FROZEN dictionary/order and joins the
     * stored table (batch side broadcast, so the stored table streams
-    * with zero shuffle). The r6 regression — re-shingling the ENTIRE
-    * corpus and rebuilding a global frequency table per probe — is
-    * structurally impossible here: `existing` (the source table) is
-    * consulted only to re-derive shingle sets for the few candidate
-    * reps the exact verify needs, behind a left_semi prune. Sparse
-    * sketches require `tau ≥` the build threshold (stored prefixes are
-    * sized for it); dense bitmaps are τ-independent. */
+    * with zero shuffle). `existing` (the source table) is read only to
+    * re-derive shingle sets for the candidate reps the exact verify
+    * needs: the scan streams, and an id semi-join drops every other row
+    * before its text is shingled. Sparse sketches require `tau ≥` the
+    * build threshold (stored prefixes are sized for it); dense bitmaps
+    * are τ-independent.
+    *
+    * The probe runs when this is called, as three Spark actions:
+    *  1. batch fingerprints — one bounded collect of `(doc_id, fp1,
+    *     fp2, nonempty)` per incoming row, which gives the batch groups,
+    *     their reps and the non-rep ids on the driver;
+    *  2. candidates — exact fingerprint pairs (a corpus group with the
+    *     batch set's fingerprint: Jaccard exactly 1.0, no set moves) and
+    *     the prefix/bitmap candidates from one plan, persisted once; the
+    *     action returns the exact pairs and the candidate count;
+    *  3. verify — the one-pass [[graft.functions.SetJaccard]] kernel,
+    *     once per remaining candidate pair, reduced to the best `(jaccard,
+    *     ex_rep)` per batch set before the collect, so it returns at
+    *     most one row per batch group.
+    * (Dense mode adds one bounded collect inside step 2: the bitmap
+    * generator packs the batch side before it broadcasts it.)
+    * The pick then runs on the driver. A group's rep is its minimum
+    * doc_id on both sides (the [[graft.index.DedupIndex]] rep
+    * invariant), so the best member of the best corpus group is its
+    * rep and corpus membership is never expanded. The result comes
+    * back as a local frame: one row per incoming row, in doc_id order,
+    * with the best match (max jaccard, then min id) or null. A batch
+    * past [[MaxProbeBatch]] rows is probed in doc_id slices. */
   def probeNearIncremental(sk: graft.index.CorpusSketch,
       existing: DataFrame, incoming: DataFrame, tau: Double = 0.5): DataFrame = {
+    import graft.operators.PpJoin
+    val spark = existing.sparkSession
+    registerAll(spark) // kernels resolve via the registry
+    if (sk.dense.isEmpty)
+      require(PpJoin.tauMicros(tau) >= sk.tauMicros,
+        s"probe tau=$tau is below the index build threshold " +
+          s"(${sk.tauMicros / 1e6}) — stored prefixes would be too short")
+    val head = batchRows(incoming, MaxProbeBatch + 1)
+    val out =
+      if (head.length <= MaxProbeBatch) probeBatch(sk, existing, incoming, head, tau)
+      else {
+        // over the bound: the ids alone (8 B a row, less than the result
+        // this returns) cut the batch into slices probed one at a time
+        val ids = incoming.select(col("doc_id").cast("long")).collect()
+        val nulls = ids.count(_.isNullAt(0))
+        val keys = ids.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
+        probeSlices(keys, MaxProbeBatch).toArray.flatMap { case (lo, hi) =>
+          val part = incoming.filter(col("doc_id").between(lo, hi))
+          probeBatch(sk, existing, part, batchRows(part, Int.MaxValue), tau)
+        } ++ Array.fill(nulls)(Row(null, null, null, false))
+      }
+    val schema = StructType(Seq(incoming.schema("doc_id"),
+      StructField("match_id", LongType), StructField("jaccard", DoubleType),
+      StructField("is_dup", BooleanType, nullable = false)))
+    // doc_id order, nulls first — the order of orderBy(doc_id)
+    val sorted = out.sortBy(r => if (r.isNullAt(0)) (0, 0L)
+      else (1, r.get(0).asInstanceOf[Number].longValue()))
+    spark.createDataFrame(java.util.Arrays.asList(sorted: _*), schema)
+  }
+
+  /** Batch rows one probe pass takes at once — the bound on its
+    * batch-side broadcasts (postings or bitmaps, candidate sets). A
+    * larger batch is probed in doc_id slices of at most this many rows
+    * ([[probeSlices]]); a probe keeps no state across batch docs, so
+    * slicing changes no result. */
+  private[graft] val MaxProbeBatch = 200000
+
+  /** Inclusive doc_id ranges that cut ascending `ids` into runs of at
+    * most `bound` ids. A doc_id never straddles two ranges, so an id
+    * repeated more than `bound` times gets a range of its own. */
+  private[graft] def probeSlices(ids: Array[Long], bound: Int): Seq[(Long, Long)] = {
+    require(bound > 0, s"slice bound must be positive, got $bound")
+    val out = Seq.newBuilder[(Long, Long)]
+    var i = 0
+    while (i < ids.length) {
+      var end = math.min(i + bound, ids.length)
+      if (end < ids.length && ids(end) == ids(end - 1)) {
+        // the cut splits a run of one id: end the slice before the run,
+        // or, when the run fills the whole slice, after it
+        var s = end - 1
+        while (s > i && ids(s - 1) == ids(s)) s -= 1
+        end = s
+        if (end == i) {
+          end = i + 1
+          while (end < ids.length && ids(end) == ids(i)) end += 1
+        }
+      }
+      out += ((ids(i), ids(end - 1)))
+      i = end
+    }
+    out.result()
+  }
+
+  /** One incoming row as action 1 collects it: the doc_id as given
+    * (echoed in the result), the same id as a long key (None when
+    * null), the 128-bit fingerprint of its shingle set, and whether
+    * the set is non-empty (a null set is not). */
+  private final case class BatchRow(id: Any, key: Option[Long], fp: (Long, Long),
+      nonempty: Boolean)
+
+  /** Action 1: the batch fingerprints, at most `limit` rows. */
+  private def batchRows(incoming: DataFrame, limit: Int): Array[BatchRow] =
+    incoming.select(col("doc_id"), col("doc_id").cast("long").as("key"),
+        charShingles(col("text"), 5).as("sh"))
+      .select(Seq(col("doc_id"), col("key")) ++ fp128(col("sh"), "graft:fp2") :+
+        (size(col("sh")) > 0).as("nonempty"): _*)
+      .limit(limit).collect()
+      .map(r => BatchRow(r.get(0), if (r.isNullAt(1)) None else Some(r.getLong(1)),
+        (r.getLong(2), r.getLong(3)), !r.isNullAt(4) && r.getBoolean(4)))
+
+  /** Probe one slice whose rows action 1 already collected; returns one
+    * `(doc_id, match_id, jaccard, is_dup)` row per batch row. */
+  private def probeBatch(sk: graft.index.CorpusSketch, existing: DataFrame,
+      incoming: DataFrame, rows: Array[BatchRow], tau: Double): Array[Row] = {
+    val keyed = rows.filter(_.key.isDefined)
+    val best = bestPerSet(sk, existing, incoming, keyed, tau)
+    // a repeated doc_id takes the best over every set it carries, the
+    // same grain as a pick partitioned by doc_id
+    val bestById = keyed.groupBy(_.key.get).view.mapValues(rs =>
+      rs.flatMap(r => best.get(r.fp)).sortBy { case (j, m) => (-j, m) }.headOption).toMap
+    rows.map { r =>
+      r.key.flatMap(bestById) match {
+        case Some((j, m)) => Row(r.id, m, j, true)
+        case None => Row(r.id, null, null, false)
+      }
+    }
+  }
+
+  /** Actions 2 and 3: per batch set fingerprint, its best corpus match
+    * `(jaccard, rep)` at `jaccard ≥ tau` (max jaccard, then min rep). */
+  private def bestPerSet(sk: graft.index.CorpusSketch, existing: DataFrame,
+      incoming: DataFrame, keyed: Array[BatchRow],
+      tau: Double): Map[(Long, Long), (Double, Long)] = {
     import graft.operators.{DenseJaccard, PpJoin}
-    registerAll(existing.sparkSession) // kernels resolve via the registry
-    val exG = sk.groups
-    val exDocs = existing.select(col("doc_id"), charShingles(col("text"), 5).as("sh"))
-    val inDocs = incoming.select(col("doc_id"), charShingles(col("text"), 5).as("sh"))
-    val inG = collapseGroups(inDocs, "sh")
-    val tmProbe = PpJoin.tauMicros(tau)
+    val live = keyed.filter(_.nonempty).map(_.fp).distinct
+    if (live.isEmpty) return Map.empty
+    val tm = PpJoin.tauMicros(tau)
+    val byId = keyed.groupBy(_.key.get)
+    // a group's rep is its minimum doc_id, as on the corpus side; an id
+    // that is the rep of none of its rows' groups carries no postings
+    val repOf = keyed.groupBy(_.fp).view.mapValues(_.map(_.key.get).min).toMap
+    val nonReps = LongPairSet(byId.size)
+    for ((k, rs) <- byId if rs.forall(r => repOf(r.fp) != k)) nonReps.add(k, k)
+    val inDocs = incoming.select(col("doc_id").cast("long").as("doc_id"),
+        charShingles(col("text"), 5).as("sh"))
+      .filter(col("doc_id").isNotNull)
 
-    // identical sets across sides: fingerprint equality IS the match
-    // (jaccard exactly 1.0) — empty sets excluded, same rule as intra
-    val exactPairs = inG.filter(col("nonempty")).as("i")
-      .join(exG.as("e"),
-        col("i.fp1") === col("e.fp1") && col("i.fp2") === col("e.fp2"))
-      .select(col("i.rep").as("in_rep"), col("e.rep").as("ex_rep"),
-        lit(1.0).as("jaccard"))
-
-    val cand0 = sk.dense match {
+    // action 2: exact fingerprint pairs + prefix/bitmap candidates, one
+    // plan, persisted once (the verify reads the near pairs back)
+    val near = sk.dense match {
       case Some((exBms, dictEls)) =>
-        // dense regime: batch bitmaps under the frozen dictionary.
-        // Batch elements outside it set no bit but count in n — they
-        // cannot intersect any indexed set, so J stays exact.
-        val dict = DenseJaccard.dictFromEls(dictEls)
-        val inBms = repBitmaps(inDocs, inG, "sh", dict, dictEls.length)
-        DenseJaccard.crossPairs(inBms, exBms, tmProbe)
+        // batch bitmaps under the frozen dictionary: batch elements
+        // outside it set no bit but count in n — they cannot intersect
+        // any indexed set, so J stays exact
+        val inBms = DenseJaccard.bitmaps(inDocs, "doc_id", "sh",
+          DenseJaccard.dictFromEls(dictEls), dictEls.length, Some(nonReps))
+        DenseJaccard.crossPairs(inBms, exBms, tm)
       case None =>
-        val (exPost, hot) = sk.postings.get
-        require(tmProbe >= sk.tauMicros,
-          s"probe tau=$tau is below the index build threshold " +
-            s"(${sk.tauMicros / 1e6}) — stored prefixes would be too short")
         // batch prefixes at the (tighter) probe τ: the first common
         // element of a qualifying pair is inside each side's OWN-τ
-        // prefix, so a tight batch prefix against a loose stored
-        // prefix loses nothing. A bounded count picks the broadcast
-        // regime — the daily shape — so the stored posting table never
-        // shuffles; an unbounded backfill falls back to sort-merge.
-        val batchBounded = incoming.limit(200001).count() <= 200000L
-        val inPost = repPostings(inDocs, inG, "sh", tmProbe, hot)
-        PpJoin.crossPairs(inPost, exPost, tmProbe,
-          hintBroadcastProbe = batchBounded)
+        // prefix, so a tight batch prefix against a loose stored prefix
+        // loses nothing. The bounded batch side broadcasts, so the
+        // stored posting table streams without a shuffle.
+        val (exPost, hot) = sk.postings.get
+        val inPost = PpJoin.postingsById(inDocs, "doc_id", "sh", tm, hot, Some(nonReps))
+        PpJoin.crossPairs(inPost, exPost, tm, hintBroadcastProbe = true)
     }
-    val cand = cand0
-      .join(exactPairs.select(col("in_rep"), col("ex_rep")),
-        Seq("in_rep", "ex_rep"), "left_anti")
+    val liveFps = LongPairSet(live.length)
+    live.foreach { case (a, b) => liveFps.add(a, b) }
+    val cand = probeCandCache.cache(
+      near.select(lit(false).as("exact"), col("in_rep"), lit(0L).as("fp1"),
+          lit(0L).as("fp2"), col("ex_rep"))
+        .unionByName(sk.groups
+          .filter(pairSetContains(col("fp1"), col("fp2"), liveFps))
+          .select(lit(true).as("exact"), lit(null).cast("long").as("in_rep"),
+            col("fp1"), col("fp2"), col("rep").as("ex_rep"))))
+    // each partition returns its near-pair count and its exact pairs:
+    // one job over the persisted rows, no aggregation stage
+    val summary = cand.rdd.mapPartitions { it =>
+      var n = 0L
+      val exact = Array.newBuilder[(Long, Long, Long)]
+      it.foreach { r =>
+        if (r.getBoolean(0)) exact += ((r.getLong(2), r.getLong(3), r.getLong(4)))
+        else n += 1
+      }
+      Iterator((n, exact.result()))
+    }.collect()
+    val nNear = summary.map(_._1).sum
+    val exactReps = summary.flatMap(_._2).groupMap(e => (e._1, e._2))(_._3)
 
-    // sets move only for surviving candidate reps, with an EXPLICIT
-    // regime pick (r8 — same guard as lshRepPairs: hoping AQE
-    // broadcasts leaves the over-threshold failure mode a silent
-    // full-corpus set shuffle): ≤256 Ki candidate pairs — the daily
-    // shape — broadcast into both verify joins, which then run
-    // map-side over the source scans; bigger frames id-prune each
-    // side first so only candidate sets enter the exchanges.
-    val candC = probeCandCache.cache(cand)
-    val nCand = candC.count()
-    // candidate-id prune BEFORE the shingle projection on BOTH sides
-    // (r13, same as lshRepPairs): the semi-join pushes below the
-    // charShingles projection, so the source re-shingles only the
-    // candidate reps — the corpus side in particular no longer pays a
-    // full re-shingle per probe. The pruned (id, set) survivors are
-    // CacheSlot-persisted and feed both the verify join and nothing
-    // else (output-bound by construction).
-    val candIdsI = candC.select(col("in_rep")).distinct()
-    val candIdsE = candC.select(col("ex_rep")).distinct()
-    val bcastIds = nCand <= MaxBroadcastCandPairs
-    val setsI = probeSetsICache.cache(
-      inDocs.select(col("doc_id").as("in_rep"), col("sh").as("set_i"))
-        .join(if (bcastIds) broadcast(candIdsI) else candIdsI,
-          Seq("in_rep"), "left_semi"))
-    val setsE = probeSetsECache.cache(
-      exDocs.select(col("doc_id").as("ex_rep"), col("sh").as("set_e"))
-        .join(if (bcastIds) broadcast(candIdsE) else candIdsE,
-          Seq("ex_rep"), "left_semi"))
-    val paired =
-      if (bcastIds)
-        broadcast(candC).join(setsI, "in_rep").join(setsE, "ex_rep")
-      else
-        candC.join(setsI, "in_rep").join(setsE, "ex_rep")
-    val verified = paired
-      .select(col("in_rep"), col("ex_rep"),
-        round(jaccard(col("set_i"), col("set_e")), 4).as("jaccard"))
-      .filter(col("jaccard") >= tau)
+    // a near pair of a rep whose rows all carry its one set, against a
+    // corpus group with that set's fingerprint, is already settled at
+    // 1.0: the verify skips it
+    val settled = LongPairSet(math.max(exactReps.valuesIterator.map(_.length).sum, 1))
+    for ((fp, exs) <- exactReps; k = repOf(fp); if byId(k).forall(_.fp == fp);
+         ex <- exs) settled.add(k, ex)
 
-    // expand reps to members via membership ROWS, keep the best match
-    // per incoming doc
-    val inMembers = memberByRep(memberFrame(inDocs, "sh"))
-      .select(col("rep").as("in_rep"), col("doc_id"))
-    val exMembers = sk.members
-      .select(col("rep").as("ex_rep"), col("doc_id").as("match_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("jaccard").desc, col("match_id"))
-    val best = exactPairs.unionByName(verified)
-      .join(inMembers, "in_rep")
-      .join(exMembers, "ex_rep")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("doc_id"), col("match_id"), col("jaccard"))
-    incoming.select(col("doc_id"))
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("match_id"), col("jaccard"),
-        col("match_id").isNotNull.as("is_dup"))
-      .orderBy(col("doc_id"))
+    // action 3: verify. ≤ 256 Ki candidate pairs (the daily shape)
+    // broadcast with the batch sets, so the source scan streams and its
+    // text never enters an exchange; bigger frames shuffle instead of
+    // broadcasting past the cap
+    val verified =
+      if (nNear == 0) Map.empty[(Long, Long), (Double, Long)]
+      else {
+        val bcast = nNear <= MaxBroadcastCandPairs
+        def side(df: DataFrame) = if (bcast) broadcast(df) else df
+        val pairs = cand
+          .filter(!col("exact") &&
+            !pairSetContains(col("in_rep"), col("ex_rep"), settled))
+          .select(col("in_rep"), col("ex_rep"))
+        val setsI = inDocs
+          .filter(size(col("sh")) > 0 &&
+            !pairSetContains(col("doc_id"), col("doc_id"), nonReps))
+          .select(Seq(col("doc_id").as("in_rep")) ++ fp128(col("sh"), "graft:fp2") :+
+            col("sh").as("set_i"): _*)
+        // the candidate-id semi-join comes BEFORE the shingle projection,
+        // so only candidate reps of the source are shingled (written the
+        // other way round, the plan keeps the shingle projection under
+        // the semi-join, and only whole-stage codegen's lazy evaluation
+        // spares the rows that do not match)
+        val setsE = existing.select(col("doc_id").cast("long").as("ex_rep"), col("text"))
+          .join(side(pairs.select(col("ex_rep"))), Seq("ex_rep"), "left_semi")
+          .select(col("ex_rep"), charShingles(col("text"), 5).as("set_e"))
+        // the kernel runs once per pair, in the projection under the
+        // reduce: the τ cut comes after the reduce, so no filter can be
+        // pushed into a join to evaluate it a second time, and `j` feeds
+        // two aggregates, so the projection is not folded into the
+        // aggregate and only (fp, j, ex_rep) rows reach its sort
+        setsE.join(side(pairs), Seq("ex_rep")).join(side(setsI), Seq("in_rep"))
+          .select(col("fp1"), col("fp2"), col("ex_rep"),
+            coalesce(round(jaccard(col("set_i"), col("set_e")), 4), lit(-1.0)).as("j"))
+          .groupBy(col("fp1"), col("fp2"))
+          .agg(max(col("j")).as("j"),
+            min(struct(negate(col("j")), col("ex_rep"))).as("pick"))
+          .collect()
+          .collect { case r if r.getDouble(2) >= tau =>
+            (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getStruct(3).getLong(1)) }
+          .toMap
+      }
+    live.flatMap { fp =>
+      val exact = exactReps.get(fp).map(exs => (1.0, exs.min))
+      (exact.toSeq ++ verified.get(fp)).sortBy { case (j, m) => (-j, m) }
+        .headOption.map(fp -> _)
+    }.toMap
   }
+
+  private def pairSetContains(a: Column, b: Column, set: LongPairSet): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(PairSetContains(
+      org.apache.spark.sql.GraftSqlBridge.expression(a),
+      org.apache.spark.sql.GraftSqlBridge.expression(b), set))
 
   /** Corpus-side sketch indexes, build-once per (session, dir) — the
     * steady-state daily shape is probe-against-persisted-index, so the

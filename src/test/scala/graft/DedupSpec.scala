@@ -396,6 +396,77 @@ class DedupSpec extends SparkSpec {
     assert(j == 0.5)
   }
 
+  test("jaccard kernel equals the array_intersect / array_union formula it replaced") {
+    graft.functions.registerAll(spark)
+    import org.apache.spark.sql.{Column, DataFrame}
+    def old(x: Column, y: Column) =
+      size(array_intersect(x, y)).cast("double") / size(array_union(x, y)).cast("double")
+    val rnd = new scala.util.Random(20261017L)
+    // a small alphabet, so repeats inside one array and overlaps are common;
+    // about one element in eight is null
+    def strs(): Seq[String] = Seq.fill(rnd.nextInt(9))(
+      if (rnd.nextInt(8) == 0) null else ('a' + rnd.nextInt(7)).toChar.toString)
+    def longs(): Seq[java.lang.Long] = Seq.fill(rnd.nextInt(9))(
+      if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(7) - 3L))
+    // two empty sides have no union: they are pinned separately below
+    val strRows = (Seq.fill(400)((strs(), strs())) ++ Seq(
+      (Seq("a", "a", "b"), Seq("b", "b", "c")),   // repeats inside each array
+      (Seq(null, "a"), Seq(null, null)),          // null is one shared element
+      (Seq("a", "b"), Seq.empty[String]),         // one empty side
+      (Seq.empty[String], Seq(null))))
+      .filterNot { case (x, y) => x.isEmpty && y.isEmpty }
+    val longRows = (Seq.fill(400)((longs(), longs())) ++ Seq(
+      (Seq[java.lang.Long](1L, 1L, 2L), Seq[java.lang.Long](2L)),
+      (Seq[java.lang.Long](null, 5L), Seq[java.lang.Long](null)),
+      (Seq.empty[java.lang.Long], Seq[java.lang.Long](7L, 7L))))
+      .filterNot { case (x, y) => x.isEmpty && y.isEmpty }
+    val empty = Seq((Seq.empty[String], Seq.empty[String])).toDF("x", "y")
+    val nulls = Seq((null.asInstanceOf[Seq[String]], Seq("a"))).toDF("x", "y")
+    def conditions(f: => Any): Seq[String] =
+      Iterator.iterate(intercept[Throwable](f))(_.getCause).takeWhile(_ != null)
+        .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }.toSeq
+    val ansiKey = "spark.sql.ansi.enabled"
+    val fallbackKey = "spark.sql.codegen.fallback"
+    val ansi = spark.conf.get(ansiKey).toBoolean
+    val fallback = spark.conf.get(fallbackKey)
+    // a local frame is evaluated on the driver (interpreted); behind a
+    // shuffle the kernel runs in whole-stage codegen, with no fallback
+    for (prep <- Seq[DataFrame => DataFrame](identity, _.repartition(2))) {
+      def both(df: DataFrame): Array[(Any, Any)] = prep(df)
+        .select(round(DedupQueries.jaccard(col("x"), col("y")), 4),
+          round(old(col("x"), col("y")), 4))
+        .collect().map(r => (r.get(0), r.get(1)))
+      spark.conf.set(fallbackKey, "false")
+      try {
+        for ((df, n) <- Seq(strRows.toDF("x", "y") -> strRows.length,
+            longRows.toDF("x", "y") -> longRows.length)) {
+          val got = both(df)
+          assert(got.length == n)
+          got.foreach { case (k, o) => assert(k == o, s"kernel $k, formula $o") }
+        }
+        // both sides empty: 0 / 0 is the ANSI divide-by-zero error, or
+        // null without ANSI — the kernel does what the division did
+        for (setting <- Seq(ansi, !ansi)) {
+          spark.conf.set(ansiKey, setting.toString)
+          try {
+            if (setting) {
+              assert(conditions(prep(empty).select(old(col("x"), col("y"))).collect())
+                .contains("DIVIDE_BY_ZERO"))
+              assert(conditions(prep(empty)
+                .select(DedupQueries.jaccard(col("x"), col("y"))).collect())
+                .contains("DIVIDE_BY_ZERO"))
+            } else assert(both(empty).toSeq == Seq((null, null)))
+          } finally spark.conf.set(ansiKey, ansi.toString)
+        }
+        // a null array has no set: null (the formula gave null under
+        // ANSI, and 1.0 without it, through size(null) = -1)
+        val (k, o) = both(nulls).head
+        assert(k == null)
+        if (ansi) assert(o == null)
+      } finally spark.conf.set(fallbackKey, fallback)
+    }
+  }
+
   test("incremental dedup: verdicts for existing-dup, batch-dup, and fresh docs") {
     val existing = Seq(
       (0L, "alpha beta gamma"),
