@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 
 /**
- * Spark extension entry point: register graft's native expressions
- * permanently in every session via
- * `spark.sql.extensions=graft.GraftExtensions` — the idiomatic way to
- * ship library functions (survives session cloning, works from pure
- * SQL, thriftserver, etc.). `graft.functions.registerAll` remains for
- * ad-hoc sessions.
+ * Spark extension entry point: register graft's native expressions,
+ * its optimizer rule and the search planner strategy permanently in
+ * every session via `spark.sql.extensions=graft.GraftExtensions` — the
+ * idiomatic way to ship library functions (survives session cloning,
+ * works from pure SQL, thriftserver, etc.). `graft.functions.registerAll`
+ * installs the same functions and strategy on ad-hoc sessions.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -27,5 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 
     ext.injectOptimizerRule(graft.plans.NormalizedCosineRule)
+    ext.injectPlannerStrategy(_ => graft.plans.VectorTopKStrategy)
   }
 }

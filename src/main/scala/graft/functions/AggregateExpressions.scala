@@ -155,68 +155,92 @@ case class TopKByScore(
 }
 
 /**
- * Bounded top-k state for one query of [[SearchManyTopK]]. As in
- * [[TopKHeap]] the root is the WORST kept entry, but an entry is a
- * (score, item) pair ranked exactly as `SemanticIndex.search` sorts:
- * score desc with NaN above every number and a null score below them
- * all, then item asc (a null item first) under `itemOrder`. NaN and
- * null scores are kept, not dropped: `search` returns them too.
+ * Bounded top-k state for one query of a [[graft.plans.VectorTopK]]
+ * scan. As in [[TopKHeap]] the root is the WORST kept entry, but an
+ * entry is a (score, item) pair ranked exactly as `SemanticIndex.search`
+ * ranks: score desc with NaN above every number and a null score below
+ * them all, then item asc (a null item first) in Spark's order for
+ * `itemType`. NaN and null scores are kept, not dropped. An entry is a
+ * row holding the item; callers copy a row only once [[admits]] lets it
+ * in.
  *
  * A second class rather than a generalized [[TopKHeap]]: that one keys
  * on a primitive `long` id and drops NaN at the door, which its
  * `vec_topk` callers rely on; carrying an ordered `Any` item there
  * would box every id on its hot path.
  */
-final class ItemTopKHeap(val k: Int, itemOrder: Ordering[Any]) {
+final class ItemTopKHeap(val k: Int, itemType: DataType) {
+  private val itemOrder: Ordering[Any] =
+    if (itemType == StringType) new Ordering[Any] {
+      def compare(a: Any, b: Any): Int =
+        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+          .compareTo(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    }
+    else org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(itemType)
   // slots grow on demand up to k: a large k (say, "every record") must
   // not allocate k slots per query before a single record arrives
   var scores = new Array[Double](math.min(k, 16))
   var nullScore = new Array[Boolean](scores.length)
   var items = new Array[Any](scores.length)
+  var rows = new Array[InternalRow](scores.length)
   var size = 0
 
-  /** Entry (n1, s1, i1) ranks strictly ahead of (n2, s2, i2). */
-  private def ahead(n1: Boolean, s1: Double, i1: Any, n2: Boolean, s2: Double, i2: Any): Boolean = {
-    val c =
-      if (n1 || n2) java.lang.Boolean.compare(n2, n1)
-      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s1, s2)
-    c > 0 || (c == 0 && i2 != null && (i1 == null || itemOrder.compare(i1, i2) < 0))
-  }
+  /** (n1, s1) against (n2, s2): > 0 when it ranks ahead. */
+  private def compareScores(n1: Boolean, s1: Double, n2: Boolean, s2: Double): Int =
+    if (n1 || n2) java.lang.Boolean.compare(n2, n1)
+    else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s1, s2)
 
-  private def worse(a: Int, b: Int): Boolean =
-    ahead(nullScore(b), scores(b), items(b), nullScore(a), scores(a), items(a))
+  private def itemFirst(i1: Any, i2: Any): Boolean =
+    i2 != null && (i1 == null || itemOrder.compare(i1, i2) < 0)
+
+  // a columnar row's typed getters do not check for null themselves
+  private def itemOf(row: InternalRow, ord: Int): Any =
+    if (row.isNullAt(ord)) null else row.get(ord, itemType)
+
+  private def worse(a: Int, b: Int): Boolean = {
+    val c = compareScores(nullScore(b), scores(b), nullScore(a), scores(a))
+    c > 0 || (c == 0 && itemFirst(items(b), items(a)))
+  }
 
   private def swap(a: Int, b: Int): Unit = {
     val ts = scores(a); scores(a) = scores(b); scores(b) = ts
     val tn = nullScore(a); nullScore(a) = nullScore(b); nullScore(b) = tn
     val ti = items(a); items(a) = items(b); items(b) = ti
+    val tr = rows(a); rows(a) = rows(b); rows(b) = tr
   }
 
-  private def set(at: Int, isNull: Boolean, s: Double, item: Any): Unit = {
-    // the item may alias a reused input row: copy only what is kept
-    scores(at) = s; nullScore(at) = isNull; items(at) = InternalRow.copyValue(item)
-  }
+  /** Whether an entry scored (`isNull`: a null score, `s` ignored)
+    * whose item is `row`'s field `itemOrd` would enter. The item is read
+    * only on a tie with the worst kept score. */
+  def admits(isNull: Boolean, s: Double, row: InternalRow, itemOrd: Int): Boolean =
+    size < k || (k > 0 && {
+      val c = compareScores(isNull, s, nullScore(0), scores(0))
+      c > 0 || (c == 0 && itemFirst(itemOf(row, itemOrd), items(0)))
+    })
 
-  /** Offer one scored item; `isNull` marks a null score (`s` ignored). */
-  def offer(isNull: Boolean, s: Double, item: Any): Unit =
-    if (size < k) {
+  /** Insert an entry that [[admits]] let in; `row` must not alias a
+    * reused input buffer. */
+  def offer(isNull: Boolean, s: Double, row: InternalRow, itemOrd: Int): Unit = {
+    val at = if (size < k) {
       if (size == scores.length) {
         val cap = math.min(k.toLong, 2L * size).toInt
         scores = Array.copyOf(scores, cap)
         nullScore = Array.copyOf(nullScore, cap)
         items = Array.copyOf(items, cap)
+        rows = Array.copyOf(rows, cap)
       }
-      set(size, isNull, s, item)
-      var i = size
       size += 1
+      size - 1
+    } else 0
+    scores(at) = s; nullScore(at) = isNull; items(at) = itemOf(row, itemOrd); rows(at) = row
+    var i = at
+    if (at > 0) {
       var siftUp = true
       while (siftUp && i > 0) {
         val p = (i - 1) >> 1
         if (worse(i, p)) { swap(i, p); i = p } else siftUp = false
       }
-    } else if (k > 0 && ahead(isNull, s, item, nullScore(0), scores(0), items(0))) {
-      set(0, isNull, s, item)
-      var i = 0
+    } else {
       var siftDown = true
       while (siftDown) {
         val l = 2 * i + 1
@@ -227,6 +251,7 @@ final class ItemTopKHeap(val k: Int, itemOrder: Ordering[Any]) {
         if (w != i) { swap(i, w); i = w } else siftDown = false
       }
     }
+  }
 
   /** Slots of the kept entries, best-first. */
   def sortedSlots: Array[Int] =
@@ -234,18 +259,25 @@ final class ItemTopKHeap(val k: Int, itemOrder: Ordering[Any]) {
 }
 
 /**
- * The query side of [[SearchManyTopK]], collected on the driver: one
- * vector per query row (null for a null vector), and per row the slot
- * of its `query_id` among the distinct internal ids `ids` of type
- * `idType`. Rows that repeat an id share its slot, so their candidates
- * meet in one top-k, as they did under a rank window partitioned by id.
+ * The query side of a [[graft.plans.VectorTopK]] scan, collected on the
+ * driver: one vector per query row (null for a null vector), and per
+ * row the slot of its `query_id` among the distinct internal ids `ids`
+ * of type `idType`. Rows that repeat an id share its slot, so their
+ * candidates meet in one top-k, as they did under a rank window
+ * partitioned by id.
  */
 final class QueryBatch(val idType: DataType, val ids: Array[Any], val slots: Array[Int],
     val vecs: Array[Array[Float]]) extends Serializable {
-  override def toString: String = s"${vecs.length} queries"
+  /** The explain form: sizes, never the query floats. */
+  override def toString: String =
+    s"q=${vecs.length}, dims=${vecs.find(_ != null).map(_.length).getOrElse(0)}"
 }
 
 object QueryBatch {
+  /** One query vector, as `search` runs it. */
+  def single(vec: Array[Float]): QueryBatch =
+    new QueryBatch(IntegerType, Array(0), Array(0), Array(vec))
+
   /** Collect `(query_id, embedding)` — the first two columns of
     * `queries`, embedding `array<float>` — into a batch. */
   def collect(queries: org.apache.spark.sql.DataFrame): QueryBatch = {
@@ -273,159 +305,6 @@ object QueryBatch {
       r.getSeq[Any](1).iterator.map(x => if (x == null) 0f else x.asInstanceOf[Float]).toArray)
     new QueryBatch(idField.dataType, ids.toArray, slots, vecs)
   }
-}
-
-/**
- * Per-query exact dot-product top-k of a whole query batch in ONE pass
- * over the records — the body of `SemanticIndex.searchMany`. Each
- * record's embedding is decoded once (`toFloatArray`) and scored
- * against every query of `queries`, accumulating in double in element
- * order exactly like `vec_dot`, so scores are bit-identical to
- * `search`'s. Every query keeps an [[ItemTopKHeap]], so a map task
- * emits at most #distinct ids × k entries however large its partition.
- * The final merge assigns `rank` 1..k per query.
- *
- * Returns `array<struct<query_id, item, score double, rank int>>`,
- * grouped by query in batch order, best-first within a query. Not
- * registered by name: the collected query batch is a per-call runtime
- * object, so callers build it and wrap it with `GraftSqlBridge.column`.
- */
-case class SearchManyTopK(
-    item: Expression,
-    embedding: Expression,
-    queries: QueryBatch,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[ItemTopKHeap]] {
-
-  require(k >= 0, s"search_many: k must not be negative, got $k")
-
-  override def children: Seq[Expression] = Seq(item, embedding)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("query_id", queries.idType),
-    StructField("item", item.dataType, item.nullable),
-    StructField("score", DoubleType),
-    StructField("rank", IntegerType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (item.dataType, embedding.dataType) match {
-      case (it, ArrayType(FloatType, _)) if RowOrdering.isOrderable(it) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (it, e) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"search_many requires an orderable item and array<float>, got " +
-          s"${it.catalogString}, ${e.catalogString}")
-    }
-
-  @transient private lazy val itemOrder: Ordering[Any] =
-    if (item.dataType == StringType) new Ordering[Any] {
-      def compare(a: Any, b: Any): Int =
-        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-          .compareTo(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    }
-    else org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(item.dataType)
-
-  /** One serialized heap entry: (item, score), a null score as null. */
-  @transient private lazy val entryRow = UnsafeProjection.create(Array(item.dataType, DoubleType))
-
-  override def createAggregationBuffer(): Array[ItemTopKHeap] =
-    Array.fill(queries.ids.length)(new ItemTopKHeap(k, itemOrder))
-
-  override def update(heaps: Array[ItemTopKHeap], input: InternalRow): Array[ItemTopKHeap] = {
-    val vecs = queries.vecs
-    val slots = queries.slots
-    if (vecs.nonEmpty) {
-      val it = item.eval(input)
-      val e = embedding.eval(input)
-      val v = if (e == null) null else e.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toFloatArray()
-      var j = 0
-      while (j < vecs.length) {
-        val q = vecs(j)
-        if (v == null || q == null) heaps(slots(j)).offer(true, 0.0, it)
-        else {
-          if (v.length != q.length) {
-            throw new IllegalArgumentException(s"vector length mismatch: ${v.length} vs ${q.length}")
-          }
-          var s = 0.0
-          var d = 0
-          while (d < v.length) { s += v(d).toDouble * q(d).toDouble; d += 1 }
-          heaps(slots(j)).offer(false, s, it)
-        }
-        j += 1
-      }
-    }
-    heaps
-  }
-
-  override def merge(heaps: Array[ItemTopKHeap], other: Array[ItemTopKHeap]): Array[ItemTopKHeap] = {
-    var h = 0
-    while (h < heaps.length) {
-      val o = other(h)
-      var i = 0
-      while (i < o.size) { heaps(h).offer(o.nullScore(i), o.scores(i), o.items(i)); i += 1 }
-      h += 1
-    }
-    heaps
-  }
-
-  override def eval(heaps: Array[ItemTopKHeap]): Any = {
-    val out = Array.newBuilder[Any]
-    heaps.indices.foreach { h =>
-      val heap = heaps(h)
-      heap.sortedSlots.iterator.zipWithIndex.foreach { case (at, r) =>
-        out += InternalRow(queries.ids(h), heap.items(at),
-          if (heap.nullScore(at)) null else heap.scores(at), r + 1)
-      }
-    }
-    new GenericArrayData(out.result())
-  }
-
-  override def serialize(heaps: Array[ItemTopKHeap]): Array[Byte] = {
-    val bytes = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bytes)
-    heaps.foreach { heap =>
-      out.writeInt(heap.size)
-      var i = 0
-      while (i < heap.size) {
-        val row = entryRow(InternalRow(heap.items(i), if (heap.nullScore(i)) null else heap.scores(i)))
-        out.writeInt(row.getSizeInBytes)
-        out.write(row.getBytes)
-        i += 1
-      }
-    }
-    out.flush()
-    bytes.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[ItemTopKHeap] = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val heaps = createAggregationBuffer()
-    heaps.foreach { heap =>
-      val n = in.readInt()
-      var i = 0
-      while (i < n) {
-        val b = new Array[Byte](in.readInt())
-        in.readFully(b)
-        val row = new UnsafeRow(2)
-        row.pointTo(b, b.length)
-        heap.offer(row.isNullAt(1), if (row.isNullAt(1)) 0.0 else row.getDouble(1),
-          if (row.isNullAt(0)) null else row.get(0, item.dataType))
-        i += 1
-      }
-    }
-    heaps
-  }
-
-  override def withNewMutableAggBufferOffset(offset: Int): SearchManyTopK =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): SearchManyTopK =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): SearchManyTopK =
-    copy(item = newChildren(0), embedding = newChildren(1))
-  override def prettyName: String = "search_many"
 }
 
 /**

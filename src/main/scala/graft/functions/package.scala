@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
  */
 package object functions {
 
-  /** Register all graft native functions in this session (idempotent —
-    * keyed on the registry's own state, not an identity hash that could
-    * be reused after GC or collide across sessions). */
+  /** Register all graft native functions and the search planner
+    * strategy ([[graft.plans.VectorTopKStrategy]]) in this session
+    * (idempotent — keyed on the registry's and the planner's own state,
+    * not an identity hash that could be reused after GC or collide
+    * across sessions). */
   def registerAll(spark: SparkSession): Unit = {
+    graft.plans.VectorTopKStrategy.install(spark)
     val reg0 = spark.sessionState.functionRegistry
     if (!reg0.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"))) synchronized {

@@ -1,8 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.plans.VectorTopK
 
 /** Duplicate-handling strategies, mirroring the reference enum
   * (/root/reference/ChatAIze.SemanticIndex/DuplicateHandling.cs). */
@@ -46,9 +47,12 @@ final class DuplicateItemException(msg: String) extends RuntimeException(msg)
  *    whole-item equality, implemented as relational anti/semi joins
  *    rather than O(n) scans per insert: adds are batch-first.
  *  - `search` is a dot-product (or cosine) top-k that Spark plans as
- *    TakeOrderedAndProject: per-partition k-heaps + driver merge of
- *    #partitions×k rows — no corpus shuffle, scales linearly with
- *    executors.
+ *    one columnar operator ([[graft.plans.VectorTopK]]): each task
+ *    scores the scan's float vectors in place into per-query k-heaps,
+ *    copies only the rows that enter a heap, and the driver merges
+ *    #partitions×q×k rows — no corpus shuffle, one Spark stage per
+ *    collect, scales linearly with executors. `searchMany` runs the
+ *    same operator for q queries in one scan.
  */
 final class SemanticIndex private (
     val spark: SparkSession,
@@ -139,25 +143,18 @@ final class SemanticIndex private (
 
   /**
    * Dot-product top-k (reference `Search(embedding, count)`,
-   * SemanticDatabase.cs:253). Ties break on item for determinism (the
-   * reference nudges scores by 1e-6 — an artifact of its SortedList).
+   * SemanticDatabase.cs:253): every `records` column plus `score`,
+   * best-first. Ties break on item for determinism (the reference
+   * nudges scores by 1e-6 — an artifact of its SortedList); NaN ranks
+   * above every number and a null embedding's null score last. `k`
+   * must not be negative; `k` = 0 gives no rows.
    */
-  def search(embedding: Array[Float], k: Int = 10): DataFrame = {
-    registerAll(spark)
-    records
-      .withColumn("score", vec_dot(col(EMBEDDING), typedLit(embedding)))
-      .orderBy(col("score").desc, col(ITEM))
-      .limit(k)
-  }
+  def search(embedding: Array[Float], k: Int = 10): DataFrame =
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = false, batch = false)
 
   /** Cosine variant for non-normalized embedding spaces. */
-  def searchCosine(embedding: Array[Float], k: Int = 10): DataFrame = {
-    registerAll(spark)
-    records
-      .withColumn("score", vec_cosine(col(EMBEDDING), typedLit(embedding)))
-      .orderBy(col("score").desc, col(ITEM))
-      .limit(k)
-  }
+  def searchCosine(embedding: Array[Float], k: Int = 10): DataFrame =
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = true, batch = false)
 
   /** Top-1 (reference `SearchFirst`). */
   def searchFirst(embedding: Array[Float]): Option[String] =
@@ -165,13 +162,13 @@ final class SemanticIndex private (
 
   /**
    * Batch search: every query in `queries` (query_id, embedding) gets
-   * its top-k from ONE shared scan of the records, in one fused pass:
-   * each record's embedding is decoded once and scored against all q
-   * queries, and each query keeps a bounded k-heap ranked like
-   * [[search]] ([[graft.functions.SearchManyTopK]]). A task therefore
-   * emits at most q×k rows however many records it reads, the corpus
-   * never shuffles, and a single small merge assigns `rank` 1..k. For
-   * q queries this replaces q corpus passes with one.
+   * its top-k, ranked exactly like [[search]], from ONE shared scan of
+   * the records: each record's embedding is read once and scored
+   * against all q queries, and each query keeps a bounded k-heap. A
+   * task therefore emits at most q×k rows however many records it
+   * reads, the corpus never shuffles, and the merge that assigns `rank`
+   * 1..k runs on the driver, so a collect is one Spark stage. For q
+   * queries this replaces q corpus passes with one.
    *
    * The query batch is COLLECTED to the driver when `searchMany` is
    * called (it is a constant of the returned plan), so it must stay
@@ -179,13 +176,8 @@ final class SemanticIndex private (
    * `query_id` share one top-k under that id. Output: `query_id` (its
    * input type), `item`, `score`, `rank`.
    */
-  def searchMany(queries: DataFrame, k: Int = 10): DataFrame = {
-    registerAll(spark) // like every search entry point: graft's SQL functions stay callable
-    val top = SearchManyTopK(GraftSqlBridge.expression(col(ITEM)),
-      GraftSqlBridge.expression(col(EMBEDDING)), QueryBatch.collect(queries), k)
-    records.agg(GraftSqlBridge.column(top.toAggregateExpression()).as("hits"))
-      .select(inline(col("hits")))
-  }
+  def searchMany(queries: DataFrame, k: Int = 10): DataFrame =
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.collect(queries), k, cosine = false, batch = true)
 
   /** Text-query search (reference `SearchAsync(query, count)`):
     * embed the query with the same embedder, then vector search. */

@@ -42,7 +42,48 @@ class GraftExtensionsSpec extends SparkSpec {
       SparkSession.setActiveSession(base)
     }
   }
-test("catalog parity: the extension surface and registerAll expose the " +
+  test("one search strategy registration for extension and ad-hoc sessions") {
+    val base = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_ext_topk").toString
+    graft.index.SemanticIndex.fromItems(base, base.range(0, 20).selectExpr("concat('doc ', id) AS item"))
+      .save(dir)
+    def count(s: SparkSession) =
+      s.sessionState.planner.strategies.count(_ eq graft.plans.VectorTopKStrategy)
+    /** Plans the operator, and still lists the strategy once after
+      * registerAll runs again. */
+    def check(s: SparkSession): Unit = {
+      val idx = graft.index.SemanticIndex.load(s, dir)
+      val plan = idx.searchText("doc 3", 2).queryExecution.executedPlan
+      assert(plan.collect { case t: graft.plans.VectorTopKExec => t }.size == 1, plan)
+      assert(idx.searchText("doc 3", 1).collect().head.getString(0) == "doc 3")
+      graft.functions.registerAll(s)
+      assert(count(s) == 1, s.sessionState.planner.strategies)
+    }
+    val sc = base.sparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // registerAll's ad-hoc install, as every graft main runs it
+      val entry = SparkEntry.session("graft-ext-entry")
+      assert(!(entry eq base))
+      check(entry)
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      // the static conf is read from the context when a session is built
+      org.apache.spark.SparkConfBridge.set(sc, "spark.sql.extensions", "graft.GraftExtensions")
+      val ext = try SparkSession.builder().appName("graft-ext-conf").getOrCreate()
+        finally org.apache.spark.SparkConfBridge.remove(sc, "spark.sql.extensions")
+      assert(!(ext eq base) && !(ext eq entry))
+      assert(count(ext) == 1 && ext.experimental.extraStrategies.isEmpty,
+        "the extension, not registerAll, installs the strategy")
+      check(ext)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("catalog parity: the extension surface and registerAll expose the " +
       "same function set, including the aggregate family") {
     val names = graft.functions.FunctionCatalog.all.map(_._1).toSet
     // every catalog function resolves in a registerAll session

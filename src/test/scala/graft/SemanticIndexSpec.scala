@@ -99,13 +99,6 @@ class SemanticIndexSpec extends SparkSpec {
     assert(back.records.columns.toSet == Set("item", "embedding"))
   }
 
-  test("search plan is TakeOrderedAndProject (per-partition heap, no corpus shuffle)") {
-    val idx = SemanticIndex.fromItems(spark, items("a b", "c d", "e f"))
-    val plan = idx.search(idx.embedder.embedOne("a b"), 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), s"plan was:\n$plan")
-  }
-
   // ---------------------------------------------------------------------
   // Generic item type T (reference SemanticDatabase<T>)
   // ---------------------------------------------------------------------
@@ -289,15 +282,41 @@ class SemanticIndexSpec extends SparkSpec {
       id -> sorted
     }
 
-  /** For every query: the same ordered (item, score) list as search. */
-  private def assertMatchesSearch(idx: SemanticIndex, idType: DataType, k: Int,
-      queries: (Any, Array[Float])*): Unit = {
-    val got = byQuery(idx.searchMany(queryFrame(idType, queries: _*), k))
-    assert(got.keySet == queries.map(_._1).toSet)
-    queries.foreach { case (id, q) =>
-      assert(hits(got(id)) == hits(idx.search(q, k).collect().toSeq), s"query $id")
-    }
+  /** A copy of `idx` saved to parquet and loaded again: the operator
+    * reads it batch by batch from the vectorized scan, where `idx`
+    * itself goes through the row adapter. */
+  private def onParquet(idx: SemanticIndex): SemanticIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_topk").toString
+    idx.save(s"$dir/idx")
+    val back = SemanticIndex.load(spark, s"$dir/idx")
+    val top = back.search(Array.emptyFloatArray, 1).queryExecution.executedPlan
+      .collect { case t: graft.plans.VectorTopKExec => t }
+    assert(top.size == 1 && top.head.child.supportsColumnar, top)
+    back
   }
+
+  /** The formula `search`/`searchCosine` replaced: score every record,
+    * then sort and cut. */
+  private def formula(idx: SemanticIndex, q: Array[Float], k: Int, cosine: Boolean): DataFrame = {
+    val f = if (cosine) graft.functions.vec_cosine _ else graft.functions.vec_dot _
+    idx.records.withColumn("score", f(col("embedding"), typedLit(q)))
+      .orderBy(col("score").desc, col("item")).limit(k)
+  }
+
+  /** For every query, on the row and the columnar adapter: searchMany
+    * gives the same ordered (item, score) list as search, which gives
+    * the same as the sort-and-cut formula. */
+  private def assertMatchesSearch(idx: SemanticIndex, idType: DataType, k: Int,
+      queries: (Any, Array[Float])*): Unit =
+    Seq(idx, onParquet(idx)).foreach { ix =>
+      val got = byQuery(ix.searchMany(queryFrame(idType, queries: _*), k))
+      assert(got.keySet == queries.map(_._1).toSet)
+      queries.foreach { case (id, q) =>
+        val viaSearch = hits(ix.search(q, k).collect().toSeq)
+        assert(hits(got(id)) == viaSearch, s"query $id")
+        assert(viaSearch == hits(formula(ix, q, k, cosine = false).collect().toSeq), s"query $id")
+      }
+    }
 
   private val tieRows: Seq[(Any, Array[Float])] = Seq(
     "d" -> Array(1f, 0f), "b" -> Array(1f, 0f), "a" -> Array(0.5f, 0.5f),
@@ -356,6 +375,21 @@ class SemanticIndexSpec extends SparkSpec {
     assert(top.last.getAs[String]("item") == "nul" && top.last.isNullAt(top.last.fieldIndex("score")))
   }
 
+  test("a null vector element reads as 0 on both adapters") {
+    // parquet dictionary-encodes the floats, and a null slot's column
+    // vector value is a dictionary entry (2.0 here), not 0
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("a", Array(2f, 3f)),
+      Row("b", Array[Any](1f, null)), Row("c", Array(0.5f, 0.5f))), 2),
+      StructType(Seq(StructField("item", StringType), StructField("embedding", vecType))))
+    val idx = SemanticIndex.fromRecords(spark, df)
+    Seq(idx, onParquet(idx)).foreach { ix =>
+      assert(ix.search(Array(1f, 1f), 3).collect().map(r => r.getString(0) -> r.getDouble(2)).toSeq ==
+        Seq("a" -> 5.0, "b" -> 1.0, "c" -> 1.0))
+      assert(hits(byQuery(ix.searchMany(queryFrame(LongType, 1L -> Array(1f, 1f)), 3))(1L)) ==
+        hits(ix.search(Array(1f, 1f), 3).collect().toSeq))
+    }
+  }
+
   test("searchMany: a repeated query_id merges both vectors' candidates into one top-k") {
     val idx = vecIndex(StringType, tieRows: _*)
     val qs = Seq[(Any, Array[Float])](1L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(-1f, 0f))
@@ -376,16 +410,21 @@ class SemanticIndexSpec extends SparkSpec {
   }
 
   test("searchMany: a query/record dimension mismatch raises vec_dot's error") {
-    val idx = vecIndex(StringType, tieRows: _*)
     def cause(t: Throwable): Throwable =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .find(_.isInstanceOf[IllegalArgumentException]).getOrElse(t)
-    val viaSearch = cause(intercept[Exception](idx.search(Array(1f, 0f, 0f), 2).collect()))
-    val viaMany = cause(intercept[Exception](
-      idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
-    assert(viaMany.isInstanceOf[IllegalArgumentException], viaMany)
-    assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
-    assert(viaMany.getMessage == viaSearch.getMessage)
+    val idx = vecIndex(StringType, tieRows: _*)
+    val viaDot = cause(intercept[Exception](
+      formula(idx, Array(1f, 0f, 0f), 2, cosine = false).collect()))
+    Seq(idx, onParquet(idx)).foreach { ix =>
+      val viaSearch = cause(intercept[Exception](ix.search(Array(1f, 0f, 0f), 2).collect()))
+      val viaMany = cause(intercept[Exception](
+        ix.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
+      assert(viaMany.isInstanceOf[IllegalArgumentException], viaMany)
+      assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
+      assert(viaMany.getMessage == viaSearch.getMessage)
+      assert(viaSearch.getMessage == viaDot.getMessage)
+    }
   }
 
   test("searchMany ≡ search on a seeded corpus with many ties") {
@@ -397,12 +436,108 @@ class SemanticIndexSpec extends SparkSpec {
     assertMatchesSearch(idx, IntegerType, 40, qs: _*)
   }
 
-  test("searchMany plan is one partial aggregate: no crossJoin, no window") {
+  test("search and searchCosine ≡ sort-and-cut on both adapters, k = 0 and k > n") {
+    val idx = vecIndex(StringType, tieRows ++ Seq("z" -> Array(0f, 0f), "nan" -> Array(Float.NaN, 0f),
+      "nul" -> null, "inf" -> Array(Float.PositiveInfinity, 0f), "ninf" -> Array(0f, Float.NegativeInfinity),
+      "w" -> Array(3f, -4f)): _*)
+    val n = idx.count().toInt
+    for (ix <- Seq(idx, onParquet(idx)); q <- Seq(Array(1f, 0f), Array(0.3f, -2f), Array(0f, 0f));
+         k <- Seq(0, 1, 3, n + 5); cosine <- Seq(false, true)) {
+      val got = if (cosine) ix.searchCosine(q, k) else ix.search(q, k)
+      val want = formula(ix, q, k, cosine)
+      assert(got.schema == want.schema)
+      assert(hits(got.collect().toSeq) == hits(want.collect().toSeq), s"k=$k cosine=$cosine q=${q.toSeq}")
+    }
+  }
+
+  test("search(q, k).select(item, score) on a parquet index") {
+    val idx = onParquet(vecIndex(StringType, tieRows: _*))
+    val got = idx.search(Array(1f, 0f), 3).select("item", "score").collect().toSeq
+    assert(hits(got) == hits(idx.search(Array(1f, 0f), 3).collect().toSeq))
+    assert(got.map(_.getString(0)) == Seq("b", "c", "d"))
+    assert(idx.search(Array(1f, 0f), 3).select("score").collect().map(_.getDouble(0)).toSeq ==
+      Seq(1.0, 1.0, 1.0))
+  }
+
+  test("search frames join: two searches, records with a search, a search with itself") {
     val idx = vecIndex(StringType, tieRows: _*)
-    val plan = idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f)), 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate") && plan.contains("search_many"), plan)
-    Seq("Window", "NestedLoopJoin", "CartesianProduct").foreach(op =>
-      assert(!plan.contains(op), s"$op in:\n$plan"))
+    for (ix <- Seq(idx, onParquet(idx))) {
+      val a = ix.search(Array(1f, 0f), 4) // b c d a
+      val b = ix.search(Array(0f, 1f), 4) // e a b c
+      def scores(df: DataFrame) = df.collect().map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(4))).toMap
+      assert(scores(a.join(b, "item")) == Map("a" -> (0.5, 0.5), "b" -> (1.0, 0.0), "c" -> (1.0, 0.0)))
+      assert(scores(a.join(a, "item")) == Map("a" -> (0.5, 0.5), "b" -> (1.0, 1.0), "c" -> (1.0, 1.0),
+        "d" -> (1.0, 1.0)))
+      assert(ix.records.join(a, "item").collect().map(r => r.getString(0) -> r.getDouble(3)).toMap ==
+        Map("a" -> 0.5, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0))
+      assert(a.crossJoin(a).count() == 16)
+    }
+  }
+
+  test("a search tells the planner it returns at most q×k rows") {
+    val idx = onParquet(vecIndex(StringType, tieRows: _*))
+    val one = idx.search(Array(1f, 0f), 2).queryExecution.optimizedPlan
+    val many = idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f)), 3)
+      .queryExecution.optimizedPlan
+    assert(one.maxRows.contains(2L) && one.stats.rowCount.contains(BigInt(2)))
+    assert(many.maxRows.contains(6L) && many.stats.rowCount.contains(BigInt(6)))
+    assert(one.stats.sizeInBytes < idx.records.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
+
+  test("k < 0 throws IllegalArgumentException in every search; k = 0 is empty") {
+    val idx = vecIndex(StringType, tieRows: _*)
+    val queries = queryFrame(LongType, 1L -> Array(1f, 0f))
+    val msgs = Seq[() => Any](() => idx.search(Array(1f, 0f), -1),
+      () => idx.searchCosine(Array(1f, 0f), -1), () => idx.searchMany(queries, -1))
+      .map(f => intercept[IllegalArgumentException](f()).getMessage)
+    assert(msgs.distinct == Seq("search: k must not be negative, got -1"), msgs)
+    val none = Seq(idx.search(Array(1f, 0f), 0), idx.searchCosine(Array(1f, 0f), 0))
+    none.foreach { df =>
+      assert(df.columns.toSeq == Seq("item", "embedding", "score"))
+      assert(df.collect().isEmpty)
+    }
+    val many = idx.searchMany(queries, 0)
+    assert(many.columns.toSeq == Seq("query_id", "item", "score", "rank"))
+    assert(many.collect().isEmpty)
+  }
+
+  /** Node names of `df`'s executed plan, and the jobs and stages one
+    * collect of it runs. */
+  private def profile(df: DataFrame): (Seq[String], Int, Int) = {
+    val nodes = df.queryExecution.executedPlan.collect { case p => p.nodeName }
+    def drain(): Unit = org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    @volatile var jobs = 0
+    @volatile var stages = 0
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = stages += 1
+    }
+    drain()
+    spark.sparkContext.addSparkListener(jl)
+    try { df.collect(); drain() } finally spark.sparkContext.removeSparkListener(jl)
+    (nodes, jobs, stages)
+  }
+
+  /** The executed plan of `df` is the operator over the columnar scan,
+    * and one collect runs one job of one stage. */
+  private def assertOneStage(df: DataFrame): Unit = {
+    val (nodes, jobs, stages) = profile(df)
+    assert(nodes.contains("VectorTopK") && nodes.exists(_.startsWith("Scan parquet")), nodes)
+    Seq("ColumnarToRow", "ObjectHashAggregate", "Exchange", "TakeOrderedAndProject", "Window",
+        "NestedLoopJoin", "CartesianProduct").foreach(op =>
+      assert(!nodes.exists(_.contains(op)), s"$op in $nodes"))
+    assert(jobs == 1 && stages == 1, s"$jobs jobs, $stages stages for $nodes")
+  }
+
+  test("search plan: VectorTopK over the columnar scan, one job, one stage") {
+    val idx = onParquet(vecIndex(StringType, tieRows: _*))
+    assertOneStage(idx.search(Array(1f, 0f), 2))
+    assertOneStage(idx.searchCosine(Array(1f, 0f), 2))
+  }
+
+  test("searchMany plan: VectorTopK over the columnar scan, one job, one stage") {
+    val idx = onParquet(vecIndex(StringType, tieRows: _*))
+    assertOneStage(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f)), 2))
   }
 }
