@@ -60,19 +60,24 @@ object Diag {
         ListenerBusBridge.drain(sc)
         for (dir <- planOut; qe <- lastRun)
           Files.writeString(Paths.get(dir, s"$key.txt"), qe.explainString(FormattedMode))
-        val s = telemetry.snapshot(group)
-        def counter(f: telemetry.Snap => Long): Long = s.fold(0L)(f)
-        s"""{"key":${jstr(key)},"status":"ok","wall_s":${Bench.fmt(wall)},""" +
-          s""""stages":${counter(_.stagesDone.toLong)},""" +
-          s""""shuffle_read_bytes":${counter(_.shuffleReadBytes)},""" +
-          s""""shuffle_write_bytes":${counter(_.shuffleWriteBytes)},""" +
-          s""""shuffle_write_records":${counter(_.shuffleWriteRecords)},""" +
-          s""""input_records":${counter(_.inputRecords)}}"""
+        okLine(key, wall, telemetry.snapshot(group))
       } catch { case NonFatal(e) =>
         s"""{"key":${jstr(key)},"status":"error","error":${jstr(e.toString.take(300))}}"""
       }
       println(line)
     }
     spark.stop()
+  }
+
+  /** The JSON line of a key that ran: its wall and its group's counters
+    * (all 0 when the group started no job). */
+  def okLine(key: String, wall: Double, s: Option[ScaleProbe.GroupTelemetry#Snap]): String = {
+    def counter(f: ScaleProbe.GroupTelemetry#Snap => Long): Long = s.fold(0L)(f)
+    s"""{"key":${jstr(key)},"status":"ok","wall_s":${Bench.fmt(wall)},""" +
+      s""""jobs":${counter(_.jobs.toLong)},"stages":${counter(_.stagesDone.toLong)},""" +
+      s""""shuffle_read_bytes":${counter(_.shuffleReadBytes)},""" +
+      s""""shuffle_write_bytes":${counter(_.shuffleWriteBytes)},""" +
+      s""""shuffle_write_records":${counter(_.shuffleWriteRecords)},""" +
+      s""""input_records":${counter(_.inputRecords)}}"""
   }
 }

@@ -6,7 +6,7 @@ import scala.concurrent.{Await, Future, TimeoutException}
 import scala.concurrent.duration._
 
 import org.apache.spark.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 
 import graft.Verify.jstr
 
@@ -67,6 +67,7 @@ object ScaleProbe {
     final class Snap {
       @volatile var lastStage: String = ""
       @volatile var lastStageTasks: Int = 0
+      var jobs: Int = 0
       var stagesDone: Int = 0
       var shuffleReadBytes: Long = 0L
       var shuffleWriteBytes: Long = 0L
@@ -79,6 +80,14 @@ object ScaleProbe {
       new java.util.concurrent.ConcurrentHashMap[Int, String]()
     def reset(group: String): Unit = byGroup.remove(group)
     def snapshot(group: String): Option[Snap] = Option(byGroup.get(group))
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val group = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull
+      if (group != null) {
+        val s = byGroup.computeIfAbsent(group, _ => new Snap)
+        s.synchronized { s.jobs += 1 }
+      }
+    }
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
       val group = Option(e.properties)
         .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).orNull

@@ -32,12 +32,19 @@ object VectorKernels {
     n
   }
 
+  /** Element `i` of a float vector, a null element read as 0. An
+    * `UnsafeArrayData` zeroes a null slot, but the `ColumnarArray` a
+    * vectorized parquet scan hands over does not: its null slot holds
+    * whatever the decoder left there (the slot's dictionary entry), so
+    * every kernel reads through this check. */
+  def at(a: ArrayData, i: Int): Float = if (a.isNullAt(i)) 0f else a.getFloat(i)
+
   /** Element-wise a − b (float), one pass. */
   def sub(a: ArrayData, b: ArrayData): GenericArrayData = {
     val n = checkLen(a, b)
     val out = new Array[Float](n)
     var i = 0
-    while (i < n) { out(i) = a.getFloat(i) - b.getFloat(i); i += 1 }
+    while (i < n) { out(i) = at(a, i) - at(b, i); i += 1 }
     new GenericArrayData(out)
   }
 }
@@ -69,7 +76,10 @@ case class VectorDot(left: Expression, right: Expression) extends VectorBinaryAr
     val n = VectorKernels.checkLen(a, b)
     var s = 0.0
     var i = 0
-    while (i < n) { s += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
+    while (i < n) {
+      s += VectorKernels.at(a, i).toDouble * VectorKernels.at(b, i).toDouble
+      i += 1
+    }
     s
   }
 
@@ -84,7 +94,8 @@ case class VectorDot(left: Expression, right: Expression) extends VectorBinaryAr
          |int $n = graft.functions.VectorKernels.checkLen($a, $b);
          |double $acc = 0.0;
          |for (int $j = 0; $j < $n; $j++) {
-         |  $acc += (double) $a.getFloat($j) * (double) $b.getFloat($j);
+         |  $acc += (double) graft.functions.VectorKernels.at($a, $j) *
+         |    (double) graft.functions.VectorKernels.at($b, $j);
          |}
          |${ev.value} = $acc;
        """.stripMargin
@@ -121,7 +132,7 @@ case class VectorCosine(left: Expression, right: Expression) extends VectorBinar
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
+      val x = VectorKernels.at(a, i).toDouble; val y = VectorKernels.at(b, i).toDouble
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
@@ -138,8 +149,8 @@ case class VectorCosine(left: Expression, right: Expression) extends VectorBinar
          |int $n = graft.functions.VectorKernels.checkLen($a, $b);
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = (double) $a.getFloat($j);
-         |  double $y = (double) $b.getFloat($j);
+         |  double $x = (double) graft.functions.VectorKernels.at($a, $j);
+         |  double $y = (double) graft.functions.VectorKernels.at($b, $j);
          |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
          |}
          |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
@@ -162,7 +173,7 @@ case class VectorL2Sq(left: Expression, right: Expression) extends VectorBinaryA
     var s = 0.0
     var i = 0
     while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
+      val d = VectorKernels.at(a, i).toDouble - VectorKernels.at(b, i).toDouble
       s += d * d; i += 1
     }
     s
@@ -176,7 +187,8 @@ case class VectorL2Sq(left: Expression, right: Expression) extends VectorBinaryA
          |int $n = graft.functions.VectorKernels.checkLen($a, $b);
          |double $acc = 0.0;
          |for (int $j = 0; $j < $n; $j++) {
-         |  double $d = (double) $a.getFloat($j) - (double) $b.getFloat($j);
+         |  double $d = (double) graft.functions.VectorKernels.at($a, $j) -
+         |    (double) graft.functions.VectorKernels.at($b, $j);
          |  $acc += $d * $d;
          |}
          |${ev.value} = $acc;
@@ -205,7 +217,7 @@ case class VectorNorm(child: Expression) extends UnaryExpression {
     var s = 0.0
     var i = 0
     val n = a.numElements()
-    while (i < n) { val x = a.getFloat(i).toDouble; s += x * x; i += 1 }
+    while (i < n) { val x = VectorKernels.at(a, i).toDouble; s += x * x; i += 1 }
     java.lang.Math.sqrt(s)
   }
 
@@ -217,7 +229,7 @@ case class VectorNorm(child: Expression) extends UnaryExpression {
          |int $n = $a.numElements();
          |double $acc = 0.0;
          |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = (double) $a.getFloat($j);
+         |  double $x = (double) graft.functions.VectorKernels.at($a, $j);
          |  $acc += $x * $x;
          |}
          |${ev.value} = java.lang.Math.sqrt($acc);
@@ -249,12 +261,12 @@ case class VectorNormalize(child: Expression) extends UnaryExpression
     val n = a.numElements()
     var s = 0.0
     var i = 0
-    while (i < n) { val x = a.getFloat(i).toDouble; s += x * x; i += 1 }
+    while (i < n) { val x = VectorKernels.at(a, i).toDouble; s += x * x; i += 1 }
     val norm = java.lang.Math.sqrt(s)
     val out = new Array[Float](n)
     i = 0
     while (i < n) {
-      out(i) = if (norm == 0.0) a.getFloat(i) else (a.getFloat(i) / norm).toFloat
+      out(i) = if (norm == 0.0) VectorKernels.at(a, i) else (VectorKernels.at(a, i) / norm).toFloat
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)

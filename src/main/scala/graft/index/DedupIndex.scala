@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -39,10 +39,14 @@ final case class CorpusSketch(
  *    members onto merged reps; a probe never does.
  *  - sparse mode: `postings` — PPJoin prefix postings `(el, pid, rk,
  *    n)` (~24 B × (1−τ)·|set| per rep) ordered by the FROZEN `hot`
- *    element set (≤ 64 Ki longs, duplicated into each generation); a
- *    daily batch computes its own postings map-side under the SAME
- *    order and equi-joins this table — O(batch) probes, no corpus
- *    re-sketch (the r6 regression this layout exists to prevent).
+ *    element set (≤ 64 Ki longs). `hot` is written into the FIRST
+ *    generation only: the build's, or the one a [[compact]] writes,
+ *    which copies it. An appended generation holds no `hot` (an index
+ *    whose appended generations carry copies, the older layout, reads
+ *    the same: readers take the first generation's). A daily batch
+ *    computes its own postings under the SAME order and meets this
+ *    table in one map-only scan — O(batch) probes, no corpus re-sketch
+ *    (the r6 regression this layout exists to prevent).
  *  - dense mode (small element universe, where prefix posting lists
  *    pigeonhole toward corpus size — see
  *    [[graft.operators.DenseJaccard]]): `bitmaps` — `(pid, n, bm)`
@@ -81,7 +85,12 @@ final case class CorpusSketch(
  * manifest, so a lost race fails loudly.
  *
  * [[append]] adds new documents WITHOUT reading or rewriting existing
- * rows (one new generation; nothing existing moves). A set already
+ * rows (one new generation; nothing existing moves). It reads only the
+ * manifest and the frozen hot set (sparse) or the last dictionary
+ * (dense), each once per instance and generation name, then shingles
+ * the batch once into one persisted frame keyed by one `min(doc_id)`
+ * window over the set fingerprint, and writes every table of the
+ * generation from that frame. A set already
  * present then simply has two group rows sharing a fingerprint — the
  * probe handles that (both match; the pick keeps the smaller rep) — so no
  * merge pass is ever forced; [[compact]] merges the generations during
@@ -119,26 +128,45 @@ final class DedupIndex private (
     * τ-independent. */
   def tauMicros: Long = manifest._2
 
-  /** The frozen hot-element set (sparse mode): one copy per
-    * generation, all identical — read from the FIRST (the build
-    * generation's frozen set). */
+  /** The frozen hot-element set (sparse mode), read from the FIRST
+    * live generation: the build generation, or the one a [[compact]]
+    * wrote, which copies it. */
   def hotSet: graft.functions.LongPairSet =
     hotSetAt(manifest._4)
 
+  // A generation directory is written once, so what it holds never
+  // changes under its name: the hot set is read once per first
+  // generation, the dictionary once per last generation, and every
+  // later probe and append of this instance reuses the copy.
+  @transient @volatile private var hotRead: (String, graft.functions.LongPairSet) = _
+  @transient @volatile private var dictRead: (String, Array[Long]) = _
+
   private def hotSetAt(gens: Seq[String]): graft.functions.LongPairSet = {
-    val els = readTables(gens.take(1), "hot").collect()
-    val set = graft.functions.LongPairSet(math.max(els.length, 1))
-    els.foreach { r => val e = r.getLong(0); set.add(e, e) }
-    set
+    val last = hotRead
+    if (last != null && last._1 == gens.head) last._2
+    else {
+      val els = readTables(gens.take(1), "hot").collect()
+      val set = graft.functions.LongPairSet(math.max(els.length, 1))
+      els.foreach { r => val e = r.getLong(0); set.add(e, e) }
+      hotRead = (gens.head, set)
+      set
+    }
   }
 
   /** The frozen element dictionary (dense mode) — read from the LAST
     * live generation, whose dict is a superset of all predecessors'. */
   def dictEls: Array[Long] = dictElsAt(manifest._4)
 
-  private def dictElsAt(gens: Seq[String]): Array[Long] =
-    readTables(gens.takeRight(1), "dict").collect()
-      .sortBy(_.getInt(1)).map(_.getLong(0))
+  private def dictElsAt(gens: Seq[String]): Array[Long] = {
+    val last = dictRead
+    if (last != null && last._1 == gens.last) last._2
+    else {
+      val els = readTables(gens.takeRight(1), "dict").collect()
+        .sortBy(_.getInt(1)).map(_.getLong(0))
+      dictRead = (gens.last, els)
+      els
+    }
+  }
 
   /** The probe-ready sketch (see [[CorpusSketch]]) — ONE manifest
     * resolution covers every table, so the sketch is an atomic
@@ -161,12 +189,13 @@ final class DedupIndex private (
   /** Probe: per incoming doc, the best near-dup match in the indexed
     * corpus (max jaccard ≥ tau, min id) or null. `corpus` is the source
     * table the index was built from — consulted only for candidate
-    * verification. The probe runs when this is called: one small
-    * collect reads the frozen hot set (sparse) or dictionary (dense),
-    * then three Spark actions run (batch fingerprints, candidates,
-    * verify — see [[graft.queries.DedupQueries.probeNearIncremental]]),
-    * and the result comes back as a local frame, one row per incoming
-    * row in doc_id order. The match is always a group rep (the rep
+    * verification. The probe runs when this is called: the frozen hot
+    * set (sparse) or dictionary (dense) is read unless this instance
+    * already holds it, then three Spark actions run (batch rows,
+    * candidates, verify — see
+    * [[graft.queries.DedupQueries.probeNearIncremental]]), and the
+    * result comes back as a local frame, one row per incoming row in
+    * doc_id order. The match is always a group rep (the rep
     * invariant above), so `members` is never read. */
   def probe(corpus: DataFrame, incoming: DataFrame, tau: Double = 0.5): DataFrame =
     graft.queries.DedupQueries.probeNearIncremental(
@@ -204,44 +233,13 @@ final class DedupIndex private (
   private def appendOnce(docs: DataFrame): Unit = {
     val (seq, tm, m, live) = manifest
     val gen = DedupIndex.genName(seq + 1)
-    if (m == "dense") {
-      import graft.operators.{DenseJaccard, PpJoin}
-      graft.functions.registerAll(spark)
-      val sh = DedupIndex.shingled(docs)
-      val known = dictElsAt(live)
-      // bounded collect (the tryBuildDict discipline): a batch whose
-      // vocabulary alone overflows the cap must refuse LOUDLY at the
-      // size check below, not OOM the driver inside this collect
-      val capPlus = DenseJaccard.MaxUniverseBits + 1
-      val newEls = sh
-        .select(explode(PpJoin.hashedEls(col("sh"))).as("el")).distinct()
-        .limit(capPlus)
-        .collect().map(_.getLong(0)).filterNot(known.toSet).sorted
-      val extended = known ++ newEls
-      if (extended.length > DenseJaccard.MaxUniverseBits)
-        throw new IllegalStateException(
-          s"append grew the element universe to ≥ ${extended.length} — past " +
-            s"the dense cap ${DenseJaccard.MaxUniverseBits}; rebuild the " +
-            "index (the corpus has outgrown dense mode)")
-      val dict = DenseJaccard.dictFromEls(extended)
-      val (g, mem) = DedupIndex.sketchBase(sh)
-      val bms = graft.queries.DedupQueries.repBitmaps(
-        sh, g, "sh", dict, extended.length)
-      DedupIndex.writeGeneration(path, gen, Seq(
-        "groups" -> g, "members" -> mem, "bitmaps" -> bms,
-        "dict" -> DedupIndex.dictFrame(spark, extended)))
-    } else {
-      // ONE copy of the frozen hot set per generation (reading the
-      // union of all generations here would double the table per
-      // append — 2^n growth over a daily index's lifetime); the set
-      // read for the postings is the set written
-      val hot = hotSetAt(live)
-      val (g, mem, p) = DedupIndex.sketchSparse(docs, hot, tm)
-      DedupIndex.writeGeneration(path, gen, Seq(
-        "groups" -> g, "members" -> mem, "postings" -> p,
-        "hot" -> DedupIndex.hotFrame(spark, hot)))
-    }
+    // the hot set stays in the first generation only: readers take it
+    // from there, and compact copies it into the generation it writes
+    val dict =
+      if (m == "dense") Some(DedupIndex.writeDense(path, gen, docs, dictElsAt(live), extend = true))
+      else { DedupIndex.writeSparse(path, gen, docs, hotSetAt(live), tm); None }
     DedupIndex.commitManifest(spark, path, seq + 1, tm, m, live :+ gen)
+    dict.foreach(d => dictRead = (gen, d))
   }
 
   /** Merge duplicate-fingerprint generations into one group row each —
@@ -353,20 +351,89 @@ object DedupIndex {
       graft.queries.DedupQueries.charShingles(col("text"), 5).as("sh"))
   }
 
-  /** (groups, members) for a shingled frame. */
-  private def sketchBase(sh: DataFrame): (DataFrame, DataFrame) = {
-    import graft.queries.DedupQueries
-    (DedupQueries.collapseGroups(sh, "sh"),
-      DedupQueries.memberByRep(DedupQueries.memberFrame(sh, "sh"))
-        .select(col("rep"), col("doc_id")))
+  /** `docs` as [[graft.queries.DedupQueries.repFrame]] rows with the
+    * candidate column `cand`, persisted: every table of a generation
+    * reads this one frame, so the batch is shingled and windowed once.
+    * AQE does not coalesce a persisted plan's partitions, and each
+    * partition writes one file per table, so the count is the one AQE
+    * would pick by default: the input's estimated size over the
+    * advisory partition size, at most the shuffle partitions. A small
+    * batch then writes one file per table, which every later probe
+    * scans. */
+  private def sketchFrame(docs: DataFrame, cand: Column): DataFrame = {
+    val conf = docs.sparkSession.sessionState.conf
+    val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+    val advisory = conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = (bytes / advisory + 1).min(conf.numShufflePartitions).toInt
+    graft.queries.DedupQueries.repFrame(shingled(docs), "sh", cand, parts).persist()
   }
 
-  /** Sparse-mode sketch: groups, members, postings under `hot`/`tm`. */
-  private def sketchSparse(docs: DataFrame, hot: graft.functions.LongPairSet,
-      tm: Long): (DataFrame, DataFrame, DataFrame) = {
-    val sh = shingled(docs)
-    val (g, m) = sketchBase(sh)
-    (g, m, graft.queries.DedupQueries.repPostings(sh, g, "sh", tm, hot))
+  /** groups (one row per fingerprint, its rep's) and members (every row). */
+  private def baseTables(k: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "groups" -> k.filter(col("is_rep"))
+      .select(col("fp1"), col("fp2"), col("rep"), col("sigb"), col("nonempty")),
+    "members" -> k.select(col("rep"), col("doc_id")))
+
+  /** The rows a group's candidate table is written from: its rep's. */
+  private def repRows(k: DataFrame): DataFrame = k.filter(col("is_rep") && col("nonempty"))
+
+  /** Write sparse generation `gen` of `docs`: groups, members, and the
+    * reps' prefix postings under the frozen order `hot` and build τ. */
+  private def writeSparse(path: String, gen: String, docs: DataFrame,
+      hot: graft.functions.LongPairSet, tm: Long): Unit = {
+    val k = sketchFrame(docs, graft.operators.PpJoin.prefixEls("sh", tm, hot))
+    try writeGeneration(path, gen, baseTables(k) :+ ("postings" -> repRows(k)
+      .select(col("rep").as("pid"), col("n"), posexplode(col("cand")))
+      .select(col("col").as("el"), col("pid"), (col("pos") + 1).as("rk"), col("n"))))
+    finally k.unpersist(false)
+  }
+
+  /** Write dense generation `gen` of `docs`: groups, members, and the
+    * reps' bitmaps under the dictionary `known`, which `extend` lets the
+    * batch's new elements extend (new elements take new bits; old
+    * bitmaps stay valid because old sets provably lack them). Returns
+    * the dictionary written. Overflow past the dense cap refuses
+    * loudly: rebuild the index rather than silently degrade
+    * completeness. */
+  private def writeDense(path: String, gen: String, docs: DataFrame,
+      known: Array[Long], extend: Boolean): Array[Long] = {
+    import graft.operators.{DenseJaccard, PpJoin}
+    val spark = docs.sparkSession
+    val k = sketchFrame(docs, PpJoin.hashedEls(col("sh")))
+    try {
+      val dict = if (extend) known ++ newElements(k, known) else known
+      if (dict.length > DenseJaccard.MaxUniverseBits)
+        throw new IllegalStateException(
+          s"append grew the element universe to ≥ ${dict.length} — past " +
+            s"the dense cap ${DenseJaccard.MaxUniverseBits}; rebuild the " +
+            "index (the corpus has outgrown dense mode)")
+      writeGeneration(path, gen, baseTables(k) ++ Seq(
+        "bitmaps" -> repRows(k).select(col("rep").as("pid"), col("n"),
+          DenseJaccard.bitmapCol(col("cand"), DenseJaccard.dictFromEls(dict), dict.length)
+            .as("bm")),
+        "dict" -> dictFrame(spark, dict)))
+      dict
+    } finally k.unpersist(false)
+  }
+
+  /** The elements of `k`'s sets missing from `known`, ascending. Each
+    * task returns at most one more than the dense cap (the tryBuildDict
+    * discipline): a batch whose new vocabulary alone overflows the cap
+    * refuses loudly at the caller's size check, never OOMs the driver
+    * in this collect. */
+  private def newElements(k: DataFrame, known: Array[Long]): Array[Long] = {
+    val knownSet = graft.functions.LongPairSet(math.max(known.length, 1))
+    known.foreach(e => knownSet.add(e, e))
+    val cap = graft.operators.DenseJaccard.MaxUniverseBits
+    k.filter(col("is_rep")).select(col("cand")).rdd.mapPartitions { it =>
+      val seen = new java.util.HashSet[Long]
+      it.foreach { r =>
+        if (!r.isNullAt(0)) r.getSeq[Long](0).foreach { e =>
+          if (seen.size <= cap && !knownSet.contains(e, e)) seen.add(e)
+        }
+      }
+      Iterator(seen.toArray.map(_.asInstanceOf[Long]))
+    }.collect().flatten.distinct.sorted
   }
 
   private def dictFrame(spark: SparkSession, els: Array[Long]): DataFrame = {
@@ -379,7 +446,7 @@ object DedupIndex {
     * element universe. `tau` sizes sparse prefixes (sparse probes must
     * run at τ ≥ it). */
   def build(docs: DataFrame, path: String, tau: Double = 0.5): DedupIndex = {
-    import graft.operators.{DenseJaccard, PpJoin}
+    import graft.operators.PpJoin
     val spark = docs.sparkSession
     graft.functions.registerAll(spark)
     val tm = PpJoin.tauMicros(tau)
@@ -394,17 +461,13 @@ object DedupIndex {
     val pick = graft.operators.DedupRegime.pick(spark, sh, "sh", tau,
       "index_build", allowBanded = false)
     val mode = pick.dict match {
-      case Some((els, dict)) =>
-        val (g, m) = sketchBase(sh)
-        val bms = graft.queries.DedupQueries.repBitmaps(sh, g, "sh", dict, els.length)
-        writeGeneration(path, gen, Seq("groups" -> g, "members" -> m,
-          "bitmaps" -> bms, "dict" -> dictFrame(spark, els)))
+      case Some((els, _)) =>
+        writeDense(path, gen, docs, els, extend = false)
         "dense"
       case None =>
         val hot = pick.hot.getOrElse(PpJoin.hotSet(sh, "sh"))
-        val (g, m, p) = sketchSparse(docs, hot, tm)
-        writeGeneration(path, gen, Seq("groups" -> g, "members" -> m,
-          "postings" -> p, "hot" -> hotFrame(spark, hot)))
+        writeSparse(path, gen, docs, hot, tm)
+        writeGeneration(path, gen, Seq("hot" -> hotFrame(spark, hot)))
         "sparse"
     }
     commitManifest(spark, path, 0, tm, mode, Seq(gen))

@@ -44,7 +44,12 @@ import graft.functions.{LongPairSet, PairSetContains}
  *    — past every prefix, where frequency order would have put them.
  *    Cold elements order by their (uniform) hash. Sorting, prefix
  *    extraction (`array_sort` + `slice`) and rank assignment all
- *    happen ARRAY-SIDE in one codegen'd projection: zero shuffle.
+ *    happen ARRAY-SIDE in one projection: zero shuffle. The projection
+ *    is not all codegen'd: `array_sort` over the `struct(h, el)`
+ *    elements compares through an interpreted comparator (a JFR
+ *    profile of an index build shows `ArraySort.comparator` and
+ *    `InterpretedOrdering.compare`), so the sort costs more per
+ *    element than the hashing around it.
  *  - **τ is carried in exact micro-units** (`tm = ⌊τ·10⁶⌋`): prefix
  *    length and both join filters use pure long arithmetic, so float
  *    rounding can never shorten a prefix (the silent-incompleteness
@@ -78,9 +83,9 @@ object PpJoin {
   def hashedEls(set: Column): Column =
     array_distinct(transform(set, e => xxhash64(e)))
 
-  private def isHot(e: Column, hot: LongPairSet): Column =
+  private def inSet(e: Column, set: LongPairSet): Column =
     GraftSqlBridge.column(PairSetContains(
-      GraftSqlBridge.expression(e), GraftSqlBridge.expression(e), hot))
+      GraftSqlBridge.expression(e), GraftSqlBridge.expression(e), set))
 
   /**
    * The frozen hot-element set: a bounded, deterministic sample of
@@ -136,7 +141,7 @@ object PpJoin {
   def postingsById(docs: DataFrame, idCol: String, setCol: String,
       tm: Long, hot: LongPairSet, exclude: Option[LongPairSet]): DataFrame = {
     val keyed = array_sort(transform(hashedEls(col(setCol)),
-      e => struct(when(isHot(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
+      e => struct(when(inSet(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
     val base = docs.select(col(idCol).as("pid"), keyed.as("k"))
       .filter(size(col("k")) > 0)
     val kept = exclude match {
@@ -167,7 +172,7 @@ object PpJoin {
   def postingsByFp(docs: DataFrame, fpCols: (String, String), setCol: String,
       tm: Long, hot: LongPairSet): DataFrame = {
     val keyed = array_sort(transform(hashedEls(col(setCol)),
-      e => struct(when(isHot(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
+      e => struct(when(inSet(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
     docs.select(col(fpCols._1).as("fp1"), col(fpCols._2).as("fp2"), keyed.as("k"))
       .filter(size(col("k")) > 0)
       .select(col("fp1"), col("fp2"), size(col("k")).cast("int").as("n"), col("k"))
@@ -183,9 +188,9 @@ object PpJoin {
   /** The prefix-element column of a doc frame under the engine's own
     * (isHot, el) order — the shared subtree of the posting builders and
     * the mass meters (`tm = 0` keeps ALL elements: full postings). */
-  private def prefixEls(setCol: String, tm: Long, hot: LongPairSet): Column = {
+  private[graft] def prefixEls(setCol: String, tm: Long, hot: LongPairSet): Column = {
     val keyed = array_sort(transform(hashedEls(col(setCol)),
-      e => struct(when(isHot(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
+      e => struct(when(inSet(e, hot), 1).otherwise(0).as("h"), e.as("el"))))
     val n = size(keyed).cast("long")
     val len = if (tm <= 0) n else prefixLen(n, tm)
     transform(slice(keyed, lit(1), len.cast("int")), s => s.getField("el"))
@@ -263,17 +268,49 @@ object PpJoin {
       .select(col("x.pid").as("id_a"), col("y.pid").as("id_b"))
       .distinct()
 
-  /** Complete candidate pairs probe × index (no id ordering — the
-    * sides are distinct corpora). Pass `hintBroadcastProbe` when the
-    * probe side is a bounded daily batch: the stored posting table then
-    * streams map-side with zero shuffle. */
-  def crossPairs(probe: DataFrame, index: DataFrame, tm: Long,
-      hintBroadcastProbe: Boolean): DataFrame = {
-    val p = if (hintBroadcastProbe) broadcast(probe) else probe
-    p.as("x").join(index.as("y"),
-        col("x.el") === col("y.el") && pairFilters(tm, "x", "y"))
-      .select(col("x.pid").as("in_rep"), col("y.pid").as("ex_rep"))
-      .distinct()
+  /** [[pairFilters]] for one pair of postings, on the JVM. */
+  private def pairOk(tm: Long, nx: Long, rkx: Long, ny: Long, rky: Long): Boolean =
+    tm * math.max(nx, ny) <= 1000000L * math.min(nx, ny) &&
+      (math.min(nx - rkx, ny - rky) + 1L) * (1000000L + tm) >= tm * (nx + ny)
+
+  /** Complete candidate pairs `(in_rep, ex_rep)` of a driver-held probe
+    * batch against a stored posting table (no id ordering — the sides
+    * are distinct corpora). `probe` holds each batch set's `(pid, n,
+    * prefix elements in engine order)`. Its postings ride the task
+    * closure as element-sorted arrays, so the stored table streams
+    * through one map-only pass: the scan's filter drops every posting
+    * whose element no batch prefix holds, and the rest meet their batch
+    * postings by binary search under the same length and positional
+    * filters as [[selfPairs]]. No broadcast and no exchange, so the
+    * pairs cost no job of their own. A pair is emitted once per
+    * partition; it can repeat across partitions. */
+  def crossPairs(probe: Seq[(Long, Int, Array[Long])], index: DataFrame,
+      tm: Long): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val post = probe.flatMap { case (pid, n, pfx) =>
+      pfx.indices.map(i => (pfx(i), pid, i + 1, n)) }.sortBy(_._1).toArray
+    val els = post.map(_._1)
+    val (pids, rks, ns) = (post.map(_._2), post.map(_._3), post.map(_._4))
+    val elSet = LongPairSet(math.max(els.length, 1))
+    els.foreach(e => elSet.add(e, e))
+    index.filter(inSet(col("el"), elSet))
+      .select(col("el"), col("pid"), col("rk"), col("n"))
+      .as[(Long, Long, Int, Int)]
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[(Long, Long)]
+        it.flatMap { case (el, ex, rky, ny) =>
+          var i = math.max(java.util.Arrays.binarySearch(els, el), 0)
+          while (i > 0 && els(i - 1) == el) i -= 1
+          val out = Seq.newBuilder[(Long, Long)]
+          while (i < els.length && els(i) == el) {
+            if (pairOk(tm, ns(i), rks(i), ny, rky) && seen.add((pids(i), ex)))
+              out += ((pids(i), ex))
+            i += 1
+          }
+          out.result()
+        }
+      }.toDF("in_rep", "ex_rep")
   }
 
   /** [[selfPairs]] over the fp-keyed fallback postings: candidate

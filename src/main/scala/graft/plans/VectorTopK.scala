@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -90,13 +90,19 @@ object VectorTopK {
   }
 }
 
-/** Plans [[VectorTopK]] as [[VectorTopKExec]]. */
+/** Plans [[VectorTopK]] as [[VectorTopKExec]]. A projection over the
+  * node folds into the operator's output, as Spark's
+  * `TakeOrderedAndProject` folds one, so that a collect of
+  * `search(q, k).select(...)` stays one stage. */
 object VectorTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case t: VectorTopK =>
-      VectorTopKExec(t.item, t.embedding, t.queries, t.k, t.cosine, t.produced, planLater(t.child)) :: Nil
+    case Project(list, t: VectorTopK) if list.forall(_.deterministic) => exec(t, Some(list)) :: Nil
+    case t: VectorTopK => exec(t, None) :: Nil
     case _ => Nil
   }
+
+  private def exec(t: VectorTopK, project: Option[Seq[NamedExpression]]): SparkPlan =
+    VectorTopKExec(t.item, t.embedding, t.queries, t.k, t.cosine, t.produced, project, planLater(t.child))
 
   /** Add the strategy to `spark` unless its planner already has it
     * (from `GraftExtensions` or an earlier call). */
@@ -121,12 +127,16 @@ object VectorTopKStrategy extends SparkStrategy {
  * are shared; only a row that enters a heap is copied.
  */
 case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryBatch, k: Int,
-    cosine: Boolean, produced: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
+    cosine: Boolean, produced: Seq[Attribute], project: Option[Seq[NamedExpression]],
+    child: SparkPlan) extends UnaryExecNode {
 
-  override def output: Seq[Attribute] = VectorTopK.output(item, produced, child.output)
+  /** The ranked rows before the folded projection. */
+  private def ranked: Seq[Attribute] = VectorTopK.output(item, produced, child.output)
+  override def output: Seq[Attribute] = project.fold(ranked)(_.map(_.toAttribute))
   override def producedAttributes: AttributeSet = AttributeSet(produced)
   override def outputPartitioning: Partitioning = SinglePartition
-  override protected def stringArgs: Iterator[Any] = VectorTopK.args(cosine, k, queries, item, embedding)
+  override protected def stringArgs: Iterator[Any] =
+    VectorTopK.args(cosine, k, queries, item, embedding) ++ project.iterator
 
   // this operator reads batches itself, so the ColumnarToRow that Spark
   // puts over a columnar child is dropped
@@ -165,7 +175,7 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
     * output, projected from a kept row joined with (rank, query id). */
   private def merge(): Iterator[InternalRow] => Iterator[InternalRow] = {
     val (ids, topK, itemType, itemAt) = (queries.ids, k, item.dataType, keptItemAt)
-    val p = payload
+    val (p, projection, full) = (payload, project, ranked)
     val width = 2 + p.length
     val out =
       if (batch) Seq(BoundReference(width + 1, queries.idType, nullable = true),
@@ -181,14 +191,16 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
         val h = heaps(r.getInt(0))
         if (h.admits(isNull, s, r, itemAt)) h.offer(isNull, s, r.copy(), itemAt)
       }
-      val project = UnsafeProjection.create(out)
+      val rank = UnsafeProjection.create(out)
+      val outer = projection.map(UnsafeProjection.create(_, full))
       val tail = new GenericInternalRow(2)
       val joined = new JoinedRow()
       heaps.iterator.zipWithIndex.flatMap { case (h, slot) =>
-        h.sortedSlots.iterator.zipWithIndex.map { case (at, rank) =>
-          tail.update(0, rank + 1)
+        h.sortedSlots.iterator.zipWithIndex.map { case (at, r) =>
+          tail.update(0, r + 1)
           tail.update(1, ids(slot))
-          project(joined(h.rows(at), tail)).copy()
+          val row = rank(joined(h.rows(at), tail))
+          outer.fold(row)(_(row)).copy()
         }
       }
     }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 
 /**
@@ -140,6 +142,29 @@ object DedupQueries {
       .partitionBy(col("fp1"), col("fp2"))
     members.withColumn("rep", min(col("doc_id")).over(w))
       .select(col("rep"), col("doc_id"), col("nonempty"))
+  }
+
+  /** One row per document of a shingled frame, carrying everything an
+    * index generation is written from: `(doc_id, fp1, fp2, sigb,
+    * nonempty, n, cand, rep, is_rep)`. `n` is the count of distinct
+    * hashed elements, `cand` the caller's candidate column (prefix
+    * elements or all hashed elements), `rep` the group representative
+    * (min doc_id over the fingerprint, as in [[memberByRep]]) and
+    * `is_rep` marks one row per fingerprint, the rep's own. One window
+    * gives both, so the shingles are computed once and only this row,
+    * never the set or the text, moves through the one exchange, into
+    * `parts` partitions. */
+  private[graft] def repFrame(docs: DataFrame, setCol: String, cand: Column,
+      parts: Int): DataFrame = {
+    import graft.operators.PpJoin
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("fp1"), col("fp2")).orderBy(col("doc_id").asc_nulls_last)
+    docs.select(col("doc_id") +: fp128(col(setCol), "graft:fp2") :+
+        minhash_sigb(col(setCol)).as("sigb") :+ (size(col(setCol)) > 0).as("nonempty") :+
+        size(PpJoin.hashedEls(col(setCol))).as("n") :+ cand.as("cand"): _*)
+      .repartition(parts, col("fp1"), col("fp2"))
+      .withColumn("rep", min(col("doc_id")).over(w))
+      .withColumn("is_rep", row_number().over(w) === 1)
   }
 
   /** The shared band geometry (16 bands × 4 rows) and prefilter
@@ -330,8 +355,6 @@ object DedupQueries {
   private val candSetsCache = new graft.operators.CacheSlot
   private val containCandCache = new graft.operators.CacheSlot
   private val containSetsCache = new graft.operators.CacheSlot
-  private val probeCandCache = new graft.operators.CacheSlot
-
   /** Candidate-pair frames up to this row count broadcast into the
     * verify joins (the repo-wide 256 Ki broadcast cap); bigger frames
     * take the id-prune path. */
@@ -1784,39 +1807,47 @@ object DedupQueries {
   /** The probe half of [[dedupNearIncremental]], consuming the
     * corpus's PRECOMPUTED [[graft.index.CorpusSketch]] — exactly what
     * [[graft.index.DedupIndex]] persists, so a daily batch probe is
-    * O(batch work): the batch computes its own bitmaps/postings
-    * map-side under the sketch's FROZEN dictionary/order and joins the
-    * stored table (batch side broadcast, so the stored table streams
-    * with zero shuffle). `existing` (the source table) is read only to
-    * re-derive shingle sets for the candidate reps the exact verify
-    * needs: the scan streams, and an id semi-join drops every other row
-    * before its text is shingled. Sparse sketches require `tau ≥` the
-    * build threshold (stored prefixes are sized for it); dense bitmaps
-    * are τ-independent.
+    * O(batch work): the batch computes its own prefix postings or
+    * bitmaps under the sketch's FROZEN order/dictionary, and the stored
+    * table streams past them in one map-only scan. `existing` (the
+    * source table) is read only to re-derive shingle sets for the
+    * candidate reps the exact verify needs. Sparse sketches require
+    * `tau ≥` the build threshold (stored prefixes are sized for it);
+    * dense bitmaps are τ-independent.
     *
     * The probe runs when this is called, as three Spark actions:
-    *  1. batch fingerprints — one bounded collect of `(doc_id, fp1,
-    *     fp2, nonempty)` per incoming row, which gives the batch groups,
-    *     their reps and the non-rep ids on the driver;
-    *  2. candidates — exact fingerprint pairs (a corpus group with the
-    *     batch set's fingerprint: Jaccard exactly 1.0, no set moves) and
-    *     the prefix/bitmap candidates from one plan, persisted once; the
-    *     action returns the exact pairs and the candidate count;
-    *  3. verify — the one-pass [[graft.functions.SetJaccard]] kernel,
-    *     once per remaining candidate pair, reduced to the best `(jaccard,
-    *     ex_rep)` per batch set before the collect, so it returns at
-    *     most one row per batch group.
-    * (Dense mode adds one bounded collect inside step 2: the bitmap
-    * generator packs the batch side before it broadcasts it.)
+    *  1. batch rows — one bounded collect per incoming row of its
+    *     doc_id, set fingerprint, text, and prefix elements (sparse) or
+    *     bitmap (dense). Over a local `incoming` frame this runs no job.
+    *     The driver then holds the batch groups, their reps, the
+    *     non-rep ids, and the batch side of the next two actions, which
+    *     ride the task closures instead of broadcast joins;
+    *  2. candidates — one map-only job over the stored postings (or
+    *     bitmaps) and groups. It returns the prefix/bitmap candidate
+    *     pairs and the exact fingerprint pairs (a corpus group with the
+    *     batch set's fingerprint: Jaccard exactly 1.0, no set moves);
+    *  3. verify — an id filter keeps only the candidate reps' source
+    *     rows, which are repartitioned by rep over every core, shingled
+    *     there and scored on the one-pass [[graft.functions.SetJaccard]]
+    *     kernel against the batch sets. Each task returns its best
+    *     `(jaccard, ex_rep)` per batch set. The exchange makes this two
+    *     jobs.
     * The pick then runs on the driver. A group's rep is its minimum
     * doc_id on both sides (the [[graft.index.DedupIndex]] rep
     * invariant), so the best member of the best corpus group is its
     * rep and corpus membership is never expanded. The result comes
     * back as a local frame: one row per incoming row, in doc_id order,
     * with the best match (max jaccard, then min id) or null. A batch
-    * past [[MaxProbeBatch]] rows is probed in doc_id slices. */
+    * past [[MaxProbeBatch]] rows is probed in doc_id slices, and a slice
+    * with more than [[MaxProbePairs]] candidate pairs is halved. */
   def probeNearIncremental(sk: graft.index.CorpusSketch,
-      existing: DataFrame, incoming: DataFrame, tau: Double = 0.5): DataFrame = {
+      existing: DataFrame, incoming: DataFrame, tau: Double = 0.5): DataFrame =
+    probeNearCapped(sk, existing, incoming, tau, MaxProbePairs)
+
+  /** [[probeNearIncremental]] with the candidate-pair cap of one verify
+    * as a parameter. */
+  private[graft] def probeNearCapped(sk: graft.index.CorpusSketch, existing: DataFrame,
+      incoming: DataFrame, tau: Double, maxPairs: Int): DataFrame = {
     import graft.operators.PpJoin
     val spark = existing.sparkSession
     registerAll(spark) // kernels resolve via the registry
@@ -1824,9 +1855,10 @@ object DedupQueries {
       require(PpJoin.tauMicros(tau) >= sk.tauMicros,
         s"probe tau=$tau is below the index build threshold " +
           s"(${sk.tauMicros / 1e6}) — stored prefixes would be too short")
-    val head = batchRows(incoming, MaxProbeBatch + 1)
+    val tm = PpJoin.tauMicros(tau)
+    val head = batchRows(sk, incoming, tm, MaxProbeBatch + 1)
     val out =
-      if (head.length <= MaxProbeBatch) probeBatch(sk, existing, incoming, head, tau)
+      if (head.length <= MaxProbeBatch) probeBatch(sk, existing, head, tau, maxPairs)
       else {
         // over the bound: the ids alone (8 B a row, less than the result
         // this returns) cut the batch into slices probed one at a time
@@ -1835,7 +1867,7 @@ object DedupQueries {
         val keys = ids.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
         probeSlices(keys, MaxProbeBatch).toArray.flatMap { case (lo, hi) =>
           val part = incoming.filter(col("doc_id").between(lo, hi))
-          probeBatch(sk, existing, part, batchRows(part, Int.MaxValue), tau)
+          probeBatch(sk, existing, batchRows(sk, part, tm, Int.MaxValue), tau, maxPairs)
         } ++ Array.fill(nulls)(Row(null, null, null, false))
       }
     val schema = StructType(Seq(incoming.schema("doc_id"),
@@ -1847,12 +1879,18 @@ object DedupQueries {
     spark.createDataFrame(java.util.Arrays.asList(sorted: _*), schema)
   }
 
-  /** Batch rows one probe pass takes at once — the bound on its
-    * batch-side broadcasts (postings or bitmaps, candidate sets). A
+  /** Batch rows one probe pass takes at once — the bound on what the
+    * driver holds of a batch (its rows, candidate sides and texts). A
     * larger batch is probed in doc_id slices of at most this many rows
     * ([[probeSlices]]); a probe keeps no state across batch docs, so
     * slicing changes no result. */
   private[graft] val MaxProbeBatch = 200000
+
+  /** Candidate pairs one verify takes onto the driver and into its task
+    * closure (the repo-wide 256 Ki broadcast cap). A slice with more is
+    * halved, down to a single doc_id, whose pairs are taken whatever
+    * their number. */
+  private val MaxProbePairs = 1 << 18
 
   /** Inclusive doc_id ranges that cut ascending `ids` into runs of at
     * most `bound` ids. A doc_id never straddles two ranges, so an id
@@ -1882,99 +1920,127 @@ object DedupQueries {
 
   /** One incoming row as action 1 collects it: the doc_id as given
     * (echoed in the result), the same id as a long key (None when
-    * null), the 128-bit fingerprint of its shingle set, and whether
-    * the set is non-empty (a null set is not). */
+    * null), the 128-bit fingerprint of its shingle set, whether the set
+    * is non-empty (a null set is not), the text (the verify shingles it
+    * again), the count `n` of distinct hashed elements, and `cand`: the
+    * prefix elements under the frozen order (sparse, `Array[Long]`) or
+    * the bitmap under the frozen dictionary (dense, `Array[Byte]`). */
   private final case class BatchRow(id: Any, key: Option[Long], fp: (Long, Long),
-      nonempty: Boolean)
+      nonempty: Boolean, text: String, n: Int, cand: AnyRef)
 
-  /** Action 1: the batch fingerprints, at most `limit` rows. */
-  private def batchRows(incoming: DataFrame, limit: Int): Array[BatchRow] =
-    incoming.select(col("doc_id"), col("doc_id").cast("long").as("key"),
+  /** Action 1: the batch rows, at most `limit` of them. */
+  private def batchRows(sk: graft.index.CorpusSketch, incoming: DataFrame, tm: Long,
+      limit: Int): Array[BatchRow] = {
+    import graft.operators.{DenseJaccard, PpJoin}
+    val els = PpJoin.hashedEls(col("sh"))
+    val cand = sk.dense match {
+      case Some((_, dictEls)) =>
+        DenseJaccard.bitmapCol(els, DenseJaccard.dictFromEls(dictEls), dictEls.length)
+      case None => PpJoin.prefixEls("sh", tm, sk.postings.get._2)
+    }
+    incoming.select(col("doc_id"), col("doc_id").cast("long").as("key"), col("text"),
         charShingles(col("text"), 5).as("sh"))
-      .select(Seq(col("doc_id"), col("key")) ++ fp128(col("sh"), "graft:fp2") :+
-        (size(col("sh")) > 0).as("nonempty"): _*)
+      .select(Seq(col("doc_id"), col("key")) ++ fp128(col("sh"), "graft:fp2") ++ Seq(
+        (size(col("sh")) > 0).as("nonempty"), col("text"), size(els).as("n"),
+        cand.as("cand")): _*)
       .limit(limit).collect()
-      .map(r => BatchRow(r.get(0), if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        (r.getLong(2), r.getLong(3)), !r.isNullAt(4) && r.getBoolean(4)))
+      .map { r =>
+        val c: AnyRef = if (r.isNullAt(7)) null
+          else if (sk.dense.isDefined) r.getAs[Array[Byte]](7)
+          else r.getSeq[Long](7).toArray
+        BatchRow(r.get(0), if (r.isNullAt(1)) None else Some(r.getLong(1)),
+          (r.getLong(2), r.getLong(3)), !r.isNullAt(4) && r.getBoolean(4),
+          r.getString(5), if (r.isNullAt(6)) 0 else r.getInt(6), c)
+      }
+  }
 
   /** Probe one slice whose rows action 1 already collected; returns one
     * `(doc_id, match_id, jaccard, is_dup)` row per batch row. */
   private def probeBatch(sk: graft.index.CorpusSketch, existing: DataFrame,
-      incoming: DataFrame, rows: Array[BatchRow], tau: Double): Array[Row] = {
+      rows: Array[BatchRow], tau: Double, maxPairs: Int): Array[Row] = {
     val keyed = rows.filter(_.key.isDefined)
-    val best = bestPerSet(sk, existing, incoming, keyed, tau)
-    // a repeated doc_id takes the best over every set it carries, the
-    // same grain as a pick partitioned by doc_id
-    val bestById = keyed.groupBy(_.key.get).view.mapValues(rs =>
-      rs.flatMap(r => best.get(r.fp)).sortBy { case (j, m) => (-j, m) }.headOption).toMap
-    rows.map { r =>
-      r.key.flatMap(bestById) match {
-        case Some((j, m)) => Row(r.id, m, j, true)
-        case None => Row(r.id, null, null, false)
-      }
+    val ids = keyed.map(_.key.get).distinct.sorted
+    bestPerSet(sk, existing, keyed, tau, if (ids.length > 1) maxPairs else Int.MaxValue) match {
+      case Some(best) =>
+        // a repeated doc_id takes the best over every set it carries, the
+        // same grain as a pick partitioned by doc_id
+        val bestById = keyed.groupBy(_.key.get).view.mapValues(rs =>
+          rs.flatMap(r => best.get(r.fp)).sortBy { case (j, m) => (-j, m) }.headOption).toMap
+        rows.map { r =>
+          r.key.flatMap(bestById) match {
+            case Some((j, m)) => Row(r.id, m, j, true)
+            case None => Row(r.id, null, null, false)
+          }
+        }
+      case None =>
+        // more candidate pairs than one verify takes: halve the slice
+        probeSlices(ids, (ids.length + 1) / 2).toArray.flatMap { case (lo, hi) =>
+          probeBatch(sk, existing,
+            keyed.filter(r => lo <= r.key.get && r.key.get <= hi), tau, maxPairs)
+        } ++ rows.filter(_.key.isEmpty).map(r => Row(r.id, null, null, false))
     }
   }
 
   /** Actions 2 and 3: per batch set fingerprint, its best corpus match
-    * `(jaccard, rep)` at `jaccard ≥ tau` (max jaccard, then min rep). */
+    * `(jaccard, rep)` at `jaccard ≥ tau` (max jaccard, then min rep);
+    * None when the slice has more than `maxPairs` candidate pairs. */
   private def bestPerSet(sk: graft.index.CorpusSketch, existing: DataFrame,
-      incoming: DataFrame, keyed: Array[BatchRow],
-      tau: Double): Map[(Long, Long), (Double, Long)] = {
+      keyed: Array[BatchRow], tau: Double,
+      maxPairs: Int): Option[Map[(Long, Long), (Double, Long)]] = {
     import graft.operators.{DenseJaccard, PpJoin}
     val live = keyed.filter(_.nonempty).map(_.fp).distinct
-    if (live.isEmpty) return Map.empty
+    if (live.isEmpty) return Some(Map.empty)
+    val spark = existing.sparkSession
+    import spark.implicits._
     val tm = PpJoin.tauMicros(tau)
     val byId = keyed.groupBy(_.key.get)
     // a group's rep is its minimum doc_id, as on the corpus side; an id
     // that is the rep of none of its rows' groups carries no postings
     val repOf = keyed.groupBy(_.fp).view.mapValues(_.map(_.key.get).min).toMap
-    val nonReps = LongPairSet(byId.size)
-    for ((k, rs) <- byId if rs.forall(r => repOf(r.fp) != k)) nonReps.add(k, k)
-    val inDocs = incoming.select(col("doc_id").cast("long").as("doc_id"),
-        charShingles(col("text"), 5).as("sh"))
-      .filter(col("doc_id").isNotNull)
+    val posting = keyed.filter(r =>
+      r.nonempty && byId(r.key.get).exists(x => repOf(x.fp) == r.key.get))
 
-    // action 2: exact fingerprint pairs + prefix/bitmap candidates, one
-    // plan, persisted once (the verify reads the near pairs back)
+    // action 2: prefix/bitmap candidates and exact fingerprint pairs,
+    // one map-only job
     val near = sk.dense match {
-      case Some((exBms, dictEls)) =>
+      case Some((exBms, _)) =>
         // batch bitmaps under the frozen dictionary: batch elements
         // outside it set no bit but count in n — they cannot intersect
         // any indexed set, so J stays exact
-        val inBms = DenseJaccard.bitmaps(inDocs, "doc_id", "sh",
-          DenseJaccard.dictFromEls(dictEls), dictEls.length, Some(nonReps))
-        DenseJaccard.crossPairs(inBms, exBms, tm)
+        DenseJaccard.crossPairs(posting.toSeq.map(r =>
+          (r.key.get, r.n, r.cand.asInstanceOf[Array[Byte]])).toDF("pid", "n", "bm"), exBms, tm)
       case None =>
         // batch prefixes at the (tighter) probe τ: the first common
         // element of a qualifying pair is inside each side's OWN-τ
         // prefix, so a tight batch prefix against a loose stored prefix
-        // loses nothing. The bounded batch side broadcasts, so the
-        // stored posting table streams without a shuffle.
-        val (exPost, hot) = sk.postings.get
-        val inPost = PpJoin.postingsById(inDocs, "doc_id", "sh", tm, hot, Some(nonReps))
-        PpJoin.crossPairs(inPost, exPost, tm, hintBroadcastProbe = true)
+        // loses nothing
+        PpJoin.crossPairs(posting.toSeq.map(r =>
+          (r.key.get, r.n, r.cand.asInstanceOf[Array[Long]])), sk.postings.get._1, tm)
     }
     val liveFps = LongPairSet(live.length)
     live.foreach { case (a, b) => liveFps.add(a, b) }
-    val cand = probeCandCache.cache(
-      near.select(lit(false).as("exact"), col("in_rep"), lit(0L).as("fp1"),
-          lit(0L).as("fp2"), col("ex_rep"))
-        .unionByName(sk.groups
-          .filter(pairSetContains(col("fp1"), col("fp2"), liveFps))
-          .select(lit(true).as("exact"), lit(null).cast("long").as("in_rep"),
-            col("fp1"), col("fp2"), col("rep").as("ex_rep"))))
-    // each partition returns its near-pair count and its exact pairs:
-    // one job over the persisted rows, no aggregation stage
+    val cand = near.select(lit(false).as("exact"), col("in_rep"), lit(0L).as("fp1"),
+        lit(0L).as("fp2"), col("ex_rep"))
+      .unionByName(sk.groups
+        .filter(pairSetContains(col("fp1"), col("fp2"), liveFps))
+        .select(lit(true).as("exact"), lit(null).cast("long").as("in_rep"),
+          col("fp1"), col("fp2"), col("rep").as("ex_rep")))
+    // each partition returns its exact pairs and its near pairs, or only
+    // their count once it passes the cap
     val summary = cand.rdd.mapPartitions { it =>
       var n = 0L
       val exact = Array.newBuilder[(Long, Long, Long)]
+      val pairs = Array.newBuilder[(Long, Long)]
       it.foreach { r =>
         if (r.getBoolean(0)) exact += ((r.getLong(2), r.getLong(3), r.getLong(4)))
-        else n += 1
+        else {
+          n += 1
+          if (n <= maxPairs) pairs += ((r.getLong(1), r.getLong(4)))
+        }
       }
-      Iterator((n, exact.result()))
+      Iterator((n, exact.result(), if (n <= maxPairs) pairs.result() else Array.empty[(Long, Long)]))
     }.collect()
-    val nNear = summary.map(_._1).sum
+    if (summary.map(_._1).sum > maxPairs) return None
     val exactReps = summary.flatMap(_._2).groupMap(e => (e._1, e._2))(_._3)
 
     // a near pair of a rep whose rows all carry its one set, against a
@@ -1983,54 +2049,63 @@ object DedupQueries {
     val settled = LongPairSet(math.max(exactReps.valuesIterator.map(_.length).sum, 1))
     for ((fp, exs) <- exactReps; k = repOf(fp); if byId(k).forall(_.fp == fp);
          ex <- exs) settled.add(k, ex)
+    val pairs = summary.flatMap(_._3).distinct.filterNot { case (k, ex) => settled.contains(k, ex) }
 
-    // action 3: verify. ≤ 256 Ki candidate pairs (the daily shape)
-    // broadcast with the batch sets, so the source scan streams and its
-    // text never enters an exchange; bigger frames shuffle instead of
-    // broadcasting past the cap
-    val verified =
-      if (nNear == 0) Map.empty[(Long, Long), (Double, Long)]
-      else {
-        val bcast = nNear <= MaxBroadcastCandPairs
-        def side(df: DataFrame) = if (bcast) broadcast(df) else df
-        val pairs = cand
-          .filter(!col("exact") &&
-            !pairSetContains(col("in_rep"), col("ex_rep"), settled))
-          .select(col("in_rep"), col("ex_rep"))
-        val setsI = inDocs
-          .filter(size(col("sh")) > 0 &&
-            !pairSetContains(col("doc_id"), col("doc_id"), nonReps))
-          .select(Seq(col("doc_id").as("in_rep")) ++ fp128(col("sh"), "graft:fp2") :+
-            col("sh").as("set_i"): _*)
-        // the candidate-id semi-join comes BEFORE the shingle projection,
-        // so only candidate reps of the source are shingled (written the
-        // other way round, the plan keeps the shingle projection under
-        // the semi-join, and only whole-stage codegen's lazy evaluation
-        // spares the rows that do not match)
-        val setsE = existing.select(col("doc_id").cast("long").as("ex_rep"), col("text"))
-          .join(side(pairs.select(col("ex_rep"))), Seq("ex_rep"), "left_semi")
-          .select(col("ex_rep"), charShingles(col("text"), 5).as("set_e"))
-        // the kernel runs once per pair, in the projection under the
-        // reduce: the τ cut comes after the reduce, so no filter can be
-        // pushed into a join to evaluate it a second time, and `j` feeds
-        // two aggregates, so the projection is not folded into the
-        // aggregate and only (fp, j, ex_rep) rows reach its sort
-        setsE.join(side(pairs), Seq("ex_rep")).join(side(setsI), Seq("in_rep"))
-          .select(col("fp1"), col("fp2"), col("ex_rep"),
-            coalesce(round(jaccard(col("set_i"), col("set_e")), 4), lit(-1.0)).as("j"))
-          .groupBy(col("fp1"), col("fp2"))
-          .agg(max(col("j")).as("j"),
-            min(struct(negate(col("j")), col("ex_rep"))).as("pick"))
-          .collect()
-          .collect { case r if r.getDouble(2) >= tau =>
-            (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getStruct(3).getLong(1)) }
-          .toMap
-      }
-    live.flatMap { fp =>
+    val verified = if (pairs.isEmpty) Map.empty[(Long, Long), (Double, Long)]
+      else verifyPairs(existing, pairs, keyed, tau)
+    Some(live.flatMap { fp =>
       val exact = exactReps.get(fp).map(exs => (1.0, exs.min))
       (exact.toSeq ++ verified.get(fp)).sortBy { case (j, m) => (-j, m) }
         .headOption.map(fp -> _)
-    }.toMap
+    }.toMap)
+  }
+
+  /** Action 3: the exact Jaccard of every candidate pair `(in_rep,
+    * ex_rep)`, reduced to the best `(jaccard, ex_rep)` at `jaccard ≥ tau`
+    * per batch set fingerprint (max jaccard, then min rep). The pairs
+    * and the candidate batch rows' texts ride the task closure; the
+    * source rows of the candidate reps are repartitioned by rep into
+    * one task per core (an explicit count, which AQE does not coalesce),
+    * so one large source file is no longer one task's work. */
+  private def verifyPairs(existing: DataFrame, pairs: Array[(Long, Long)],
+      keyed: Array[BatchRow], tau: Double): Map[(Long, Long), (Double, Long)] = {
+    val inOf = pairs.groupMap(_._2)(_._1)
+    // every set a candidate in_rep carries: a repeated doc_id can carry several
+    val wanted = pairs.map(_._1).toSet
+    val textsOf = keyed.filter(r => r.nonempty && wanted(r.key.get))
+      .groupMap(_.key.get)(r => (r.fp, r.text))
+    val exReps = LongPairSet(inOf.size)
+    inOf.keys.foreach(e => exReps.add(e, e))
+    val parts = math.max(1,
+      math.min(inOf.size, existing.sparkSession.sparkContext.defaultParallelism))
+    def better(a: (Double, Long), b: (Double, Long)) =
+      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+    def shingles(t: String) = SketchUtil.charShingles(UTF8String.fromString(t), 5)
+    existing.select(col("doc_id").cast("long").as("ex_rep"), col("text"))
+      .filter(pairSetContains(col("ex_rep"), col("ex_rep"), exReps))
+      .repartition(parts, col("ex_rep"))
+      .rdd.mapPartitions { rows =>
+        val sets = scala.collection.mutable.HashMap.empty[Long, Array[((Long, Long), ArrayData)]]
+        val best = scala.collection.mutable.HashMap.empty[(Long, Long), (Double, Long)]
+        rows.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val ex = r.getLong(0)
+            val se = shingles(r.getString(1))
+            inOf(ex).foreach { k =>
+              sets.getOrElseUpdate(k, textsOf(k).map { case (fp, t) => (fp, shingles(t)) })
+                .foreach { case (fp, si) =>
+                  // rounded as Spark's round(j, 4) rounds a double
+                  val j = BigDecimal(SetJaccard.ratio(si, se, 0))
+                    .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+                  if (j >= tau && best.get(fp).forall(b => better((j, ex), b)))
+                    best(fp) = (j, ex)
+                }
+            }
+          }
+        }
+        best.iterator
+      }.collect()
+      .groupMapReduce(_._1)(_._2)((a, b) => if (better(b, a)) b else a)
   }
 
   private def pairSetContains(a: Column, b: Column, set: LongPairSet): Column =

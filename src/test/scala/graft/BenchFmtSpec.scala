@@ -71,4 +71,32 @@ class BenchFmtSpec extends AnyFunSuite {
       .map(p => root.relativize(p).toString).toSeq
     assert(builders == Seq("graft/SparkEntry.scala"), builders.mkString(", "))
   }
+
+  test("GroupTelemetry counts a group's jobs and stages, and Diag's line prints " +
+      "jobs next to stages") {
+    import org.apache.spark.scheduler._
+    val t = new ScaleProbe.GroupTelemetry
+    def props(group: String) = {
+      val p = new java.util.Properties
+      if (group != null) p.setProperty("spark.jobGroup.id", group)
+      p
+    }
+    val stage = new StageInfo(7, 0, "collect at X.scala:1", 4, Nil, Nil, "",
+      resourceProfileId = 0)
+    t.onJobStart(SparkListenerJobStart(1, 0L, Seq(stage), props("g")))
+    t.onJobStart(SparkListenerJobStart(2, 0L, Nil, props("g")))
+    t.onJobStart(SparkListenerJobStart(3, 0L, Nil, props("other")))
+    t.onJobStart(SparkListenerJobStart(4, 0L, Nil, props(null)))
+    // (stage completion needs a live job's task metrics: GroupTelemetrySpec)
+    t.onStageSubmitted(SparkListenerStageSubmitted(stage, props("g")))
+    val s = t.snapshot("g").get
+    assert(s.jobs == 2 && s.lastStage == "collect at X.scala:1")
+    assert(t.snapshot("other").get.jobs == 1)
+    s.stagesDone = 3
+    assert(Diag.okLine("dedup_keep", 0.25, Some(s)) ==
+      """{"key":"dedup_keep","status":"ok","wall_s":0.250,"jobs":2,"stages":3,""" +
+        """"shuffle_read_bytes":0,"shuffle_write_bytes":0,"shuffle_write_records":0,""" +
+        """"input_records":0}""")
+    assert(Diag.okLine("q", 1.0, None).contains(""""jobs":0,"stages":0,"""))
+  }
 }

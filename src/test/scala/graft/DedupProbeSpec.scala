@@ -136,6 +136,9 @@ class DedupProbeSpec extends SparkSpec {
       assert(got == want)
       assert(got.count(_._4) == 9, got.toString)
       assert(got.find(_._1.contains(101L)).get == ((Some(101L), Some(4L), Some(1.0), true)))
+      // a slice with more candidate pairs than one verify takes is halved
+      // down to single doc_ids: the rows stay the same
+      assert(rows(DedupQueries.probeNearCapped(idx.sketch(), corpus, batch, tau, 1)) == want)
 
       // no candidates at all, and an empty batch
       // (upper case and digits: not one 5-shingle in common with the corpus)
@@ -188,24 +191,15 @@ class DedupProbeSpec extends SparkSpec {
     }
   }
 
-  test("a 10-doc probe of a 2-generation sparse index runs few jobs and never reads members") {
-    val dir = tmpDir("budget")
-    val corpus0 = (0 until 40).map(i => (i.toLong * 2: java.lang.Long, s"$a number $i"))
-    val corpus1 = (40 until 60).map(i => (i.toLong * 2: java.lang.Long, s"$b number $i"))
-    val idx = withRegime("sparse")(DedupIndex.build(frame(corpus0), s"$dir/idx", tau))
-    idx.append(frame(corpus1))
-    assert(idx.mode == "sparse")
-    val corpus = frame(corpus0 ++ corpus1)
-    val batch = frame((0 until 10).map(i => (1001L + 2 * i: java.lang.Long,
-      if (i % 2 == 0) s"$a number ${i * 3}" else s"$novel $i")))
-    idx.probe(corpus, batch, tau).collect() // warm: codegen, class loading
-
+  /** Runs `f`, counting the Spark jobs it starts and the table paths
+    * its queries scan. */
+  private def traced[T](f: => T): (T, Int, Set[String]) = {
     def drain(): Unit = org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
-    @volatile var jobs = 0
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val scanned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val jl = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+        jobs.incrementAndGet()
     }
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
@@ -225,18 +219,136 @@ class DedupProbeSpec extends SparkSpec {
     drain()
     spark.sparkContext.addSparkListener(jl)
     spark.listenerManager.register(ql)
-    val got = try {
-      val out = rows(idx.probe(corpus, batch, tau))
+    try {
+      val out = f
       drain()
-      out
+      (out, jobs.get, scanned.asScala.toSet)
     } finally {
       spark.listenerManager.unregister(ql)
       spark.sparkContext.removeSparkListener(jl)
     }
+  }
+
+  test("a 10-doc probe of a 2-generation sparse index runs few jobs and never reads members") {
+    val dir = tmpDir("budget")
+    val corpus0 = (0 until 40).map(i => (i.toLong * 2: java.lang.Long, s"$a number $i"))
+    val corpus1 = (40 until 60).map(i => (i.toLong * 2: java.lang.Long, s"$b number $i"))
+    val idx = withRegime("sparse")(DedupIndex.build(frame(corpus0), s"$dir/idx", tau))
+    idx.append(frame(corpus1))
+    assert(idx.mode == "sparse")
+    val corpus = frame(corpus0 ++ corpus1)
+    val batch = frame((0 until 10).map(i => (1001L + 2 * i: java.lang.Long,
+      if (i % 2 == 0) s"$a number ${i * 3}" else s"$novel $i")))
+    idx.probe(corpus, batch, tau).collect() // warm: codegen, class loading
+    val (got, jobs, scanned) = traced(rows(idx.probe(corpus, batch, tau)))
     assert(got == oracle(corpus, batch))
-    assert(jobs <= 10, s"probe ran $jobs Spark jobs")
-    assert(scanned.asScala.exists(_.contains("/postings")), scanned.toString)
-    assert(!scanned.asScala.exists(_.contains("/members")),
-      s"the probe read members: $scanned")
+    // one candidate job, and a verify of two (its exchange and the
+    // collect); the batch rows of a local frame and the hot set this
+    // instance already read cost none
+    assert(jobs <= 3, s"probe ran $jobs Spark jobs")
+    assert(scanned.exists(_.contains("/postings")), scanned.toString)
+    assert(!scanned.exists(_.contains("/members")), s"the probe read members: $scanned")
+    assert(!scanned.exists(_.contains("/hot")), s"the probe read the hot set again: $scanned")
+  }
+
+  for ((regime, appendBudget) <- Seq("sparse" -> 5, "dense" -> 7)) {
+    test(s"probe + append of a 30-doc batch runs at most 11 jobs ($regime)") {
+      val dir = tmpDir(s"append_budget_$regime")
+      val base = (0 until 60).map(i => (i.toLong: java.lang.Long,
+        Seq(a, b, c, d)(i % 4) + s" item $i"))
+      val idx = withRegime(regime)(DedupIndex.build(frame(base), s"$dir/idx", tau))
+      assert(idx.mode == regime)
+      var corpus = base
+      var next = 1000L
+      def op(): (Int, Int) = {
+        val batch = (0 until 30).map { i =>
+          next += 1
+          (next: java.lang.Long, if (i % 3 == 0) base(i)._2
+            else if (i % 3 == 1) base(i)._2 + " edited" else s"$novel $next")
+        }
+        val (out, probeJobs, _) = traced(rows(idx.probe(frame(corpus), frame(batch), tau)))
+        assert(out == oracle(frame(corpus), frame(batch)))
+        val fresh = batch.filterNot(d => out.exists(o => o._1.contains(d._1.longValue) && o._4))
+        val (_, appendJobs, _) = traced(idx.append(frame(fresh)))
+        corpus = corpus ++ fresh
+        (probeJobs, appendJobs)
+      }
+      op() // warm: codegen, class loading, the frozen hot set or dictionary
+      val (probeJobs, appendJobs) = op()
+      assert(probeJobs <= 3, s"probe ran $probeJobs Spark jobs")
+      // one exchange, one cache, one write per table (dense: the new
+      // elements' collect and the dictionary write on top)
+      assert(appendJobs <= appendBudget, s"append ran $appendJobs Spark jobs")
+      assert(probeJobs + appendJobs <= 11)
+      assertRepInvariant(idx, "after the appends")
+    }
+  }
+
+  test("an appended generation holds no hot table; the hot set is read " +
+      "again only after compact writes a new first generation") {
+    val dir = tmpDir("hot")
+    val corpus0 = (0 until 20).map(i => (i.toLong: java.lang.Long, s"$a number $i"))
+    val corpus1 = (20 until 30).map(i => (i.toLong: java.lang.Long, s"$c number $i"))
+    val idx = withRegime("sparse")(DedupIndex.build(frame(corpus0), s"$dir/idx", tau))
+    idx.append(frame(corpus1))
+    val gens = new java.io.File(s"$dir/idx").listFiles().filter(_.getName.startsWith("gen-"))
+      .sortBy(_.getName)
+    assert(gens.length == 2)
+    assert(gens.map(g => new java.io.File(g, "hot").exists).toSeq == Seq(true, false))
+    val corpus = frame(corpus0 ++ corpus1)
+    val batch = frame(Seq((100L, s"$a number 3"), (101L, s"$c number 25 and more")))
+    val want = oracle(corpus, batch)
+    assert(rows(idx.probe(corpus, batch, tau)) == want)
+    val (_, _, before) = traced(rows(idx.probe(corpus, batch, tau)))
+    assert(!before.exists(_.contains("/hot")), before.toString)
+    idx.compact()
+    // compact copies the hot set into the one generation it writes
+    val (got, _, after) = traced(rows(idx.probe(corpus, batch, tau)))
+    assert(got == want)
+    val hotReads = after.filter(_.contains("/hot"))
+    assert(hotReads.size == 1 && !hotReads.head.contains(gens.head.getName), after.toString)
+    val (_, _, again) = traced(rows(idx.probe(corpus, batch, tau)))
+    assert(!again.exists(_.contains("/hot")), again.toString)
+  }
+
+  test("an index written with a hot table in every generation probes and " +
+      "appends to the same rows") {
+    val dir = tmpDir("hot_compat")
+    val corpus0 = (0 until 20).map(i => (i.toLong: java.lang.Long, s"$a number $i"))
+    val corpus1 = (20 until 30).map(i => (i.toLong: java.lang.Long, s"$c number $i"))
+    val corpus2 = Seq[(java.lang.Long, String)]((40L, d), (41L, s"$b number 41"))
+    def built(path: String): DedupIndex = {
+      val idx = withRegime("sparse")(DedupIndex.build(frame(corpus0), path, tau))
+      idx.append(frame(corpus1))
+      idx
+    }
+    val fresh = built(s"$dir/new")
+    // the older layout: every appended generation carries a copy of the
+    // first generation's hot table
+    val older = built(s"$dir/old")
+    val gens = new java.io.File(s"$dir/old").listFiles().filter(_.getName.startsWith("gen-"))
+      .sortBy(_.getName)
+    val hot = spark.read.parquet(new java.io.File(gens.head, "hot").getPath).collect()
+    gens.tail.foreach(g => spark.createDataFrame(java.util.Arrays.asList(hot: _*),
+      spark.read.parquet(new java.io.File(gens.head, "hot").getPath).schema)
+      .write.parquet(new java.io.File(g, "hot").getPath))
+    val reopened = DedupIndex.load(spark, s"$dir/old")
+    val corpus = frame(corpus0 ++ corpus1)
+    val batch = frame(Seq((100L, s"$a number 3"), (101L, s"$c number 25 and more"),
+      (102L, d), (103L, novel)))
+    assert(rows(reopened.probe(corpus, batch, tau)) == rows(fresh.probe(corpus, batch, tau)))
+    Seq(reopened, fresh).foreach(_.append(frame(corpus2)))
+    val grown = frame(corpus0 ++ corpus1 ++ corpus2)
+    val got = rows(reopened.probe(grown, batch, tau))
+    assert(got == rows(fresh.probe(grown, batch, tau)))
+    assert(got == oracle(grown, batch))
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }.toString).sorted.toSeq
+    assert(sorted(reopened.groups) == sorted(fresh.groups))
+    assert(sorted(reopened.members) == sorted(fresh.members))
+    reopened.compact()
+    assert(rows(reopened.probe(grown, batch, tau)) == got)
   }
 }

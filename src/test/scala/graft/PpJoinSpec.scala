@@ -129,11 +129,13 @@ class PpJoinSpec extends SparkSpec {
     val tm = PpJoin.tauMicros(tau)
     val hot = PpJoin.hotSet(exDocs, "sh")
     val exG = DedupQueries.collapseGroups(exDocs, "sh")
-    val inG = DedupQueries.collapseGroups(inDocs, "sh")
-    val cand = PpJoin.crossPairs(
-        DedupQueries.repPostings(inDocs, inG, "sh", tm, hot),
-        DedupQueries.repPostings(exDocs, exG, "sh", tm, hot),
-        tm, hintBroadcastProbe = true)
+    // the batch side as the probe holds it on the driver: each set's
+    // (pid, n, prefix elements in engine order)
+    val inPost = inDocs.select(col("doc_id"), size(PpJoin.hashedEls(col("sh"))),
+        PpJoin.prefixEls("sh", tm, hot))
+      .collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2).toArray))
+    val cand = PpJoin.crossPairs(inPost,
+        DedupQueries.repPostings(exDocs, exG, "sh", tm, hot), tm)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inSets = sets.filter(_._1 % 2 == 1).map { case (id, s) => id -> s.toSet }
     val exSets = sets.filter(_._1 % 2 == 0).map { case (id, s) => id -> s.toSet }

@@ -70,6 +70,7 @@ class GroupTelemetrySpec extends SparkSpec {
         Thread.sleep(100)
       val s = t.snapshot(group).getOrElse(fail("no snapshot for the group"))
       assert(s.stagesDone >= 2, s"expected both map and reduce stages, got ${s.stagesDone}")
+      assert(s.jobs >= 1, s"jobs: ${s.jobs}")
       assert(s.shuffleWriteRecords >= 7, s"shuffle write records: ${s.shuffleWriteRecords}")
       assert(s.shuffleReadBytes > 0)
       assert(s.lastStage.nonEmpty)

@@ -457,6 +457,12 @@ class SemanticIndexSpec extends SparkSpec {
     assert(got.map(_.getString(0)) == Seq("b", "c", "d"))
     assert(idx.search(Array(1f, 0f), 3).select("score").collect().map(_.getDouble(0)).toSeq ==
       Seq(1.0, 1.0, 1.0))
+    // the projection folds into the operator: a collect stays one stage
+    assertOneStage(idx.search(Array(1f, 0f), 3).select("item", "score"))
+    assertOneStage(idx.search(Array(1f, 0f), 3).select(col("item"), (col("score") * 2).as("s2")))
+    assert(idx.search(Array(1f, 0f), 3).select(col("item"), (col("score") * 2).as("s2"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq ==
+      Seq("b" -> 2.0, "c" -> 2.0, "d" -> 2.0))
   }
 
   test("search frames join: two searches, records with a search, a search with itself") {

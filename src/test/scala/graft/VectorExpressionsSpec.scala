@@ -100,4 +100,38 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(hasCodegen,
       s"expected WholeStageCodegenExec in:\n${df.queryExecution.executedPlan}")
   }
+
+  test("a null vector element reads as 0 on a parquet scan as in memory, " +
+      "for every kernel, interpreted and codegen'd") {
+    registerAll(spark)
+    // enough repeats that parquet dictionary-encodes the elements: a
+    // null slot of the scan's column vector then reads as a dictionary
+    // entry (3.0 for the dot below without the null check), not 0
+    val mem = spark.range(10000).select(col("id"),
+      when(col("id") % 2 === 0, array(lit(2f), lit(3f)))
+        .otherwise(array(lit(1f), lit(null).cast("float"))).as("v"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_vecnull").toString
+    mem.write.mode("overwrite").parquet(dir)
+    val disk = spark.read.parquet(dir)
+    val q = typedLit(Seq(1f, 1f))
+    val kernels = Seq("vec_dot", "vec_cosine", "vec_l2sq", "vec_sub").map(f =>
+      f -> call_function(f, col("v"), q)) ++
+      Seq("vec_norm", "vec_normalize").map(f => f -> call_function(f, col("v")))
+    // each kernel alone over the [1, null] rows: the distinct values
+    def scores(df: org.apache.spark.sql.DataFrame, kernel: org.apache.spark.sql.Column): Seq[Any] =
+      df.filter(col("id") % 2 === 1).select(kernel).distinct().collect().toSeq.map(_.get(0))
+    val want = Map("vec_dot" -> 1.0, "vec_cosine" -> 1.0 / math.sqrt(2.0), "vec_l2sq" -> 1.0,
+      "vec_sub" -> Seq(0f, -1f), "vec_norm" -> 1.0, "vec_normalize" -> Seq(1f, 0f))
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    for (codegen <- Seq(true, false)) {
+      if (!codegen) {
+        spark.conf.set(confs(0), "false")
+        spark.conf.set(confs(1), "NO_CODEGEN")
+      }
+      try kernels.foreach { case (name, kernel) =>
+        assert(scores(disk, kernel) == Seq(want(name)), s"$name on parquet, codegen=$codegen")
+        assert(scores(mem, kernel) == Seq(want(name)), s"$name in memory, codegen=$codegen")
+      } finally confs.foreach(spark.conf.unset)
+    }
+  }
 }
