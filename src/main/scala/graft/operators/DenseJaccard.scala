@@ -386,40 +386,33 @@ object DenseJaccard {
     }
   }
 
-  /** All cross-side J ≥ τ pairs, probe × corpus: the (bounded) probe
-    * side broadcasts, the corpus bitmap table streams map-side with
-    * zero shuffle — the O(batch-work) probe shape. Candidates via
-    * [[prefixScan]] (r10): the pigeonhole bound `and ≥ ⌈τ·n⌉` holds
-    * for the STREAM row's n by symmetry, so the corpus row's rare bits
-    * prune the broadcast probe side. */
-  def crossPairs(probe: DataFrame, corpus: DataFrame, tm: Long): DataFrame = {
-    val spark = probe.sparkSession
+  /** All cross-side J ≥ τ pairs of a driver-held probe batch
+    * `(pid, n, bitmap)` against the corpus bitmap table. The packed
+    * batch rides the task closure (no broadcast to create or destroy)
+    * and the corpus streams map-side with zero shuffle — the
+    * O(batch-work) probe shape. Candidates via [[prefixScan]] (r10): the
+    * pigeonhole bound `and ≥ ⌈τ·n⌉` holds for the STREAM row's n by
+    * symmetry, so the corpus row's rare bits prune the probe side. */
+  def crossPairs(probe: Seq[(Long, Int, Array[Byte])], corpus: DataFrame,
+      tm: Long): DataFrame = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    packSide(probe) match {
-      case Some(p) =>
-        val b = spark.sparkContext.broadcast(p)
-        corpus.select(col("pid"), col("n").cast("int").as("n"), col("bm"))
-          .as[(Long, Int, Array[Byte])]
-          .mapPartitions { it =>
-            val pk = b.value
-            val idx = BitPostings.of(pk, tm)  // index-prefix postings (symmetric lemma)
-            val stamp = new Array[Int](pk.size)
-            var round = 0
-            it.flatMap { case (pid, n, bm) =>
-              round += 1
-              // emitted as (probe pid, corpus pid)
-              prefixScan(pk, idx, stamp, round, pid, n, toWords(bm), tm,
-                requireIdLess = false)
-                .map { case (ex, in) => (in, ex) }
-            }
-          }.toDF("in_rep", "ex_rep")
-      case None =>
-        val and = andCount(col("x.bm"), col("y.bm"))
-        corpus.as("y").join(broadcast(probe.as("x")),
-            lenOk(col("x.n"), col("y.n"), tm) &&
-              tauOk(and, col("x.n"), col("y.n"), tm))
-          .select(col("x.pid").as("in_rep"), col("y.pid").as("ex_rep"))
-    }
+    val pk = Packed(probe.map(_._1).toArray, probe.map(_._2).toArray,
+      probe.map(p => toWords(p._3)).toArray)
+    corpus.select(col("pid"), col("n").cast("int").as("n"), col("bm"))
+      .as[(Long, Int, Array[Byte])]
+      .mapPartitions { it =>
+        val idx = BitPostings.of(pk, tm)  // index-prefix postings (symmetric lemma)
+        val stamp = new Array[Int](pk.size)
+        var round = 0
+        it.flatMap { case (pid, n, bm) =>
+          round += 1
+          // emitted as (probe pid, corpus pid)
+          prefixScan(pk, idx, stamp, round, pid, n, toWords(bm), tm,
+            requireIdLess = false)
+            .map { case (ex, in) => (in, ex) }
+        }
+      }.toDF("in_rep", "ex_rep")
   }
   /** Bit-grain postings over a packed side: for every bit, the row
     * indices whose bitmap sets it. Built once per executor from the
@@ -536,7 +529,8 @@ object DenseJaccard {
   /** One postings index per executor per (broadcast value, prefix
     * mode) — tasks share the deserialized Packed instance, so
     * identity-keyed weak memoing is exact and frees with the
-    * broadcast. */
+    * broadcast. A closure-held side ([[crossPairs]]) is deserialized
+    * per task, so each task builds its own. */
   private object BitPostings {
     private val cache =
       new java.util.WeakHashMap[Packed, java.util.HashMap[Long, BitPostings]]()

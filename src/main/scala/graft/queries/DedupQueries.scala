@@ -1990,8 +1990,6 @@ object DedupQueries {
     import graft.operators.{DenseJaccard, PpJoin}
     val live = keyed.filter(_.nonempty).map(_.fp).distinct
     if (live.isEmpty) return Some(Map.empty)
-    val spark = existing.sparkSession
-    import spark.implicits._
     val tm = PpJoin.tauMicros(tau)
     val byId = keyed.groupBy(_.key.get)
     // a group's rep is its minimum doc_id, as on the corpus side; an id
@@ -2008,7 +2006,7 @@ object DedupQueries {
         // outside it set no bit but count in n — they cannot intersect
         // any indexed set, so J stays exact
         DenseJaccard.crossPairs(posting.toSeq.map(r =>
-          (r.key.get, r.n, r.cand.asInstanceOf[Array[Byte]])).toDF("pid", "n", "bm"), exBms, tm)
+          (r.key.get, r.n, r.cand.asInstanceOf[Array[Byte]])), exBms, tm)
       case None =>
         // batch prefixes at the (tighter) probe τ: the first common
         // element of a qualifying pair is inside each side's OWN-τ

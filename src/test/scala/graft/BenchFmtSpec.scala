@@ -75,7 +75,7 @@ class BenchFmtSpec extends AnyFunSuite {
   test("GroupTelemetry counts a group's jobs and stages, and Diag's line prints " +
       "jobs next to stages") {
     import org.apache.spark.scheduler._
-    val t = new ScaleProbe.GroupTelemetry
+    val t = new Diag.GroupTelemetry("g")
     def props(group: String) = {
       val p = new java.util.Properties
       if (group != null) p.setProperty("spark.jobGroup.id", group)
@@ -89,14 +89,37 @@ class BenchFmtSpec extends AnyFunSuite {
     t.onJobStart(SparkListenerJobStart(4, 0L, Nil, props(null)))
     // (stage completion needs a live job's task metrics: GroupTelemetrySpec)
     t.onStageSubmitted(SparkListenerStageSubmitted(stage, props("g")))
-    val s = t.snapshot("g").get
-    assert(s.jobs == 2 && s.lastStage == "collect at X.scala:1")
-    assert(t.snapshot("other").get.jobs == 1)
-    s.stagesDone = 3
-    assert(Diag.okLine("dedup_keep", 0.25, Some(s)) ==
+    val c = t.counters.copy(stages = 3)
+    assert(c.jobs == 2 && c.lastStage == "collect at X.scala:1" && c.lastStageTasks == 4)
+    assert(Diag.line("dedup_keep", Diag.Outcome.Ok(0.25, c)) ==
       """{"key":"dedup_keep","status":"ok","wall_s":0.250,"jobs":2,"stages":3,""" +
         """"shuffle_read_bytes":0,"shuffle_write_bytes":0,"shuffle_write_records":0,""" +
-        """"input_records":0}""")
-    assert(Diag.okLine("q", 1.0, None).contains(""""jobs":0,"stages":0,"""))
+        """"input_records":0,"last_stage":"collect at X.scala:1","last_stage_tasks":4}""")
+    assert(Diag.line("q", Diag.Outcome.Dnf(Diag.Counters())) ==
+      """{"key":"q","status":"dnf","jobs":0,"stages":0,"shuffle_read_bytes":0,""" +
+        """"shuffle_write_bytes":0,"shuffle_write_records":0,"input_records":0,""" +
+        """"last_stage":"","last_stage_tasks":0}""")
+    assert(Diag.line("q", Diag.Outcome.Error("boom \"x\""), Seq("router" -> "\"\"")) ==
+      """{"key":"q","status":"error","error":"boom \"x\"","router":""}""")
+  }
+
+  test("Diag.scala holds the only clock in the main sources, and neither Bench " +
+      "nor ScaleProbe counts a registry result") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val clocks = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("System.nanoTime"))
+      .map(p => root.relativize(p).toString).toSeq
+    assert(clocks == Seq("graft/Diag.scala"), clocks.mkString(", "))
+    for (main <- Seq("Bench", "ScaleProbe")) {
+      val src = java.nio.file.Files.readString(root.resolve(s"graft/$main.scala"))
+      // the one count left reads the ladder's documents table, not a key
+      val counts = src.linesIterator.filter(_.contains(".count()")).toSeq
+      assert(counts.forall(_.contains("documents.parquet")), s"$main: $counts")
+      assert(!src.contains("queries(name)(") && !src.contains("queries(n)("),
+        s"$main calls a registry builder itself instead of through Diag.run")
+    }
   }
 }

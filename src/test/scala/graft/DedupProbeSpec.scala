@@ -284,6 +284,24 @@ class DedupProbeSpec extends SparkSpec {
     }
   }
 
+  test("repeated dense probes leave no broadcast of their own on the driver") {
+    val dir = tmpDir("dense_broadcast")
+    val base = (0 until 40).map(i => (i.toLong: java.lang.Long, Seq(a, b, c, d)(i % 4) + s" item $i"))
+    val idx = withRegime("dense")(DedupIndex.build(frame(base), s"$dir/idx", tau))
+    assert(idx.mode == "dense")
+    val batch = frame((0 until 10).map(i => (1000L + i: java.lang.Long,
+      if (i % 2 == 0) base(i)._2 + " edited" else s"$novel $i")))
+    idx.probe(frame(base), batch, tau).collect() // warm: the frozen dictionary
+    val before = org.apache.spark.BroadcastBridge.values()
+    (0 until 3).foreach(_ => idx.probe(frame(base), batch, tau).collect())
+    // Spark's own per-job task binaries and per-scan Hadoop confs come
+    // and go with the jobs; anything else is a broadcast the probe made
+    val added = org.apache.spark.BroadcastBridge.values() -- before.keySet
+    val own = added.filterNot { case (_, cls) =>
+      cls == "[B" || cls.endsWith("SerializableConfiguration") }
+    assert(own.isEmpty, s"broadcasts left by the probes: $own")
+  }
+
   test("an appended generation holds no hot table; the hot set is read " +
       "again only after compact writes a new first generation") {
     val dir = tmpDir("hot")

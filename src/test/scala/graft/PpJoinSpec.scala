@@ -306,8 +306,9 @@ test("dense selfPairs + crossPairs (r10 index-prefix postings): EXACT " +
       } yield (ia, ib)).toSet
       assert(self == wantSelf,
         s"selfPairs tau=$tau: missing=${wantSelf -- self} extra=${self -- wantSelf}")
-      // cross: probe = even ids, corpus = odd ids
-      val probe = bms.filter(col("pid") % 2 === 0)
+      // cross: probe = even ids (driver-held, as the probe holds its
+      // batch), corpus = odd ids
+      val probe = bms.filter(col("pid") % 2 === 0).as[(Long, Int, Array[Byte])].collect().toSeq
       val corpus = bms.filter(col("pid") % 2 === 1)
       val cross = graft.operators.DenseJaccard.crossPairs(probe, corpus, tm)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
