@@ -35,8 +35,7 @@ object Bench {
     "ann_bq_layout" -> 2.5, "ann_cascade_layout" -> 1.5,
     "ann_bq_mutated" -> 6.0, "mm_phash_incremental" -> 4.0,
     "dedup_near_incremental" -> 22.0, "dedup_cosine_incremental" -> 4.5,
-    "dedup_edit_incremental" -> 5.0,
-    "q_bucket_join" -> 18.0, "q_incremental_agg" -> 5.5)
+    "dedup_edit_incremental" -> 5.0)
 
   val indexBackedKeys: Set[String] = setupBudgets.keySet
 

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.math.{BigDecimal => JBigDecimal}
-
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
@@ -30,10 +28,9 @@ import org.apache.spark.sql.types._
  *     value (`mapPartitions` — genuine per-partition sequential logic,
  *     the documented last-resort case).
  *
- * Exactness: integral and decimal sums are associative-exact, so the
- * split-and-offset decomposition is BIT-IDENTICAL to the window result
- * (q_window_fast's oracle is the window SQL itself). Double sums would
- * reassociate — rejected.
+ * Exactness: integral sums are associative-exact, so the
+ * split-and-offset decomposition is BIT-IDENTICAL to the window result.
+ * Double sums would reassociate — rejected.
  *
  * The sorted frame is persisted (MEMORY_AND_DISK): passes 2 and 4 must
  * observe the SAME range bounds, and recomputing a 100 TB sort twice
@@ -47,34 +44,14 @@ object PrefixSum {
 
   def runningSum(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
       valueCol: String, outCol: String,
-      numPartitions: Int = 0): DataFrame =
-    runningSumWithTotals(df, keyCols, orderCols, valueCol, outCol,
-      numPartitions)._1
-
-  /** [[runningSum]] plus the per-key GROUP TOTALS as a second frame
-    * `(keyCols…, __ktotal)` — computed by one tiny aggregation over the
-    * per-(partition, key) totals the operator already builds for its
-    * offset pass (≤ one row per (partition, boundary key)), NOT by a
-    * second scan of the running-sum output. Consumers that need
-    * `max(cum) per key` (q_weighted_median/percentile's `tot`,
-    * q_percentile_fast's `n`) read this instead of re-running the
-    * prefix scan — at any scale that removes one full pass over the
-    * row-grain output (r13 optimization; guide §1.2 "don't compute
-    * things you throw away"). Values are identical to `max(cum)` for
-    * the non-negative weights every caller has (and are the exact
-    * per-key sum in general). */
-  def runningSumWithTotals(df: DataFrame, keyCols: Seq[String],
-      orderCols: Seq[String], valueCol: String, outCol: String,
-      numPartitions: Int = 0): (DataFrame, DataFrame) = {
+      numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val n = if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val valueType = df.schema(valueCol).dataType
-    val outType: DataType = valueType match {
-      case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
-      case LongType | IntegerType | ShortType | ByteType => LongType
+    df.schema(valueCol).dataType match {
+      case LongType | IntegerType | ShortType | ByteType =>
       case other => throw new IllegalArgumentException(
-        s"runningSum requires an integral or decimal value column (associative-exact " +
+        s"runningSum requires an integral value column (associative-exact " +
           s"sums); got ${other.catalogString} — a double running sum reassociates")
     }
 
@@ -107,50 +84,31 @@ object PrefixSum {
       (r.getInt(0), keyCols.indices.map(i => r.get(i + 1))) -> r.get(keyCols.length + 1)
     }.toMap
 
-    // per-key group totals off the SAME per-(partition, key) totals
-    // frame — one cache-read aggregation over ≤ (partitions + keys)
-    // rows, never a pass over the row-grain output
-    val keyTotals = totals.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__total")).as("__ktotal"))
-
     // pass 3: partition-local scan, seeded by the broadcast offsets.
     val inSchema = sorted.schema
-    val outSchema = inSchema.add(outCol, outType)
+    val outSchema = inSchema.add(outCol, LongType)
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     val keyIdx = keyCols.map(inSchema.fieldIndex).toArray
     val valIdx = inSchema.fieldIndex(valueCol)
-    val decimalOut = outType.isInstanceOf[DecimalType]
-    val cum = sorted.mapPartitions { rows =>
+    sorted.mapPartitions { rows =>
       val pid = TaskContext.getPartitionId()
       var curKey: Seq[Any] = null
-      var accDec: JBigDecimal = null
-      var accLong = 0L
+      var acc = 0L
       rows.map { row =>
         val k: Seq[Any] = keyIdx.map(row.get).toSeq
         if (k != curKey) {
           curKey = k
-          val off = offsetMap.get((pid, k))
-          if (decimalOut) {
-            accDec = off.map(_.asInstanceOf[JBigDecimal]).getOrElse(JBigDecimal.ZERO)
-          } else {
-            accLong = off.map(_.asInstanceOf[Long]).getOrElse(0L)
-          }
+          acc = offsetMap.get((pid, k)).map(_.asInstanceOf[Long]).getOrElse(0L)
         }
-        if (decimalOut) {
-          accDec = accDec.add(row.getDecimal(valIdx))
-          Row.fromSeq(row.toSeq :+ accDec)
-        } else {
-          accLong += (row.get(valIdx) match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case s: Short => s.toLong
-            case b: Byte => b.toLong
-          })
-          Row.fromSeq(row.toSeq :+ accLong)
-        }
+        acc += (row.get(valIdx) match {
+          case l: Long => l
+          case i: Int => i.toLong
+          case s: Short => s.toLong
+          case b: Byte => b.toLong
+        })
+        Row.fromSeq(row.toSeq :+ acc)
       }
     }(enc).toDF()
-    (cum, keyTotals)
   }
 }

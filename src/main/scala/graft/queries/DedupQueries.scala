@@ -1715,8 +1715,8 @@ object DedupQueries {
    * shared [[fp128]] fingerprint (~16 bytes) before anything moves —
    * the join and the intra-batch window shuffle fingerprints, never
    * text, and the batch side is typically tiny next to the corpus
-   * (compose with [[graft.operators.SkewTools.bloomFilteredJoin]] to
-   * prune the corpus scan map-side when it isn't).
+   * (a Bloom filter over the batch keys can prune the corpus scan
+   * map-side when it isn't).
    */
   def dedupIncremental(existing: DataFrame, incoming: DataFrame): DataFrame = {
     def fp(df: DataFrame, extra: Column*) =

@@ -1327,14 +1327,14 @@ object PipelineQueries {
    * Scale notes: assignment is the codegen'd broadcast-centroid kernel
    * (one scan); the threshold pass buffers per-CLUSTER distance values
    * in the exact `percentile` aggregate — k groups, fine at gate scale;
-   * at 100 TB swap in the `q_percentile_fast` histogram machinery or
-   * the approx twin, both already built. The assignment frame is used
+   * at 100 TB a per-cluster value histogram would bound that buffer.
+   * The assignment frame is used
    * by both the threshold and the flag pass (two scans — the same
    * deliberate recompute-over-buffer trade as `text_keywords`).
    *
    * Determinism: distances are exact longs, the percentile
-   * interpolation is the proven `percentile`/`quantile_cont` parity
-   * (q_percentile), the gate is a strict `>` on doubles — full hash
+   * interpolation is the proven `percentile`/`quantile_cont` parity,
+   * the gate is a strict `>` on doubles — full hash
    * oracle extending the shared Lloyd CTEs.
    */
   def embOutliers(s: SparkSession, dir: String, k: Int = 8, iters: Int = 2,
@@ -1456,7 +1456,7 @@ object PipelineQueries {
    * training, and the reason mean-centering exists) piles up near 1.0.
    * Sample = vec_id ≡ 0 (mod `every`) — bounded pairs (k²/2), an
    * id-ordered self-join, never corpus×corpus; 20 dense bins over
-   * [−1, 1] with the q_histogram clamp rule. Cosine rounds at 4 before
+   * [−1, 1], the top edge clamped into the last bin. Cosine rounds at 4 before
    * binning (the ann tie discipline) → hash oracle.
    */
   def embDistHist(s: SparkSession, dir: String, every: Int = 20): DataFrame = {

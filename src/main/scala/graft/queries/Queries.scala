@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -29,473 +28,12 @@ object Queries {
     * (~1e-10) is far from the 5e-5 rounding-tie threshold, so Spark and
     * DuckDB round identically. Computed doubles must NOT be cast (their
     * true value can sit on a tie and the two engines round differently:
-    * Spark via shortest-repr string, DuckDB via exact binary). Derived
-    * measures are instead computed in exact decimal arithmetic — see
-    * [[priceD]]/[[rateD]]. */
+    * Spark via shortest-repr string, DuckDB via exact binary). */
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")
-
-  /** Raw money column as exact decimal. */
-  private def priceD(c: Column): Column = c.cast("decimal(12,2)")
-
-  /** Raw small-rate column (0.00–0.99) as exact decimal. */
-  private def rateD(c: Column): Column = c.cast("decimal(3,2)")
-
-  /** Exact discounted revenue: price × (1 − discount), all decimal. */
-  private def discPrice: Column =
-    priceD(col("l_extendedprice")) * (lit(1) - rateD(col("l_discount")))
 
   // ===========================================================================
   // §2.6 Relational analytics
   // ===========================================================================
-
-  /** TPC-H Q1-style pricing summary: full-scan groupBy with partial aggs. */
-  def q1Agg(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    li.filter(col("l_shipdate") <= lit("2001-09-02").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        sum(discPrice).cast("double").as("sum_disc_price"),
-        sum(discPrice * (lit(1) + rateD(col("l_tax")))).cast("double").as("sum_charge"),
-        (dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-        (dsum(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
-        (dsum(col("l_discount")) / count(lit(1))).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
-
-  val q1AggSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS sum_disc_price,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2))) * (1 + CAST(l_tax AS DECIMAL(3,2)))) AS DOUBLE) AS sum_charge,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price,
-      |  CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_disc,
-      |  COUNT(*) AS count_order
-      |FROM lineitem
-      |WHERE l_shipdate <= TIMESTAMP '2001-09-02'
-      |GROUP BY l_returnflag, l_linestatus
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin
-
-  /** TPC-H Q3-style: broadcast-dim join + agg + deterministic top-20. */
-  def q3Join(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val ord = t(s, dir, "orders").filter(col("o_orderdate") < lit("1999-01-01").cast("timestamp"))
-    val li = t(s, dir, "lineitem").filter(col("l_shipdate") > lit("1996-06-30").cast("timestamp"))
-    // orders' date filter is non-selective (passes ~all rows), so that
-    // side must SHUFFLE-join — broadcasting a fact table OOMs at scale.
-    // Only the BUILDING-segment customer dim is legitimately broadcast.
-    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(sum(discPrice).cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(20)
-  }
-
-  val q3JoinSql: String =
-    """SELECT l_orderkey, o_orderdate,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
-      |FROM lineitem
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |  AND o_orderdate < TIMESTAMP '1999-01-01'
-      |  AND l_shipdate > TIMESTAMP '1996-06-30'
-      |GROUP BY l_orderkey, o_orderdate
-      |ORDER BY revenue DESC, l_orderkey
-      |LIMIT 20""".stripMargin
-
-  /** Top-3 orders by totalprice per customer (window row_number). */
-  def qTopnGroup(s: SparkSession, dir: String): DataFrame = {
-    val ord = t(s, dir, "orders")
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    ord.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-      .orderBy(col("o_custkey"), col("rn"))
-  }
-
-  val qTopnGroupSql: String =
-    """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-      |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |  FROM orders)
-      |WHERE rn <= 3
-      |ORDER BY o_custkey, rn""".stripMargin
-
-  /** Semi + anti join: customers with vs. without urgent orders. */
-  def qSemiAnti(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
-    val urgent = t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey"))
-    val withU = cust.join(urgent, cust("c_custkey") === urgent("o_custkey"), "left_semi")
-      .select(col("c_custkey"), lit("has_urgent").as("bucket"))
-    val without = cust.join(urgent, cust("c_custkey") === urgent("o_custkey"), "left_anti")
-      .select(col("c_custkey"), lit("no_urgent").as("bucket"))
-    withU.unionByName(without).orderBy(col("c_custkey"))
-  }
-
-  val qSemiAntiSql: String =
-    """SELECT c_custkey, 'has_urgent' AS bucket FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders
-      |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-      |UNION ALL
-      |SELECT c_custkey, 'no_urgent' AS bucket FROM customer
-      |WHERE NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-      |ORDER BY c_custkey""".stripMargin
-
-  /** Rollup over (returnflag, linestatus) with exact sums. */
-  def qRollup(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-  }
-
-  val qRollupSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  COUNT(*) AS n
-      |FROM lineitem
-      |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
-
-  /** Running per-supplier quantity (window running sum; integer-valued). */
-  def qWindow(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "lineitem")
-      .withColumn("running_qty", sum(col("l_quantity")).over(w))
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("running_qty"))
-      .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-  }
-
-  val qWindowSql: String =
-    """SELECT l_suppkey, l_orderkey, l_linenumber,
-      |  SUM(l_quantity) OVER (PARTITION BY l_suppkey
-      |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-      |FROM lineitem
-      |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin
-
-  /** The 100 TB form of [[qWindow]]: same running quantity per supplier
-    * history, but computed as a two-pass range-partitioned prefix scan
-    * ([[graft.operators.PrefixSum]]) instead of one window partition
-    * per key — a key with a 10⁹-row history is SPLIT across range
-    * partitions (offset + local scan) instead of materializing inside
-    * one straggler task, the failure mode AQE cannot fix for windows.
-    * Quantities sum as DECIMAL(18,4) (associative-exact — the dsum
-    * discipline; a raw double running sum would reassociate under the
-    * split) and cast to double at the end, so the result is exact and
-    * the oracle replays the same decimal window in DuckDB. */
-  def qWindowFast(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "lineitem")
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate"), col("l_quantity").cast("decimal(18,4)").as("__q"))
-    graft.operators.PrefixSum.runningSum(base,
-        keyCols = Seq("l_suppkey"),
-        orderCols = Seq("l_shipdate", "l_orderkey", "l_linenumber"),
-        valueCol = "__q", outCol = "__run")
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("__run").cast("double").as("running_qty"))
-      .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-  }
-
-  val qWindowFastSql: String =
-    """SELECT l_suppkey, l_orderkey, l_linenumber,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (PARTITION BY l_suppkey
-      |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-      |FROM lineitem
-      |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin
-
-  /**
-   * Exact per-group quantiles (median / p95, linear interpolation —
-   * identical definition to DuckDB's `quantile_cont`). Exact
-   * percentile buffers each group's values for a sort, which is the
-   * right tool up to millions of rows per group; at 100 TB the same
-   * query shape swaps in `approx_percentile` (t-digest, mergeable,
-   * bounded memory) at the cost of oracle bit-match — the trade
-   * `q_approx_distinct` already demonstrates for distinct counts.
-   */
-  def qPercentile(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50_price"),
-        round(expr("percentile(l_extendedprice, 0.95)"), 4).as("p95_price"),
-        round(expr("percentile(l_quantity, 0.5)"), 4).as("p50_qty"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("l_returnflag"))
-
-  val qPercentileSql: String =
-    """SELECT l_returnflag,
-      |  ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
-      |  ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95_price,
-      |  ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50_qty,
-      |  COUNT(*) AS n_items
-      |FROM lineitem
-      |GROUP BY 1
-      |ORDER BY 1""".stripMargin
-
-  /**
-   * The 100 TB form of [[qPercentile]]: `percentile_approx` (a KLL-type
-   * mergeable sketch — fixed-size state per group, order-insensitive ⇒
-   * deterministic) instead of exact `percentile`, which buffers every
-   * group value. Rows-only (the sketch's bit pattern is engine-specific);
-   * RelationalSpec bounds it against the exact answer.
-   */
-  /**
-   * The 100 TB EXACT form of [[qPercentile]] (closes the last §5
-   * residual scale watch item): `percentile()` buffers every group
-   * value inside ONE aggregation buffer — a 10⁹-row group is an OOM,
-   * and no AQE setting splits an aggregate buffer. This twin computes
-   * the identical answer from a VALUE HISTOGRAM instead:
-   *
-   *  1. collapse to per-(metric, group, value) counts — the shuffle
-   *     carries distinct values (deduplicated map-side), never rows;
-   *  2. cumulative counts over the value-sorted histogram via
-   *     [[graft.operators.PrefixSum.runningSum]] (range-partitioned —
-   *     a giant group SPANS partitions instead of landing in one task);
-   *  3. each requested percentile becomes a target INDEX
-   *     `pos = p·(n−1)`; its bracketing values probe the histogram by
-   *     a broadcast range join (`lo ≤ idx < hi` — a handful of target
-   *     rows against the cumulative frame, map-side);
-   *  4. Spark `percentile`'s exact interpolation
-   *     `(⌈pos⌉−pos)·v_lo + (pos−⌊pos⌋)·v_hi` (value-equal branch
-   *     first), reproduced operation-for-operation in double.
-   *
-   * Counts are longs (associative-exact), so the decomposition is
-   * bit-identical to the buffering aggregate — the oracle IS
-   * [[qPercentileSql]], same as the q_asof_fast / q_window_fast
-   * discipline. RelationalSpec additionally pins row-for-row equality
-   * with [[qPercentile]] and exactness on a single giant group.
-   */
-  def qPercentileFast(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    // ONE scan builds both metrics' histograms (explode to (metric,
-    // value) rows before the aggregation — two hist() calls would
-    // double the heavy table pass). percentile() ignores NULL inputs,
-    // so the histogram must too, or a null bucket would sort first and
-    // shift every probed index.
-    val h = li
-      .select(col("l_returnflag").as("g"),
-        explode(array(
-          struct(lit("price").as("m"), col("l_extendedprice").cast("double").as("v")),
-          struct(lit("qty").as("m"), col("l_quantity").cast("double").as("v")))).as("e"))
-      .select(col("e.m").as("m"), col("g"), col("e.v").as("v"))
-      .filter(col("v").isNotNull)
-      .groupBy(col("m"), col("g"), col("v"))
-      .agg(count(lit(1)).as("c"))
-    val (cum0, ktot) = graft.operators.PrefixSum
-      .runningSumWithTotals(h, Seq("m", "g"), Seq("v"), "c", "hi")
-    val cum = cum0.withColumn("lo", col("hi") - col("c"))
-    // group sizes from the operator's per-(partition, key) totals —
-    // the same values max(hi) gave, without a second pass over the
-    // row-grain cumulative frame (r13; guide §1.2)
-    val ns = ktot.select(col("m"), col("g"), col("__ktotal").as("n"))
-    val specs = Seq(("price", "p50_price", 0.5), ("price", "p95_price", 0.95),
-      ("qty", "p50_qty", 0.5))
-    val tgt = ns
-      .select(col("m"), col("g"), col("n"),
-        explode(array(specs.map { case (tm, name, p) =>
-          struct(lit(tm).as("tm"), lit(name).as("name"), lit(p).as("p"))
-        }: _*)).as("s"))
-      .filter(col("s.tm") === col("m"))
-      // Spark Percentile's position arithmetic: percentage · (count − 1)
-      .select(col("m"), col("g"), col("n"), col("s.name").as("name"),
-        (col("s.p") * (col("n") - 1).cast("double")).as("pos"))
-      .withColumn("li", floor(col("pos")))
-      .withColumn("hi_i", ceil(col("pos")))
-    // BOTH bracket probes in one pass over the cumulative frame: the
-    // 6 target rows explode to 12 (index, side) probes, broadcast
-    // against cum, and pivot back to (vl, vh) per percentile — the
-    // heavy scan runs once, not once per side
-    val probes = tgt.select(col("m").as("tm"), col("g").as("tg"), col("name"),
-      explode(array(
-        struct(lit("l").as("side"), col("li").as("i")),
-        struct(lit("h").as("side"), col("hi_i").as("i")))).as("p"))
-      .select(col("tm"), col("tg"), col("name"),
-        col("p.side").as("side"), col("p.i").as("i"))
-    val brackets = cum
-      .join(broadcast(probes),
-        col("m") === col("tm") && col("g") === col("tg") &&
-          col("i") >= col("lo") && col("i") < col("hi"))
-      .groupBy(col("tm").as("m"), col("tg").as("g"), col("name"))
-      .agg(max(when(col("side") === "l", col("v"))).as("vl"),
-        max(when(col("side") === "h", col("v"))).as("vh"))
-    val res = tgt
-      .join(brackets, Seq("m", "g", "name"))
-      .select(col("g"), col("name"),
-        when(col("li") === col("hi_i"), col("vl"))
-          .otherwise((col("hi_i") - col("pos")) * col("vl") +
-            (col("pos") - col("li")) * col("vh")).as("r"))
-    // n_items is count(*) over ALL rows of the group (the twin and the
-    // oracle count NULL-valued rows too, and a group whose values are
-    // all NULL must still emit a row, with NULL percentiles) — a tiny
-    // count aggregation, not a histogram pass
-    val nItems = li.groupBy(col("l_returnflag").as("g"))
-      .agg(count(lit(1)).as("n_items"))
-    val pivoted = res.groupBy(col("g"))
-      .agg(
-        round(max(when(col("name") === "p50_price", col("r"))), 4).as("p50_price"),
-        round(max(when(col("name") === "p95_price", col("r"))), 4).as("p95_price"),
-        round(max(when(col("name") === "p50_qty", col("r"))), 4).as("p50_qty"))
-    nItems.join(pivoted, Seq("g"), "left")
-      .select(col("g").as("l_returnflag"), col("p50_price"), col("p95_price"),
-        col("p50_qty"), col("n_items"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** Approximate percentiles — the registered engine default (r8: the
-    * gate's last rows-only rows retired): the deterministic bottom-k
-    * uniform sample of [[qQuantileSketch]] at k=1024 (rank error
-    * ~1/√k ≈ 3 %, spec-bounded against the exact twin), price
-    * quantiles only — every value replays in DuckDB, so the row is a
-    * full hash gate. [[qPercentileApproxKll]] keeps Spark's
-    * `percentile_approx` (KLL-type sketch) as the documented
-    * engine-native alternative: identical scale contract (bounded
-    * mergeable state per group), but its compaction layout is
-    * engine-specific bits, so it stays spec-bounded rather than
-    * gate-registered. */
-  def qPercentileApprox(s: SparkSession, dir: String): DataFrame =
-    quantileSketchImpl(s, dir, k = 1024, withQty = false)
-
-  lazy val qPercentileApproxSql: String = quantileSketchSqlGen(1024, withQty = false)
-
-  /** Spark's KLL-type `percentile_approx` — the engine-native
-    * alternative to the registered bottom-k default. */
-  def qPercentileApproxKll(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(expr("percentile_approx(l_extendedprice, 0.5, 10000)"), 4).as("p50_price"),
-        round(expr("percentile_approx(l_extendedprice, 0.95, 10000)"), 4).as("p95_price"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("l_returnflag"))
-
-  /**
-   * Quantile estimation by a DETERMINISTIC bottom-k uniform sample —
-   * the oracle-able sibling of [[qPercentileApprox]] (KLL/GK sketch
-   * layouts are engine-specific; a hash-keyed bottom-k sample is a
-   * pure function of the data that SQL rebuilds with a sort). Per
-   * group, the `vec_topk` bounded aggregate (k-heap per group, partial
-   * map-side — the shuffle carries ≤ k (u, value) pairs per partition
-   * per group, never the value stream) keeps the k=256 rows with the
-   * SMALLEST per-row uniform hash — a uniform without-replacement row
-   * sample, mergeable by construction — and the estimate is the exact
-   * lower-index quantile of the sample's values (micro-unit longs, so
-   * selection has no float ambiguity). Sampling error is the binomial
-   * rank error ~1/√k (spec-bounded against the exact twin); the
-   * ESTIMATE itself hash-matches, because both engines select the
-   * identical sample.
-   */
-  def qQuantileSketch(s: SparkSession, dir: String, k: Int = 256): DataFrame =
-    quantileSketchImpl(s, dir, k, withQty = true)
-
-  private def quantileSketchImpl(s: SparkSession, dir: String, k: Int,
-      withQty: Boolean): DataFrame = {
-    registerAll(s)
-    val u = PipelineQueries.hashUniform(
-      concat(col("l_orderkey").cast("string"), lit("#"),
-        col("l_linenumber").cast("string")))
-    def micros(c: Column): Column = floor(c * 1e6 + 0.5).cast("long")
-    def qAt(vals: Column, q: Double): Column = {
-      val idx = floor(lit(q) * (size(vals) - 1)).cast("int") + 1
-      element_at(vals, idx).cast("double") / 1e6
-    }
-    val base = t(s, dir, "lineitem")
-      .select(col("l_returnflag") +: (-u).as("negu") +:
-        micros(col("l_extendedprice")).as("pm") +:
-        (if (withQty) Seq(micros(col("l_quantity")).as("qm")) else Nil): _*)
-    val aggs = graft.functions.vec_topk(col("negu"), col("pm"), k).as("ps") +:
-      (if (withQty) Seq(graft.functions.vec_topk(col("negu"), col("qm"), k).as("qs"))
-       else Nil) :+ count(lit(1)).as("n_items")
-    val outs = col("l_returnflag") +:
-      qAt(sort_array(transform(col("ps"), x => x.getField("id"))), 0.5).as("p50_price") +:
-      qAt(sort_array(transform(col("ps"), x => x.getField("id"))), 0.95).as("p95_price") +:
-      (if (withQty)
-        Seq(qAt(sort_array(transform(col("qs"), x => x.getField("id"))), 0.5).as("p50_qty"))
-       else Nil) :+ col("n_items")
-    base
-      .groupBy(col("l_returnflag"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(outs: _*)
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** The sample replayed whole: the same per-row uniform, the same
-    * (u asc, value asc) bottom-k selection the heap's tie rule makes,
-    * the same lower-index order statistic over micro-unit longs. */
-  lazy val qQuantileSketchSql: String = quantileSketchSqlGen(256, withQty = true)
-
-  private def quantileSketchSqlGen(k: Int, withQty: Boolean): String = {
-    val toSigned = DedupQueries.toSignedSql
-    val qmSel = if (withQty)
-      "\n    CAST(FLOOR(l_quantity * 1e6 + 0.5) AS BIGINT) AS qm," else ""
-    val qmUs = if (withQty) " li.qm," else ""
-    val qsCte = if (withQty)
-      s"""qs AS (
-         |  SELECT l_returnflag, qm,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY qm) AS vr,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS m
-         |  FROM (SELECT l_returnflag, qm,
-         |          row_number() OVER (PARTITION BY l_returnflag
-         |                             ORDER BY u, qm) AS rn
-         |        FROM us) WHERE rn <= $k),
-         |qq AS (
-         |  SELECT l_returnflag,
-         |    max(CASE WHEN vr = CAST(FLOOR(0.5 * (m - 1)) AS BIGINT) + 1
-         |        THEN qm END) / 1e6 AS p50_qty
-         |  FROM qs GROUP BY l_returnflag),
-         |""".stripMargin
-    else ""
-    val qtyCol = if (withQty) "p50_qty, " else ""
-    val qtyJoin = if (withQty) "JOIN qq USING (l_returnflag) " else ""
-    s"""WITH li AS (
-       |  SELECT l_returnflag,
-       |    CAST(FLOOR(l_extendedprice * 1e6 + 0.5) AS BIGINT) AS pm,$qmSel
-       |    CAST(l_orderkey AS VARCHAR) || '#' ||
-       |      CAST(l_linenumber AS VARCHAR) AS tk
-       |  FROM lineitem),
-       |tok AS (SELECT DISTINCT tk FROM li),
-       |${DedupQueries.xxHashTokenCtes},
-       |us AS (
-       |  SELECT li.l_returnflag, li.pm,$qmUs
-       |    GREATEST(LEAST(
-       |      CAST($toSigned AS DOUBLE) / 18446744073709551616.0 + 0.5,
-       |      0.9999999999999999), 5.421010862427522e-20) AS u
-       |  FROM li JOIN hashed USING (tk)),
-       |ps AS (
-       |  SELECT l_returnflag, pm,
-       |    row_number() OVER (PARTITION BY l_returnflag ORDER BY pm) AS vr,
-       |    count(*) OVER (PARTITION BY l_returnflag) AS m
-       |  FROM (SELECT l_returnflag, pm,
-       |          row_number() OVER (PARTITION BY l_returnflag
-       |                             ORDER BY u, pm) AS rn
-       |        FROM us) WHERE rn <= $k),
-       |$qsCte pq AS (
-       |  SELECT l_returnflag,
-       |    max(CASE WHEN vr = CAST(FLOOR(0.5 * (m - 1)) AS BIGINT) + 1
-       |        THEN pm END) / 1e6 AS p50_price,
-       |    max(CASE WHEN vr = CAST(FLOOR(0.95 * (m - 1)) AS BIGINT) + 1
-       |        THEN pm END) / 1e6 AS p95_price
-       |  FROM ps GROUP BY l_returnflag),
-       |nn AS (SELECT l_returnflag, count(*) AS n_items FROM lineitem
-       |       GROUP BY l_returnflag)
-       |SELECT l_returnflag, p50_price, p95_price, ${qtyCol}n_items
-       |FROM pq ${qtyJoin}JOIN nn USING (l_returnflag)
-       |ORDER BY l_returnflag""".stripMargin
-  }
 
   /** Events table, schema-adaptive across testdata generations: older
     * driver parquet stores ts as TIMESTAMP(NANOS), which Spark 4 refuses
@@ -919,21 +457,9 @@ object Queries {
   // ===========================================================================
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q3_join" -> (q3Join _),
-    "q_topn_group" -> (qTopnGroup _),
-    "q_semi_anti" -> (qSemiAnti _),
-    "q_rollup" -> (qRollup _),
-    "q_window" -> (qWindow _),
-    "q_window_fast" -> (qWindowFast _),
     "q_events" -> (qEvents _),
     "q_sessionize" -> ((s: SparkSession, d: String) => qSessionize(s, d)),
-    "q_percentile" -> (qPercentile _),
-    "q_weighted_median" -> (RelationalQueries.qWeightedMedian _),
-    "q_benford" -> (RelationalQueries.qBenford _),
-    "q_gini" -> (RelationalQueries.qGini _),
     "q_changepoint" -> (RelationalQueries.qChangepoint _),
-    "q_percentile_approx" -> (qPercentileApprox _),
     "ann_dot_topk" -> ((s: SparkSession, d: String) => annDotTopk(s, d)),
     "ann_cosine_topk" -> ((s: SparkSession, d: String) => annCosineTopk(s, d)),
     "ann_top1" -> (annTop1 _),
@@ -1004,8 +530,6 @@ object Queries {
     "mm_features" -> (MultimodalQueries.mmFeatures _),
     "mm_profile" -> (MultimodalQueries.mmProfile _),
     "mm_phash" -> ((s: SparkSession, d: String) => MultimodalQueries.mmPhash(s, d)),
-    "q_cube" -> (RelationalQueries.qCube _),
-    "q_grouping_sets" -> (RelationalQueries.qGroupingSets _),
     "q_pivot" -> (RelationalQueries.qPivot _),
     "q_asof" -> (RelationalQueries.qAsof _),
     "q_asof_fast" -> (RelationalQueries.qAsofFast _),
@@ -1013,7 +537,6 @@ object Queries {
     "q_asof_nearest" -> (RelationalQueries.qAsofNearest _),
     "q_retention" -> (RelationalQueries.qRetention _),
     "q_approx_distinct" -> (RelationalQueries.qApproxDistinct _),
-    "q_quantile_sketch" -> ((s: SparkSession, d: String) => qQuantileSketch(s, d)),
     "q_kmv_distinct" -> ((s: SparkSession, d: String) => RelationalQueries.qKmvDistinct(s, d)),
     "q_kmv_cumulative" -> ((s: SparkSession, d: String) => RelationalQueries.qKmvCumulative(s, d)),
     "dedup_decontaminate" -> ((s: SparkSession, d: String) => PipelineQueries.decontaminate(s, d)),
@@ -1025,50 +548,30 @@ object Queries {
     "q_sample_n" -> ((s: SparkSession, d: String) => PipelineQueries.qSampleN(s, d)),
     "q_sample_weighted" -> ((s: SparkSession, d: String) => PipelineQueries.qSampleWeighted(s, d)),
     "q_kanon" -> ((s: SparkSession, d: String) => PipelineQueries.qKAnon(s, d)),
-    "q_salted_join" -> (RelationalQueries.qSaltedJoin _),
-    "q_bloom_join" -> (RelationalQueries.qBloomJoin _),
     "q_interval_join" -> (RelationalQueries.qIntervalJoin _),
-    "q_fuzzy_join" -> ((s: SparkSession, d: String) => RelationalQueries.qFuzzyJoin(s, d)),
     "text_chunk" -> ((s: SparkSession, d: String) => TextQueries.textChunk(s, d)),
     "text_surprisal" -> (TextQueries.textSurprisal _),
     "q_mix_rebalance" -> (PipelineQueries.qMixRebalance _),
     "q_mix_apply" -> (PipelineQueries.qMixApply _),
     "q_dsir" -> ((s: SparkSession, d: String) => PipelineQueries.qDsir(s, d)),
-    "q_percentile_fast" -> (qPercentileFast _),
     "text_bpe" -> ((s: SparkSession, d: String) => TextQueries.textBpe(s, d)),
     "text_hot_ngrams" -> ((s: SparkSession, d: String) => TextQueries.textHotNgrams(s, d)),
     "ann_mrl" -> ((s: SparkSession, d: String) => AnnQueries.annMrl(s, d)),
     "ann_bq_layout" -> ((s: SparkSession, d: String) => AnnQueries.annBqLayout(s, d)),
     "ann_cascade_layout" -> ((s: SparkSession, d: String) => AnnQueries.annCascadeLayout(s, d)),
     "emb_dims" -> (PipelineQueries.embDims _),
-    "q_weighted_percentile" -> (RelationalQueries.qWeightedPercentile _),
-    "q_fk_audit" -> (RelationalQueries.qFkAudit _),
-    "q_feature_scale" -> (RelationalQueries.qFeatureScale _),
     "ann_recall_eval" -> ((s: SparkSession, d: String) => AnnQueries.annRecallEval(s, d)),
     "q_sample_stratified" -> ((s: SparkSession, d: String) => PipelineQueries.qSampleStratified(s, d)),
     "q_user_features" -> (RelationalQueries.qUserFeatures _),
     "dedup_profile" -> (DedupQueries.dedupProfile _),
-    "q_basket_lift" -> ((s: SparkSession, d: String) => RelationalQueries.qBasketLift(s, d)),
-    "q_ks_test" -> (RelationalQueries.qKsTest _),
     "q_winsorize" -> ((s: SparkSession, d: String) => RelationalQueries.qWinsorize(s, d)),
-    "q_hhi" -> (RelationalQueries.qHhi _),
     "q_survival" -> ((s: SparkSession, d: String) => RelationalQueries.qSurvival(s, d)),
-    "q_autocorr" -> ((s: SparkSession, d: String) => RelationalQueries.qAutocorr(s, d)),
     "q_stickiness" -> (RelationalQueries.qStickiness _),
     "q_power_users" -> ((s: SparkSession, d: String) => RelationalQueries.qPowerUsers(s, d)),
-    "q_chisq" -> (RelationalQueries.qChisq _),
-    "q_purchase_gap" -> (RelationalQueries.qPurchaseGap _),
-    "q_ols" -> (RelationalQueries.qOls _),
-    "q_price_index" -> (RelationalQueries.qPriceIndex _),
-    "q_t_closeness" -> ((s: SparkSession, d: String) =>
-      RelationalQueries.qTCloseness(s, d)),
     "q_kendall" -> (RelationalQueries.qKendall _),
-    "q_new_returning" -> (RelationalQueries.qNewReturning _),
     "text_dup_ngrams" -> ((s: SparkSession, d: String) =>
       TextQueries.textDupNgrams(s, d)),
-    "q_cohort_ltv" -> (RelationalQueries.qCohortLtv _),
     "q_cross_corr" -> ((s: SparkSession, d: String) => RelationalQueries.qCrossCorr(s, d)),
-    "q_l_diversity" -> ((s: SparkSession, d: String) => RelationalQueries.qLDiversity(s, d)),
     "mm_phash_incremental" -> ((s: SparkSession, d: String) => MultimodalQueries.mmPhashIncremental(s, d)),
     "mm_luma" -> (MultimodalQueries.mmLuma _),
     "mm_jpeg" -> (MultimodalQueries.mmJpeg _),
@@ -1083,12 +586,9 @@ object Queries {
     "mm_resize" -> (MultimodalQueries.mmResize _),
     "dedup_phrase" -> ((s: SparkSession, d: String) => DedupQueries.dedupPhrase(s, d)),
     "emb_dist_hist" -> ((s: SparkSession, d: String) => PipelineQueries.embDistHist(s, d)),
-    "q_pagerank" -> ((s: SparkSession, d: String) => RelationalQueries.qPagerank(s, d)),
     "q_attribution" -> (RelationalQueries.qAttribution _),
     "q_histogram" -> ((s: SparkSession, d: String) => RelationalQueries.qHistogram(s, d)),
     "q_skew_audit" -> (RelationalQueries.qSkewAudit _),
-    "q_bucket_join" -> (RelationalQueries.qBucketJoin _),
-    "q_zorder" -> (RelationalQueries.qZorder _),
     "q_funnel" -> (RelationalQueries.qFunnel _),
     "text_keywords" -> ((s: SparkSession, d: String) => TextQueries.textKeywords(s, d)),
     "text_cooccur" -> ((s: SparkSession, d: String) => TextQueries.textCooccur(s, d)),
@@ -1099,7 +599,6 @@ object Queries {
     "text_code_detect" -> (TextQueries.textCodeDetect _),
     "q_rfm" -> (RelationalQueries.qRfm _),
     "q_cdc" -> (RelationalQueries.qCdc _),
-    "q_incremental_agg" -> (RelationalQueries.qIncrementalAgg _),
     "q_json" -> (RelationalQueries.qJson _),
     "q_source_overlap" -> (RelationalQueries.qSourceOverlap _),
     "q_resample" -> (RelationalQueries.qResample _),
@@ -1116,7 +615,6 @@ object Queries {
     "mm_dedup_exact" -> (MultimodalQueries.mmDedupExact _),
     "mm_framesample" -> ((s: SparkSession, d: String) => MultimodalQueries.mmFrameSample(s, d)),
     "text_canary" -> (TextQueries.textCanary _),
-    "q_bootstrap" -> ((s: SparkSession, d: String) => RelationalQueries.qBootstrap(s, d)),
     "q_table_profile" -> (RelationalQueries.qTableProfile _),
     "q_expectations" -> (RelationalQueries.qExpectations _),
     "q_langid_eval" -> (TextQueries.qLangidEval _),
@@ -1150,7 +648,6 @@ object Queries {
       DedupQueries.dedupBySource(s, d)),
     "dedup_sweep" -> ((s: SparkSession, d: String) =>
       DedupQueries.dedupSweep(s, d)),
-    "q_revenue_bridge" -> (RelationalQueries.qRevenueBridge _),
     "dedup_minhash_acc" -> ((s: SparkSession, d: String) =>
       DedupQueries.dedupMinhashAcc(s, d)),
     "q_cuped" -> (RelationalQueries.qCuped _),
@@ -1162,7 +659,7 @@ object Queries {
   /**
    * Pure-SQL surface (r11 — the r10 verdict's #8): register operator
    * outputs as named temp views `graft_<key>` so a SQL-only user can
-   * `SELECT * FROM graft_q_chisq` with no DataFrame code at all. The
+   * `SELECT * FROM graft_q_kanon` with no DataFrame code at all. The
    * scalar/agg kernels are already SQL functions via
    * [[graft.functions.registerAll]]/GraftExtensions; this closes the
    * gap for whole-OPERATOR outputs. A view holds the operator's
@@ -1206,34 +703,15 @@ object Queries {
     scala.util.Try(gen).toOption.flatten.map(k -> _)
 
   private val staticOracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q3_join" -> q3JoinSql,
-    "q_topn_group" -> qTopnGroupSql,
-    "q_semi_anti" -> qSemiAntiSql,
-    "q_rollup" -> qRollupSql,
-    "q_window" -> qWindowSql,
-    // range-partitioned prefix scan must equal the decimal window bit-for-bit
-    "q_window_fast" -> qWindowFastSql,
-    // histogram + range-partitioned prefix scan must equal the
-    // buffering percentile() aggregate bit-for-bit
-    "q_percentile_fast" -> qPercentileSql,
     "q_events" -> qEventsSql,
     "q_sessionize" -> qSessionizeSql,
-    "q_percentile" -> qPercentileSql,
-    "q_weighted_median" -> RelationalQueries.qWeightedMedianSql,
     "q5_join" -> RelationalQueries.q5JoinSql,
-    // recursive-CTE replay of the exact integer Holt chain
     "q_forecast" -> RelationalQueries.qForecastSql,
-    // both arms (exact + coordinated-sample estimate) replayed per edge
     "q_join_size_est" -> RelationalQueries.qJoinSizeEstSql(),
-    // Mann–Whitney ×2 integer credit; DuckDB window is oracle-side only
     "q_auc" -> RelationalQueries.qAucSql,
     "q_psi" -> RelationalQueries.qPsiSql,
-    // value-grain decile rule (integer div) — deterministic under ties
     "q_lift" -> RelationalQueries.qLiftSql,
-    // xor + modular-sum signatures over the transcribed xxhash64
     "q_table_checksum" -> RelationalQueries.qTableChecksumSql,
-    // one-pass exact micro-unit sums; corr() itself reassociates doubles
     "q_corr" -> RelationalQueries.qCorrSql,
     "q_mutual_info" -> RelationalQueries.qMutualInfoSql,
     // the gate-proven q8 arithmetic, histogrammed corpus-wide
@@ -1255,8 +733,6 @@ object Queries {
     "dedup_by_source" -> DedupQueries.dedupBySourceSql,
     // the (tau, hamming) tuning grid over one pair-join of both pipelines
     "dedup_sweep" -> DedupQueries.dedupSweepSql,
-    // volume + price/mix effects that sum to the delta by construction
-    "q_revenue_bridge" -> RelationalQueries.qRevenueBridgeSql,
     // Broder bottom-k estimates vs exact token jaccard, per pair
     "dedup_minhash_acc" -> DedupQueries.dedupMinhashAccSql,
     // pooled theta + rho^2 variance reduction, one moment pass
@@ -1267,8 +743,6 @@ object Queries {
     "q_did" -> RelationalQueries.qDidSql,
     // the effect floor this corpus's variance can detect at 80% power
     "q_mde" -> RelationalQueries.qMdeSql,
-    "q_benford" -> RelationalQueries.qBenfordSql,
-    "q_gini" -> RelationalQueries.qGiniSql,
     "q_changepoint" -> RelationalQueries.qChangepointSql,
     "ann_dot_topk" -> annDotTopkSql,
     "ann_cosine_topk" -> annCosineTopkSql,
@@ -1316,8 +790,6 @@ object Queries {
     "text_langid" -> TextQueries.textLangidSql,
     "text_repetition" -> TextQueries.textRepetitionSql,
     "text_profile" -> TextQueries.textProfileSql,
-    "q_cube" -> RelationalQueries.qCubeSql,
-    "q_grouping_sets" -> RelationalQueries.qGroupingSetsSql,
     "q_pivot" -> RelationalQueries.qPivotSql,
     "q_asof" -> RelationalQueries.qAsofSql,
     "q_asof_fast" -> RelationalQueries.qAsofSql,
@@ -1359,14 +831,8 @@ object Queries {
     "q_sample_n" -> PipelineQueries.qSampleNSql,
     "q_sample_weighted" -> PipelineQueries.qSampleWeightedSql,
     "q_kanon" -> PipelineQueries.qKAnonSql,
-    // salted join vs the PLAIN join: salting must not change any value
-    "q_salted_join" -> RelationalQueries.qSaltedJoinSql,
-    // bloom join vs the PLAIN join: the bloom prunes, the join decides
-    "q_bloom_join" -> RelationalQueries.qBloomJoinSql,
     // binned interval join vs the plain inequality join it replaces
     "q_interval_join" -> RelationalQueries.qIntervalJoinSql,
-    // q-gram-blocked fuzzy join vs the naive all-pairs levenshtein scan
-    "q_fuzzy_join" -> RelationalQueries.qFuzzyJoinSql,
     "text_chunk" -> TextQueries.textChunkSql,
     "text_gopher" -> TextQueries.textGopherSql,
     "text_c4" -> TextQueries.textC4Sql,
@@ -1395,37 +861,18 @@ object Queries {
     // oracles are the inline forms' replays
     "ann_bq_layout" -> AnnQueries.annBqTopkSql,
     "ann_cascade_layout" -> AnnQueries.annCascadeSql,
-    // bucketed co-located join: layout must be invisible — oracle is
-    // the plain join
-    // r8 additions: aggregated-graph pagerank (integer iteration chain
-    // replayed as CTEs), attribution, dense histogram, skew audit
     "emb_dims" -> PipelineQueries.embDimsSql,
-    "q_weighted_percentile" -> RelationalQueries.qWeightedPercentileSql,
-    "q_fk_audit" -> RelationalQueries.qFkAuditSql,
-    "q_feature_scale" -> RelationalQueries.qFeatureScaleSql,
     "ann_recall_eval" -> AnnQueries.annRecallEvalSql,
     "q_sample_stratified" -> PipelineQueries.qSampleStratifiedSql,
     "q_user_features" -> RelationalQueries.qUserFeaturesSql,
     "dedup_profile" -> DedupQueries.dedupProfileSql,
-    "q_basket_lift" -> RelationalQueries.qBasketLiftSql(),
-    "q_ks_test" -> RelationalQueries.qKsTestSql,
     "q_winsorize" -> RelationalQueries.qWinsorizeSql,
-    "q_hhi" -> RelationalQueries.qHhiSql,
     "q_survival" -> RelationalQueries.qSurvivalSql,
-    "q_autocorr" -> RelationalQueries.qAutocorrSql,
     "q_stickiness" -> RelationalQueries.qStickinessSql,
     "q_power_users" -> RelationalQueries.qPowerUsersSql,
-    "q_chisq" -> RelationalQueries.qChisqSql,
-    "q_purchase_gap" -> RelationalQueries.qPurchaseGapSql,
-    "q_ols" -> RelationalQueries.qOlsSql,
-    "q_price_index" -> RelationalQueries.qPriceIndexSql,
-    "q_t_closeness" -> RelationalQueries.qTClosenessSql,
     "q_kendall" -> RelationalQueries.qKendallSql,
-    "q_new_returning" -> RelationalQueries.qNewReturningSql,
     "text_dup_ngrams" -> TextQueries.textDupNgramsSql,
-    "q_cohort_ltv" -> RelationalQueries.qCohortLtvSql,
     "q_cross_corr" -> RelationalQueries.qCrossCorrSql,
-    "q_l_diversity" -> RelationalQueries.qLDiversitySql,
     "mm_phash_incremental" -> MultimodalQueries.mmPhashIncrementalSql,
     "mm_luma" -> MultimodalQueries.mmLumaSql,
     "mm_jpeg" -> MultimodalQueries.mmJpegSql,
@@ -1440,13 +887,9 @@ object Queries {
     "mm_resize" -> MultimodalQueries.mmResizeSql,
     "dedup_phrase" -> DedupQueries.dedupPhraseSql,
     "emb_dist_hist" -> PipelineQueries.embDistHistSql,
-    "q_pagerank" -> RelationalQueries.qPagerankSql,
     "q_attribution" -> RelationalQueries.qAttributionSql,
     "q_histogram" -> RelationalQueries.qHistogramSql,
     "q_skew_audit" -> RelationalQueries.qSkewAuditSql,
-    "q_bucket_join" -> RelationalQueries.qBucketJoinSql,
-    // Morton interleave: quantization + bit-spread replayed exactly
-    "q_zorder" -> RelationalQueries.qZorderSql,
     "q_funnel" -> RelationalQueries.qFunnelSql,
     "text_keywords" -> TextQueries.textKeywordsSql,
     "text_cooccur" -> TextQueries.textCooccurSql,
@@ -1454,15 +897,12 @@ object Queries {
     // outlier gate extends the shared integer-Lloyd CTEs with the
     // proven percentile/quantile_cont parity
     "emb_outliers" -> PipelineQueries.embOutliersSql,
-    // skyline: the sweep must reproduce the O(n²) dominance definition
     "q_skyline" -> RelationalQueries.qSkylineSql,
     "text_drift" -> TextQueries.textDriftSql,
     "text_code_detect" -> TextQueries.textCodeDetectSql,
     // ntile ties broken by user_id in BOTH engines — order-sensitive
     "q_rfm" -> RelationalQueries.qRfmSql,
     "q_cdc" -> RelationalQueries.qCdcSql,
-    // MV merge must equal the full recompute bit-for-bit
-    "q_incremental_agg" -> RelationalQueries.qIncrementalAggSql,
     "q_json" -> RelationalQueries.qJsonSql,
     "q_source_overlap" -> RelationalQueries.qSourceOverlapSql,
     "q_resample" -> RelationalQueries.qResampleSql,
@@ -1481,7 +921,6 @@ object Queries {
     "mm_dedup_exact" -> MultimodalQueries.mmDedupExactSql,
     "mm_framesample" -> MultimodalQueries.mmFrameSampleSql,
     "text_canary" -> TextQueries.textCanarySql,
-    "q_bootstrap" -> RelationalQueries.qBootstrapSql,
     "q_table_profile" -> RelationalQueries.qTableProfileSql,
     "q_expectations" -> RelationalQueries.qExpectationsSql,
     "q_langid_eval" -> TextQueries.qLangidEvalSql,
@@ -1489,13 +928,10 @@ object Queries {
     "q_seasonality" -> RelationalQueries.qSeasonalitySql,
     "q_kmv_setops" -> RelationalQueries.qKmvSetopsSql,
     "q_kmv_distinct" -> RelationalQueries.qKmvDistinctSql,
-    // r8: the last two rows-only keys retired — the registered defaults
-    // are the oracle-able KMV / bottom-k-sample estimators (HLL and KLL
-    // remain as documented engine-native alternatives, spec-bounded)
+    // the registered default is the oracle-able KMV estimator (HLL
+    // remains as the documented engine-native alternative, spec-bounded)
     "q_approx_distinct" -> RelationalQueries.qApproxDistinctSql,
-    "q_percentile_approx" -> qPercentileApproxSql,
     "q_kmv_cumulative" -> RelationalQueries.qKmvCumulativeSql,
-    "q_quantile_sketch" -> qQuantileSketchSql,
     "q_ewma" -> RelationalQueries.qEwmaSql,
     "q_trend" -> RelationalQueries.qTrendSql,
     "dedup_containment" -> DedupQueries.dedupContainmentSql

@@ -34,46 +34,6 @@ object RelationalQueries {
     * TIMESTAMP_NTZ). */
   private def orderDay(o: DataFrame) = epochDayExpr(o, "o_orderdate")
 
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(18,4)")).cast("double")
-
-  /** CUBE over (returnflag, linestatus): all 4 grouping combinations in
-    * one pass (partial aggs expand grouping sets map-side). */
-  def qCube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  val qCubeSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  COUNT(*) AS n
-      |FROM lineitem
-      |GROUP BY CUBE (l_returnflag, l_linestatus)
-      |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
-
-  /** Explicit GROUPING SETS: status totals and priority totals from
-    * one scan of orders. */
-  def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_gs")
-    s.sql(
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-        |  COUNT(*) AS n
-        |FROM orders_gs
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
-  }
-
-  val qGroupingSetsSql: String =
-    """SELECT o_orderstatus, o_orderpriority,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-      |  COUNT(*) AS n
-      |FROM orders
-      |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-      |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin
-
   /** Pivot event types into columns (expressed as conditional aggs so
     * the oracle arithmetic is identical; Spark's `pivot` compiles to
     * the same shape). */
@@ -265,221 +225,6 @@ object RelationalQueries {
       |FROM a
       |GROUP BY cohort_week, weeks_since
       |ORDER BY cohort_week, weeks_since""".stripMargin
-
-  /**
-   * Exact WEIGHTED median per group — the fair-aggregation primitive
-   * (a plain median over line items weights a 1-unit order like a
-   * 50-unit one; revenue/capacity questions need the quantity-weighted
-   * cut): the smallest value v such that the weight at or below v
-   * reaches half the group's total.
-   *
-   * Scale (r8 — the r7 shape partitioned a running-sum window on the
-   * ~3-value returnflag key, funneling the whole event-grain table
-   * through ≤3 sort tasks): selection happens on the per-(group,
-   * value) WEIGHT HISTOGRAM instead — the q_percentile_fast
-   * discipline. The first exchange carries distinct (group, value)
-   * rows (deduplicated map-side by partial aggregation), and the
-   * running weight over the value-sorted histogram is
-   * [[graft.operators.PrefixSum.runningSum]] — range-partitioned by
-   * (group, value), so a giant group SPANS partitions instead of
-   * landing in one task. The crossing value is identical at value
-   * grain (F(v) = weight at or ≤ v is the same step function whether
-   * accumulated per row or per distinct value), and quantity weights
-   * are integral, so decimal sums make the crossing comparison exact
-   * — the oracle replays the row-grain window and agrees bit-for-bit.
-   */
-  def qWeightedMedian(s: SparkSession, dir: String): DataFrame = {
-    val hist = t(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_extendedprice"),
-        col("l_quantity").cast("decimal(18,2)").as("w"))
-      .groupBy(col("l_returnflag"), col("l_extendedprice"))
-      .agg(sum(col("w")).as("w"))
-    val (cum, ktot) = graft.operators.PrefixSum.runningSumWithTotals(
-      hist, Seq("l_returnflag"), Seq("l_extendedprice"), "w", "cum")
-    // group totals from the operator's per-(partition, key) totals —
-    // the same values max(cum) gave, without a second pass over the
-    // row-grain cumulative frame (r13; guide §1.2)
-    val tots = ktot.select(col("l_returnflag"), col("__ktotal").as("tot"))
-    cum.join(broadcast(tots), Seq("l_returnflag"))
-      .filter(col("cum") * 2 >= col("tot"))
-      .groupBy(col("l_returnflag"))
-      .agg(min(col("l_extendedprice")).as("weighted_median_price"),
-        max(col("tot")).cast("double").as("total_weight"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** Same crossing rule: first value whose cumulative weight (ordered
-    * by (value, orderkey, linenumber)) reaches half the total. */
-  val qWeightedMedianSql: String =
-    """WITH c AS (
-      |  SELECT l_returnflag, l_extendedprice, l_quantity,
-      |    SUM(l_quantity) OVER (PARTITION BY l_returnflag
-      |      ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS cum,
-      |    SUM(l_quantity) OVER (PARTITION BY l_returnflag) AS tot
-      |  FROM lineitem)
-      |SELECT l_returnflag,
-      |  MIN(l_extendedprice) AS weighted_median_price,
-      |  MAX(tot) AS total_weight
-      |FROM c WHERE cum * 2 >= tot
-      |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
-
-  /**
-   * Weighted percentiles per group (r8) — [[qWeightedMedian]]'s
-   * machinery generalized to arbitrary p: the smallest value whose
-   * cumulative weight reaches p·total, for p ∈ {25, 50, 75, 95} %.
-   * Same scale shape: per-(group, value) weight histogram (map-side
-   * dedup), ONE range-partitioned [[graft.operators.PrefixSum]] pass
-   * shared by all four percentiles, then a broadcast of the 4-row p
-   * frame onto the cumulative scan. Crossing test in EXACT integer
-   * arithmetic: `cum·100 ≥ p·tot` on decimal weights (p in percent) —
-   * no double division anywhere, so the oracle replays it bit-for-bit.
-   */
-  def qWeightedPercentile(s: SparkSession, dir: String): DataFrame = {
-    val hist = t(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_extendedprice"),
-        col("l_quantity").cast("decimal(18,2)").as("w"))
-      .groupBy(col("l_returnflag"), col("l_extendedprice"))
-      .agg(sum(col("w")).as("w"))
-    val (cum, ktot) = graft.operators.PrefixSum.runningSumWithTotals(
-      hist, Seq("l_returnflag"), Seq("l_extendedprice"), "w", "cum")
-    // totals from the operator's per-(partition, key) totals frame —
-    // not a second pass over the cumulative frame (r13; guide §1.2)
-    val tots = ktot.select(col("l_returnflag"), col("__ktotal").as("tot"))
-    val ps = s.range(1).select(explode(array(
-      lit(25), lit(50), lit(75), lit(95))).as("p"))
-    cum.join(broadcast(tots), Seq("l_returnflag"))
-      .join(broadcast(ps), col("cum") * 100 >= col("p") * col("tot"))
-      .groupBy(col("l_returnflag"), col("p"))
-      .agg(min(col("l_extendedprice")).as("value"))
-      .orderBy(col("l_returnflag"), col("p"))
-  }
-
-  val qWeightedPercentileSql: String =
-    """WITH c AS (
-      |  SELECT l_returnflag, l_extendedprice,
-      |    SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-      |      PARTITION BY l_returnflag ORDER BY l_extendedprice) AS cum,
-      |    SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-      |      PARTITION BY l_returnflag) AS tot
-      |  FROM lineitem),
-      |ps AS (SELECT unnest([25, 50, 75, 95]) AS p)
-      |SELECT l_returnflag, CAST(p AS INT) AS p,
-      |  MIN(l_extendedprice) AS value
-      |FROM c JOIN ps ON cum * 100 >= p * tot
-      |GROUP BY l_returnflag, p
-      |ORDER BY l_returnflag, p""".stripMargin
-
-  /**
-   * Benford first-digit audit — the classic fabricated-data detector:
-   * naturally occurring multi-scale magnitudes follow
-   * `P(d) = log10(1 + 1/d)`; invented or truncated figures do not. Per
-   * metric, the first-significant-digit histogram and the chi-square
-   * statistic against Benford's law — the data-quality audit a
-   * pipeline runs over new numeric sources before trusting them. One
-   * partial-aggregated pass (9-row groups).
-   *
-   * Digit extraction (r8 — the r7 shape compared formatter output:
-   * Spark `format_number` HALF_UPs at 4 dp while DuckDB's `format`
-   * banker-rounds, so values crossing a power of ten at the 4th
-   * decimal could disagree, and sub-0.0001 values yielded an empty
-   * string): the value collapses to its CENT-EXACT integer
-   * `round(|x|·100)` — the same double multiply + half-away-from-zero
-   * round + integral cast in both engines — and the first significant
-   * digit is the first character of that integer's decimal string
-   * (bigint→string is formatter-free). Values below half a cent fall
-   * out of the audit by the v ≥ 1 guard (documented domain: monetary
-   * amounts at cent grain).
-   */
-  def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val counts = t(s, dir, "lineitem")
-      .select(round(abs(col("l_extendedprice")) * 100).cast("long").as("v"))
-      .filter(col("v") >= 1)
-      .select(substring(col("v").cast("string"), 1, 1).cast("int").as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val tot = Window.partitionBy()
-    counts
-      .withColumn("total", sum(col("n")).over(tot))
-      .select(col("digit"), col("n"),
-        (floor(col("n") / col("total") * 1e6 + 0.5) / 1e6).as("observed_p"),
-        (floor(log10(lit(1.0) + lit(1.0) / col("digit")) * 1e6 + 0.5)
-          / 1e6).as("benford_p"),
-        (floor(
-          pow(col("n") - col("total") * log10(lit(1.0) + lit(1.0) / col("digit")), 2)
-            / (col("total") * log10(lit(1.0) + lit(1.0) / col("digit")))
-            * 1e4 + 0.5) / 1e4).as("chi2_term"))
-      .orderBy(col("digit"))
-  }
-
-  val qBenfordSql: String =
-    """WITH v AS (
-      |  SELECT CAST(round(abs(l_extendedprice) * 100) AS BIGINT) AS v
-      |  FROM lineitem),
-      |d AS (
-      |  SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INT) AS digit
-      |  FROM v WHERE v >= 1),
-      |c AS (SELECT digit, count(*) AS n FROM d GROUP BY digit),
-      |t AS (SELECT SUM(n) AS total FROM c)
-      |SELECT digit, n,
-      |  FLOOR(CAST(n AS DOUBLE) / total * 1e6 + 0.5) / 1e6 AS observed_p,
-      |  FLOOR(log10(1.0 + 1.0 / digit) * 1e6 + 0.5) / 1e6 AS benford_p,
-      |  FLOOR(pow(n - total * log10(1.0 + 1.0 / digit), 2)
-      |        / (total * log10(1.0 + 1.0 / digit)) * 1e4 + 0.5) / 1e4 AS chi2_term
-      |FROM c, t
-      |ORDER BY digit""".stripMargin
-
-  /**
-   * Gini concentration audit — how unevenly is order revenue spread
-   * across customers? The single number behind "are we one customer
-   * away from a cliff" (and, in a corpus context, "does one source
-   * dominate the mix"): `G = 2·Σ i·x₍ᵢ₎ / (n·Σx) − (n+1)/n` over
-   * per-customer totals sorted ascending (ties by custkey). One
-   * customer-keyed aggregation, then a RANGE-PARTITIONED global rank
-   * over the customer frame, then a 3-value aggregate — decimal sums
-   * keep Σ i·x exact so the final division is one deterministic
-   * double op.
-   *
-   * Scale (r8 — the r7 shape ranked with an UNPARTITIONED window,
-   * which Spark executes as a single-task sort of the whole entity
-   * frame): rank = [[graft.operators.PrefixSum.runningSum]] of a
-   * constant 1 over the (x, custkey) range-partitioned sort — each
-   * task ranks its slice locally and adds the broadcast count of
-   * earlier partitions, the exact q_window_fast decomposition. No
-   * Window appears in the plan (plan-audit-pinned).
-   */
-  def qGini(s: SparkSession, dir: String): DataFrame = {
-    val per = t(s, dir, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("x"))
-      .withColumn("k", lit(1))
-      .withColumn("one", lit(1L))
-    graft.operators.PrefixSum
-      .runningSum(per, Seq("k"), Seq("x", "o_custkey"), "one", "i")
-      .agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("x") * col("i")).as("six"))
-      .select(col("n"),
-        col("sx").cast("double").as("total_revenue"),
-        (floor((lit(2.0) * col("six").cast("double") /
-            (col("n") * col("sx").cast("double")) -
-          (col("n") + 1).cast("double") / col("n")) * 1e6 + 0.5) / 1e6)
-          .as("gini"))
-  }
-
-  /** Same sort, same exact decimal sums, same one double division. */
-  val qGiniSql: String =
-    """WITH per AS (
-      |  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-      |  FROM orders GROUP BY o_custkey),
-      |rk AS (
-      |  SELECT x, row_number() OVER (ORDER BY x, o_custkey) AS i FROM per)
-      |SELECT count(*) AS n,
-      |  CAST(SUM(x) AS DOUBLE) AS total_revenue,
-      |  FLOOR((2.0 * CAST(SUM(x * i) AS DOUBLE)
-      |         / (count(*) * CAST(SUM(x) AS DOUBLE))
-      |         - CAST(count(*) + 1 AS DOUBLE) / count(*)) * 1e6 + 0.5) / 1e6
-      |    AS gini
-      |FROM rk""".stripMargin
 
   /**
    * CUSUM change-point detection per series — WHERE did the level
@@ -708,63 +453,6 @@ object RelationalQueries {
   }
 
   /**
-   * Skew-safe fact⋈fact join via [[graft.operators.SkewTools.saltedJoin]]:
-   * keys with ≥ 1000 lineitem rows are salted 8 ways and ONLY the
-   * orders rows under those keys replicate 8× (r4 — the r3 shape
-   * exploded the whole right side 8× unconditionally, octupling the
-   * orders shuffle whether or not any key was hot); the cold majority
-   * takes the plain sort-merge join. On the gate corpus (≤ ~40 rows
-   * per order key) no key crosses the threshold, so the benched plan
-   * IS the plain join plus one narrow count pass — the salt machinery
-   * engages only under real skew. The oracle is the PLAIN join:
-   * salting must not change a single output value.
-   */
-  def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-      (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-    val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))
-    graft.operators.SkewTools.saltedJoin(li, ord, "l_orderkey", "o_orderkey",
-        salts = 8, hotThreshold = 1000L)
-      .groupBy(col("o_orderpriority"))
-      .agg(round(sum(col("rev")), 2).as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  val qSaltedJoinSql: String =
-    """SELECT o_orderpriority,
-      |  ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-      |  COUNT(*) AS n_items
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin
-
-  /**
-   * Bloom-pre-filtered join via
-   * [[graft.operators.SkewTools.bloomFilteredJoin]]: per-supplier
-   * revenue for nations 0–4's suppliers. ~80 % of lineitem rows have no
-   * matching supplier and are dropped by the bloom probe MAP-SIDE,
-   * before the shuffle (the merge hint forces the sort-merge shape this
-   * guard exists for — at 100 TB neither side of a fact join
-   * broadcasts). The oracle is the PLAIN join: the bloom only prunes
-   * candidates, the join decides membership, so no output value may
-   * change.
-   */
-  def qBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val sup = t(s, dir, "supplier").filter(col("s_nationkey") < 5)
-      .select(col("s_suppkey"))
-    val li = t(s, dir, "lineitem")
-      .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-    graft.operators.SkewTools
-      .bloomFilteredJoin(li, sup.hint("merge"), "l_suppkey", "s_suppkey")
-      .groupBy(col("s_suppkey"))
-      .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1) - col("l_discount").cast("decimal(3,2)")))
-          .cast("double").as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  /**
    * Interval (time-window) join WITHOUT an equi key: each sampled order
    * counts/sums ALL events within ±1 h of its order date, any user.
    * A naive `ON ts BETWEEN lo AND hi` is a pure inequality join —
@@ -776,7 +464,7 @@ object RelationalQueries {
    * bin, and the exact window filter runs on the joined pairs. Each
    * event shuffles once; each order 3×; no nested loop anywhere. Hot
    * bins (event bursts) are the residual skew hazard — AQE's skew
-   * split or SkewTools.saltedJoin compose on top when needed.
+   * split composes on top when needed.
    */
   def qIntervalJoin(s: SparkSession, dir: String): DataFrame = {
     // o_orderdate is TIMESTAMP_NTZ in the parquet; the session runs in
@@ -835,171 +523,6 @@ object RelationalQueries {
       |GROUP BY o.o_orderkey
       |ORDER BY o.o_orderkey""".stripMargin
 
-  val qBloomJoinSql: String =
-    """SELECT s_suppkey,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-      |           * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue,
-      |  COUNT(*) AS n_items
-      |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-      |WHERE s_nationkey < 5
-      |GROUP BY s_suppkey
-      |ORDER BY s_suppkey""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Fuzzy (edit-distance) join
-  // -------------------------------------------------------------------------
-
-  /**
-   * All pairs of DISTINCT part names within Levenshtein distance
-   * `maxDist` — entity resolution / fuzzy key matching (vendor name
-   * reconciliation, near-identical titles), the string analogue of the
-   * near-dup dedup family. Scale design is the LSH discipline applied
-   * to edit distance:
-   *
-   *  1. collapse to the distinct-name DOMAIN first — names repeat, the
-   *     domain is orders of magnitude smaller than the table (same
-   *     collapse-before-shuffle move as the fp128 dedup pipelines);
-   *  2. candidate generation by multiset q-gram count filtering: one
-   *     edit changes at most `q` of a string's q-grams, so a pair
-   *     within distance d shares ≥ max(|Ga|,|Gb|) − d·q grams of its
-   *     q-gram MULTISET (occurrence-numbered, so repeats pair up) —
-   *     the equi-join on (gram, occurrence#) + the count filter prunes
-   *     the quadratic pair space to near-neighbors;
-   *  3. strings too short for the bound to bite (threshold ≤ 0 needs
-   *     both |a|,|b| ≤ q−1+d·q, here ≤ 5) can share zero grams, so the
-   *     bounded short-name domain goes through a tiny all-pairs branch;
-   *  4. exact `levenshtein` verifies every candidate — the filter only
-   *     prunes, the verify decides, so output ≡ the naive O(n²) scan
-   *     the oracle runs.
-   */
-  def qFuzzyJoin(s: SparkSession, dir: String, maxDist: Int = 2,
-      q: Int = 2): DataFrame = {
-    val names = t(s, dir, "part").select(col("p_name").as("name")).distinct()
-    val shortLen = (q - 1) + maxDist * q
-    val grams = names
-      .filter(length(col("name")) >= q) // sequence() would flip descending below q
-      .select(col("name"),
-        posexplode(expr(
-          s"transform(sequence(1, length(name) - ${q - 1}), i -> substring(name, i, $q))"))
-          .as(Seq("pos", "gram")))
-    val w = Window.partitionBy(col("name"), col("gram")).orderBy(col("pos"))
-    val occ = grams.select(col("name"), col("gram"),
-      row_number().over(w).as("occ"))
-    val candGram = occ.as("a").join(occ.as("b"),
-        col("a.gram") === col("b.gram") && col("a.occ") === col("b.occ") &&
-          col("a.name") < col("b.name"))
-      .groupBy(col("a.name").as("name_a"), col("b.name").as("name_b"))
-      .agg(count(lit(1)).as("common"))
-      // pairs with a non-positive threshold pass automatically (common ≥ 1)
-      .filter(col("common") >=
-        greatest(length(col("name_a")), length(col("name_b")))
-          - lit(q - 1) - lit(maxDist * q))
-      .select(col("name_a"), col("name_b"))
-    val shorts = names.filter(length(col("name")) <= shortLen)
-    val candShort = shorts.as("a")
-      .join(shorts.as("b"), col("a.name") < col("b.name"))
-      .select(col("a.name").as("name_a"), col("b.name").as("name_b"))
-    candGram.unionByName(candShort).distinct()
-      .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
-      .filter(col("dist") <= maxDist) // ≥ 1 is implied: the names differ
-      .select(col("name_a"), col("name_b"), col("dist").cast("long").as("dist"))
-      .orderBy(col("name_a"), col("name_b"))
-  }
-
-  /** The naive all-pairs scan the blocked plan must reproduce exactly. */
-  val qFuzzyJoinSql: String =
-    """WITH n AS (SELECT DISTINCT p_name AS name FROM part)
-      |SELECT a.name AS name_a, b.name AS name_b,
-      |  CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-      |FROM n a JOIN n b ON a.name < b.name
-      |WHERE levenshtein(a.name, b.name) <= 2
-      |ORDER BY name_a, name_b""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Bucketed co-located fact⋈fact join (shuffle-free by layout)
-  // -------------------------------------------------------------------------
-
-  /** Bucketed fact tables, built once per (session, dir) like the ANN
-    * indexes — the write pays ONE shuffle each, amortized over every
-    * subsequent co-located join. */
-  private val bucketCache = new graft.operators.SessionMemo[(String, String)]()
-
-  /** The warehouse location of a managed table outlives the in-memory
-    * catalog (a fresh JVM sees no table but the old directory blocks
-    * `saveAsTable` with LOCATION_ALREADY_EXISTS) — clear the stale
-    * directory before rebuilding. */
-  private def clearStaleLocation(s: SparkSession, table: String): Unit = {
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val d = new java.io.File(wh, table)
-    if (d.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(d)
-    }
-  }
-
-  private def bucketedFacts(s: SparkSession, dir: String,
-      nBuckets: Int = 8): (String, String) =
-    bucketCache.getOrElseUpdate(s"${graft.operators.SessionMemo.sessionKey(s)}#$dir#$nBuckets", {
-      val tag = s"${AnnQueries.digestOf(dir)}_$nBuckets"
-      val liT = s"li_bkt_$tag"
-      val ordT = s"ord_bkt_$tag"
-      if (!s.catalog.tableExists(liT)) {
-        clearStaleLocation(s, liT)
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-          .write.mode("overwrite")
-          .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(liT)
-      }
-      if (!s.catalog.tableExists(ordT)) {
-        clearStaleLocation(s, ordT)
-        t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_orderstatus"))
-          .write.mode("overwrite")
-          .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(ordT)
-      }
-      (liT, ordT)
-    })
-
-  /**
-   * The LAYOUT answer to the fact⋈fact join: both tables bucketed on
-   * the join key at write time, so the sort-merge join consumes the
-   * bucketing directly — ZERO Exchange below the join (BucketJoinSpec
-   * asserts it; the only shuffle in the whole query is the tiny
-   * post-join status rollup). This is what `q_salted_join` and
-   * `q_bloom_join` become when you control the table layout: at 100 TB
-   * the nightly fact⋈fact reconciliation pays its alignment shuffle
-   * once at ingest, not once per join — with 1000 executors the join
-   * stage reads co-located bucket pairs with no network phase at all.
-   * `hint("merge")` pins the SMJ so the demo is the layout's doing,
-   * not the broadcast planner's.
-   *
-   * Oracle is the PLAIN join — bucketing must not change a value.
-   */
-  def qBucketJoin(s: SparkSession, dir: String): DataFrame = {
-    val (liT, ordT) = bucketedFacts(s, dir)
-    s.table(liT).hint("merge")
-      .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderstatus"))
-      .agg(sum(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1) - col("l_discount").cast("decimal(3,2)")))
-          .cast("double").as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  val qBucketJoinSql: String =
-    """SELECT o_orderstatus,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-      |           * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue,
-      |  COUNT(*) AS n_items
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus""".stripMargin
-
   // -------------------------------------------------------------------------
   // Z-order (Morton) clustering key — multi-dimensional data layout
   // -------------------------------------------------------------------------
@@ -1011,101 +534,20 @@ object RelationalQueries {
     (0 until 16).map(i => shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i))
       .reduce(_ bitwiseOR _)
 
-  /** The same spread as SQL text, generated from the same loop so the
-    * two formulations cannot drift. */
-  private def spread16Sql(v: String): String =
-    (0 until 16).map(i => s"((($v >> $i) & 1) << ${2 * i})").mkString(" | ")
-
   /** 16-bit fixed-point quantizer over [mn, mx] — floor to long, clamp. */
   private def quant16(x: Column, mn: Double, span: Double): Column =
     if (span <= 0) lit(0L)
     else least(greatest(floor((x - lit(mn)) / lit(span) * lit(65536.0)), lit(0L)),
       lit(65535L))
 
-  /**
-   * Z-ORDER (Morton) clustering key over (o_totalprice, o_orderdate) —
-   * the multi-dimensional layout primitive behind Delta/Iceberg
-   * `OPTIMIZE ZORDER BY` (Morton 1966): quantize each dimension to 16
-   * bits over its corpus min/max, interleave the bits, and range-write
-   * by the interleaved key. Because fixing the leading 2k bits of z
-   * fixes k leading bits of BOTH dimensions, every z-range file covers
-   * a RECTANGLE in (price, date) space — so single-dimension predicates
-   * on EITHER column prune files, where a single-column sort prunes one
-   * dimension and full-scans the other. ZorderSpec writes the corpus
-   * both ways and counts overlapping files per predicate from real
-   * parquet file stats.
-   *
-   * The registered query returns per-z-bucket stats (count + min/max of
-   * both dims — the file-skipping metadata a lakehouse would persist);
-   * every step (min/max, the double quantization arithmetic, the bit
-   * interleave) replays exactly in SQL. The min/max setup pass is one
-   * 4-value aggregate; at 100 TB the quantization bounds come from
-   * table metadata instead.
-   */
-  def qZorder(s: SparkSession, dir: String): DataFrame = {
-    val ord = t(s, dir, "orders").select(
-      col("o_totalprice").as("price"),
-      unix_micros(col("o_orderdate").cast("timestamp")).as("us"))
-    val mm = ord.agg(min(col("price")), max(col("price")),
-      min(col("us")), max(col("us"))).head()
-    val (pMin, pMax) = (mm.getDouble(0), mm.getDouble(1))
-    val (uMin, uMax) = (mm.getLong(2), mm.getLong(3))
-    zorderFrame(ord, pMin, pMax - pMin, uMin.toDouble, (uMax - uMin).toDouble)
-      .groupBy(shiftright(col("z"), 22).as("zbucket"))
-      .agg(count(lit(1)).as("n"),
-        round(min(col("price")), 4).as("min_price"),
-        round(max(col("price")), 4).as("max_price"),
-        min(col("us")).as("min_us"),
-        max(col("us")).as("max_us"))
-      .orderBy(col("zbucket"))
-  }
-
-  /** (price, us) frame + its z key — shared by the registered query and
-    * the layout spec so the key arithmetic is one definition. */
-  private[graft] def zorderFrame(ord: DataFrame, pMin: Double, pSpan: Double,
-      uMin: Double, uSpan: Double): DataFrame = {
-    val qa = quant16(col("price"), pMin, pSpan)
-    val qb = quant16(col("us").cast("double"), uMin, uSpan)
-    ord.withColumn("z", spread16(qa).bitwiseOR(shiftleft(spread16(qb), 1)))
-  }
-
-  /** The generic 2-dimension Morton key over double columns — ONE
-    * definition of the quantize + interleave arithmetic, shared by the
-    * orders layout above and [[graft.index.SemanticIndex.saveZordered]]. */
+  /** The generic 2-dimension Morton key over double columns: quantize
+    * each dimension to 16 bits over [min, min + span] and interleave the
+    * bits, so every z-range file covers a rectangle in (a, b) space.
+    * [[graft.index.SemanticIndex.saveZordered]] range-writes by it. */
   private[graft] def zKey2(a: Column, b: Column, aMin: Double, aSpan: Double,
       bMin: Double, bSpan: Double): Column =
     spread16(quant16(a, aMin, aSpan))
       .bitwiseOR(shiftleft(spread16(quant16(b, bMin, bSpan)), 1))
-
-  /** Full hash-match oracle for [[qZorder]]: min/max are
-    * order-insensitive exact, the quantization is plain double
-    * arithmetic, and the interleave is the same 16-term bit expression
-    * (generated from one loop on the Scala side). */
-  val qZorderSql: String = {
-    // the CASE guards mirror quant16's span<=0 branch — a degenerate
-    // dimension (all values equal) must quantize to 0, not 0/0 = NaN
-    val qaDef = "CASE WHEN pmx <= pmn THEN 0 ELSE " +
-      "CAST(LEAST(GREATEST(FLOOR((price - pmn) / (pmx - pmn) * 65536.0), 0), 65535) AS BIGINT) END"
-    val qbDef = "CASE WHEN umx <= umn THEN 0 ELSE " +
-      "CAST(LEAST(GREATEST(FLOOR((CAST(us AS DOUBLE) - umn) / (umx - umn) * 65536.0), 0), 65535) AS BIGINT) END"
-    s"""WITH base AS (
-       |  SELECT o_totalprice AS price, epoch_us(o_orderdate) AS us FROM orders),
-       |mm AS (SELECT min(price) pmn, max(price) pmx,
-       |              min(us) umn, max(us) umx FROM base),
-       |q AS (
-       |  SELECT price, us, $qaDef AS qa, $qbDef AS qb
-       |  FROM base, mm),
-       |zt AS (
-       |  SELECT price, us,
-       |    (${spread16Sql("qa")}) | ((${spread16Sql("qb")}) << 1) AS z
-       |  FROM q)
-       |SELECT z >> 22 AS zbucket, count(*) AS n,
-       |  ROUND(min(price), 4) AS min_price, ROUND(max(price), 4) AS max_price,
-       |  min(us) AS min_us, max(us) AS max_us
-       |FROM zt
-       |GROUP BY zbucket
-       |ORDER BY zbucket""".stripMargin
-  }
 
   // -------------------------------------------------------------------------
   // Ordered-funnel conversion
@@ -1198,7 +640,7 @@ object RelationalQueries {
    * KEY — per-key state is the version count (≤ 2 here, bounded by
    * re-crawl frequency in general), never corpus-sized, and the single
    * shuffle is the key partitioning an incremental store would already
-   * have (`q_bucket_join`'s layout makes it free). Contrast
+   * have (a bucketed layout makes it free). Contrast
    * `dedup_incremental`, which DROPS superseded rows — SCD2 keeps them
    * addressable by interval.
    */
@@ -1449,83 +891,6 @@ object RelationalQueries {
       |ORDER BY doc_id""".stripMargin
 
   // -------------------------------------------------------------------------
-  // Incremental aggregate maintenance (materialized-view merge)
-  // -------------------------------------------------------------------------
-
-  /** Materialized base aggregates, built once per (session, dir) like
-    * the ANN indexes — the stored MV a deployment would keep on disk.
-    * Keyed by the session OBJECT (an identity HASH can be reused after
-    * GC and serve a stale MV to a new session; holding the reference
-    * makes identity stable) and BOUNDED: inserting past the cap
-    * unpersists + evicts the eldest entry, so a long-lived JVM cycling
-    * sessions or dirs cannot pin executor storage without limit. */
-  private val mvCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, false) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
-        val evict = size() > 8
-        if (evict) e.getValue.unpersist(blocking = false)
-        evict
-      }
-    }
-
-  /**
-   * Incremental aggregate maintenance — the algebraic-merge pattern
-   * behind every materialized view / OLAP cube refresh: the base
-   * corpus's per-(returnflag, linestatus) SUM/COUNT states are
-   * materialized ONCE (a tiny grouped frame — the stored MV), and a
-   * delta batch folds in by aggregating ONLY ITS OWN rows and merging
-   * states (sums add, counts add, averages re-derive from merged
-   * sums). At query time nothing rescans the base: the work is
-   * O(|delta| + |MV|), the property that turns a nightly full-corpus
-   * re-aggregation into a delta-sized job.
-   *
-   * Exactness is why the states are DECIMAL: decimal partial sums
-   * merge associatively without FP drift, so the merged result is
-   * BIT-IDENTICAL to a full recompute — which is exactly what the
-   * oracle does (aggregate base+delta from scratch). Base = lineitem
-   * with l_orderkey % 10 ≠ 0, delta = the complement.
-   */
-  def qIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    def aggStates(df: DataFrame): DataFrame =
-      df.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast("decimal(18,4)")).as("s_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,4)")).as("s_price"),
-          count(lit(1)).as("n"))
-    val mv = mvCache.synchronized {
-      val key = (s, dir)
-      val hit = mvCache.get(key)
-      if (hit != null) hit
-      else {
-        val base = t(s, dir, "lineitem").filter(col("l_orderkey") % 10 =!= 0)
-        val m = aggStates(base)
-        m.cache(); m.count() // materialize — the stored MV
-        mvCache.put(key, m)
-        m
-      }
-    }
-    val delta = t(s, dir, "lineitem").filter(col("l_orderkey") % 10 === 0)
-    mv.unionByName(aggStates(delta))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("s_qty")).cast("double").as("sum_qty"),
-        sum(col("s_price")).cast("double").as("sum_price"),
-        sum(col("n")).as("n_rows"),
-        (sum(col("s_price")).cast("double") / sum(col("n"))).as("avg_price"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
-
-  /** Oracle = the full recompute the merge must equal bit-for-bit. */
-  val qIncrementalAggSql: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price,
-      |  COUNT(*) AS n_rows,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price
-      |FROM lineitem
-      |GROUP BY l_returnflag, l_linestatus
-      |ORDER BY l_returnflag, l_linestatus""".stripMargin
-
-  // -------------------------------------------------------------------------
   // Semi-structured (JSON) column handling
   // -------------------------------------------------------------------------
 
@@ -1690,7 +1055,7 @@ object RelationalQueries {
    * (`sequence` + explode); the gap-fill windows run over the GRID
    * (hours), not the event stream — at 100 TB the grid for a year is
    * 8760 rows per series, and a real deployment partitions the windows
-   * by series key exactly as `q_window`'s scale note prescribes.
+   * by series key.
    *
    * Determinism: mean = decimal-exact sum ÷ count; interpolation is
    * plain double arithmetic on (hour, value) pairs — identical in
@@ -1945,8 +1310,8 @@ object RelationalQueries {
 
   /** Cumulative Poisson(1) CDF cut points (k = 0..7, tail capped at 8),
     * emitted with full double precision into BOTH the Column ladder and
-    * the oracle SQL from this one sequence — the zorder
-    * one-loop-two-formulations discipline. */
+    * the oracle SQL from this one sequence, so the two formulations
+    * cannot drift. */
   private val poissonCdf: Seq[Double] = {
     val e = math.exp(-1.0)
     var f = 1.0
@@ -1954,86 +1319,6 @@ object RelationalQueries {
       if (k > 0) f *= k
       e / f
     }.scanLeft(0.0)(_ + _).drop(1)
-  }
-
-  /**
-   * Mean + 95 % confidence interval of o_totalprice via the POISSON
-   * BOOTSTRAP (Chamandy et al., Google 2012) — the distributed form of
-   * the bootstrap: instead of resampling rows (a shuffle per replica),
-   * every row draws a Poisson(1) WEIGHT per replica map-side, so all
-   * `reps` replicas ride one scan and the only exchange is `reps`
-   * partial sums. The uncertainty-quantification step behind every
-   * "is this corpus metric stable" decision.
-   *
-   * Determinism: weights come from hash-seeded uniforms
-   * (`xxhash64(key:rep)`, the DSIR clamp) walked through the exact
-   * Poisson(1) CDF ladder; replica means use decimal-exact weighted
-   * sums; the CI is a SELECTION (percentile) over replica means — the
-   * q_anomaly robust-statistics rule. Swap a real RNG in production;
-   * only the oracle is lost.
-   */
-  def qBootstrap(s: SparkSession, dir: String, reps: Int = 50): DataFrame = {
-    val ords = t(s, dir, "orders").filter(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey").as("k"), col("o_totalprice").as("x"))
-    val u = PipelineQueries.hashUniform(
-      concat(col("k").cast("string"), lit(":"), col("rep").cast("string")))
-    val w = poissonCdf.zipWithIndex.foldRight(lit(8): Column) {
-      case ((cut, k), rest) => when(col("u") < lit(cut), k).otherwise(rest)
-    }
-    val repMeans = ords
-      .withColumn("rep", explode(sequence(lit(0), lit(reps - 1))))
-      .withColumn("u", u)
-      .withColumn("w", w)
-      .groupBy(col("rep"))
-      .agg((sum(col("x").cast("decimal(14,2)") * col("w")).cast("double") /
-        sum(col("w"))).as("m"))
-    val ci = repMeans.agg(
-      expr("percentile(m, 0.025)").as("ci_lo"),
-      expr("percentile(m, 0.975)").as("ci_hi"),
-      count(lit(1)).as("n_reps"))
-    val point = ords.agg(
-      (sum(col("x").cast("decimal(14,2)")).cast("double") / count(lit(1)))
-        .as("mean"))
-    point.crossJoin(ci)
-      .select(round(col("mean"), 4).as("mean"),
-        round(col("ci_lo"), 4).as("ci_lo"),
-        round(col("ci_hi"), 4).as("ci_hi"), col("n_reps"))
-  }
-
-  /** Identical ladder + arithmetic in SQL (same CDF literals). */
-  lazy val qBootstrapSql: String = {
-    val toSigned = DedupQueries.toSignedSql
-    val ladder = poissonCdf.zipWithIndex
-      .map { case (cut, k) => s"WHEN u < $cut THEN $k" }
-      .mkString("CASE ", " ", " ELSE 8 END")
-    s"""WITH ords AS (
-       |  SELECT o_orderkey AS k, o_totalprice AS x FROM orders
-       |  WHERE o_orderkey % 10 = 0),
-       |rep AS (
-       |  SELECT k, x, r.rep, CAST(k AS VARCHAR) || ':' || CAST(r.rep AS VARCHAR) AS tk
-       |  FROM ords, (SELECT unnest(range(0, 50)) AS rep) r),
-       |tok AS (SELECT DISTINCT tk FROM rep),
-       |""".stripMargin + graft.queries.DedupQueries.xxHashTokenCtes + ",\n" +
-      s"""uw AS (
-         |  SELECT rep.rep, rep.x,
-         |    GREATEST(LEAST(
-         |      CAST($toSigned AS DOUBLE) / 18446744073709551616.0 + 0.5,
-         |      0.9999999999999999), 5.421010862427522e-20) AS u
-         |  FROM rep JOIN hashed USING (tk)),
-         |wt AS (SELECT rep, x, $ladder AS w FROM uw),
-         |rm AS (
-         |  SELECT rep,
-         |    CAST(SUM(CAST(x AS DECIMAL(14,2)) * w) AS DOUBLE) / SUM(w) AS m
-         |  FROM wt GROUP BY rep),
-         |ci AS (
-         |  SELECT quantile_cont(m, 0.025) AS ci_lo,
-         |    quantile_cont(m, 0.975) AS ci_hi, count(*) AS n_reps FROM rm),
-         |pt AS (
-         |  SELECT CAST(SUM(CAST(x AS DECIMAL(14,2))) AS DOUBLE) / COUNT(*) AS mean
-         |  FROM ords)
-         |SELECT ROUND(pt.mean, 4) AS mean, ROUND(ci.ci_lo, 4) AS ci_lo,
-         |  ROUND(ci.ci_hi, 4) AS ci_hi, ci.n_reps
-         |FROM pt, ci""".stripMargin
   }
 
   // -------------------------------------------------------------------------
@@ -2204,14 +1489,14 @@ object RelationalQueries {
    * Two-group comparison — click vs view event values — with a
    * Poisson-bootstrap CI on the DIFFERENCE of means: the
    * experimentation-platform readout ("is the lift real?") built from
-   * the same machinery as [[qBootstrap]], but with both groups'
+   * Poisson(1) replica weights ([[poissonCdf]]), with both groups'
    * replica means computed from ONE scan (each row's weight is drawn
    * per replica; the group split rides the same pass) and the CI taken
    * over per-replica differences — which correctly captures that both
    * group estimates wobble. `significant` = the 95 % CI excludes 0.
    *
-   * Same determinism contract as q_bootstrap: hash-seeded weights,
-   * decimal-exact weighted sums, selection-based CI.
+   * Determinism: hash-seeded weights, decimal-exact weighted sums,
+   * selection-based CI.
    */
   def qAbTest(s: SparkSession, dir: String, reps: Int = 50): DataFrame = {
     val ev = Queries.eventsTable(s, dir)
@@ -2612,127 +1897,6 @@ object RelationalQueries {
   }
 
   // -------------------------------------------------------------------------
-  // Market-basket association (support / confidence / lift)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Market-basket lift (r8) — the association-mining primitive
-   * (Agrawal's apriori support/lift, at 2-itemset depth): for part
-   * pairs co-occurring in ≥ `minCo` orders, the co-count and
-   * `lift = P(a,b) / (P(a)·P(b))` — >1 means genuinely bought
-   * together, the signal behind recommendations and bundling.
-   *
-   * Scale shape (r9 — the r8 verdict's one scale-killer, guarded):
-   * the pair expansion is an ORDER-KEYED self-join of the distinct
-   * (order, part) frame, so its fanout is basket² PER ORDER — fine for
-   * retail carts, 10¹² pairs in one task for a pathological 10⁶-item
-   * basket (a crawler cart, a bot session). Two guards, both exact or
-   * loud:
-   * (a) the APRIORI prune — a pair reaching co ≥ minCo needs BOTH
-   *     parts in ≥ minCo baskets, so infrequent parts are semi-joined
-   *     away BEFORE pairing (exact: cannot change the answer);
-   * (b) a LOUD per-basket cap — baskets still over `basketCap` parts
-   *     after (a) are excluded from pairing and COUNTED in the
-   *     `capped_orders` output column (the q_forecast dayCap
-   *     discipline: visible degradation, never a silent 10¹²-pair
-   *     task). Default 500 → ≤ ~125 k pairs per order per task.
-   * N and the overflow count ride a 1-row crossJoined stats frame (no
-   * separate driver action); per-part counts broadcast onto the pair
-   * aggregate; the final cut is TakeOrdered. Lift computes in one
-   * fixed double chain (`co·N/(ca·cb)`), 6-dp round, ties by part ids
-   * — hash oracle replays the prefilter, cap and count exactly.
-   */
-  private val basketPoSlot = new graft.operators.CacheSlot
-  private val basketCntSlot = new graft.operators.CacheSlot
-  private val basketBsSlot = new graft.operators.CacheSlot
-
-  def qBasketLift(s: SparkSession, dir: String, minCo: Long = 2,
-      topN: Int = 50, basketCap: Int = 500): DataFrame = {
-    // the distinct (order, part) frame feeds FOUR consumers (part
-    // counts, N, the prefilter semi-join, the pair expansion) — one
-    // CacheSlot-persisted copy instead of four lineitem scans+distincts
-    val po = basketPoSlot.cache(t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct())
-    // part counts feed THREE consumers (the apriori prefilter and the
-    // ca/cb broadcasts) — cached, the r13 plan audit showed the groupBy
-    // re-running once per consumer (alias-differing broadcast subtrees
-    // defeat ReuseExchange)
-    val partCnt = basketCntSlot.cache(
-      po.groupBy(col("p")).agg(count(lit(1)).as("c")))
-    val freq = partCnt.filter(col("c") >= minCo).select(col("p"))
-    val poF = po.join(broadcast(freq), Seq("p"), "left_semi")
-    // basket sizes feed TWO consumers (the overflow count and the cap
-    // semi-join) — cached for the same reason
-    val bs = basketBsSlot.cache(
-      poF.groupBy(col("o")).agg(count(lit(1)).as("bn")))
-    val stats = po.agg(countDistinct(col("o")).as("n_orders"))
-      .crossJoin(bs.agg(coalesce(sum(when(col("bn") > basketCap, 1L)
-        .otherwise(0L)), lit(0L)).cast("long").as("capped_orders")))
-    val poK = poF.join(bs.filter(col("bn") <= basketCap).select(col("o")),
-      Seq("o"), "left_semi")
-    // pair expansion IN-ROW over the per-order sorted part array (the
-    // text_cooccur pattern) instead of an order-keyed self-join: the
-    // r13 plan audit showed the self-join recomputing the whole poK
-    // subtree per side and exchanging it twice; one groupBy(o) builds
-    // each basket once, and the cap guard above bounds the aggregation
-    // buffer (≤ basketCap parts) and the in-row fanout (≤ basketCap²/2
-    // pairs) exactly as it bounded the join fanout. Same pairs, same
-    // counts: sort_array + (i < j) expansion enumerates exactly the
-    // a.p < b.p pairs of the join formulation.
-    val pairs = poK.groupBy(col("o"))
-      .agg(sort_array(collect_list(col("p"))).as("ps"))
-      .select(explode(expr(
-        """flatten(transform(ps, (a, i) ->
-          |  transform(slice(ps, i + 2, size(ps)), b -> struct(a, b))))"""
-          .stripMargin)).as("pr"))
-      .groupBy(col("pr.a").as("part_a"), col("pr.b").as("part_b"))
-      .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= minCo)
-    pairs
-      .join(broadcast(partCnt.select(col("p").as("part_a"), col("c").as("ca"))),
-        "part_a")
-      .join(broadcast(partCnt.select(col("p").as("part_b"), col("c").as("cb"))),
-        "part_b")
-      .crossJoin(broadcast(stats))
-      .select(col("part_a"), col("part_b"), col("co"),
-        round(col("co").cast("double") * col("n_orders") /
-          (col("ca") * col("cb")), 6).as("lift"),
-        col("capped_orders"))
-      .orderBy(col("lift").desc, col("part_a"), col("part_b"))
-      .limit(topN)
-  }
-
-  /** Same apriori prune, same cap, same overflow count. */
-  def qBasketLiftSql(minCo: Long = 2, topN: Int = 50,
-      basketCap: Int = 500): String =
-    s"""WITH po AS (
-       |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       |n AS (SELECT count(DISTINCT o) AS n_orders FROM po),
-       |pc AS (SELECT p, count(*) AS c FROM po GROUP BY p),
-       |freq AS (SELECT p FROM pc WHERE c >= $minCo),
-       |pof AS (SELECT po.o, po.p FROM po JOIN freq USING (p)),
-       |bs AS (SELECT o, count(*) AS bn FROM pof GROUP BY o),
-       |capc AS (SELECT CAST(COALESCE(SUM(CASE WHEN bn > $basketCap
-       |    THEN 1 ELSE 0 END), 0) AS BIGINT) AS capped_orders FROM bs),
-       |pok AS (SELECT pof.o, pof.p FROM pof JOIN bs USING (o)
-       |  WHERE bn <= $basketCap),
-       |pr AS (
-       |  SELECT a.p AS part_a, b.p AS part_b, count(*) AS co
-       |  FROM pok a JOIN pok b ON a.o = b.o AND a.p < b.p
-       |  GROUP BY 1, 2
-       |  HAVING count(*) >= $minCo)
-       |SELECT part_a, part_b, co,
-       |  ROUND(CAST(co AS DOUBLE) * n_orders / (ca.c * cb.c), 6) AS lift,
-       |  capped_orders
-       |FROM pr
-       |CROSS JOIN n
-       |CROSS JOIN capc
-       |JOIN pc ca ON ca.p = pr.part_a
-       |JOIN pc cb ON cb.p = pr.part_b
-       |ORDER BY lift DESC, part_a, part_b
-       |LIMIT $topN""".stripMargin
-
-  // -------------------------------------------------------------------------
   // Rolling per-user features (training-data export)
   // -------------------------------------------------------------------------
 
@@ -2778,253 +1942,6 @@ object RelationalQueries {
       |  d - lag(d, 1) OVER (PARTITION BY user_id ORDER BY d) AS gap_days
       |FROM daily
       |ORDER BY user_id, day""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Feature scaling (training-data export)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Feature standardization (r8) — the last transform before numeric
-   * columns leave the warehouse as training features: z-score
-   * (quantity, price) and min-max (discount) scaling, with the fitted
-   * parameters computed in ONE partial-aggregated pass and broadcast
-   * onto a map-side rescore (the scaler "fit + transform" split every
-   * ML pipeline API has, in its distributed shape — nothing re-scans,
-   * nothing shuffles the row grain).
-   *
-   * Determinism: moments come from DECIMAL sums (order-independent);
-   * the per-row math is one fixed double-op chain
-   * `(v − μ)/σ` with σ = sqrt((Σx² − Σx·μ)/n) replayed
-   * operation-for-operation in the oracle; 6-dp rounds.
-   */
-  def qFeatureScale(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val stats = li.agg(
-      count(lit(1)).as("n"),
-      sum(col("l_quantity").cast("decimal(18,4)")).as("sq"),
-      sum((col("l_quantity") * col("l_quantity")).cast("decimal(28,8)")).as("sq2"),
-      sum(col("l_extendedprice").cast("decimal(18,4)")).as("sp"),
-      sum((col("l_extendedprice") * col("l_extendedprice")).cast("decimal(28,8)"))
-        .as("sp2"),
-      min(col("l_discount")).as("dlo"), max(col("l_discount")).as("dhi"))
-    def z(v: Column, sx: Column, sx2: Column) = {
-      val mu = sx.cast("double") / col("n")
-      val sd = sqrt((sx2.cast("double") - sx.cast("double") * mu) / col("n"))
-      round((v - mu) / sd, 6)
-    }
-    li.crossJoin(broadcast(stats))
-      .select(col("l_orderkey"), col("l_linenumber"),
-        z(col("l_quantity"), col("sq"), col("sq2")).as("z_qty"),
-        z(col("l_extendedprice"), col("sp"), col("sp2")).as("z_price"),
-        round((col("l_discount") - col("dlo")) /
-          (col("dhi") - col("dlo")), 6).as("mm_discount"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  val qFeatureScaleSql: String =
-    """WITH st AS (
-      |  SELECT count(*) AS n,
-      |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sq,
-      |    SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS sq2,
-      |    SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS sp,
-      |    SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,8))) AS sp2,
-      |    min(l_discount) AS dlo, max(l_discount) AS dhi
-      |  FROM lineitem)
-      |SELECT l_orderkey, l_linenumber,
-      |  ROUND((l_quantity - CAST(sq AS DOUBLE) / n)
-      |    / sqrt((CAST(sq2 AS DOUBLE) - CAST(sq AS DOUBLE)
-      |            * (CAST(sq AS DOUBLE) / n)) / n), 6) AS z_qty,
-      |  ROUND((l_extendedprice - CAST(sp AS DOUBLE) / n)
-      |    / sqrt((CAST(sp2 AS DOUBLE) - CAST(sp AS DOUBLE)
-      |            * (CAST(sp AS DOUBLE) / n)) / n), 6) AS z_price,
-      |  ROUND((l_discount - dlo) / (dhi - dlo), 6) AS mm_discount
-      |FROM lineitem, st
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Referential-integrity (foreign-key) audit
-  // -------------------------------------------------------------------------
-
-  /**
-   * Foreign-key integrity audit (r8) — the join-quality complement of
-   * [[qSkewAudit]] (that measures key DISTRIBUTION; this measures key
-   * VALIDITY): for each declared FK edge, the fact row count, distinct
-   * fact keys, orphan rows (fact keys absent from the dimension — the
-   * rows an inner join silently drops), and the orphan rate. The
-   * first check after any ingest/backfill, and the difference between
-   * "the join ran" and "the join was right".
-   *
-   * Scale: each audit is one key-projected anti-join — only 8 B key
-   * columns move (ReadSchema-pruned), distinct + counts
-   * partial-aggregate map-side, output is one row per FK edge. Rates
-   * round at 6 dp on exact long inputs.
-   */
-  def qFkAudit(s: SparkSession, dir: String): DataFrame = {
-    def audit(fact: DataFrame, key: String, dim: DataFrame, dimKey: String,
-        name: String): DataFrame = {
-      val orphans = fact.join(dim.select(col(dimKey).as(key)).distinct(),
-        Seq(key), "left_anti")
-      fact.agg(count(lit(1)).as("fact_rows"),
-          countDistinct(col(key)).as("distinct_keys"))
-        .crossJoin(orphans.agg(count(lit(1)).as("orphan_rows")))
-        .select(lit(name).as("fk"), col("fact_rows"), col("distinct_keys"),
-          col("orphan_rows"),
-          round(col("orphan_rows").cast("double") / col("fact_rows"), 6)
-            .as("orphan_rate"))
-    }
-    val li = t(s, dir, "lineitem")
-    val ord = t(s, dir, "orders")
-    audit(li.select(col("l_orderkey")), "l_orderkey",
-        t(s, dir, "orders").select(col("o_orderkey")), "o_orderkey",
-        "lineitem.l_orderkey->orders")
-      .unionByName(audit(ord.select(col("o_custkey")), "o_custkey",
-        t(s, dir, "customer").select(col("c_custkey")), "c_custkey",
-        "orders.o_custkey->customer"))
-      .unionByName(audit(li.select(col("l_suppkey")), "l_suppkey",
-        t(s, dir, "supplier").select(col("s_suppkey")), "s_suppkey",
-        "lineitem.l_suppkey->supplier"))
-      .orderBy(col("fk"))
-  }
-
-  val qFkAuditSql: String =
-    """WITH raw AS (
-      |  SELECT 'lineitem.l_orderkey->orders' AS fk,
-      |    (SELECT count(*) FROM lineitem) AS fact_rows,
-      |    (SELECT count(DISTINCT l_orderkey) FROM lineitem) AS distinct_keys,
-      |    (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-      |      (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
-      |      AS orphan_rows
-      |  UNION ALL
-      |  SELECT 'orders.o_custkey->customer',
-      |    (SELECT count(*) FROM orders),
-      |    (SELECT count(DISTINCT o_custkey) FROM orders),
-      |    (SELECT count(*) FROM orders o WHERE NOT EXISTS
-      |      (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-      |  UNION ALL
-      |  SELECT 'lineitem.l_suppkey->supplier',
-      |    (SELECT count(*) FROM lineitem),
-      |    (SELECT count(DISTINCT l_suppkey) FROM lineitem),
-      |    (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-      |      (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey)))
-      |SELECT fk, fact_rows, distinct_keys, orphan_rows,
-      |  ROUND(CAST(orphan_rows AS DOUBLE) / fact_rows, 6) AS orphan_rate
-      |FROM raw
-      |ORDER BY fk""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Graph analytics: PageRank over an aggregated entity graph
-  // -------------------------------------------------------------------------
-
-  /**
-   * PageRank over the nation-grain trade graph — the canonical
-   * iterative graph computation, in the shape a 100 TB pipeline
-   * actually runs it: ONE distributed pass collapses the event-grain
-   * corpus to an aggregated entity graph (customer-nation →
-   * supplier-nation edges weighted by line-item count — the heavy
-   * fact⋈fact join is key-partitioned, dims broadcast, and the output
-   * is ≤ |nations|² rows), then the damped power iteration runs on the
-   * driver over that tiny weighted adjacency (the emb_kmeans
-   * discipline: driver math on bounded aggregated state, plan-literal
-   * back into SQL). 10 iterations, d = 0.85.
-   *
-   * Exactness: ranks are MICRO-UNIT LONGS (start 10⁶ per node);
-   * contribution u→v is `(r(u)·w(u,v)) div W(u)` and the update is
-   * `150000 + (850·Σcontrib) div 1000` — every op integer, positive,
-   * truncation = floor, so DuckDB replays the whole iteration chain
-   * bit-for-bit (generated per-iteration CTEs). Dangling mass (a node
-   * with no out-edges) is dropped, as in the sparse-power-iteration
-   * formulation; ranks are reported in units (r/10⁶).
-   *
-   * Scale: entity graphs (nations, domains, languages, sources) are
-   * bounded by construction and iterate on the driver; a graph past
-   * the 100 k-edge cap switches to [[graft.operators.PageRank]] — the
-   * SAME integer update as chained node-grain joins (one exchange per
-   * iteration), spec-proved bit-identical to the driver path.
-   */
-  def qPagerank(s: SparkSession, dir: String, iters: Int = 10,
-      driverEdgeCap: Int = 100000): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-    val ord = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val supp = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-    val edgeDf = li
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").cast("int").as("src"),
-        col("s_nationkey").cast("int").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    // bounded collect probe: fetch cap+1 rows — a giant graph is
-    // detected without materializing it on the driver
-    val headEdges = edgeDf.limit(driverEdgeCap + 1)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    import s.implicits._
-    val driverRegime = headEdges.length <= driverEdgeCap
-    val ranks =
-      if (driverRegime) {
-        val edges = headEdges
-        val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-        val outW = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._3).sum }
-        var rank: Map[Int, Long] = nodes.map(_ -> 1000000L).toMap
-        for (_ <- 0 until iters) {
-          val contrib = new scala.collection.mutable.HashMap[Int, Long]
-          edges.foreach { case (u, v, w) =>
-            contrib(v) = contrib.getOrElse(v, 0L) + (rank(u) * w) / outW(u)
-          }
-          rank = nodes.map(n =>
-            n -> (150000L + (850L * contrib.getOrElse(n, 0L)) / 1000L)).toMap
-        }
-        nodes.map(n => (n, rank(n))).toSeq.toDF("n_nationkey", "r")
-      } else {
-        graft.operators.PageRank.iterate(edgeDf, iters)
-          .select(col("n").as("n_nationkey"), col("r"))
-      }
-    // the dim side broadcasts in the driver regime (ranks are tiny);
-    // a huge distributed rank frame joins key-partitioned instead
-    val rankSide = if (driverRegime) broadcast(ranks) else ranks
-    t(s, dir, "nation").select(col("n_nationkey").cast("int").as("n_nationkey"),
-        col("n_name"))
-      .join(rankSide, Seq("n_nationkey"))
-      .select(col("n_nationkey"), col("n_name"),
-        (col("r").cast("double") / 1e6).as("pagerank"))
-      .orderBy(col("pagerank").desc, col("n_nationkey"))
-  }
-
-  /** The aggregation AND all 10 integer iterations replayed as chained
-    * CTEs — `//` (floor) matches Scala `/` on positive longs. */
-  lazy val qPagerankSql: String = {
-    val base =
-      """WITH edges AS (
-        |  SELECT CAST(c.c_nationkey AS INT) AS src,
-        |    CAST(su.s_nationkey AS INT) AS dst, count(*) AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN supplier su ON l.l_suppkey = su.s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS (
-        |  SELECT DISTINCT n FROM (
-        |    SELECT src AS n FROM edges UNION SELECT dst AS n FROM edges)),
-        |outw AS (SELECT src, SUM(w) AS tw FROM edges GROUP BY src),
-        |it0 AS (SELECT n, CAST(1000000 AS BIGINT) AS r FROM nodes)""".stripMargin
-    val its = (1 to 10).map { k =>
-      s"""it$k AS (
-         |  SELECT nodes.n,
-         |    150000 + (850 * COALESCE(s.c, 0)) // 1000 AS r
-         |  FROM nodes LEFT JOIN (
-         |    SELECT e.dst AS n, SUM((i.r * e.w) // o.tw) AS c
-         |    FROM edges e
-         |    JOIN it${k - 1} i ON i.n = e.src
-         |    JOIN outw o ON o.src = e.src
-         |    GROUP BY e.dst) s USING (n))""".stripMargin
-    }.mkString(",\n")
-    s"""$base,
-       |$its
-       |SELECT CAST(n.n_nationkey AS INT) AS n_nationkey, n.n_name,
-       |  CAST(r AS DOUBLE) / 1e6 AS pagerank
-       |FROM it10 JOIN nation n ON n.n_nationkey = it10.n
-       |ORDER BY pagerank DESC, n_nationkey""".stripMargin
-  }
 
   // -------------------------------------------------------------------------
   // Marketing attribution (first/last touch)
@@ -3158,7 +2075,7 @@ object RelationalQueries {
 
   /**
    * Join-key skew audit — the measurement behind every salting/AQE
-   * decision ([[qSaltedJoin]] fixes skew; this FINDS it before it
+   * decision (salting fixes skew; this FINDS it before it
    * burns a job): per candidate key column, the per-key count
    * distribution summarized as total rows, distinct keys, max/avg
    * ratio (the straggler factor) and the heaviest key's share. One
@@ -3877,7 +2794,7 @@ object RelationalQueries {
       .orderBy(col("delay_day"))
 
   /** Same conditional mins; DuckDB `//` and Spark `div` both truncate
-    * toward zero (the q_forecast precedent), so negative lags bucket
+    * toward zero, so negative lags bucket
     * identically. */
   val qConversionLagSql: String =
     """WITH u AS (
@@ -3939,92 +2856,6 @@ object RelationalQueries {
       |SELECT (runmax - us) // 60000000 AS late_min, count(*) AS n_events
       |FROM r GROUP BY late_min
       |ORDER BY late_min""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Revenue bridge (period-over-period decomposition)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Revenue bridge — the classic "WHY did revenue move" decomposition
-   * every finance/analytics review runs: per customer segment, the
-   * change between the base (up to the data-derived median order
-   * day, [[medianEpochDay]]) and current period split
-   * into a VOLUME effect ((n₁−n₀)·avg₀ — more/fewer orders at old
-   * value) and a PRICE/MIX effect (n₁·(avg₁−avg₀) — the same orders
-   * worth more/less), which sum to the delta by construction. Exact
-   * cent-decimal sums feed one fixed double chain per segment; both
-   * engines replay it op for op → hash gate.
-   *
-   * Scale: orders⋈customer is the canonical scaling fact ⋈ scaling
-   * dim key join (custkey-partitioned, no broadcast hint on a scaling
-   * table — the q5_join discipline), then one segment-grain partial
-   * agg. Nothing row-grain after.
-   */
-  def qRevenueBridge(s: SparkSession, dir: String): DataFrame = {
-    val md = medianEpochDay(t(s, dir, "orders"), "o_orderdate",
-      splitKey(s, dir, "orders"))
-    val ord = t(s, dir, "orders")
-    val o = ord.select(col("o_custkey"),
-      round(col("o_totalprice") * 100).cast("long").as("c"),
-      (orderDay(ord) <= md).as("base"))
-    val c = t(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    o.join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"))
-      .agg(
-        sum(when(col("base"), 1L).otherwise(0L)).as("n0"),
-        sum(when(col("base"), 0L).otherwise(1L)).as("n1"),
-        sum(when(col("base"), col("c")).otherwise(0L).cast("decimal(18,0)"))
-          .as("r0"),
-        sum(when(col("base"), 0L).otherwise(col("c")).cast("decimal(18,0)"))
-          .as("r1"))
-      .select(col("segment"), col("n0"), col("n1"),
-        (floor((col("r1") - col("r0")).cast("double") / 100.0 * 1e2 + 0.5)
-          / 1e2).as("delta"),
-        when(col("n0") > 0,
-          floor((col("n1") - col("n0")).cast("double") *
-            (col("r0").cast("double") / col("n0")) / 100.0 * 1e2 + 0.5) / 1e2)
-          .as("volume_effect"),
-        when(col("n0") > 0 && col("n1") > 0,
-          floor(col("n1").cast("double") *
-            (col("r1").cast("double") / col("n1") -
-              col("r0").cast("double") / col("n0")) / 100.0 * 1e2 + 0.5) / 1e2)
-          .as("price_mix_effect"))
-      .orderBy(col("segment"))
-  }
-
-  /** Same period split, same cent sums, same effect chains. */
-  lazy val qRevenueBridgeSql: String =
-    s"""WITH ${medianDaySqlCtes("p", "orders", "o_orderdate")},
-      |o AS (
-      |  SELECT o_custkey, CAST(round(o_totalprice * 100) AS BIGINT) AS c,
-      |    epoch_us(o_orderdate) // 86400000000 <= (SELECT md FROM pmd) AS base
-      |  FROM orders),
-      |j AS (
-      |  SELECT c_mktsegment AS segment, c, base
-      |  FROM o JOIN customer ON o_custkey = c_custkey),
-      |g AS (
-      |  SELECT segment,
-      |    CAST(SUM(CASE WHEN base THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-      |    CAST(SUM(CASE WHEN base THEN 0 ELSE 1 END) AS BIGINT) AS n1,
-      |    SUM(CASE WHEN base THEN c ELSE 0 END)::HUGEINT AS r0,
-      |    SUM(CASE WHEN base THEN 0 ELSE c END)::HUGEINT AS r1
-      |  FROM j GROUP BY segment)
-      |SELECT segment, n0, n1,
-      |  FLOOR(CAST(r1 - r0 AS DOUBLE) / 100.0 * 1e2 + 0.5) / 1e2 AS delta,
-      |  CASE WHEN n0 > 0 THEN
-      |    FLOOR(CAST(n1 - n0 AS DOUBLE) * (CAST(r0 AS DOUBLE) / n0)
-      |          / 100.0 * 1e2 + 0.5) / 1e2 END AS volume_effect,
-      |  CASE WHEN n0 > 0 AND n1 > 0 THEN
-      |    FLOOR(CAST(n1 AS DOUBLE) *
-      |          (CAST(r1 AS DOUBLE) / n1 - CAST(r0 AS DOUBLE) / n0)
-      |          / 100.0 * 1e2 + 0.5) / 1e2 END AS price_mix_effect
-      |FROM g
-      |ORDER BY segment""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Experimentation guardrails: SRM + ratio-metric CI
-  // -------------------------------------------------------------------------
 
   // -------------------------------------------------------------------------
   // Data-derived period split (r9 — the r8 verdict's #8)
@@ -4143,7 +2974,7 @@ object RelationalQueries {
    *
    * Scale: user-keyed partial agg → 1-row moment aggregate; nothing
    * row-grain after the first pass. Moment sums are decimal(38,0)
-   * exact (the q_corr headroom bound).
+   * exact.
    */
   def qRatioCi(s: SparkSession, dir: String): DataFrame = {
     val perUser = Queries.eventsTable(s, dir)
@@ -4857,108 +3688,6 @@ object RelationalQueries {
       |ORDER BY decile""".stripMargin
 
   // -------------------------------------------------------------------------
-  // Two-sample Kolmogorov–Smirnov (distribution drift, exact)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Two-sample Kolmogorov–Smirnov test (r9) — the nonparametric
-   * sibling of [[qPsi]]: `D = max_v |F_base(v) − F_cur(v)|` between
-   * the base and current period order totals (the shared
-   * [[medianEpochDay]] split), with the 5 % critical value
-   * `1.358·√((n_a+n_b)/(n_a·n_b))` (Smirnov's asymptotic table) and
-   * the one-term asymptotic p `2·exp(−2D²·n_a·n_b/(n_a+n_b))`. PSI
-   * sees binned mass moves; KS sees ANY CDF separation at full
-   * resolution — the pair is the standard drift dashboard.
-   *
-   * Exactness: both running CDFs come from ONE range-partitioned
-   * [[graft.operators.PrefixSum]] pass via PACKED decimal counts —
-   * each value's `(n_base, n_cur)` rides one decimal(38,0) as
-   * `n_base·10¹⁹ + n_cur`, the prefix sum splits back with exact
-   * `div`/`mod` (both cums < 10¹⁹ for any corpus under 10¹⁹ rows),
-   * and the max runs over the exact integer cross-product
-   * `|cumA·n_b − cumB·n_a|` — one double division at the very end.
-   * Window-free, skew-safe, value-grain only.
-   */
-  def qKsTest(s: SparkSession, dir: String): DataFrame = {
-    val md = medianEpochDay(t(s, dir, "orders"), "o_orderdate",
-      splitKey(s, dir, "orders"))
-    val pack = lit(new java.math.BigDecimal("10000000000000000000")) // 10^19
-      .cast("decimal(38,0)")
-    val ord = t(s, dir, "orders")
-    val h = ord
-      .select(round(col("o_totalprice") * 100).cast("long").as("v"),
-        (orderDay(ord) <= md).as("base"))
-      .groupBy(col("v"))
-      .agg((sum(when(col("base"), 1L).otherwise(0L)).cast("decimal(38,0)") *
-        pack + sum(when(col("base"), 0L).otherwise(1L)).cast("decimal(38,0)"))
-        .cast("decimal(38,0)").as("packed"))
-      .withColumn("k", lit(1))
-    val cum = graft.operators.PrefixSum
-      .runningSum(h, Seq("k"), Seq("v"), "packed", "cum")
-      .select(floor(col("cum") / pack).cast("decimal(19,0)").as("cum_a"),
-        (col("cum") % pack).cast("decimal(19,0)").as("cum_b"))
-    // totals = the last cum row = per-side maxima (cums are monotone)
-    val tots = cum.agg(max(col("cum_a")).cast("long").as("n_a"),
-      max(col("cum_b")).cast("long").as("n_b"))
-    val dNum = cum.crossJoin(broadcast(tots))
-      .agg(max(abs(col("cum_a") * col("n_b").cast("decimal(19,0)") -
-        col("cum_b") * col("n_a").cast("decimal(19,0)"))).as("d_num"),
-        first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"))
-    val na = col("n_a").cast("double")
-    val nb = col("n_b").cast("double")
-    val d = col("d_num").cast("double") / (na * nb)
-    dNum.select(col("n_a"), col("n_b"),
-      when(col("n_a") > 0 && col("n_b") > 0,
-        floor(d * 1e6 + 0.5) / 1e6).as("d_stat"),
-      when(col("n_a") > 0 && col("n_b") > 0,
-        floor(lit(1.358) * sqrt((na + nb) / (na * nb)) * 1e6 + 0.5) / 1e6)
-        .as("crit_05"),
-      when(col("n_a") > 0 && col("n_b") > 0,
-        d > lit(1.358) * sqrt((na + nb) / (na * nb))).as("reject_05"))
-  }
-
-  /** Oracle: direct per-side window CDFs (DuckDB's window is the
-    * oracle's privilege), the same exact integer cross-product max,
-    * the same final double chain. The packed-decimal prefix trick is
-    * a Spark-side execution detail — both reductions are exact, so
-    * they agree bit-for-bit. */
-  lazy val qKsTestSql: String =
-    s"""WITH ${medianDaySqlCtes("p", "orders", "o_orderdate")},
-      |r AS (
-      |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-      |    epoch_us(o_orderdate) // 86400000000 <= (SELECT md FROM pmd) AS base
-      |  FROM orders),
-      |h AS (
-      |  SELECT v,
-      |    SUM(CASE WHEN base THEN 1 ELSE 0 END) AS na,
-      |    SUM(CASE WHEN base THEN 0 ELSE 1 END) AS nb
-      |  FROM r GROUP BY v),
-      |c AS (
-      |  SELECT SUM(na) OVER (ORDER BY v) AS cum_a,
-      |    SUM(nb) OVER (ORDER BY v) AS cum_b
-      |  FROM h),
-      |tot AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-      |               CAST(SUM(nb) AS BIGINT) AS n_b FROM h),
-      |d AS (
-      |  SELECT MAX(ABS(CAST(cum_a AS HUGEINT) * n_b
-      |                 - CAST(cum_b AS HUGEINT) * n_a)) AS d_num
-      |  FROM c, tot)
-      |SELECT n_a, n_b,
-      |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-      |    FLOOR(CAST(d_num AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
-      |          * 1e6 + 0.5) / 1e6 END AS d_stat,
-      |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-      |    FLOOR(1.358 * sqrt((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))
-      |          / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))) * 1e6 + 0.5) / 1e6
-      |  END AS crit_05,
-      |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-      |    CAST(d_num AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
-      |      > 1.358 * sqrt((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))
-      |          / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))
-      |  END AS reject_05
-      |FROM d, tot""".stripMargin
-
-  // -------------------------------------------------------------------------
   // Winsorized / trimmed robust statistics
   // -------------------------------------------------------------------------
 
@@ -5057,45 +3786,6 @@ object RelationalQueries {
       |  END AS trimmed_mean,
       |  tn AS n_kept
       |FROM agg""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Herfindahl–Hirschman concentration index
-  // -------------------------------------------------------------------------
-
-  /**
-   * HHI concentration (r9) — the market-concentration number behind
-   * "is this corpus/segment dominated by a few customers": per market
-   * segment, `HHI = Σ_c share_c²` over each customer's revenue share
-   * of the segment, on the 0–10,000 antitrust scale, plus the top-1
-   * share. Exact cent-decimal revenue sums; each segment's Σ rev_c²
-   * rides decimal(38,0) (two 19-digit operands), one double chain at
-   * the end — hash gate.
-   *
-   * Scale: orders⋈customer key join (the q5_join discipline), one
-   * customer-grain partial agg, one segment-grain partial agg.
-   */
-  def qHhi(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      round(col("o_totalprice") * 100).cast("long").as("c"))
-    val cust = t(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val perCust = o.join(cust, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"), col("c_custkey"))
-      .agg(sum(col("c").cast("decimal(18,0)")).as("rev"))
-    perCust
-      .groupBy(col("segment"))
-      .agg(count(lit(1)).as("n_customers"),
-        sum(col("rev")).as("tot"),
-        sum(col("rev").cast("decimal(38,0)") * col("rev")).as("ss"),
-        max(col("rev")).as("top"))
-      .select(col("segment"), col("n_customers"),
-        when(col("tot") > 0, floor(col("ss").cast("double") /
-          (col("tot").cast("double") * col("tot").cast("double"))
-          * 10000 * 1e4 + 0.5) / 1e4).as("hhi"),
-        when(col("tot") > 0, floor(col("top").cast("double") /
-          col("tot").cast("double") * 1e6 + 0.5) / 1e6).as("top_share"))
-      .orderBy(col("segment"))
-  }
 
   // -------------------------------------------------------------------------
   // Engagement: DAU/MAU stickiness + power-user concentration
@@ -5237,112 +3927,6 @@ object RelationalQueries {
       |ORDER BY top_pct""".stripMargin
 
   // -------------------------------------------------------------------------
-  // Autocorrelation of the daily revenue series
-  // -------------------------------------------------------------------------
-
-  /**
-   * Lag-k autocorrelation (r9) — the time-series health number next
-   * to [[qSeasonality]]'s day-of-week means: the sample ACF
-   * `r_k = Σ(x_t−x̄)(x_{t+k}−x̄) / Σ(x_t−x̄)²` of DAILY revenue on the
-   * DENSE calendar (missing days count as zero revenue — absence is
-   * signal, and padding is what makes lags align), at lags 1 and 7
-   * (yesterday-carryover and weekly cycle). High r₇ with low r₁ is
-   * the weekly-seasonality fingerprint; r₁ ≈ 1 flags a
-   * slow-moving/duplicated feed.
-   *
-   * Exactness: day-grain cent sums are exact decimals; the lag
-   * pairing is a day-grain self-join (calendar-bounded frame); all
-   * moments (Σx, Σx², Σx_t·x_{t+k}, head/tail sums) stay exact until
-   * one shared double chain both engines replay. Dense-calendar
-   * expansion via `sequence()` off a 1-row min/max frame.
-   */
-  def qAutocorr(s: SparkSession, dir: String,
-      lags: Seq[Int] = Seq(1, 7)): DataFrame = {
-    val ord = t(s, dir, "orders")
-    val byDay = ord
-      .select(orderDay(ord).as("d"),
-        round(col("o_totalprice") * 100).cast("long").as("c"))
-      .groupBy(col("d"))
-      .agg(sum(col("c").cast("decimal(18,0)")).as("rev"))
-    val mm = byDay.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val dense = mm.select(explode(sequence(col("lo"), col("hi"))).as("d"))
-      .join(byDay, Seq("d"), "left")
-      .select(col("d"),
-        coalesce(col("rev"), lit(0).cast("decimal(18,0)")).as("x"))
-    val tot = dense.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-      sum(col("x") * col("x")).as("sxx"))
-    val perLag = lags.map { k =>
-      val pairs = dense
-        .join(dense.select((col("d") - k).as("d"), col("x").as("y")), "d")
-      pairs.agg(
-          coalesce(sum(col("x").cast("decimal(38,0)") * col("y")),
-            lit(0).cast("decimal(38,0)")).as("p"),
-          coalesce(sum(col("x")), lit(0).cast("decimal(18,0)")).as("s1"),
-          coalesce(sum(col("y")), lit(0).cast("decimal(18,0)")).as("s2"),
-          count(lit(1)).as("npairs"))
-        .select(lit(k).as("lag"), col("p"), col("s1"), col("s2"),
-          col("npairs"))
-    }.reduce(_ unionByName _)
-    val xbar = col("sx").cast("double") / col("n")
-    val num = col("p").cast("double") - xbar * col("s2").cast("double") -
-      xbar * col("s1").cast("double") +
-      col("npairs").cast("double") * xbar * xbar
-    val den = col("sxx").cast("double") -
-      col("n").cast("double") * xbar * xbar
-    perLag.crossJoin(broadcast(tot))
-      .select(col("lag"), col("n").cast("long").as("n_days"),
-        col("npairs").cast("long").as("n_pairs"),
-        when(col("npairs") > 0 && den > 0,
-          floor(num / den * 1e6 + 0.5) / 1e6).as("acf"))
-      .orderBy(col("lag"))
-  }
-
-  /** Same dense calendar, same exact moments, same double chain
-    * (left-assoc multiplication order mirrored operator for
-    * operator). */
-  val qAutocorrSql: String =
-    """WITH byday AS (
-      |  SELECT epoch_us(o_orderdate) // 86400000000 AS d,
-      |    SUM(CAST(round(o_totalprice * 100) AS BIGINT))::HUGEINT AS rev
-      |  FROM orders GROUP BY 1),
-      |mm AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM byday),
-      |dense AS (
-      |  SELECT g.d, COALESCE(b.rev, 0) AS x
-      |  FROM (SELECT unnest(generate_series((SELECT lo FROM mm),
-      |                                      (SELECT hi FROM mm))) AS d) g
-      |  LEFT JOIN byday b USING (d)),
-      |tot AS (SELECT count(*) AS n, SUM(x) AS sx, SUM(x * x) AS sxx
-      |        FROM dense),
-      |ks AS (SELECT unnest([1, 7]) AS lag),
-      |g AS (
-      |  SELECT ks.lag,
-      |    COALESCE(SUM(a.x * b.x), 0) AS p,
-      |    COALESCE(SUM(CASE WHEN b.x IS NOT NULL THEN a.x END), 0) AS s1,
-      |    COALESCE(SUM(b.x), 0) AS s2,
-      |    count(b.x) AS npairs
-      |  FROM ks
-      |  LEFT JOIN dense a ON true
-      |  LEFT JOIN dense b ON b.d = a.d + ks.lag
-      |  GROUP BY ks.lag)
-      |SELECT CAST(lag AS INT) AS lag,
-      |  (SELECT CAST(n AS BIGINT) FROM tot) AS n_days,
-      |  CAST(npairs AS BIGINT) AS n_pairs,
-      |  CASE WHEN npairs > 0 AND
-      |    CAST(sxx AS DOUBLE) - CAST(n AS DOUBLE)
-      |      * (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n) > 0
-      |  THEN FLOOR((CAST(p AS DOUBLE)
-      |      - (CAST(sx AS DOUBLE) / n) * CAST(s2 AS DOUBLE)
-      |      - (CAST(sx AS DOUBLE) / n) * CAST(s1 AS DOUBLE)
-      |      + CAST(npairs AS DOUBLE) * (CAST(sx AS DOUBLE) / n)
-      |        * (CAST(sx AS DOUBLE) / n))
-      |    / (CAST(sxx AS DOUBLE) - CAST(n AS DOUBLE)
-      |      * (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n))
-      |    * 1e6 + 0.5) / 1e6
-      |  END AS acf
-      |FROM g, tot
-      |ORDER BY lag""".stripMargin
-
-  // -------------------------------------------------------------------------
   // Kaplan–Meier survival / retention curve
   // -------------------------------------------------------------------------
 
@@ -5361,8 +3945,8 @@ object RelationalQueries {
    *
    * Scale/exactness: the user-grain first/last agg is distributed;
    * the lifetime grain is CALENDAR-bounded (≤ one row per day of
-   * corpus span), so the sequential product runs as the q_forecast /
-   * q_ewma driver recurrence over a bounded collect — and the oracle
+   * corpus span), so the sequential product runs as the q_ewma
+   * driver recurrence over a bounded collect — and the oracle
    * replays the IDENTICAL double chain in a recursive CTE (IEEE
    * mul/div are correctly rounded on both engines, so the recurrence
    * is bit-identical; only libm functions are banned from recurrence
@@ -5435,199 +4019,6 @@ object RelationalQueries {
       |  FLOOR(s * 1e6 + 0.5) / 1e6 AS survival
       |FROM rec ORDER BY t_days""".stripMargin
 
-  /** Same customer-grain cent sums, same square sums, same chains. */
-  val qHhiSql: String =
-    """WITH pc AS (
-      |  SELECT c_mktsegment AS segment, c_custkey,
-      |    SUM(CAST(round(o_totalprice * 100) AS BIGINT))::HUGEINT AS rev
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  GROUP BY 1, 2)
-      |SELECT segment, count(*) AS n_customers,
-      |  CASE WHEN SUM(rev) > 0 THEN
-      |    FLOOR(CAST(SUM(rev * rev) AS DOUBLE)
-      |          / (CAST(SUM(rev) AS DOUBLE) * CAST(SUM(rev) AS DOUBLE))
-      |          * 10000 * 1e4 + 0.5) / 1e4 END AS hhi,
-      |  CASE WHEN SUM(rev) > 0 THEN
-      |    FLOOR(CAST(MAX(rev) AS DOUBLE) / CAST(SUM(rev) AS DOUBLE)
-      |          * 1e6 + 0.5) / 1e6 END AS top_share
-      |FROM pc
-      |GROUP BY segment
-      |ORDER BY segment""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Categorical dependence: chi-squared independence + Cramér's V
-  // -------------------------------------------------------------------------
-
-  /**
-   * Chi-squared test of independence (r10) over the order status ×
-   * priority contingency table — the categorical-drift / feature-
-   * dependence audit (are fill status and priority independent?).
-   *
-   * Determinism discipline (the [[qPsi]] pattern): each cell's term is
-   * (obs·N − r·c)² / (r·c·N) — numerator and denominator EXACT integer
-   * moments (decimal(38,0), so the squares can't overflow at any scale),
-   * ONE IEEE double division per cell, floor-rounded to millionths and
-   * summed in the INTEGER domain — the cross-engine hash cannot drift on
-   * double addition order. The full status × priority grid is a
-   * broadcast cross of two sub-aggregates (zero-observed cells still
-   * carry their expected mass); the only shuffle over the fact table is
-   * the partial-agg'd one-row-per-observed-cell count. Scale: cells =
-   * |status|·|priority| rows regardless of fact rows.
-   */
-  def qChisq(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .select(col("o_orderstatus").as("status"),
-        col("o_orderpriority").as("priority"))
-    val cells = o.groupBy("status", "priority").agg(count(lit(1)).as("obs"))
-    val rs = cells.groupBy("status").agg(sum(col("obs")).as("r"))
-    val cs = cells.groupBy("priority").agg(sum(col("obs")).as("c"))
-    val tot = cells.agg(sum(col("obs")).as("n"),
-      countDistinct(col("status")).as("nr"),
-      countDistinct(col("priority")).as("nc"))
-    val grid = rs.crossJoin(broadcast(cs))
-      .join(cells, Seq("status", "priority"), "left")
-      .select(col("status"), col("priority"), col("r"), col("c"),
-        coalesce(col("obs"), lit(0L)).as("obs"))
-      .crossJoin(broadcast(tot))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val diff = dec(col("obs")) * dec(col("n")) - dec(col("r")) * dec(col("c"))
-    // decimal(38,0)·decimal(38,0) saturates precision 38 — plenty for
-    // (n·max_cell)² at any realistic n; one double division per cell
-    val term = (diff * diff).cast("double") /
-      (dec(col("r")) * dec(col("c")) * dec(col("n"))).cast("double")
-    val terms = grid.select(col("status"), col("priority"), col("obs"),
-      (floor((dec(col("r")) * dec(col("c"))).cast("double") /
-        col("n").cast("double") * 1e4 + 0.5) / 1e4).as("expected"),
-      // clamp before the long cast: a pathological expected≈0 cell must
-      // degrade to a saturated term, not an ANSI overflow crash
-      least(floor(term * 1e6 + 0.5), lit(9.0e14)).cast("long").as("mil"),
-      col("n"), col("nr"), col("nc"))
-    val sums = terms.groupBy().agg(sum(col("mil")).as("milsum"),
-      first(col("n")).as("n"), first(col("nr")).as("nr"),
-      first(col("nc")).as("nc"))
-    terms.crossJoin(broadcast(sums.select(col("milsum"))))
-      .select(col("status"), col("priority"), col("obs"),
-        col("expected"),
-        (col("mil").cast("double") / 1e6).as("term"),
-        (col("milsum").cast("double") / 1e6).as("chi2"),
-        ((col("nr") - 1) * (col("nc") - 1)).as("dof"),
-        when(col("nr") > 1 && col("nc") > 1,
-          floor(sqrt(col("milsum").cast("double") / 1e6 /
-            (col("n").cast("double") *
-              least(col("nr") - 1, col("nc") - 1).cast("double")))
-            * 1e6 + 0.5) / 1e6).as("cramers_v"))
-      .orderBy(col("status"), col("priority"))
-  }
-
-  /** Same exact integer moments (HUGEINT), same single division per
-    * cell, same millionths clamp, same integer-domain total. */
-  val qChisqSql: String =
-    """WITH cells AS (
-      |  SELECT o_orderstatus AS status, o_orderpriority AS priority,
-      |    count(*) AS obs
-      |  FROM orders GROUP BY 1, 2),
-      |rs AS (SELECT status, SUM(obs) AS r FROM cells GROUP BY 1),
-      |cs AS (SELECT priority, SUM(obs) AS c FROM cells GROUP BY 1),
-      |tot AS (SELECT SUM(obs) AS n, count(DISTINCT status) AS nr,
-      |               count(DISTINCT priority) AS nc FROM cells),
-      |grid AS (
-      |  SELECT rs.status, cs.priority, r, c, COALESCE(obs, 0) AS obs,
-      |    n, nr, nc
-      |  FROM rs CROSS JOIN cs
-      |  LEFT JOIN cells ON cells.status = rs.status
-      |                 AND cells.priority = cs.priority
-      |  CROSS JOIN tot),
-      |terms AS (
-      |  SELECT status, priority, obs, r, c, n, nr, nc,
-      |    FLOOR(CAST(r::HUGEINT * c AS DOUBLE) / CAST(n AS DOUBLE)
-      |          * 1e4 + 0.5) / 1e4 AS expected,
-      |    CAST(LEAST(FLOOR(
-      |      CAST((obs::HUGEINT * n - r::HUGEINT * c)
-      |           * (obs::HUGEINT * n - r::HUGEINT * c) AS DOUBLE)
-      |      / CAST(r::HUGEINT * c * n AS DOUBLE) * 1e6 + 0.5),
-      |      9e14) AS BIGINT) AS mil
-      |  FROM grid),
-      |sums AS (SELECT SUM(mil) AS milsum FROM terms)
-      |SELECT status, priority, CAST(obs AS BIGINT) AS obs, expected,
-      |  CAST(mil AS DOUBLE) / 1e6 AS term,
-      |  CAST(milsum AS DOUBLE) / 1e6 AS chi2,
-      |  CAST((nr - 1) * (nc - 1) AS BIGINT) AS dof,
-      |  CASE WHEN nr > 1 AND nc > 1 THEN
-      |    FLOOR(sqrt(CAST(milsum AS DOUBLE) / 1e6 /
-      |               (CAST(n AS DOUBLE) * LEAST(nr - 1, nc - 1)))
-      |          * 1e6 + 0.5) / 1e6 END AS cramers_v
-      |FROM terms CROSS JOIN sums
-      |ORDER BY status, priority""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Cohort LTV curve
-  // -------------------------------------------------------------------------
-
-  /**
-   * Cohort LTV curve (r10): customers cohorted by FIRST-order month;
-   * for each months-since-cohort k, the cohort's cumulative revenue and
-   * cumulative revenue per cohort customer (the LTV curve every
-   * subscription/commerce dashboard draws). Exact cent arithmetic
-   * end-to-end; months are TZ-free calendar fields (year·12+month on
-   * the NTZ order date — no timestamp cast, the [[epochDayExpr]]
-   * lesson). The cumulative sum runs in a window PARTITIONED by cohort
-   * (bounded by the dozens of distinct k values per cohort — passes the
-   * WindowAudit pin); everything upstream is two partial-agg'd
-   * groupBys at (customer) and (cohort, k) grain.
-   */
-  def qCohortLtv(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey").as("cust"),
-      (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1).as("m"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val cohort = o.groupBy("cust").agg(min(col("m")).as("m0"))
-    val rev = o.join(cohort, "cust")
-      .select(col("m0"), (col("m") - col("m0")).as("k"), col("cents"))
-      .groupBy(col("m0"), col("k"))
-      .agg(sum(col("cents").cast("decimal(18,0)")).as("rev"))
-    val sizes = cohort.groupBy("m0").agg(count(lit(1)).as("n_customers"))
-    val w = Window.partitionBy(col("m0")).orderBy(col("k"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rev.withColumn("cum", sum(col("rev")).over(w))
-      .join(broadcast(sizes), "m0")
-      .select(
-        date_format(expr("make_date(m0 div 12, m0 % 12 + 1, 1)"), "yyyy-MM")
-          .as("cohort_month"),
-        col("k").cast("long").as("month_k"),
-        col("n_customers"),
-        col("rev").cast("long").as("rev_cents"),
-        col("cum").cast("long").as("cum_cents"),
-        (floor(col("cum").cast("double") / col("n_customers") * 1e4 + 0.5)
-          / 1e4).as("ltv_cents"))
-      .orderBy(col("cohort_month"), col("month_k"))
-  }
-
-  /** Same month integers, same cent sums, same partitioned running
-    * window, same division chain. */
-  val qCohortLtvSql: String =
-    """WITH o AS (
-      |  SELECT o_custkey AS cust,
-      |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS m,
-      |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-      |  FROM orders),
-      |cohort AS (SELECT cust, MIN(m) AS m0 FROM o GROUP BY 1),
-      |rev AS (
-      |  SELECT m0, m - m0 AS k, SUM(cents)::HUGEINT AS rev
-      |  FROM o JOIN cohort USING (cust) GROUP BY 1, 2),
-      |sizes AS (SELECT m0, count(*) AS n_customers FROM cohort GROUP BY 1)
-      |SELECT strftime(make_date(m0 // 12, m0 % 12 + 1, 1), '%Y-%m')
-      |    AS cohort_month,
-      |  CAST(k AS BIGINT) AS month_k,
-      |  CAST(n_customers AS BIGINT) AS n_customers,
-      |  CAST(rev AS BIGINT) AS rev_cents,
-      |  CAST(SUM(rev) OVER (PARTITION BY m0 ORDER BY k
-      |                      ROWS UNBOUNDED PRECEDING) AS BIGINT)
-      |    AS cum_cents,
-      |  FLOOR(CAST(SUM(rev) OVER (PARTITION BY m0 ORDER BY k
-      |                            ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-      |        / n_customers * 1e4 + 0.5) / 1e4 AS ltv_cents
-      |FROM rev JOIN sizes USING (m0)
-      |ORDER BY cohort_month, month_k""".stripMargin
-
   // -------------------------------------------------------------------------
   // Lagged cross-correlation between two event series
   // -------------------------------------------------------------------------
@@ -5636,10 +4027,10 @@ object RelationalQueries {
    * Lagged cross-correlation (r10): does today's click volume predict
    * purchase volume ℓ days out? Pearson r between the daily click-count
    * series x and the purchase-count series y shifted by lag ℓ ∈ 0..7,
-   * over the DENSE calendar (missing days count 0 — the [[qAutocorr]]
-   * densification, so a sparse weekend can't silently shrink the
-   * overlap). All five moments (Σx, Σy, Σxy, Σx², Σy², n) are EXACT
-   * integers; r's numerator n·Σxy − Σx·Σy and both variance factors are
+   * over the DENSE calendar (missing days count 0, so a sparse
+   * weekend can't silently shrink the overlap). All five moments (Σx,
+   * Σy, Σxy, Σx², Σy², n) are EXACT integers; r's numerator
+   * n·Σxy − Σx·Σy and both variance factors are
    * exact decimals converted to double once, so the one div + sqrt chain
    * is deterministic IEEE. Scale: the daily frame is |days| rows; the
    * lag explode multiplies it by 8 — nothing fact-sized shuffles twice.
@@ -5720,356 +4111,6 @@ object RelationalQueries {
       |ORDER BY lag""".stripMargin
 
   // -------------------------------------------------------------------------
-  // l-diversity release audit (the k-anonymity companion)
-  // -------------------------------------------------------------------------
-
-  /**
-   * l-diversity audit (r10) — [[qKanon]]'s companion: a quasi-identifier
-   * group that is k-anonymous can still leak when every member shares
-   * the same sensitive value. Per (segment, nation) QI group: k (distinct
-   * customers), l (distinct sensitive order priorities seen in the
-   * group), and the release verdict k ≥ K ∧ l ≥ L. Two exact distinct
-   * counts per group — one partial-agg'd shuffle at QI grain.
-   */
-  def qLDiversity(s: SparkSession, dir: String,
-      kMin: Int = 5, lMin: Int = 3): DataFrame = {
-    val cust = t(s, dir, "customer").select(col("c_custkey"),
-      col("c_mktsegment").as("segment"), col("c_nationkey").as("nation"))
-    val o = t(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderpriority").as("sensitive"))
-    o.join(cust, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("segment"), col("nation"))
-      .agg(countDistinct(col("c_custkey")).as("k_size"),
-        countDistinct(col("sensitive")).as("l_div"),
-        count(lit(1)).as("n_orders"))
-      .select(col("segment"), col("nation").cast("long").as("nation"),
-        col("k_size"), col("l_div"), col("n_orders"),
-        (col("k_size") >= kMin && col("l_div") >= lMin).as("releasable"))
-      .orderBy(col("segment"), col("nation"))
-  }
-
-  /** Same QI grain, same distinct counts, same verdict. */
-  val qLDiversitySql: String =
-    """SELECT c_mktsegment AS segment, CAST(c_nationkey AS BIGINT) AS nation,
-      |  count(DISTINCT c_custkey) AS k_size,
-      |  count(DISTINCT o_orderpriority) AS l_div,
-      |  count(*) AS n_orders,
-      |  count(DISTINCT c_custkey) >= 5
-      |    AND count(DISTINCT o_orderpriority) >= 3 AS releasable
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |GROUP BY 1, 2
-      |ORDER BY 1, 2""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Inter-purchase cadence (the repeat-purchase gap distribution)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Inter-purchase gap distribution (r10 continuation): days between a
-   * customer's consecutive orders, histogrammed into week buckets —
-   * the repeat-purchase cadence behind replenishment reminders and
-   * churn-risk windows ([[qSurvival]] models the END of the relationship;
-   * this models its rhythm). Per-customer consecutive deltas come from
-   * ONE entity-partitioned lag window (the q_growth discipline — never
-   * global); everything after is week-grain counts. Same-day repeat
-   * orders land in bucket 0 (gap 0), a real signal (split shipments /
-   * duplicate submissions), deliberately not filtered.
-   */
-  def qPurchaseGap(s: SparkSession, dir: String): DataFrame = {
-    val ord = t(s, dir, "orders")
-    val o = ord.select(col("o_custkey").as("cust"), orderDay(ord).as("d"))
-    val w = Window.partitionBy(col("cust"))
-      .orderBy(col("d"), col("cust"))
-    // tie order within (cust, day) is irrelevant: equal days lag to
-    // gap 0 whichever of them comes first
-    val gaps = o.withColumn("prev", lag(col("d"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .select(col("cust"), expr("CAST((d - prev) div 7 AS INT)").as("wk"))
-    val tot = gaps.agg(count(lit(1)).as("n_total"))
-    gaps.groupBy(col("wk"))
-      .agg(count(lit(1)).as("n_gaps"),
-        countDistinct(col("cust")).as("n_customers"))
-      .crossJoin(broadcast(tot))
-      .select(col("wk").cast("long").as("gap_weeks"), col("n_gaps"),
-        col("n_customers"),
-        (floor(col("n_gaps").cast("double") / col("n_total") * 1e6 + 0.5)
-          / 1e6).as("share"))
-      .orderBy(col("gap_weeks"))
-  }
-
-  /** Same per-customer lag, same integer week truncation, same share
-    * chain. */
-  val qPurchaseGapSql: String =
-    """WITH o AS (
-      |  SELECT o_custkey AS cust,
-      |    epoch_us(o_orderdate) // 86400000000 AS d
-      |  FROM orders),
-      |gaps AS (
-      |  SELECT cust, CAST((d - prev) // 7 AS INT) AS wk FROM (
-      |    SELECT cust, d,
-      |      lag(d) OVER (PARTITION BY cust ORDER BY d, cust) AS prev
-      |    FROM o)
-      |  WHERE prev IS NOT NULL),
-      |tot AS (SELECT count(*) AS n_total FROM gaps)
-      |SELECT CAST(wk AS BIGINT) AS gap_weeks, count(*) AS n_gaps,
-      |  count(DISTINCT cust) AS n_customers,
-      |  FLOOR(CAST(count(*) AS DOUBLE) / (SELECT n_total FROM tot)
-      |        * 1e6 + 0.5) / 1e6 AS share
-      |FROM gaps
-      |GROUP BY wk
-      |ORDER BY gap_weeks""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // Exact-moment OLS (simple linear regression per group)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Per-group simple linear regression (r10 continuation): quantity on
-   * discount within each return flag — the price-elasticity /
-   * feature-vs-target screen, and the regression sibling of [[qCorr]].
-   * Spark's own `regr_slope` reassociates doubles across partitions
-   * (unusable under a hash gate); here every moment (n, Σx, Σy, Σxy,
-   * Σx², Σy²) is an EXACT integer over micro-units (discount in
-   * hundredths, quantity in whole units), and slope/intercept/R² are
-   * one deterministic double chain per group. One partial-agg'd pass;
-   * groups are the only shuffle rows.
-   */
-  def qOls(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_returnflag").as("flag"),
-      round(col("l_discount") * 100).cast("long").as("x"),
-      round(col("l_quantity")).cast("long").as("y"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val m = li.groupBy(col("flag")).agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * dec(col("y"))).as("sxy"),
-      sum(dec(col("x")) * dec(col("x"))).as("sxx"),
-      sum(dec(col("y")) * dec(col("y"))).as("syy"))
-    val vx = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
-      .cast("double")
-    val vy = (dec(col("n")) * col("syy") - col("sy") * col("sy"))
-      .cast("double")
-    val cov = (dec(col("n")) * col("sxy") - col("sx") * col("sy"))
-      .cast("double")
-    m.select(col("flag"), col("n"),
-        when(vx > 0, floor(cov / vx * 1e6 + 0.5) / 1e6).as("slope"),
-        when(vx > 0, floor((col("sy").cast("double") - cov / vx *
-          col("sx").cast("double")) / col("n").cast("double") * 1e6 + 0.5)
-          / 1e6).as("intercept"),
-        when(vx > 0 && vy > 0,
-          floor(cov * cov / (vx * vy) * 1e6 + 0.5) / 1e6).as("r2"))
-      .orderBy(col("flag"))
-  }
-
-  // -------------------------------------------------------------------------
-  // Laspeyres price index (inflation tracking over the part catalog)
-  // -------------------------------------------------------------------------
-
-  /**
-   * Monthly Laspeyres price index (r10 continuation): what the
-   * base-month basket would cost at month-t prices, over the parts
-   * priced in BOTH months — the inflation/pricing-drift tracker every
-   * commerce dashboard carries. Per (part, month): exact cent and
-   * quantity sums; the unit price p̄ = cents/qty is ONE IEEE division;
-   * each part's basket term p̄·q₀ is floor-rounded to 1e-4 micro-units
-   * and summed in the INTEGER domain (the q_chisq discipline — double
-   * addition order can't drift the hash), numerator and denominator
-   * over the SAME common-part set. Base month = the data's own first
-   * month (broadcast 1-row agg, no calendar literal — the r9 lesson).
-   * Shuffles carry (part, month) grain rows only.
-   */
-  def qPriceIndex(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val pm = li.select(col("l_partkey").as("part"),
-        (year(col("l_shipdate")) * 12 + month(col("l_shipdate")) - 1).as("m"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"),
-        round(col("l_quantity")).cast("long").as("qty"))
-      .groupBy(col("part"), col("m"))
-      .agg(sum(col("cents").cast("decimal(18,0)")).as("c"),
-        sum(col("qty").cast("decimal(18,0)")).as("q"))
-      .filter(col("q") > 0)
-    val m0 = pm.agg(min(col("m")).as("m0"))
-    val base = pm.crossJoin(broadcast(m0)).filter(col("m") === col("m0"))
-      .select(col("part"), col("c").as("c0"), col("q").as("q0"))
-    val joined = pm.join(base, "part")
-    val p = col("c").cast("double") / col("q").cast("double")
-    val p0 = col("c0").cast("double") / col("q0").cast("double")
-    val milT = floor(p * col("q0").cast("double") * 1e4 + 0.5).cast("long")
-    val mil0 = floor(p0 * col("q0").cast("double") * 1e4 + 0.5).cast("long")
-    joined.groupBy(col("m"))
-      .agg(count(lit(1)).as("n_parts"), sum(milT).as("num"),
-        sum(mil0).as("den"))
-      .select(
-        date_format(expr("make_date(m div 12, m % 12 + 1, 1)"), "yyyy-MM")
-          .as("month"),
-        col("n_parts"),
-        when(col("den") > 0,
-          floor(col("num").cast("double") / col("den") * 1e6 + 0.5) / 1e6)
-          .as("price_index"))
-      .orderBy(col("month"))
-  }
-
-  /** Same grains, same single divisions, same micro-unit floors, same
-    * integer-domain sums. */
-  val qPriceIndexSql: String =
-    """WITH pm AS (
-      |  SELECT l_partkey AS part,
-      |    year(l_shipdate) * 12 + month(l_shipdate) - 1 AS m,
-      |    SUM(CAST(round(l_extendedprice * 100) AS BIGINT))::HUGEINT AS c,
-      |    SUM(CAST(round(l_quantity) AS BIGINT))::HUGEINT AS q
-      |  FROM lineitem
-      |  GROUP BY 1, 2
-      |  HAVING SUM(CAST(round(l_quantity) AS BIGINT)) > 0),
-      |m0 AS (SELECT MIN(m) AS m0 FROM pm),
-      |base AS (
-      |  SELECT part, c AS c0, q AS q0 FROM pm, m0 WHERE m = m0),
-      |j AS (
-      |  SELECT pm.m,
-      |    CAST(FLOOR(CAST(pm.c AS DOUBLE) / CAST(pm.q AS DOUBLE)
-      |               * CAST(b.q0 AS DOUBLE) * 1e4 + 0.5) AS BIGINT) AS milt,
-      |    CAST(FLOOR(CAST(b.c0 AS DOUBLE) / CAST(b.q0 AS DOUBLE)
-      |               * CAST(b.q0 AS DOUBLE) * 1e4 + 0.5) AS BIGINT) AS mil0
-      |  FROM pm JOIN base b USING (part))
-      |SELECT strftime(make_date(m // 12, m % 12 + 1, 1), '%Y-%m') AS month,
-      |  count(*) AS n_parts,
-      |  CASE WHEN SUM(mil0) > 0 THEN
-      |    FLOOR(CAST(SUM(milt) AS DOUBLE) / CAST(SUM(mil0) AS DOUBLE)
-      |          * 1e6 + 0.5) / 1e6 END AS price_index
-      |FROM j
-      |GROUP BY m
-      |ORDER BY month""".stripMargin
-
-  /** Same micro-unit moments, same division chains (slope recomputed
-    * inline exactly as Spark reuses the cov/vx doubles). */
-  val qOlsSql: String =
-    """WITH li AS (
-      |  SELECT l_returnflag AS flag,
-      |    CAST(round(l_discount * 100) AS BIGINT) AS x,
-      |    CAST(round(l_quantity) AS BIGINT) AS y
-      |  FROM lineitem),
-      |m AS (
-      |  SELECT flag, count(*) AS n,
-      |    SUM(x::HUGEINT) AS sx, SUM(y::HUGEINT) AS sy,
-      |    SUM(x::HUGEINT * y) AS sxy, SUM(x::HUGEINT * x) AS sxx,
-      |    SUM(y::HUGEINT * y) AS syy
-      |  FROM li GROUP BY 1)
-      |SELECT flag, CAST(n AS BIGINT) AS n,
-      |  CASE WHEN CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE) > 0 THEN
-      |    FLOOR(CAST(n::HUGEINT * sxy - sx * sy AS DOUBLE)
-      |          / CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE)
-      |          * 1e6 + 0.5) / 1e6 END AS slope,
-      |  CASE WHEN CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE) > 0 THEN
-      |    FLOOR((CAST(sy AS DOUBLE)
-      |           - CAST(n::HUGEINT * sxy - sx * sy AS DOUBLE)
-      |             / CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE)
-      |             * CAST(sx AS DOUBLE))
-      |          / CAST(n AS DOUBLE) * 1e6 + 0.5) / 1e6 END AS intercept,
-      |  CASE WHEN CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE) > 0
-      |        AND CAST(n::HUGEINT * syy - sy * sy AS DOUBLE) > 0 THEN
-      |    FLOOR(CAST(n::HUGEINT * sxy - sx * sy AS DOUBLE)
-      |          * CAST(n::HUGEINT * sxy - sx * sy AS DOUBLE)
-      |          / (CAST(n::HUGEINT * sxx - sx * sx AS DOUBLE)
-      |             * CAST(n::HUGEINT * syy - sy * sy AS DOUBLE))
-      |          * 1e6 + 0.5) / 1e6 END AS r2
-      |FROM m
-      |ORDER BY flag""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // t-closeness release audit (k-anonymity -> l-diversity -> t-closeness)
-  // -------------------------------------------------------------------------
-
-  /**
-   * t-closeness audit (r11) — the third rung of the release-audit
-   * ladder after [[qKanon]] and [[qLDiversity]]: a group can be
-   * k-anonymous AND l-diverse yet still leak when its sensitive-value
-   * DISTRIBUTION differs sharply from the table's (90 % URGENT in one
-   * QI group is a disclosure even with all 5 priorities present). Per
-   * (segment, nation): t = EMD between the group's and the global
-   * priority distribution over the ORDERED classes 1-URGENT … 5-LOW —
-   * for ordered attributes EMD = Σᵢ |CumGᵢ/n_g − Cumᵢ/n| / (m−1).
-   *
-   * Determinism: cumulative counts stay exact decimals; each term's
-   * numerator |CumGᵢ·n − Cumᵢ·n_g| is an exact integer, summed in the
-   * integer domain (the q_chisq discipline), ONE double division at
-   * the end, floored to micro-units. One partial-agg'd shuffle at QI
-   * grain; the global distribution is a broadcast one-row frame.
-   */
-  def qTCloseness(s: SparkSession, dir: String,
-      tMax: Double = 0.2): DataFrame = {
-    val cust = t(s, dir, "customer").select(col("c_custkey"),
-      col("c_mktsegment").as("segment"), col("c_nationkey").as("nation"))
-    val o = t(s, dir, "orders")
-      .select(col("o_custkey"),
-        substring(col("o_orderpriority"), 1, 1).cast("int").as("cls"))
-    val j = o.join(cust, col("o_custkey") === col("c_custkey"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    def cnt(i: Int) =
-      sum(when(col("cls") === i, 1L).otherwise(0L)).as(s"c$i")
-    val grp = j.groupBy(col("segment"), col("nation"))
-      .agg(cnt(1), cnt(2), cnt(3), cnt(4), cnt(5),
-        count(lit(1)).as("n_g"))
-    val glob = j.agg(
-      sum(when(col("cls") === 1, 1L).otherwise(0L)).as("g1"),
-      sum(when(col("cls") === 2, 1L).otherwise(0L)).as("g2"),
-      sum(when(col("cls") === 3, 1L).otherwise(0L)).as("g3"),
-      sum(when(col("cls") === 4, 1L).otherwise(0L)).as("g4"),
-      count(lit(1)).as("n"))
-    def cumG(i: Int) = (1 to i).map(k => dec(col(s"c$k"))).reduce(_ + _)
-    def cumA(i: Int) = (1 to i).map(k => dec(col(s"g$k"))).reduce(_ + _)
-    val terms = (1 to 4).map(i =>
-      abs(cumG(i) * dec(col("n")) - cumA(i) * dec(col("n_g"))))
-      .reduce(_ + _)
-    grp.crossJoin(broadcast(glob))
-      .select(col("segment"), col("nation").cast("long").as("nation"),
-        col("n_g").as("n_orders"),
-        (floor(terms.cast("double") /
-          (dec(col("n_g")) * dec(col("n")) * lit(4)).cast("double")
-          * 1e6 + 0.5) / 1e6).as("t"))
-      .withColumn("releasable", col("t") <= tMax)
-      .orderBy(col("segment"), col("nation"))
-  }
-
-  /** Same ordered-class cumulative numerators in the integer domain,
-    * same single division, same floor. */
-  val qTClosenessSql: String =
-    """WITH j AS (
-      |  SELECT c_mktsegment AS segment, c_nationkey AS nation,
-      |    CAST(substr(o_orderpriority, 1, 1) AS INT) AS cls
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
-      |grp AS (
-      |  SELECT segment, nation,
-      |    SUM(CASE WHEN cls = 1 THEN 1 ELSE 0 END)::HUGEINT AS c1,
-      |    SUM(CASE WHEN cls = 2 THEN 1 ELSE 0 END)::HUGEINT AS c2,
-      |    SUM(CASE WHEN cls = 3 THEN 1 ELSE 0 END)::HUGEINT AS c3,
-      |    SUM(CASE WHEN cls = 4 THEN 1 ELSE 0 END)::HUGEINT AS c4,
-      |    count(*)::HUGEINT AS n_g
-      |  FROM j GROUP BY 1, 2),
-      |gall AS (
-      |  SELECT
-      |    SUM(CASE WHEN cls = 1 THEN 1 ELSE 0 END)::HUGEINT AS g1,
-      |    SUM(CASE WHEN cls = 2 THEN 1 ELSE 0 END)::HUGEINT AS g2,
-      |    SUM(CASE WHEN cls = 3 THEN 1 ELSE 0 END)::HUGEINT AS g3,
-      |    SUM(CASE WHEN cls = 4 THEN 1 ELSE 0 END)::HUGEINT AS g4,
-      |    count(*)::HUGEINT AS n
-      |  FROM j)
-      |SELECT segment, CAST(nation AS BIGINT) AS nation,
-      |  CAST(n_g AS BIGINT) AS n_orders,
-      |  FLOOR(CAST(
-      |      abs(c1 * n - g1 * n_g)
-      |      + abs((c1 + c2) * n - (g1 + g2) * n_g)
-      |      + abs((c1 + c2 + c3) * n - (g1 + g2 + g3) * n_g)
-      |      + abs((c1 + c2 + c3 + c4) * n - (g1 + g2 + g3 + g4) * n_g)
-      |    AS DOUBLE) / CAST(n_g * n * 4 AS DOUBLE) * 1e6 + 0.5) / 1e6 AS t,
-      |  FLOOR(CAST(
-      |      abs(c1 * n - g1 * n_g)
-      |      + abs((c1 + c2) * n - (g1 + g2) * n_g)
-      |      + abs((c1 + c2 + c3) * n - (g1 + g2 + g3) * n_g)
-      |      + abs((c1 + c2 + c3 + c4) * n - (g1 + g2 + g3 + g4) * n_g)
-      |    AS DOUBLE) / CAST(n_g * n * 4 AS DOUBLE) * 1e6 + 0.5) / 1e6
-      |    <= 0.2 AS releasable
-      |FROM grp, gall
-      |ORDER BY segment, nation""".stripMargin
-
-  // -------------------------------------------------------------------------
   // Kendall rank correlation between the daily click and purchase series
   // -------------------------------------------------------------------------
 
@@ -6078,7 +4119,7 @@ object RelationalQueries {
    * volume and purchase volume move together MONOTONICALLY, free of
    * the linearity assumption Pearson bakes in (one viral day with 50×
    * clicks dominates a Pearson r; it is one rank here). Over the dense
-   * daily calendar (the [[qAutocorr]] densification): every day pair
+   * daily calendar (missing days count 0): every day pair
    * classifies as concordant / discordant / tied-in-x / tied-in-y /
    * tied-in-both — ALL exact integer counts — and
    * τb = (C − D) / √((n₀−n₁)(n₀−n₂)) runs one deterministic double
@@ -6167,71 +4208,4 @@ object RelationalQueries {
       |                 * (CAST(n_pairs AS DOUBLE) - tie_y)) * 1e6 + 0.5)
       |      / 1e6 END AS tau_b
       |FROM agg""".stripMargin
-
-  // -------------------------------------------------------------------------
-  // New-vs-returning monthly revenue split
-  // -------------------------------------------------------------------------
-
-  /**
-   * New-vs-returning revenue split (r11) — the monthly growth-quality
-   * lens next to [[qCohortLtv]]: how much of each month's revenue is
-   * first-ever-order customers vs repeat business (growth fueled
-   * entirely by acquisition churns out the moment spend stops). A
-   * customer's first-order month comes from one partial-agg'd min; a
-   * month's order is "new" iff its month equals that m0. TZ-free
-   * calendar months (year·12+month — the epochDayExpr lesson), exact
-   * cent decimals end-to-end, share floored to micro-units.
-   */
-  def qNewReturning(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey").as("cust"),
-      (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1).as("m"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val first = o.groupBy(col("cust")).agg(min(col("m")).as("m0"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    o.join(first, "cust")
-      .groupBy(col("m"))
-      .agg(
-        sum(dec(col("cents"))).as("total"),
-        sum(when(col("m") === col("m0"), dec(col("cents")))
-          .otherwise(dec(lit(0)))).as("new_c"),
-        countDistinct(when(col("m") === col("m0"), col("cust")))
-          .as("n_new"),
-        countDistinct(when(col("m") > col("m0"), col("cust")))
-          .as("n_returning"))
-      .select(
-        date_format(expr("make_date(m div 12, m % 12 + 1, 1)"), "yyyy-MM")
-          .as("month"),
-        col("total").cast("long").as("total_cents"),
-        col("new_c").cast("long").as("new_cents"),
-        (col("total") - col("new_c")).cast("long").as("returning_cents"),
-        col("n_new"), col("n_returning"),
-        (floor(col("new_c").cast("double") / col("total").cast("double")
-          * 1e6 + 0.5) / 1e6).as("new_share"))
-      .orderBy(col("month"))
-  }
-
-  /** Same month integers, same cent decimals, same share chain. */
-  val qNewReturningSql: String =
-    """WITH o AS (
-      |  SELECT o_custkey AS cust,
-      |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS m,
-      |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-      |  FROM orders),
-      |first AS (SELECT cust, MIN(m) AS m0 FROM o GROUP BY 1)
-      |SELECT strftime(make_date(m // 12, m % 12 + 1, 1), '%Y-%m') AS month,
-      |  CAST(SUM(cents::HUGEINT) AS BIGINT) AS total_cents,
-      |  CAST(SUM(CASE WHEN m = m0 THEN cents::HUGEINT ELSE 0 END) AS BIGINT)
-      |    AS new_cents,
-      |  CAST(SUM(cents::HUGEINT)
-      |       - SUM(CASE WHEN m = m0 THEN cents::HUGEINT ELSE 0 END) AS BIGINT)
-      |    AS returning_cents,
-      |  count(DISTINCT CASE WHEN m = m0 THEN cust END) AS n_new,
-      |  count(DISTINCT CASE WHEN m > m0 THEN cust END) AS n_returning,
-      |  FLOOR(CAST(SUM(CASE WHEN m = m0 THEN cents::HUGEINT ELSE 0 END)
-      |             AS DOUBLE)
-      |        / CAST(SUM(cents::HUGEINT) AS DOUBLE) * 1e6 + 0.5) / 1e6
-      |    AS new_share
-      |FROM o JOIN first USING (cust)
-      |GROUP BY m
-      |ORDER BY month""".stripMargin
 }

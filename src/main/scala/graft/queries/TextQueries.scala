@@ -1903,8 +1903,7 @@ object TextQueries {
    * (0 = monolingual feed; ln k = perfectly balanced over k). A feed
    * that silently switched language mid-crawl, or a "multilingual"
    * source that is 99 % one language, is one scan of this table. Term
-   * rows (not a per-source double sum) keep the output hash-exact —
-   * the q_psi / q_mutual_info discipline.
+   * rows (not a per-source double sum) keep the output hash-exact.
    *
    * Scale: one counts-only partial agg to the (source, lang) grain,
    * then a source-grain totals join of two already-tiny frames.

@@ -597,29 +597,11 @@ object StreamOps {
   }
 
   /**
-   * Streaming scaler fit (r8) — the ingest form of
-   * [[graft.queries.RelationalQueries.qFeatureScale]]'s fit half: the
-   * running (n, Σx, Σx²) moments per metric as a streaming aggregation
-   * in Update mode — DECIMAL sums, so the merged state is
-   * order-independent and the emitted parameters equal a batch refit
-   * over everything seen (spec-pinned parity). State: 3 decimals per
-   * metric, forever. A serving layer reads the latest row per metric;
-   * the transform stays the batch map-side rescore.
-   */
-  def scalerStream(rows: DataFrame): DataFrame =
-    rows
-      .select(col("metric"), col("v"))
-      .groupBy(col("metric"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("v").cast("decimal(28,8)")).as("sx"),
-        sum((col("v") * col("v")).cast("decimal(28,8)")).as("sx2"))
-
-  /**
    * Streaming PSI drift monitor (r9) — the unbounded half of
    * [[graft.queries.RelationalQueries.qPsi]]: the BASELINE (bin
    * shares + value range) is a batch-trained constant set (the
-   * scalerStream fit/apply discipline — drift is always measured
-   * against a frozen fit), and the live side is ONE streaming
+   * fit/apply discipline — drift is always measured against a
+   * frozen fit), and the live side is ONE streaming
    * aggregation whose state is exactly `bins` long counters packed
    * into a single row, bounded forever however much streams past.
    * Each trigger emits the current bin counts, total, and the PSI
@@ -654,61 +636,6 @@ object StreamOps {
       terms.reduce(_ + _).as("psi"))
   }
 
-  /**
-   * Streaming chi-squared dependence monitor (r10 continuation) — the
-   * unbounded half of [[graft.queries.RelationalQueries.qChisq]]: the
-   * category vocabulary is a frozen constant set (the psiStream
-   * frozen-baseline discipline — rows outside it are counted into no
-   * cell and surface via `n_other`, loudly, never silently re-binned),
-   * and the live side is ONE streaming aggregation whose state is the
-   * |statuses|·|priorities| cell counters packed into a single row,
-   * bounded forever. Every trigger emits the current contingency
-   * counts, χ², dof and Cramér's V through the EXACT batch arithmetic —
-   * integer moments, one IEEE division per cell, millionths floored
-   * then totaled in the integer domain — so the emitted χ² equals a
-   * batch [[graft.queries.RelationalQueries.qChisq]] refit over
-   * everything seen (zero-margin vocab rows drop from dof exactly as
-   * absent categories do in batch). Batch ≡ stream parity spec-pinned.
-   */
-  def chisqStream(rows: DataFrame, statuses: Seq[String],
-      priorities: Seq[String]): DataFrame = {
-    require(statuses.nonEmpty && priorities.nonEmpty &&
-      statuses.size * priorities.size <= 4096,
-      "chisqStream needs a non-empty frozen vocabulary of at most 4096 cells")
-    val si = statuses.indices
-    val pj = priorities.indices
-    val cells = (for (i <- si; j <- pj) yield
-      sum(when(col("status") === statuses(i) &&
-        col("priority") === priorities(j), 1L).otherwise(0L))
-        .as(s"c_${i}_$j")) :+
-      sum(when(col("status").isin(statuses: _*) &&
-        col("priority").isin(priorities: _*), 0L).otherwise(1L)).as("other")
-    val agged = rows.groupBy().agg(cells.head, cells.tail: _*)
-    def obs(i: Int, j: Int) = col(s"c_${i}_$j")
-    val r = si.map(i => pj.map(j => obs(i, j)).reduce(_ + _))
-    val c = pj.map(j => si.map(i => obs(i, j)).reduce(_ + _))
-    val n = r.reduce(_ + _)
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
-    val mils = for (i <- si; j <- pj) yield {
-      val diff = dec(obs(i, j)) * dec(n) - dec(r(i)) * dec(c(j))
-      when(r(i) > 0 && c(j) > 0,
-        least(floor((diff * diff).cast("double") /
-          (dec(r(i)) * dec(c(j)) * dec(n)).cast("double") * 1e6 + 0.5),
-          lit(9.0e14)).cast("long")).otherwise(0L)
-    }
-    val milsum = mils.reduce(_ + _)
-    val nr = si.map(i => when(r(i) > 0, 1).otherwise(0)).reduce(_ + _)
-    val nc = pj.map(j => when(c(j) > 0, 1).otherwise(0)).reduce(_ + _)
-    agged.select(
-      array((for (i <- si; j <- pj) yield obs(i, j)): _*).as("cell_counts"),
-      n.as("n"), col("other").as("n_other"),
-      (milsum.cast("double") / 1e6).as("chi2"),
-      ((nr - 1) * (nc - 1)).cast("long").as("dof"),
-      when(nr > 1 && nc > 1,
-        floor(sqrt(milsum.cast("double") / 1e6 /
-          (n.cast("double") * least(nr - 1, nc - 1).cast("double")))
-          * 1e6 + 0.5) / 1e6).as("cramers_v"))
-  }
 
   /**
    * Streaming first/last-touch attribution (r8) — the ingest form of
@@ -854,41 +781,6 @@ object StreamOps {
    * watermark against reality. Batch ≡ stream parity spec-pinned
    * (arrival order = event_id, the markovStream contract).
    */
-  /**
-   * Streaming inter-purchase gap (r10 continuation) — the ingest half
-   * of [[graft.queries.RelationalQueries.qPurchaseGap]]: per customer
-   * the state store carries the LAST order day (8 bytes forever); each
-   * arriving order with a predecessor emits its day gap + week bucket —
-   * INCLUDING gaps that span micro-batches, which a per-batch lag
-   * window cannot see. Downstream bucket counting is an ordinary
-   * streaming aggregation. In-order arrival per customer assumed (the
-   * markovStream contract; reorder via a watermarked stage sized by
-   * q_lateness). Batch ≡ stream parity spec-pinned on the gap
-   * multiset.
-   */
-  def purchaseGapStream(orders: DataFrame): Dataset[GapEmit] = {
-    val spark = orders.sparkSession
-    import spark.implicits._
-    orders
-      .selectExpr("cust", "order_key", "d")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-        (cust: Long, rows: Iterator[(Long, Long, Long)],
-            state: GroupState[LastDay]) => {
-          var last = state.getOption.map(_.d).getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(r => (r._3, r._2)).flatMap {
-            case (_, _, d) =>
-              val emit = if (last == Long.MinValue) None
-                else Some(GapEmit(cust, d - last, (d - last) / 7))
-              last = d
-              emit
-          }
-          state.update(LastDay(last))
-          out.iterator
-        })
-  }
-
   def latenessStream(events: DataFrame): Dataset[LatenessEmit] = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -1030,12 +922,6 @@ final case class FunnelState(vt: Long, ct: Long, p: Boolean)
 final case class FunnelAdvance(user_id: Long, step: Int)
 
 final case class LatenessEmit(user_id: Long, event_id: Long, late_min: Long)
-
-/** Last-order-day state for [[StreamOps.purchaseGapStream]]. */
-final case class LastDay(d: Long)
-
-/** One inter-purchase gap emission. */
-final case class GapEmit(cust: Long, gap_days: Long, gap_weeks: Long)
 
 /** First-ever and previous event type for one user — the entire
   * per-user state of [[StreamOps.attributionStream]]. */

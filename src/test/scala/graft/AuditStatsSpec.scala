@@ -12,29 +12,6 @@ import graft.queries.RelationalQueries
 class AuditStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def writeOrders(dir: String, rows: Seq[(Long, Long, Double)]): Unit =
-    rows.map { case (ok, ck, tp) =>
-      (ok, ck, "O", tp, new java.sql.Timestamp(86400000L * ok), "1-URGENT")
-    }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-      "o_orderdate", "o_orderpriority")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-
-  test("q_gini: perfect equality scores ~0; winner-takes-all scores (n-1)/n") {
-    val dir = "/tmp/graft-gini-eq"
-    writeOrders(dir, (1L to 8L).map(i => (i, i, 100.0)))
-    val eq = RelationalQueries.qGini(spark, dir).head()
-    assert(eq.getLong(0) == 8)
-    assert(math.abs(eq.getDouble(2)) < 1e-9, s"equal revenue must give G=0: $eq")
-
-    val dir2 = "/tmp/graft-gini-skew"
-    // customer 8 takes everything (epsilon elsewhere would change G);
-    // with x = (0,...,0,T): G = 2*8T/(8T) - 9/8 = 2 - 1.125 = 0.875
-    writeOrders(dir2, (1L to 7L).map(i => (i, i, 0.0)) :+ (8L, 8L, 1000.0))
-    val skew = RelationalQueries.qGini(spark, dir2).head()
-    assert(math.abs(skew.getDouble(2) - 0.875) < 1e-9,
-      s"winner-takes-all over 8 customers must give 7/8: $skew")
-  }
-
   test("q_changepoint: a planted level shift is located at the step day") {
     // series: 10/day for days 0..19, then 100/day for days 20..29 —
     // the CUSUM deviation peaks at the last pre-shift day (day 19)
@@ -49,50 +26,5 @@ class AuditStatsSpec extends SparkSpec {
     val got = RelationalQueries.qChangepoint(spark, dir).head()
     assert(got.getLong(1) == 19L, s"break must sit at the last pre-shift day: $got")
     assert(got.getInt(3) == 30)
-  }
-
-  test("q_weighted_median: the weighted cut differs from the plain median " +
-      "when weight concentrates on one side") {
-    // values 1..5 with weight 10 on value 5 and 1 elsewhere: total 14,
-    // half = 7 -> first value whose cumweight*2 >= 14 is 5 (cum at 4 is
-    // 4); the PLAIN median would be 3
-    val li = Seq((1, 1.0), (2, 1.0), (3, 1.0), (4, 1.0), (5, 10.0))
-      .zipWithIndex.map { case ((v, w), i) =>
-        (i.toLong, 1L, 1L, i, w, v.toDouble, 0.0, 0.0, "A", "O",
-          new java.sql.Timestamp(0L))
-      }.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-    val dir = "/tmp/graft-wmed"
-    li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = RelationalQueries.qWeightedMedian(spark, dir).head()
-    assert(got.getDouble(1) == 5.0, s"weight-10 tail must pull the cut to 5: $got")
-    assert(got.getDouble(2) == 14.0)
-  }
-
-  test("q_benford: data drawn FROM Benford's law yields near-zero chi2; " +
-      "constant-leading-digit data does not") {
-    // magnitudes uniform in log-space follow Benford exactly in the
-    // limit: x = 10^(u*4) for u on a fine deterministic grid
-    def write(dir: String, xs: Seq[Double]): Unit =
-      xs.zipWithIndex.map { case (x, i) =>
-        (i.toLong, 1L, 1L, i, 1.0, x, 0.0, 0.0, "A", "O",
-          new java.sql.Timestamp(0L))
-      }.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-
-    val benford = (0 until 5000).map(i => math.pow(10.0, (i + 0.5) / 5000.0 * 4))
-    write("/tmp/graft-benford-ok", benford)
-    val ok = RelationalQueries.qBenford(spark, "/tmp/graft-benford-ok").collect()
-    assert(ok.map(_.getInt(0)).toSeq == (1 to 9), "all nine digits present")
-    val chi2ok = ok.map(_.getDouble(4)).sum
-    assert(chi2ok < 16.0, s"log-uniform data must fit Benford (chi2=$chi2ok)")
-
-    write("/tmp/graft-benford-bad", (0 until 5000).map(i => 500.0 + (i % 100) * 0.9))
-    val bad = RelationalQueries.qBenford(spark, "/tmp/graft-benford-bad").collect()
-    val chi2bad = bad.map(_.getDouble(4)).sum
-    assert(chi2bad > 1000.0, s"constant-leading-digit data must flag (chi2=$chi2bad)")
   }
 }

@@ -1,80 +1,11 @@
 package graft
 
-import graft.queries.RelationalQueries
-
 /**
- * r10 continuation analytics: chi-squared independence, cohort LTV,
- * lagged cross-correlation, l-diversity — each pinned to hand-computed
- * ground truth on constructed tables.
+ * r10 continuation analytics: lagged cross-correlation, pinned to
+ * hand-computed ground truth on constructed tables.
  */
 class CohortStatsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** (orderkey, custkey, status, priority, totalprice, epoch-day) */
-  private def ordersDir(
-      rows: Seq[(Long, Long, String, String, Double, Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cs").toString
-    rows.map { case (k, c, st, pr, p, day) =>
-      (k, c, st, p, new java.sql.Timestamp(day * 86400000L), pr)
-    }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    dir
-  }
-
-  test("q_chisq: independent 2x2 scores chi2 = 0; a perfect diagonal " +
-      "association scores chi2 = N and Cramér's V = 1") {
-    // independent: every (status, priority) cell holds 10 orders
-    val ind = ordersDir((1 to 40).map { i =>
-      val st = if (i % 4 < 2) "A" else "B"
-      val pr = if (i % 2 == 0) "X" else "Y"
-      (i.toLong, i.toLong, st, pr, 1.0, 1)
-    })
-    val r = RelationalQueries.qChisq(spark, ind).collect()
-    assert(r.length == 4, r.mkString(";"))
-    assert(r.forall(_.getAs[Double]("term") == 0.0), r.mkString(";"))
-    assert(r.head.getAs[Double]("chi2") == 0.0, r.mkString(";"))
-    assert(r.head.getAs[Double]("cramers_v") == 0.0, r.mkString(";"))
-    assert(r.head.getAs[Long]("dof") == 1L, r.mkString(";"))
-
-    // diagonal: 10× (A,X), 10× (B,Y) — chi2 = N = 20, V = 1; the grid
-    // must emit the two ZERO-observed cells with their expected mass
-    val dia = ordersDir((1 to 20).map { i =>
-      val (st, pr) = if (i <= 10) ("A", "X") else ("B", "Y")
-      (i.toLong, i.toLong, st, pr, 1.0, 1)
-    })
-    val d = RelationalQueries.qChisq(spark, dia).collect()
-    assert(d.length == 4, d.mkString(";"))
-    assert(d.head.getAs[Double]("chi2") == 20.0, d.mkString(";"))
-    assert(d.head.getAs[Double]("cramers_v") == 1.0, d.mkString(";"))
-    val zero = d.filter(_.getAs[Long]("obs") == 0L)
-    assert(zero.length == 2 && zero.forall(_.getAs[Double]("expected") == 5.0),
-      d.mkString(";"))
-    assert(d.forall(_.getAs[Double]("term") == 5.0), d.mkString(";"))
-  }
-
-  test("q_cohort_ltv: two-customer cohort replays cumulative cents and " +
-      "per-customer LTV by hand") {
-    // cust 1: Jan-2020 $10, Feb-2020 $5; cust 2: Jan-2020 $20
-    val day0 = 18262 // 2020-01-01
-    val day1 = 18293 // 2020-02-01
-    val dir = ordersDir(Seq(
-      (1L, 1L, "O", "1-URGENT", 10.0, day0),
-      (2L, 1L, "O", "1-URGENT", 5.0, day1),
-      (3L, 2L, "O", "1-URGENT", 20.0, day0)))
-    val r = RelationalQueries.qCohortLtv(spark, dir).collect()
-    assert(r.length == 2, r.mkString(";"))
-    assert(r(0).getAs[String]("cohort_month") == "2020-01", r.mkString(";"))
-    assert(r(0).getAs[Long]("month_k") == 0L &&
-      r(0).getAs[Long]("n_customers") == 2L &&
-      r(0).getAs[Long]("rev_cents") == 3000L &&
-      r(0).getAs[Long]("cum_cents") == 3000L &&
-      r(0).getAs[Double]("ltv_cents") == 1500.0, r.mkString(";"))
-    assert(r(1).getAs[Long]("month_k") == 1L &&
-      r(1).getAs[Long]("rev_cents") == 500L &&
-      r(1).getAs[Long]("cum_cents") == 3500L &&
-      r(1).getAs[Double]("ltv_cents") == 1750.0, r.mkString(";"))
-  }
 
   private def eventsDir(rows: Seq[(Long, Int, String)]): String = {
     // (event_id, epoch-day, event_type)
@@ -105,96 +36,5 @@ class CohortStatsSpec extends SparkSpec {
     assert(byLag(2L).getAs[Long]("n_pairs") == 10L, r.mkString(";"))
     assert(byLag(0L).getAs[Double]("xcorr") < 1.0, r.mkString(";"))
     assert(byLag(1L).getAs[Double]("xcorr") < 1.0, r.mkString(";"))
-  }
-
-  test("q_l_diversity: small-k and single-sensitive-value groups are " +
-      "held back; a diverse group of 5 releases") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ld").toString
-    // segment S1/nation 1: custs 1-5, 3 distinct priorities -> release
-    // segment S2/nation 2: custs 6-7 (k = 2 < 5)          -> hold
-    // segment S1/nation 3: custs 8-12, all URGENT (l = 1)  -> hold
-    val cust = ((1 to 5).map(i => (i.toLong, s"c$i", 1, 0.0, "S1")) ++
-      (6 to 7).map(i => (i.toLong, s"c$i", 2, 0.0, "S2")) ++
-      (8 to 12).map(i => (i.toLong, s"c$i", 3, 0.0, "S1")))
-    cust.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal",
-        "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    val prio = Seq("1-URGENT", "2-HIGH", "3-MEDIUM")
-    val orders = ((1 to 5).map(i =>
-        (i.toLong, i.toLong, "O", prio(i % 3), 1.0, 1)) ++
-      (6 to 7).map(i => (i.toLong, i.toLong, "O", prio(i % 3), 1.0, 1)) ++
-      (8 to 12).map(i => (i.toLong, i.toLong, "O", "1-URGENT", 1.0, 1)))
-    orders.map { case (k, c, st, pr, p, day) =>
-      (k, c, st, p, new java.sql.Timestamp(day * 86400000L), pr)
-    }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val r = RelationalQueries.qLDiversity(spark, dir).collect()
-    assert(r.length == 3, r.mkString(";"))
-    val m = r.map(x => (x.getAs[String]("segment"),
-      x.getAs[Long]("nation")) -> x).toMap
-    assert(m(("S1", 1L)).getAs[Boolean]("releasable"), r.mkString(";"))
-    assert(m(("S1", 1L)).getAs[Long]("k_size") == 5L &&
-      m(("S1", 1L)).getAs[Long]("l_div") == 3L, r.mkString(";"))
-    assert(!m(("S2", 2L)).getAs[Boolean]("releasable"), r.mkString(";"))
-    assert(!m(("S1", 3L)).getAs[Boolean]("releasable"), r.mkString(";"))
-    assert(m(("S1", 3L)).getAs[Long]("l_div") == 1L, r.mkString(";"))
-  }
-
-  test("q_purchase_gap: per-customer consecutive deltas bucket by week; " +
-      "same-day repeats land in bucket 0") {
-    // cust 1: days 1, 8, 9 -> gaps 7 (wk 1) and 1 (wk 0)
-    // cust 2: days 5, 5   -> gap 0 (wk 0, the same-day-repeat signal)
-    val dir = ordersDir(Seq(
-      (1L, 1L, "O", "1-URGENT", 1.0, 1), (2L, 1L, "O", "1-URGENT", 1.0, 8),
-      (3L, 1L, "O", "1-URGENT", 1.0, 9), (4L, 2L, "O", "1-URGENT", 1.0, 5),
-      (5L, 2L, "O", "1-URGENT", 1.0, 5)))
-    val r = RelationalQueries.qPurchaseGap(spark, dir).collect()
-    assert(r.length == 2, r.mkString(";"))
-    val m = r.map(x => x.getAs[Long]("gap_weeks") -> x).toMap
-    assert(m(0L).getAs[Long]("n_gaps") == 2L &&
-      m(0L).getAs[Long]("n_customers") == 2L, r.mkString(";"))
-    assert(m(1L).getAs[Long]("n_gaps") == 1L &&
-      m(1L).getAs[Long]("n_customers") == 1L, r.mkString(";"))
-    assert(m(0L).getAs[Double]("share") == 0.666667 &&
-      m(1L).getAs[Double]("share") == 0.333333, r.mkString(";"))
-  }
-
-  test("q_price_index: a part that doubles in unit price doubles the " +
-      "index; base-month-only parts drop from later baskets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pi").toString
-    val day0 = 18262 // 2020-01
-    val day1 = 18293 // 2020-02
-    // part 1: unit 1.00 in Jan (qty 10), unit 2.00 in Feb (qty 5)
-    // part 2: Jan only -> excluded from Feb's common basket
-    Seq(
-      (1L, day0, 10.0, 10.0), (1L, day1, 10.0, 5.0),
-      (2L, day0, 30.0, 10.0)
-    ).map { case (p, d, ext, qty) =>
-      (p, new java.sql.Timestamp(d.toLong * 86400000L), ext, qty)
-    }.toDF("l_partkey", "l_shipdate", "l_extendedprice", "l_quantity")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val r = RelationalQueries.qPriceIndex(spark, dir).collect()
-    val m = r.map(x => x.getAs[String]("month") -> x).toMap
-    assert(m("2020-01").getAs[Double]("price_index") == 1.0 &&
-      m("2020-01").getAs[Long]("n_parts") == 2L, r.mkString(";"))
-    assert(m("2020-02").getAs[Double]("price_index") == 2.0 &&
-      m("2020-02").getAs[Long]("n_parts") == 1L, r.mkString(";"))
-  }
-
-  test("q_ols: a planted y = 2x + 3 line fits exactly; a constant-x " +
-      "group NULL-degrades") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ols").toString
-    val rows = (0 to 4).map(x => ("A", x / 100.0, (2 * x + 3).toDouble)) ++
-      (1 to 4).map(_ => ("B", 0.05, 7.0))
-    rows.toDF("l_returnflag", "l_discount", "l_quantity")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val r = RelationalQueries.qOls(spark, dir).collect()
-    val m = r.map(x => x.getAs[String]("flag") -> x).toMap
-    assert(m("A").getAs[Double]("slope") == 2.0, r.mkString(";"))
-    assert(m("A").getAs[Double]("intercept") == 3.0, r.mkString(";"))
-    assert(m("A").getAs[Double]("r2") == 1.0, r.mkString(";"))
-    assert(m("B").isNullAt(m("B").fieldIndex("slope")) &&
-      m("B").isNullAt(m("B").fieldIndex("r2")), r.mkString(";"))
   }
 }

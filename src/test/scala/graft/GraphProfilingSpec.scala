@@ -4,86 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.RelationalQueries
 
-/** Planted, hand-computed cases for the r8 graph/profiling quartet
-  * (q_pagerank / q_attribution / q_histogram / q_skew_audit) — the
+/** Planted, hand-computed cases for the r8 profiling operators
+  * (q_attribution / q_histogram / q_user_features / q_skew_audit) — the
   * AuditStatsSpec discipline: tiny inputs whose expected outputs are
   * derived by hand, independent of both engines. */
 class GraphProfilingSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Minimal TPC-H-shaped dir producing EXACTLY the edge multiset
-    * `edges` (src nation → dst nation with weight w line items). */
-  private def graphDir(edges: Seq[(Int, Int, Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr").toString
-    val nations = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-    nations.map(n => (n, s"N$n", 0)).toDF("n_nationkey", "n_name", "n_regionkey")
-      .write.parquet(s"$dir/nation.parquet")
-    // one customer and one supplier per nation, keyed by nation id
-    nations.map(n => (n.toLong, s"c$n", n, 0.0, "BUILDING"))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    nations.map(n => (n.toLong, s"s$n", n, 0.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-      .write.parquet(s"$dir/supplier.parquet")
-    // one order per edge (customer = src), w line items (supplier = dst)
-    val ords = edges.zipWithIndex.map { case ((srcN, _, _), i) =>
-      (i.toLong, srcN.toLong, "O", 1.0,
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1-URGENT")
-    }
-    ords.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val lis = edges.zipWithIndex.flatMap { case ((_, dstN, w), i) =>
-      (0 until w).map(j => (i.toLong, 1L, dstN.toLong, j + 1, 1.0, 10.0,
-        0.0, 0.0, "N", "O", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    }
-    lis.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    dir
-  }
-
-  test("q_pagerank hand-computed: single edge A->B, two iterations of the " +
-      "exact integer update") {
-    // A(1) -> B(2), weight 3. r0 = 1e6 each.
-    // it1: contrib(B) = (1e6*3)/3 = 1e6 -> r(B) = 150000 + 850*1e6/1000 = 1_000_000
-    //      r(A) = 150000 (no in-edges)
-    // it2: contrib(B) = (150000*3)/3 = 150000 -> r(B) = 150000+127500 = 277500
-    // it3+: r(A) stays 150000, r(B) = 150000 + 850*150000/1000 = 277500 (fixed point)
-    val dir = graphDir(Seq((1, 2, 3)))
-    val got = RelationalQueries.qPagerank(spark, dir, iters = 10).collect()
-      .map(r => r.getString(1) -> r.getDouble(2)).toMap
-    assert(got("N1") == 0.15, s"dangling-source rank: $got")
-    assert(got("N2") == 0.2775, s"fixed-point sink rank: $got")
-  }
-
-  test("q_pagerank invariants: a 2-cycle is symmetric; a sink outranks its feeders") {
-    val cyc = RelationalQueries.qPagerank(spark,
-      graphDir(Seq((1, 2, 5), (2, 1, 5))), iters = 10).collect()
-      .map(r => r.getString(1) -> r.getDouble(2)).toMap
-    assert(cyc("N1") == cyc("N2"), s"symmetric cycle must tie: $cyc")
-    // every node keeps full rank 1.0 in a closed cycle (conservation)
-    assert(math.abs(cyc("N1") - 1.0) < 0.01, s"closed-cycle mass: $cyc")
-    val star = RelationalQueries.qPagerank(spark,
-      graphDir(Seq((1, 9, 2), (2, 9, 2), (3, 9, 2))), iters = 10).collect()
-      .map(r => r.getString(1) -> r.getDouble(2)).toMap
-    assert(star("N9") > star("N1") && star("N1") == star("N2"),
-      s"sink must outrank symmetric feeders: $star")
-  }
-
-  test("distributed PageRank (chained joins) is bit-identical to the driver " +
-      "iteration on the same graph — the >cap regime is real, not prose") {
-    val edges = Seq((1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 3, 4), (4, 1, 1))
-    val dir = graphDir(edges)
-    val driver = RelationalQueries.qPagerank(spark, dir, iters = 10)
-      .collect().map(r => (r.getInt(0), r.getDouble(2))).toSeq
-    // force the distributed regime by setting the driver cap below the
-    // edge count — same query, same graph, chained-join arithmetic
-    val dist = RelationalQueries.qPagerank(spark, dir, iters = 10,
-      driverEdgeCap = 2).collect().map(r => (r.getInt(0), r.getDouble(2))).toSeq
-    assert(dist == driver, s"regimes diverged:\n$dist\nvs\n$driver")
-  }
 
   test("q_attribution hand-computed: first touch credits the journey head, " +
       "last touch the preceding event; a bare purchase credits itself") {
@@ -127,85 +53,6 @@ class GraphProfilingSpec extends SparkSpec {
     assert(got.values.sum == 3)
   }
 
-  test("q_weighted_percentile hand-computed: crossings at exact integer " +
-      "thresholds; p50 equals the weighted median; no Window in the plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wp").toString
-    // group A: values 10 (w=1), 20 (w=2), 30 (w=1). tot=4.
-    // F(10)=1, F(20)=3, F(30)=4 ->
-    // p25: 1*100 >= 25*4=100 -> 10; p50: need 200 -> 20 (300>=200)
-    // p75: need 300 -> 20; p95: need 380 -> 30
-    Seq((10.0, 1.0), (20.0, 2.0), (30.0, 1.0))
-      .zipWithIndex.map { case ((v, w), i) =>
-        (i.toLong, 1L, 1L, 1, w, v, 0.0, 0.0, "A", "O",
-          java.sql.Timestamp.valueOf("2024-01-01 00:00:00")) }
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val got = RelationalQueries.qWeightedPercentile(spark, dir).collect()
-      .map(r => r.getInt(1) -> r.getDouble(2)).toMap
-    assert(got == Map(25 -> 10.0, 50 -> 20.0, 75 -> 20.0, 95 -> 30.0), s"$got")
-    // p50 must equal the weighted median on the same data
-    val med = RelationalQueries.qWeightedMedian(spark, dir).collect()
-      .head.getDouble(1)
-    assert(med == got(50), s"median $med vs p50 ${got(50)}")
-    val plan = RelationalQueries.qWeightedPercentile(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "histogram selection must stay window-free")
-  }
-
-  test("q_basket_lift hand-computed: planted co-purchases score the exact " +
-      "support/lift arithmetic; below-minCo pairs are cut") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bl").toString
-    // 4 orders: {1,2} x3 (strong pair), {1,3} once (below minCo=2)
-    val baskets = Seq(
-      (1L, Seq(101L, 102L)), (2L, Seq(101L, 102L)), (3L, Seq(101L, 102L)),
-      (4L, Seq(101L, 103L)))
-    baskets.flatMap { case (o, ps) => ps.zipWithIndex.map { case (pt, i) =>
-        (o, pt, 1L, i + 1, 1.0, 10.0, 0.0, 0.0, "N", "O",
-          java.sql.Timestamp.valueOf("2024-01-01 00:00:00")) } }
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val rows = RelationalQueries.qBasketLift(spark, dir).collect()
-    val got = rows
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
-    // co(101,102)=3, N=4, c101=4, c102=3 -> lift = 3*4/(4*3) = 1.0
-    assert(got == Map((101L, 102L) -> ((3L, 1.0))),
-      s"expected only the strong pair at lift 1.0: $got")
-    assert(rows.forall(_.getLong(4) == 0L), s"no basket hits the cap: $rows")
-  }
-
-  test("q_basket_lift hot-basket guard: oversized baskets are excluded " +
-      "from pairing and counted LOUDLY in capped_orders") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_blhot").toString
-    // 3 normal orders {101,102} + 2 identical 20-part hot baskets whose
-    // parts are all frequent (2 occurrences) so the apriori prune alone
-    // cannot save us -- the cap must
-    val baskets = Seq(1L, 2L, 3L).map(o => (o, Seq(101L, 102L))) ++
-      Seq(4L, 5L).map(o => (o, (200L until 220L).toSeq))
-    baskets.flatMap { case (o, ps) => ps.zipWithIndex.map { case (pt, i) =>
-        (o, pt, 1L, i + 1, 1.0, 10.0, 0.0, 0.0, "N", "O",
-          java.sql.Timestamp.valueOf("2024-01-01 00:00:00")) } }
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val rows = RelationalQueries.qBasketLift(spark, dir, basketCap = 10)
-      .collect()
-    val got = rows
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
-    // hot pairs gone; co(101,102)=3, N=5 (capped orders still count in
-    // N and part supports), c101=c102=3 -> lift = 3*5/9 = 1.666667
-    assert(got == Map((101L, 102L) -> ((3L, 1.666667))),
-      s"only the normal pair survives the cap: $got")
-    assert(rows.forall(_.getLong(4) == 2L), s"both hot baskets counted: " +
-      rows.mkString(", "))
-  }
-
   test("q_user_features hand-computed: the 7-day range frame includes today " +
       "and excludes day-7; gaps measure active-day spacing") {
     val dir = java.nio.file.Files.createTempDirectory("graft_uf").toString
@@ -225,66 +72,6 @@ class GraphProfilingSpec extends SparkSpec {
     assert(got(1L) == ((2L, 3L, 6.0, 1L)), s"day 1: $got")
     // day 8: window covers days 2..8 -> only day 8 itself; gap = 7
     assert(got(8L) == ((1L, 1L, 4.0, 7L)), s"day 8: $got")
-  }
-
-  test("q_feature_scale hand-computed: z-scores and min-max on a 2-point set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fs").toString
-    // quantities 2 and 4: mu=3, sd=1 -> z = -1, +1
-    // prices 10 and 30: mu=20, sd=10 -> z = -1, +1
-    // discounts 0.1 and 0.3 -> mm = 0, 1
-    Seq((1L, 2.0, 10.0, 0.1), (2L, 4.0, 30.0, 0.3))
-      .map { case (k, q, pr, d) => (k, 1L, 1L, 1, q, pr, d, 0.0, "N", "O",
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00")) }
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    val got = RelationalQueries.qFeatureScale(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .toMap
-    assert(got(1L) == ((-1.0, -1.0, 0.0)), s"row 1: $got")
-    assert(got(2L) == ((1.0, 1.0, 1.0)), s"row 2: $got")
-    // fit is one pass; transform is map-side — no row-grain shuffle
-    // besides the presentation sort's range exchange
-    val plan = RelationalQueries.qFeatureScale(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"transform must not shuffle the row grain:\n$plan")
-  }
-
-  test("q_fk_audit counts planted orphan foreign keys exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fk").toString
-    // 10 lineitems: orderkeys 1..10, but orders only 1..8 -> 2 orphans;
-    // suppkeys all valid; orders custkeys 1..8, customer has 1..8
-    (1 to 10).map(i => (i.toLong, 1L, 1L, 1, 1.0, 10.0, 0.0, 0.0, "N", "O",
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      .write.parquet(s"$dir/lineitem.parquet")
-    (1 to 8).map(i => (i.toLong, i.toLong, "O", 1.0,
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1-URGENT"))
-      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    (1 to 8).map(i => (i.toLong, s"c$i", 0, 0.0, "BUILDING"))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    Seq((1L, "s1", 0, 0.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-      .write.parquet(s"$dir/supplier.parquet")
-    val got = RelationalQueries.qFkAudit(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4))).toMap
-    assert(got("lineitem.l_orderkey->orders") == ((10L, 10L, 2L, 0.2)),
-      s"orphan detection: $got")
-    assert(got("orders.o_custkey->customer") == ((8L, 8L, 0L, 0.0)))
-    assert(got("lineitem.l_suppkey->supplier") == ((10L, 1L, 0L, 0.0)))
-    // the key-projected anti-join must read ONLY the key column
-    val plan = RelationalQueries.qFkAudit(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("l_extendedprice"),
-      "FK audit must not read fact payload columns")
   }
 
   test("q_skew_audit flags the planted hot key") {

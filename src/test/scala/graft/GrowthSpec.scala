@@ -74,35 +74,6 @@ class GrowthSpec extends SparkSpec {
     assert(rows.forall(_.getLong(0) >= 0L), "lateness is never negative")
   }
 
-  test("q_revenue_bridge hand-computed: volume and price effects sum to " +
-      "the delta") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bridge").toString
-    // r9: the period split is the lower-MEDIAN order day (data-derived),
-    // so with 5 distinct days the base period holds the first 3 orders.
-    // BUILDING: base 3 orders of $100 (avg 100); current 2 of $120
-    // -> delta -60, volume = (2-3)*100 = -100, price = 2*(120-100) = +40
-    Seq(
-      (1L, 10L, 100.0, ym(1994, 1)), (2L, 10L, 100.0, ym(1994, 2)),
-      (3L, 10L, 100.0, ym(1994, 3)), (4L, 11L, 120.0, ym(1998, 1)),
-      (5L, 11L, 120.0, ym(1998, 2)))
-      .toDF("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-      .write.parquet(s"$dir/orders.parquet")
-    Seq((10L, "BUILDING"), (11L, "BUILDING"))
-      .toDF("c_custkey", "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    val r = RelationalQueries.qRevenueBridge(spark, dir).collect()(0)
-    assert(r.getString(0) == "BUILDING" &&
-      r.getLong(1) == 3 && r.getLong(2) == 2, s"$r")
-    assert(r.getDouble(3) == -60.0, s"delta: $r")
-    assert(r.getDouble(4) == -100.0, s"volume effect: $r")
-    assert(r.getDouble(5) == 40.0, s"price/mix effect: $r")
-    assert(r.getDouble(4) + r.getDouble(5) == r.getDouble(3),
-      "effects decompose the delta exactly")
-  }
-
-  private def ym(y: Int, m: Int) =
-    java.sql.Timestamp.valueOf(f"$y-$m%02d-01 00:00:00")
-
   test("q_concurrency hand-computed: interval stacking finds the overlap " +
       "peak; back-to-back sessions never double-count") {
     val dir = java.nio.file.Files.createTempDirectory("graft_conc").toString

@@ -14,21 +14,6 @@ class PlanAuditSpec extends SparkSpec {
     graft.SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
 
-  test("q1_agg: date filter pushed to parquet, columns pruned, partial aggregation") {
-    val p = plan("q1_agg")
-    assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
-    assert(p.contains("ReadSchema") && !p.contains("l_orderkey:"),
-      "scan must not read join keys the query never uses (ReadSchema would show l_orderkey:bigint)")
-    assert(p.contains("HashAggregate"), "expect map-side partial aggregation")
-  }
-
-  test("q3_join: selective dim broadcast, segment filter pushed, top-k as TakeOrdered") {
-    val p = plan("q3_join")
-    assert(p.contains("BroadcastHashJoin"), "BUILDING-segment customers must broadcast")
-    assert(p.contains("EqualTo(c_mktsegment,BUILDING)"), "dim filter must reach the scan")
-    assert(p.contains("TakeOrderedAndProject"), "LIMIT+ORDER BY must not globally sort")
-  }
-
   test("brute-force ANN: TakeOrderedAndProject with a broadcast query vector") {
     val p = plan("ann_dot_topk")
     assert(p.contains("TakeOrderedAndProject"),
@@ -377,12 +362,11 @@ class PlanAuditSpec extends SparkSpec {
   test("audit/segmentation trio: no Window at all — unpartitioned or " +
       "low-cardinality-key windows over corpus/entity frames are the one " +
       "plan class that funnels 100 TB through single tasks (the r7 weak set)") {
-    // qWeightedMedian: histogram selection; qGini/qRfm: range-partitioned
-    // PrefixSum rank. All window machinery is gone — the rank/running-sum
-    // lives in a mapPartitions over a repartitionByRange sort, and the
-    // offsets frame collects eagerly inside runningSum, so any Window
-    // in the RETURNED plan is a regression.
-    for (name <- Seq("q_weighted_median", "q_gini", "q_rfm")) {
+    // qRfm: range-partitioned PrefixSum rank. All window machinery is
+    // gone — the rank lives in a mapPartitions over a repartitionByRange
+    // sort, and the offsets frame collects eagerly inside runningSum, so
+    // any Window in the RETURNED plan is a regression.
+    for (name <- Seq("q_rfm")) {
       val p = plan(name)
       assert(!p.contains("Window"),
         s"$name must not contain a Window operator (single-task sort risk):\n$p")

@@ -4,34 +4,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.PrefixSum
-import graft.queries.Queries
 
 /**
- * The distributed prefix scan behind `q_window_fast`
- * ([[graft.operators.PrefixSum]]): bit-equality with the window
- * formulation AND the scale property the window cannot have — a single
- * giant key is SPLIT across range partitions instead of materializing
- * inside one task.
+ * The distributed prefix scan ([[graft.operators.PrefixSum]]) behind
+ * `q_rfm`, `q_concurrency` and `q_power_users`: exact running sums AND
+ * the scale property a window cannot have — a single giant key is
+ * SPLIT across range partitions instead of materializing inside one
+ * task.
  */
 class PrefixSumSpec extends SparkSpec {
 
   import spark.implicits._
-
-  test("q_window_fast equals the window formulation row-for-row on lineitem") {
-    val fast = Queries.qWindowFast(spark, sfDir).collect().map(_.toString).toSeq
-    val window = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate"), col("l_quantity").cast("decimal(18,4)").as("q"))
-      .withColumn("running_qty",
-        sum(col("q")).over(Window.partitionBy("l_suppkey")
-          .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double"))
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("running_qty"))
-      .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-      .collect().map(_.toString).toSeq
-    assert(fast == window)
-  }
 
   test("a single giant key splits across partitions; prefix still exact") {
     // ONE key, 50k rows: the window formulation would put all 50k rows

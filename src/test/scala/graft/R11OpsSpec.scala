@@ -8,8 +8,7 @@ import graft.queries.{RelationalQueries, TextQueries}
 
 /**
  * r11 operator wave, each replayed by hand on a constructed corpus:
- * t-closeness EMD over ordered classes, Kendall τ-b sign cases,
- * new-vs-returning revenue split, duplicated-5-gram fraction.
+ * Kendall τ-b sign cases, duplicated-5-gram fraction.
  */
 class R11OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -18,32 +17,6 @@ class R11OpsSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(s"graft_r11_$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s + " 00:00:00")
-
-  test("q_t_closeness: a mirrored-skew pair both land at the hand EMD " +
-      "(0.3) and fail the 0.2 release bar; a group matching the global " +
-      "distribution lands at 0") {
-    val dir = tmp("tclose")
-    Seq((1L, "SEG_A", 1L), (2L, "SEG_A", 2L), (3L, "SEG_A", 3L))
-      .toDF("c_custkey", "c_mktsegment", "c_nationkey")
-      .write.parquet(s"$dir/customer.parquet")
-    // global over groups 1+2: 5 URGENT + 5 LOW; group 3 mirrors the
-    // global mix exactly (1:1) => t = 0
-    val o =
-      (1 to 4).map(i => (100L + i, 1L, "1-URGENT")) ++
-        Seq((105L, 1L, "5-LOW")) ++
-        Seq((201L, 2L, "1-URGENT")) ++ (2 to 5).map(i => (200L + i, 2L, "5-LOW")) ++
-        Seq((301L, 3L, "1-URGENT"), (302L, 3L, "5-LOW"))
-    o.toDF("o_orderkey", "o_custkey", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val got = RelationalQueries.qTCloseness(spark, dir).collect()
-      .map(r => r.getAs[Long]("nation") ->
-        ((r.getAs[Double]("t"), r.getAs[Boolean]("releasable")))).toMap
-    // group 1: cum numerators |4·12 − 6·5| = 18 at every i (cls 2..4
-    // empty) => t = 4·18 / (5·12·4) = 0.3
-    assert(got(1L) == ((0.3, false)), got.toString)
-    assert(got(2L) == ((0.3, false)), got.toString)
-    assert(got(3L)._1 == 0.0 && got(3L)._2, got.toString)
-  }
 
   test("q_kendall: monotone series => tau 1; reversed => -1; the x-tie " +
       "pair is excluded from the denominator (tau-b)") {
@@ -79,26 +52,6 @@ class R11OpsSpec extends SparkSpec {
     assert(r3.getAs[Long]("conc") == 2 && r3.getAs[Long]("tie_x") == 1, r3)
     assert(r3.getAs[Double]("tau_b") ==
       math.floor(2.0 / math.sqrt(2.0 * 3.0) * 1e6 + 0.5) / 1e6, r3)
-  }
-
-  test("q_new_returning: first-month orders are new revenue, later " +
-      "months returning; counts and shares replay by hand") {
-    val dir = tmp("newret")
-    Seq(
-      (1L, 1L, ts("2024-01-05"), 10.00), // c1 first month: new
-      (2L, 1L, ts("2024-01-20"), 5.00),  // same first month: still new
-      (3L, 1L, ts("2024-02-10"), 20.00), // c1 returns in Feb
-      (4L, 2L, ts("2024-02-15"), 40.00)) // c2's first order: new in Feb
-      .toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-      .write.parquet(s"$dir/orders.parquet")
-    val got = RelationalQueries.qNewReturning(spark, dir).collect()
-      .map(r => r.getAs[String]("month") ->
-        ((r.getAs[Long]("total_cents"), r.getAs[Long]("new_cents"),
-          r.getAs[Long]("returning_cents"), r.getAs[Long]("n_new"),
-          r.getAs[Long]("n_returning"), r.getAs[Double]("new_share")))).toMap
-    assert(got("2024-01") == ((1500L, 1500L, 0L, 1L, 0L, 1.0)), got.toString)
-    assert(got("2024-02") == ((6000L, 4000L, 2000L, 1L, 1L,
-      math.floor(4000.0 / 6000.0 * 1e6 + 0.5) / 1e6)), got.toString)
   }
 
   test("text_dup_ngrams: distinct grams score 0, a repeated 5-word " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Queries, RelationalQueries}
+import graft.queries.RelationalQueries
 
 /** Extended relational operators at sf0.001 (oracle covers sf0.01). */
 class RelationalSpec extends SparkSpec {
@@ -204,66 +204,6 @@ class RelationalSpec extends SparkSpec {
     assert(got.size == 3)
   }
 
-  test("approx percentiles land within the exact values' neighborhood " +
-      "(registered bottom-k default AND the KLL engine alternative)") {
-    val exact = Queries.qPercentile(spark, sfDir).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    // registered default: k=1024 sample, binomial rank error ~3 %
-    Queries.qPercentileApprox(spark, sfDir).collect().foreach { r =>
-      val (p50, p95) = exact(r.getString(0))
-      assert(math.abs(r.getDouble(1) - p50) / p50 <= 0.05,
-        s"sample p50 ${r.getDouble(1)} vs exact $p50")
-      assert(math.abs(r.getDouble(2) - p95) / p95 <= 0.05,
-        s"sample p95 ${r.getDouble(2)} vs exact $p95")
-    }
-    // engine-native alternative: KLL at accuracy 10000
-    Queries.qPercentileApproxKll(spark, sfDir).collect().foreach { r =>
-      val (p50, p95) = exact(r.getString(0))
-      assert(math.abs(r.getDouble(1) - p50) / p50 <= 0.02,
-        s"KLL p50 ${r.getDouble(1)} vs exact $p50")
-      assert(math.abs(r.getDouble(2) - p95) / p95 <= 0.02,
-        s"KLL p95 ${r.getDouble(2)} vs exact $p95")
-    }
-  }
-
-  test("qPercentileFast equals the buffering percentile() aggregate row-for-row") {
-    val want = Queries.qPercentile(spark, sfDir).collect().map(_.toSeq)
-    val got = Queries.qPercentileFast(spark, sfDir).collect().map(_.toSeq)
-    assert(got.toSeq == want.toSeq)
-  }
-
-  test("qPercentileFast: a single giant group splits across partitions and stays exact") {
-    import spark.implicits._
-    // one group, 50k rows, many duplicate values — percentile() would
-    // buffer all 50k in one aggregation buffer; the histogram path
-    // must land the same interpolated answers from split partitions
-    val rows = (0 until 50000).map(i => ("A", (i % 997).toDouble, ((i * 7) % 41).toDouble))
-    val df = rows.toDF("l_returnflag", "l_extendedprice", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pctl").toString
-    df.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val want = Queries.qPercentile(spark, dir).collect().map(_.toSeq)
-    val got = Queries.qPercentileFast(spark, dir).collect().map(_.toSeq)
-    assert(got.toSeq == want.toSeq)
-    // the histogram really is split: the cumulative scan's input spans
-    // several range partitions even though there is ONE group
-    val h = spark.read.parquet(s"$dir/lineitem.parquet")
-      .groupBy($"l_returnflag", $"l_extendedprice").count()
-    assert(h.count() == 997, "value histogram collapses duplicates")
-  }
-
-  test("qPercentileFast: NULLs ignored in percentiles, counted in n_items, all-NULL group kept") {
-    import spark.implicits._
-    val rows: Seq[(String, Option[Double], Option[Double])] = Seq(
-      ("A", Some(1.0), Some(10.0)), ("A", Some(2.0), Some(20.0)), ("A", None, Some(30.0)),
-      ("B", None, None), ("B", None, None))
-    val df = rows.toDF("l_returnflag", "l_extendedprice", "l_quantity")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pctln").toString
-    df.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val want = Queries.qPercentile(spark, dir).collect().map(_.toSeq)
-    val got = Queries.qPercentileFast(spark, dir).collect().map(_.toSeq)
-    assert(got.toSeq == want.toSeq, s"got ${got.toSeq} want ${want.toSeq}")
-  }
-
   test("approx distinct is within error of exact (registered KMV default " +
       "AND the HLL engine alternative)") {
     // registered default: KMV bottom-k (k=64, relative error ~1/sqrt(k))
@@ -280,43 +220,6 @@ class RelationalSpec extends SparkSpec {
       assert(math.abs(approx - exact) / exact <= 0.05,
         s"HLL approx $approx vs exact $exact")
     }
-  }
-
-  test("cube emits all four grouping combinations") {
-    val rows = RelationalQueries.qCube(spark, sfDir).collect()
-    val shapes = rows.map(r => (r.isNullAt(0), r.isNullAt(1))).toSet
-    assert(shapes == Set((false, false), (false, true), (true, false), (true, true)))
-  }
-
-  test("bloomFilteredJoin equals the plain join and probes before the shuffle") {
-    import spark.implicits._
-    // 10k probe rows over 100 keys; build side holds 7 of them — most
-    // probe rows cannot match and must die at the bloom, not the join.
-    // Parquet-backed (a local Seq relation would let Catalyst fold the
-    // bloom Filter into the LocalTableScan at plan time)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
-    (0L until 10000L).map(i => (i % 100, i)).toDF("k", "v")
-      .write.mode("overwrite").parquet(s"$dir/probe")
-    Seq(3L, 17L, 31L, 42L, 56L, 77L, 98L).toDF("bk")
-      .write.mode("overwrite").parquet(s"$dir/build")
-    val probe = spark.read.parquet(s"$dir/probe")
-    val build = spark.read.parquet(s"$dir/build")
-    val got = graft.operators.SkewTools
-      .bloomFilteredJoin(probe, build.hint("merge"), "k", "bk")
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = probe.join(build, probe("k") === build("bk"))
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want)
-    assert(want.size == 700)
-    // the probe must appear in the executed plan (a codegen'd Filter on
-    // the probe side) and the join must be the shuffle shape the guard
-    // exists for — broadcast would make the bloom pointless
-    val df = graft.operators.SkewTools
-      .bloomFilteredJoin(probe, build.hint("merge"), "k", "bk")
-    df.collect() // finalize the adaptive plan first
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("bloom_might_contain"), plan)
-    assert(plan.contains("SortMergeJoin"), plan)
   }
 
   test("interval join: binning matches the exact window incl. boundaries, no nested loop") {
@@ -363,90 +266,6 @@ class RelationalSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got(1L) == ((3L, 11.0)), got)
     assert(got(2L) == ((3L, 26.0)), got)
-  }
-
-  test("bloomFilteredJoin handles string keys (hash-fingerprinted, not cast)") {
-    import spark.implicits._
-    val probe = Seq(("u-1", "a"), ("u-2", "b"), ("u-3", "c")).toDF("k", "v")
-    val build = Seq("u-1", "u-3").toDF("bk")
-    val got = graft.operators.SkewTools.bloomFilteredJoin(probe, build, "k", "bk")
-      .select("k", "v").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(got == Set(("u-1", "a"), ("u-3", "c")))
-  }
-
-  test("bloomFilteredJoin: null probe keys behave like the plain inner join") {
-    import spark.implicits._
-    val probe = Seq((Some(1L), "a"), (None, "b"), (Some(9L), "c")).toDF("k", "v")
-    val build = Seq(1L, 9L).toDF("bk")
-    val got = graft.operators.SkewTools.bloomFilteredJoin(probe, build, "k", "bk")
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == Set((1L, "a"), (9L, "c")))
-  }
-
-  private def writeParts(names: Seq[String]): String = {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzy").toString
-    names.zipWithIndex.map { case (n, i) => (i.toLong, n) }
-      .toDF("p_partkey", "p_name")
-      .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    dir
-  }
-
-  private def naiveLev(names: Seq[String], maxDist: Int): Set[(String, String, Long)] = {
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
-        if (i == 0) j else if (j == 0) i else 0 }
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    val distinct = names.distinct
-    (for {
-      a <- distinct; b <- distinct if a < b
-      d = lev(a, b) if d >= 1 && d <= maxDist
-    } yield (a, b, d.toLong)).toSet
-  }
-
-  test("qFuzzyJoin: blocked plan reproduces the naive all-pairs scan exactly") {
-    // short zero-common-gram pairs, repeated-gram multisets, duplicates,
-    // a distance-3 near-miss, and an insertion that shifts every gram
-    val names = Seq(
-      "ab", "cd",                       // dist 2, zero shared bigrams (short branch)
-      "aaaa", "aaab", "aaxx",           // multiset grams; aaaa↔aaxx dist 2
-      "blue bolt", "blue belt",         // substitution, dist 1
-      "red widget", "red widgets",      // insertion at the end, dist 1
-      "red widget",                     // duplicate row: domain must collapse
-      "green gear", "green gears",      // dist 1
-      "small ring", "small rings",      // dist 1
-      "wholly unrelated name")          // matches nothing
-    val dir = writeParts(names)
-    val got = graft.queries.RelationalQueries.qFuzzyJoin(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == naiveLev(names, 2), s"got $got\nwant ${naiveLev(names, 2)}")
-    assert(got.contains(("ab", "cd", 2L)), "zero-shared-gram short pair must be found")
-    assert(got.contains(("aaaa", "aaab", 1L)))
-  }
-
-  test("qFuzzyJoin on the sf0.001 part table matches the naive scan") {
-    val names = spark.read.parquet(s"$sfDir/part.parquet")
-      .select("p_name").collect().map(_.getString(0)).toSeq
-    val got = graft.queries.RelationalQueries.qFuzzyJoin(spark, sfDir)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == naiveLev(names, 2))
-    assert(got.nonEmpty, "the synthetic color×noun names must contain near-pairs")
-  }
-
-  test("q_bootstrap: CI brackets the mean, replays deterministically") {
-    val a = graft.queries.RelationalQueries.qBootstrap(spark, sfDir).collect().head
-    val b = graft.queries.RelationalQueries.qBootstrap(spark, sfDir).collect().head
-    assert(a == b, "hash-seeded bootstrap must replay")
-    val (mean, lo, hi) = (a.getDouble(0), a.getDouble(1), a.getDouble(2))
-    assert(lo < mean && mean < hi, s"CI must bracket the mean: $a")
-    assert(a.getLong(3) == 50L)
-    // CI width is plausibly scaled: within (0, 20%) of the mean on
-    // this n≈150 sample of a bounded price distribution
-    assert((hi - lo) / mean > 0 && (hi - lo) / mean < 0.2, s"width: $a")
   }
 
   test("q_expectations: the length rule fails honestly, the contract rules pass") {
@@ -537,28 +356,6 @@ class RelationalSpec extends SparkSpec {
       .agg(graft.functions.kmv_bottomk(col("u"), 64).as("sk"))
       .select(max(size(col("sk")))).head().getInt(0)
     assert(maxSk <= 64)
-  }
-test("q_quantile_sketch: sample quantiles within rank-error bounds of " +
-      "the exact twin; sample is bounded at k") {
-    import org.apache.spark.sql.functions._
-    val sk = Queries.qQuantileSketch(spark, sfDir).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    val ex = Queries.qPercentile(spark, sfDir).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(sk.keySet == ex.keySet)
-    // rank error ~ 1/sqrt(256): the p50 estimate should sit within the
-    // exact [p35, p65] band; check via value distance relative to the
-    // exact p95-p50 spread (a loose, deterministic bound)
-    sk.foreach { case (g, (p50, p95, q50)) =>
-      val (e50, e95, eq50) = ex(g)
-      val spread = math.max(e95 - e50, 1.0)
-      assert(math.abs(p50 - e50) <= spread,
-        s"$g p50: $p50 vs exact $e50 (spread $spread)")
-      assert(math.abs(p95 - e95) <= spread,
-        s"$g p95: $p95 vs exact $e95")
-      assert(math.abs(q50 - eq50) <= math.max(eq50 * 0.5, 5.0),
-        s"$g p50_qty: $q50 vs exact $eq50")
-    }
   }
 
   test("q_ewma: the integer recurrence replays driver-side; a level shift " +

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.queries.RelationalQueries
 
 /**
- * r9 analytics additions: two-sample KS (exact packed-prefix CDFs),
- * winsorized/trimmed robust stats, HHI concentration, Kaplan–Meier
- * survival — each pinned to hand-computed ground truth.
+ * r9 analytics additions: winsorized/trimmed robust stats,
+ * Kaplan–Meier survival and engagement concentration — each pinned to
+ * hand-computed ground truth.
  */
 class RobustStatsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,27 +21,6 @@ class RobustStatsSpec extends SparkSpec {
         "o_orderdate", "o_orderpriority")
       .write.parquet(s"$dir/orders.parquet")
     dir
-  }
-
-  test("q_ks_test hand-computed: fully separated periods score D = 1 and " +
-      "reject; identical periods score D = 0 and do not") {
-    // 4 base orders (day 1: the lower-median day) at 10/20, 4 current
-    // (day 100) at 30/40 -> the CDFs never overlap: D = 1
-    val dir = ordersDir(Seq(
-      (1L, 10.0, 1), (2L, 20.0, 1), (3L, 10.0, 1), (4L, 20.0, 1),
-      (5L, 30.0, 100), (6L, 40.0, 100), (7L, 30.0, 100), (8L, 40.0, 100)))
-    val r = RelationalQueries.qKsTest(spark, dir).collect()(0)
-    assert(r.getLong(0) == 4 && r.getLong(1) == 4, s"$r")
-    assert(r.getDouble(2) == 1.0, s"full separation: $r")
-    // crit = 1.358*sqrt(8/16) = 0.960251...
-    assert(math.abs(r.getDouble(3) - 0.960251) < 1e-5, s"$r")
-    assert(r.getBoolean(4), s"must reject at D=1: $r")
-
-    val same = ordersDir(Seq(
-      (1L, 10.0, 1), (2L, 20.0, 1), (3L, 10.0, 100), (4L, 20.0, 100)))
-    val r2 = RelationalQueries.qKsTest(spark, same).collect()(0)
-    assert(r2.getDouble(2) == 0.0 && !r2.getBoolean(4),
-      s"identical CDFs: $r2")
   }
 
   test("q_winsorize hand-computed: cuts at the exact p05/p95 crossings, " +
@@ -62,25 +41,6 @@ class RobustStatsSpec extends SparkSpec {
     assert(r.getDouble(4) == wantStd, s"win_std: $r vs $wantStd")
   }
 
-  test("q_hhi hand-computed: a 75/25 duopoly scores 6250; a monopoly 10000") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hhi").toString
-    Seq((1L, "AUTO"), (2L, "AUTO"), (3L, "SOLO"))
-      .toDF("c_custkey", "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    Seq((10L, 1L, 75.0), (11L, 2L, 25.0), (12L, 3L, 42.0))
-      .map { case (k, c, p) =>
-        (k, c, "F", p, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-          "1-URGENT") }
-      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val got = RelationalQueries.qHhi(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2),
-        r.getDouble(3))).toMap
-    assert(got("AUTO") == ((2L, 6250.0, 0.75)), s"$got")
-    assert(got("SOLO") == ((1L, 10000.0, 1.0)), s"$got")
-  }
-
   test("q_survival hand-computed: product-limit steps and censoring on the " +
       "final active day") {
     val dir = java.nio.file.Files.createTempDirectory("graft_km").toString
@@ -99,20 +59,6 @@ class RobustStatsSpec extends SparkSpec {
     assert(got(0L) == ((3L, 1L, 0L, 0.666667)), s"$got")
     assert(got(1L) == ((2L, 1L, 0L, 0.333333)), s"$got")
     assert(got(2L) == ((1L, 0L, 1L, 0.333333)), s"$got")
-  }
-
-  test("q_autocorr hand-computed: an alternating series scores -0.75 at " +
-      "lag 1; a lag with no pairs NULL-degrades") {
-    // days 0..3, revenue 1,2,1,2 dollars -> cents [100,200,100,200]:
-    // mean 150, devs [-50,50,-50,50], den = 10000, lag-1 num = -7500
-    val dir = ordersDir(Seq(
-      (1L, 1.0, 0), (2L, 2.0, 1), (3L, 1.0, 2), (4L, 2.0, 3)))
-    val got = RelationalQueries.qAutocorr(spark, dir).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) Double.NaN else r.getDouble(3))).toMap
-    assert(got(1)._1 == 4 && got(1)._2 == 3, s"$got")
-    assert(got(1)._3 == -0.75, s"lag-1 ACF: $got")
-    assert(got(7)._2 == 0 && got(7)._3.isNaN, s"no lag-7 pairs: $got")
   }
 
   test("mm_luma round-trip: the decoded pixel stats equal the stats of the " +
@@ -176,11 +122,5 @@ class RobustStatsSpec extends SparkSpec {
       .map(r => r.getInt(0) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(g2(10) == ((1L, 0.2)), s"partial slice at the tie: $g2")
     assert(g2(1) == ((1L, 0.2)), s"ceil keeps k >= 1: $g2")
-  }
-
-  test("q_ks_test plan: the CDF pass is Window-free (one packed PrefixSum)") {
-    val plan = RelationalQueries.qKsTest(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("WindowExec"), s"KS must stay window-free:\n$plan")
   }
 }

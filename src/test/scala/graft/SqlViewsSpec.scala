@@ -14,7 +14,7 @@ class SqlViewsSpec extends SparkSpec {
 
   test("three families end-to-end through spark.sql only: view rows " +
       "equal the direct operator bit-for-bit") {
-    val keys = Seq("q_chisq", "dedup_exact", "ann_dot_topk", "text_quality")
+    val keys = Seq("q_kanon", "dedup_exact", "ann_dot_topk", "text_quality")
     val names = Queries.createViews(spark, sfDir, keys)
     assert(names == keys.map("graft_" + _), names.toString)
     keys.foreach { k =>
@@ -44,6 +44,17 @@ class SqlViewsSpec extends SparkSpec {
         |JOIN documents_raw d ON d.doc_id = t.vec_id
         |ORDER BY t.score DESC, t.vec_id LIMIT 3""".stripMargin).collect()
     assert(joined.length == 3 && joined.forall(_.getString(1) != null))
+  }
+
+  test("registry and oracle map name the same keys, apart from the " +
+      "three oracles generated at run time") {
+    // check_oracle.py walks the oracle map: an oracle with no builder
+    // fails there, but a builder with no oracle would never be checked
+    val stale = Queries.oracles.keySet -- Queries.all.keySet
+    assert(stale.isEmpty, s"oracles with no registered key: $stale")
+    val unchecked = Queries.all.keySet -- Queries.oracles.keySet
+    assert(unchecked.subsetOf(Set("ann_pq_topk", "ann_ivfpq", "text_bpe")),
+      s"registered keys with no oracle: $unchecked")
   }
 
   test("unknown keys refuse loudly") {

@@ -135,44 +135,6 @@ class StreamingRecoverySpec extends SparkSpec {
     assert(run2.intersect(run1).isEmpty, "no replayed emissions")
   }
 
-  test("purchaseGapStream survives a kill + restart: the cross-run gap " +
-      "is measured against the RECOVERED last day, exactly once") {
-    implicit val sqlCtx = spark.sqlContext
-    val cp = cpDir("pgap")
-    val in = MemoryStream[(Long, Long, Long)]
-    val df = in.toDF().toDF("cust", "order_key", "d")
-    val buf1 = new ConcurrentLinkedQueue[(Long, Long, Long)]
-    val buf2 = new ConcurrentLinkedQueue[(Long, Long, Long)]
-    def sinkTo(buf: ConcurrentLinkedQueue[(Long, Long, Long)])(
-        b: Dataset[graft.streaming.GapEmit], id: Long): Unit =
-      b.collect().foreach(e => buf.add((e.cust, e.gap_days, e.gap_weeks)))
-
-    val q1 = StreamOps.purchaseGapStream(df)
-      .writeStream.foreachBatch(sinkTo(buf1) _)
-      .option("checkpointLocation", cp)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData((1L, 1L, 10L), (1L, 2L, 11L))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val run1 = drain(buf1)
-
-    // arrives while the query is down: 9 days after the stored last day
-    in.addData((1L, 3L, 20L))
-
-    val q2 = StreamOps.purchaseGapStream(df)
-      .writeStream.foreachBatch(sinkTo(buf2) _)
-      .option("checkpointLocation", cp)
-      .outputMode(OutputMode.Append()).start()
-    try q2.processAllAvailable() finally q2.stop()
-    val run2 = drain(buf2)
-
-    assert(run1 == Seq((1L, 1L, 0L)), s"run1: $run1")
-    assert(run2 == Seq((1L, 9L, 1L)),
-      s"9-day gap vs the RECOVERED day 11 -> week 1, exactly once: $run2")
-    assert(run2.intersect(run1).isEmpty, "no replayed emissions")
-  }
-
   test("editProbeStream survives a kill + restart: documents arriving " +
       "while the query is down are probed exactly once on recovery, " +
       "including against corpus appended between the runs") {

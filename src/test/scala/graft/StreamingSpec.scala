@@ -669,33 +669,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("scalerStream: running moments equal a batch refit after every " +
-      "micro-batch (decimal order-independence)") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Double)]
-    val q = StreamOps.scalerStream(in.toDF().toDF("metric", "v"))
-      .writeStream.format("memory").queryName("scaler_stream")
-      .outputMode(OutputMode.Complete()).start()
-    try {
-      val b1 = Seq(("qty", 2.0), ("qty", 4.0), ("price", 10.0))
-      val b2 = Seq(("qty", 6.0), ("price", 30.0), ("price", 20.0))
-      in.addData(b1: _*)
-      q.processAllAvailable()
-      in.addData(b2: _*)
-      q.processAllAvailable()
-      val got = spark.table("scaler_stream").collect()
-        .map(r => r.getString(0) -> (r.getLong(1),
-          r.getDecimal(2).doubleValue, r.getDecimal(3).doubleValue)).toMap
-      // batch refit over everything seen
-      val all = (b1 ++ b2).groupBy(_._1)
-      all.foreach { case (m, vs) =>
-        val xs = vs.map(_._2)
-        assert(got(m) == ((xs.size.toLong, xs.sum, xs.map(x => x * x).sum)),
-          s"$m: ${got(m)} vs batch refit")
-      }
-    } finally q.stop()
-  }
-
   test("attributionStream: cross-batch credits match the batch windows; " +
       "state is two strings per user") {
     implicit val sqlCtx = spark.sqlContext
@@ -1033,87 +1006,6 @@ test("kmvDistinctStream: bounded sketch state across micro-batches equals " +
       assert(r.getAs[Double]("psi") == psiBatch,
         s"stream PSI ${r.getAs[Double]("psi")} != batch $psiBatch")
       assert(r.getAs[Seq[Long]]("bin_counts").sum == 10L, s"$r")
-    } finally q.stop()
-  }
-
-  test("purchaseGapStream: cross-batch gaps emit from 8-byte state and " +
-      "the week-bucket multiset equals the batch histogram") {
-    import spark.implicits._
-    // cust 1: days 1 | 8, 9 (the 7-day gap SPANS the two micro-batches)
-    // cust 2: days 5, 5 in one batch (same-day repeat -> bucket 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pgs").toString
-    Seq((1L, 1L, 1), (2L, 1L, 8), (3L, 1L, 9), (4L, 2L, 5), (5L, 2L, 5))
-      .map { case (k, c, day) =>
-        (k, c, "O", 1.0, new Timestamp(day * 86400000L), "1-URGENT")
-      }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val batch = graft.queries.RelationalQueries.qPurchaseGap(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Long, Long)]
-    val q = StreamOps.purchaseGapStream(
-        in.toDF().toDF("cust", "order_key", "d"))
-      .writeStream.format("memory").queryName("gap_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData((1L, 1L, 1L), (2L, 4L, 5L), (2L, 5L, 5L))
-      q.processAllAvailable()
-      in.addData((1L, 2L, 8L), (1L, 3L, 9L))
-      q.processAllAvailable()
-      val got = spark.table("gap_stream").collect()
-        .groupBy(_.getAs[Long]("gap_weeks")).map { case (k, v) => k -> v.length.toLong }
-      assert(got == batch,
-        s"streamed gap histogram $got != batch $batch")
-      // the 7-day gap crossed the micro-batch boundary — it can only
-      // come from recovered state
-      val wk1 = spark.table("gap_stream").collect()
-        .filter(_.getAs[Long]("gap_weeks") == 1L)
-      assert(wk1.length == 1 && wk1.head.getAs[Long]("gap_days") == 7L)
-    } finally q.stop()
-  }
-
-  test("chisqStream: one-row bounded state replays the batch chi-squared " +
-      "exactly; out-of-vocabulary rows are counted loudly, never binned") {
-    import spark.implicits._
-    // the qChisq diagonal hand case: 10x (A,X), 10x (B,Y) -> chi2 = 20, V = 1
-    val dir = java.nio.file.Files.createTempDirectory("graft_chis").toString
-    (1 to 20).map { i =>
-      val (st, pr) = if (i <= 10) ("A", "X") else ("B", "Y")
-      (i.toLong, i.toLong % 3, st, 1.0,
-        new Timestamp(86400000L), pr)
-    }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$dir/orders.parquet")
-    val batch = graft.queries.RelationalQueries.qChisq(spark, dir)
-      .collect().head
-    assert(batch.getAs[Double]("chi2") == 20.0)
-
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, String)]
-    val q = StreamOps.chisqStream(
-        in.toDF().toDF("status", "priority"),
-        statuses = Seq("A", "B"), priorities = Seq("X", "Y"))
-      .writeStream.format("memory").queryName("chisq_stream")
-      .outputMode(OutputMode.Complete()).start()
-    try {
-      in.addData((1 to 10).map(_ => ("A", "X")): _*); q.processAllAvailable()
-      // second micro-batch completes the grid AND plants one
-      // out-of-vocab row — it must land in n_other, not in any cell
-      in.addData((1 to 10).map(_ => ("B", "Y")) :+ (("Z", "X")): _*)
-      q.processAllAvailable()
-      val r = spark.table("chisq_stream").collect().last
-      assert(r.getAs[Long]("n") == 20L, s"$r")
-      assert(r.getAs[Long]("n_other") == 1L, s"$r")
-      assert(r.getAs[Double]("chi2") == batch.getAs[Double]("chi2"),
-        s"stream chi2 ${r.getAs[Double]("chi2")} != batch " +
-          s"${batch.getAs[Double]("chi2")}")
-      assert(r.getAs[Long]("dof") == batch.getAs[Long]("dof"), s"$r")
-      assert(r.getAs[Double]("cramers_v") ==
-        batch.getAs[Double]("cramers_v"), s"$r")
-      assert(r.getSeq[Long](r.fieldIndex("cell_counts")).toList ==
-        List(10L, 0L, 0L, 10L), s"$r")
     } finally q.stop()
   }
 }

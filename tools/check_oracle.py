@@ -5,9 +5,12 @@ Usage: check_oracle.py <sfDir> <verifyOutDir>
 
 Reads each <verifyOutDir>/<name>/ parquet (Spark result), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the sfDir
-tables, sorts columns by name + rows, and diffs values.
+tables, sorts columns by name + rows, and diffs values. A result
+directory with no oracle entry prints `UNCHECKED <name>`: it is not
+counted in the summary, so the summary alone cannot show it.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -65,6 +68,9 @@ def main(sf_dir: str, out_dir: str) -> None:
                 print(f"ok   {name} ({len(g)} rows)")
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {type(e).__name__}: {e}")
+    for name in sorted(os.listdir(out_dir)):
+        if name not in oracles and os.path.isdir(f"{out_dir}/{name}"):
+            print(f"UNCHECKED {name}")
     print(f"{n_ok}/{len(oracles)} matched")
 
 
