@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Verify.jstr
+import graft.plans.Resident
 
 /**
  * The one measuring path, and the diagnostic main built on it.
@@ -41,11 +42,12 @@ object Diag {
 
   /** What one job group ran. Stage and shuffle counts do not swing run
     * to run the way sub-second walls do; the last stage is the one a
-    * cancelled run died in. */
+    * cancelled run died in. `residentBytes` is what the run added to
+    * `SemanticIndex` resident blocks (off-heap vectors plus rows). */
   final case class Counters(jobs: Int = 0, stages: Int = 0,
       shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L,
       shuffleWriteRecords: Long = 0L, inputRecords: Long = 0L,
-      lastStage: String = "", lastStageTasks: Int = 0)
+      lastStage: String = "", lastStageTasks: Int = 0, residentBytes: Long = 0L)
 
   sealed trait Outcome {
     /** The wall in seconds of a run that finished, else NaN. */
@@ -99,9 +101,15 @@ object Diag {
     val group = s"graft-run-${runIds.incrementAndGet()}:$key"
     val telemetry = new GroupTelemetry(group)
     sc.addSparkListener(telemetry)
+    val residentBefore = Resident.bytesByRdd(sc)
     // a timed-out run may still be posting events, so a drain that
     // times out is tolerated
-    def counters(): Counters = { Try(ListenerBusBridge.drain(sc)); telemetry.counters }
+    def counters(): Counters = {
+      Try(ListenerBusBridge.drain(sc))
+      val built = Resident.bytesByRdd(sc).iterator
+        .map { case (id, b) => math.max(0L, b - residentBefore.getOrElse(id, 0L)) }.sum
+      telemetry.counters.copy(residentBytes = built)
+    }
     try {
       val t0 = System.nanoTime()
       val done = Future {
@@ -125,7 +133,8 @@ object Diag {
   }
 
   /** The JSON line of an outcome: status, the wall of a finished run,
-    * the counters of a run that did not throw, the message of one that
+    * the counters of a run that did not throw (`resident_bytes` only
+    * for a run that built resident blocks), the message of one that
     * did, then `extra` fields (already JSON values). */
   def line(key: String, o: Outcome, extra: Seq[(String, String)] = Nil): String = {
     def counters(c: Counters): String =
@@ -134,7 +143,8 @@ object Diag {
         s""""shuffle_write_bytes":${c.shuffleWriteBytes},""" +
         s""""shuffle_write_records":${c.shuffleWriteRecords},""" +
         s""""input_records":${c.inputRecords},""" +
-        s""""last_stage":${jstr(c.lastStage)},"last_stage_tasks":${c.lastStageTasks}"""
+        s""""last_stage":${jstr(c.lastStage)},"last_stage_tasks":${c.lastStageTasks}""" +
+        (if (c.residentBytes > 0) s""","resident_bytes":${c.residentBytes}""" else "")
     val body = o match {
       case Outcome.Ok(wall, c) => s""""status":"ok","wall_s":${Bench.fmt(wall)},${counters(c)}"""
       case Outcome.Error(msg) => s""""status":"error","error":${jstr(msg)}"""

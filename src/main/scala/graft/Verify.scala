@@ -24,6 +24,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = SparkEntry.session("graft-verify")
+    // a generated-code compile error fails its key (no result, so the
+    // oracle check reports it) instead of running interpreted
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

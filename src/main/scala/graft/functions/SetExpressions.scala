@@ -165,14 +165,17 @@ case class DictBitmap(child: Expression, dict: LongIntMap, widthBytes: Int)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("dict", dict, classOf[LongIntMap].getName)
+    // fresh names: the enclosing generated method may already declare
+    // an `i` (Janino rejects the redefinition)
+    val (out, i, idx) = (ctx.freshName("out"), ctx.freshName("i"), ctx.freshName("idx"))
     nullSafeCodeGen(ctx, ev, a => {
       s"""
-         |byte[] out = new byte[$widthBytes];
-         |for (int i = 0; i < $a.numElements(); i++) {
-         |  int idx = $ref.get($a.getLong(i));
-         |  if (idx >= 0) out[idx >> 3] = (byte)(out[idx >> 3] | (1 << (idx & 7)));
+         |byte[] $out = new byte[$widthBytes];
+         |for (int $i = 0; $i < $a.numElements(); $i++) {
+         |  int $idx = $ref.get($a.getLong($i));
+         |  if ($idx >= 0) $out[$idx >> 3] = (byte)($out[$idx >> 3] | (1 << ($idx & 7)));
          |}
-         |${ev.value} = out;
+         |${ev.value} = $out;
        """.stripMargin
     })
   }

@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.plans.VectorTopK
+import graft.plans.{Resident, ResidentBlock, VectorTopK}
 
 /** Duplicate-handling strategies, mirroring the reference enum
   * (/root/reference/ChatAIze.SemanticIndex/DuplicateHandling.cs). */
@@ -47,12 +47,25 @@ final class DuplicateItemException(msg: String) extends RuntimeException(msg)
  *    whole-item equality, implemented as relational anti/semi joins
  *    rather than O(n) scans per insert: adds are batch-first.
  *  - `search` is a dot-product (or cosine) top-k that Spark plans as
- *    one columnar operator ([[graft.plans.VectorTopK]]): each task
- *    scores the scan's float vectors in place into per-query k-heaps,
- *    copies only the rows that enter a heap, and the driver merges
- *    #partitions×q×k rows — no corpus shuffle, one Spark stage per
- *    collect, scales linearly with executors. `searchMany` runs the
- *    same operator for q queries in one scan.
+ *    one operator ([[graft.plans.VectorTopK]]): each task scores its
+ *    partition's vectors into per-query k-heaps, copies only the rows
+ *    that enter a heap, and the driver merges #partitions×q×k rows —
+ *    no corpus shuffle, one Spark stage per collect, scales linearly
+ *    with executors. `searchMany` runs the same operator for q queries
+ *    in one pass.
+ *  - Like the reference's resident `List<T>`, each instance searches a
+ *    resident form of its records ([[graft.plans.Resident]]), not a
+ *    parquet decode per query: its first search scans `records` once
+ *    and, in the same stage, keeps one block per scan partition — the
+ *    vectors in a contiguous off-heap float region, the other columns
+ *    as off-heap rows — cached `MEMORY_ONLY` across the executors. Later
+ *    searches read only the blocks; an evicted block is rebuilt from
+ *    the scan's lineage. [[residentBytes]] reports what is held.
+ *  - Snapshot rule: an instance answers from what its first search
+ *    read. Files written under a loaded path afterwards are not seen
+ *    until the path is loaded again. Mutators return a new instance,
+ *    which builds its own blocks; [[count]], [[contains]], [[save]] and
+ *    the mutators themselves never build any.
  */
 final class SemanticIndex private (
     val spark: SparkSession,
@@ -64,6 +77,19 @@ final class SemanticIndex private (
 
   private def withRecords(df: DataFrame): SemanticIndex =
     new SemanticIndex(spark, df, embedder, duplicateHandling)
+
+  // this instance's records, held resident by its first search
+  @transient private lazy val resident = new Resident
+
+  /** Bytes this instance's resident blocks hold now: its vectors as
+    * floats off-heap, plus the other columns and a small header per
+    * block; 0 before the first search. Not heap: the vector and row
+    * bytes live in direct buffers. */
+  def residentBytes: Long = resident.bytes(spark.sparkContext)
+
+  /** The RDD of this instance's resident blocks, once a search has
+    * built it; unpersisting it makes the next search build it again. */
+  def residentBlocks: Option[org.apache.spark.rdd.RDD[ResidentBlock]] = resident.rdd
 
   /** Number of records (reference `Count`). */
   def count(): Long = records.count()
@@ -150,11 +176,13 @@ final class SemanticIndex private (
    * must not be negative; `k` = 0 gives no rows.
    */
   def search(embedding: Array[Float], k: Int = 10): DataFrame =
-    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = false, batch = false)
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = false, batch = false,
+      Some(resident))
 
   /** Cosine variant for non-normalized embedding spaces. */
   def searchCosine(embedding: Array[Float], k: Int = 10): DataFrame =
-    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = true, batch = false)
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = true, batch = false,
+      Some(resident))
 
   /** Top-1 (reference `SearchFirst`). */
   def searchFirst(embedding: Array[Float]): Option[String] =
@@ -177,7 +205,8 @@ final class SemanticIndex private (
    * input type), `item`, `score`, `rank`.
    */
   def searchMany(queries: DataFrame, k: Int = 10): DataFrame =
-    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.collect(queries), k, cosine = false, batch = true)
+    VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.collect(queries), k, cosine = false, batch = true,
+      Some(resident))
 
   /** Text-query search (reference `SearchAsync(query, count)`):
     * embed the query with the same embedder, then vector search. */

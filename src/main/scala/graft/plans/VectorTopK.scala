@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{ColumnarToRowExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.Platform
 
 import graft.functions.{ItemTopKHeap, QueryBatch}
 
@@ -31,12 +32,17 @@ import graft.functions.{ItemTopKHeap, QueryBatch}
  * `Seq(query_id, score, rank)` for a batch, whose output is `query_id`,
  * `item`, `score`, `rank`. `item` and `embedding` are attributes of the
  * child, so column pruning keeps them under the node.
+ *
+ * With a [[Resident]] handle the node reads every child column, so that
+ * the child stays the whole record plan its blocks are built from.
  */
 case class VectorTopK(item: Attribute, embedding: Attribute, queries: QueryBatch, k: Int,
-    cosine: Boolean, produced: Seq[Attribute], child: LogicalPlan)
+    cosine: Boolean, produced: Seq[Attribute], resident: Option[Resident], child: LogicalPlan)
     extends UnaryNode with MultiInstanceRelation {
   override def output: Seq[Attribute] = VectorTopK.output(item, produced, child.output)
   override def producedAttributes: AttributeSet = AttributeSet(produced)
+  override def references: AttributeSet =
+    if (resident.isDefined) child.outputSet else super.references
   // a frame read twice in one plan (a self-join) gets fresh produced
   // attributes on one side; Spark's DeduplicateRelations renews the
   // child's relations before it asks this node for a new instance
@@ -48,7 +54,8 @@ case class VectorTopK(item: Attribute, embedding: Attribute, queries: QueryBatch
     val rows = child.stats.rowCount.fold(BigInt(maxRows.get))(_.min(maxRows.get))
     Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows))
   }
-  override protected def stringArgs: Iterator[Any] = VectorTopK.args(cosine, k, queries, item, embedding)
+  override protected def stringArgs: Iterator[Any] =
+    VectorTopK.args(cosine, k, queries, item, embedding, resident)
   override protected def withNewChildInternal(c: LogicalPlan): VectorTopK = copy(child = c)
 }
 
@@ -59,20 +66,25 @@ object VectorTopK {
       case Seq(queryId, score, rank) => Seq(queryId, item, score, rank)
     }
 
-  /** The explain form: metric, k, query count and dims, never the floats. */
+  /** The explain form: metric, k, query count and dims, never the
+    * floats; and whether the records are read from resident blocks. */
   private[plans] def args(cosine: Boolean, k: Int, queries: QueryBatch, item: Attribute,
-      embedding: Attribute): Iterator[Any] =
-    Iterator(if (cosine) "cosine" else "dot", s"k=$k", queries, item, embedding)
+      embedding: Attribute, resident: Option[Resident]): Iterator[Any] =
+    Iterator(if (cosine) "cosine" else "dot", s"k=$k", queries, item, embedding) ++
+      resident.map(_ => "resident")
 
   /** `records` ranked against `queries`: the frame `search` (`batch`
-    * false, one query) or `searchMany` (`batch` true) returns. A
-    * negative `k` is rejected before the queries are collected. */
+    * false, one query) or `searchMany` (`batch` true) returns. With
+    * `resident`, the records are read from its blocks, built by the
+    * first search that runs. A negative `k` is rejected before the
+    * queries are collected. */
   def frame(records: DataFrame, itemCol: String, embeddingCol: String, queries: => QueryBatch,
-      k: Int, cosine: Boolean, batch: Boolean): DataFrame = {
+      k: Int, cosine: Boolean, batch: Boolean, resident: Option[Resident] = None): DataFrame = {
     if (k < 0) throw new IllegalArgumentException(s"search: k must not be negative, got $k")
     val spark = records.sparkSession
     graft.functions.registerAll(spark) // the strategy, and graft's SQL functions stay callable
-    val plan = (if (batch) records.select(itemCol, embeddingCol) else records).queryExecution.analyzed
+    val plan = (if (batch && resident.isEmpty) records.select(itemCol, embeddingCol) else records)
+      .queryExecution.analyzed
     def attr(name: String) = plan.output.find(a => spark.sessionState.conf.resolver(a.name, name))
       .getOrElse(throw new IllegalArgumentException(s"search: no column $name in ${plan.schema.simpleString}"))
     val (item, embedding) = (attr(itemCol), attr(embeddingCol))
@@ -86,7 +98,7 @@ object VectorTopK {
       if (batch) Seq(AttributeReference("query_id", qs.idType)(), score,
         AttributeReference("rank", IntegerType, nullable = false)())
       else Seq(score)
-    GraftSqlBridge.ofRows(spark, VectorTopK(item, embedding, qs, k, cosine, produced, plan))
+    GraftSqlBridge.ofRows(spark, VectorTopK(item, embedding, qs, k, cosine, produced, resident, plan))
   }
 }
 
@@ -102,7 +114,8 @@ object VectorTopKStrategy extends SparkStrategy {
   }
 
   private def exec(t: VectorTopK, project: Option[Seq[NamedExpression]]): SparkPlan =
-    VectorTopKExec(t.item, t.embedding, t.queries, t.k, t.cosine, t.produced, project, planLater(t.child))
+    VectorTopKExec(t.item, t.embedding, t.queries, t.k, t.cosine, t.produced, t.resident, project,
+      planLater(t.child))
 
   /** Add the strategy to `spark` unless its planner already has it
     * (from `GraftExtensions` or an earlier call). */
@@ -120,15 +133,21 @@ object VectorTopKStrategy extends SparkStrategy {
  * collect merges on the driver, so it runs one stage; `execute()` merges
  * in one task behind a one-partition shuffle.
  *
- * A columnar child (a vectorized parquet scan) is read batch by batch:
- * each embedding is read through a `ColumnarArray` view, by offset into
- * the float child vector, with no copy. Any other child is read row by
- * row through `InternalRow.getArray`. The scoring loop and the heaps
- * are shared; only a row that enters a heap is copied.
+ * The records come from one of three inputs. With a [[Resident]]
+ * handle they are read from its blocks, which the first search builds
+ * from the child in the same stage: each row's vector is copied from
+ * the block's off-heap float region into the scoring buffer, and its
+ * other columns are read as an `UnsafeRow`. Otherwise a columnar child (a vectorized parquet scan)
+ * is read batch by batch: each embedding is read through a
+ * `ColumnarArray` view, by offset into the float child vector, with no
+ * copy. Any other child is read row by row through
+ * `InternalRow.getArray`. The scoring loop and the heaps are shared;
+ * only a row that enters a heap is copied. The child stays in the plan
+ * on every input, for explain and as the blocks' lineage.
  */
 case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryBatch, k: Int,
-    cosine: Boolean, produced: Seq[Attribute], project: Option[Seq[NamedExpression]],
-    child: SparkPlan) extends UnaryExecNode {
+    cosine: Boolean, produced: Seq[Attribute], resident: Option[Resident],
+    project: Option[Seq[NamedExpression]], child: SparkPlan) extends UnaryExecNode {
 
   /** The ranked rows before the folded projection. */
   private def ranked: Seq[Attribute] = VectorTopK.output(item, produced, child.output)
@@ -136,7 +155,7 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
   override def producedAttributes: AttributeSet = AttributeSet(produced)
   override def outputPartitioning: Partitioning = SinglePartition
   override protected def stringArgs: Iterator[Any] =
-    VectorTopK.args(cosine, k, queries, item, embedding) ++ project.iterator
+    VectorTopK.args(cosine, k, queries, item, embedding, resident) ++ project.iterator
 
   // this operator reads batches itself, so the ColumnarToRow that Spark
   // puts over a columnar child is dropped
@@ -161,13 +180,29 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
     val in = child.output
     def ord(a: Attribute) = in.indexWhere(_.exprId == a.exprId)
     val (itemOrd, embOrd, itemType, itemAt) = (ord(item), ord(embedding), item.dataType, keptItemAt)
-    val keep = Seq(BoundReference(0, IntegerType, nullable = false), BoundReference(1, DoubleType, nullable = true)) ++
-      payload.map(a => BoundReference(2 + ord(a), a.dataType, a.nullable))
-    val scan = () => new TopKScan(qs, topK, cos, itemOrd, itemAt, itemType, embOrd, keep)
-    if (child.supportsColumnar) {
-      child.executeColumnar().mapPartitions { it => val s = scan(); it.foreach(s.addBatch); s.kept }
-    } else {
-      child.execute().mapPartitions { it => val s = scan(); it.foreach(s.addRow); s.kept }
+    // a resident row holds no vector: the kept row's is put after the
+    // row's last field (`vectorAt`)
+    val fields = in.length
+    val Seq(keepScanned, keepResident) = Seq(embOrd, fields).map(vectorAt =>
+      Seq(BoundReference(0, IntegerType, nullable = false), BoundReference(1, DoubleType, nullable = true)) ++
+        payload.map(a => BoundReference(2 + (if (a.exprId == embedding.exprId) vectorAt else ord(a)),
+          a.dataType, a.nullable)))
+    val scan = (keep: Seq[Expression]) => new TopKScan(qs, topK, cos, itemOrd, itemAt, itemType, embOrd, keep)
+    val types = in.map(_.dataType)
+    val blocks = resident.flatMap(_.blocks(types, embOrd) {
+      if (child.supportsColumnar) child.executeColumnar().mapPartitions { it =>
+        val b = new ResidentBlock.Builder(types, embOrd); it.foreach(b.addBatch); Iterator.single(b.result())
+      } else child.execute().mapPartitions { it =>
+        val b = new ResidentBlock.Builder(types, embOrd); it.foreach(b.addRow); Iterator.single(b.result())
+      }
+    })
+    blocks match {
+      case Some(rdd) =>
+        rdd.mapPartitions { it => val s = scan(keepResident); it.foreach(s.addBlock(_, fields)); s.kept }
+      case None if child.supportsColumnar =>
+        child.executeColumnar().mapPartitions { it => val s = scan(keepScanned); it.foreach(s.addBatch); s.kept }
+      case None =>
+        child.execute().mapPartitions { it => val s = scan(keepScanned); it.foreach(s.addRow); s.kept }
     }
   }
 
@@ -230,9 +265,42 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
   private val head = new GenericInternalRow(2)
   private val joined = new JoinedRow(head, null)
   private val project = UnsafeProjection.create(keep)
+  // a resident block's row: its payload, and its vector (row `at`, of
+  // `block`) after it once the row is kept
+  private var block: ResidentBlock = _
+  private var at = -1
+  private var bytes = new Array[Byte](64)
+  private val vector = new GenericInternalRow(1)
+  private val withVector = new JoinedRow()
 
   def addRow(row: InternalRow): Unit =
     score(row, if (row.isNullAt(embOrd)) -1 else load(row.getArray(embOrd)))
+
+  /** Scores a block's rows in order: each vector is copied from the
+    * float region into `buf`, and `row` is pointed at its payload. */
+  def addBlock(b: ResidentBlock, fields: Int): Unit = {
+    val floats = b.vectors.asFloatBuffer()
+    val row = new UnsafeRow(fields)
+    block = b
+    var (vAt, pAt) = (0, 0)
+    at = 0
+    while (at < b.rows) {
+      val n = b.meta.getInt(8 * at)
+      val p = b.meta.getInt(8 * at + 4)
+      if (n > 0) {
+        if (buf.length < n) buf = new Array[Float](n)
+        floats.get(vAt, buf, 0, n)
+        vAt += n
+      }
+      if (bytes.length < p) bytes = new Array[Byte](math.max(p, 2 * bytes.length))
+      b.payload.get(pAt, bytes, 0, p)
+      pAt += p
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET, p)
+      score(row, n)
+      at += 1
+    }
+    block = null
+  }
 
   def addBatch(batch: ColumnarBatch): Unit = {
     val col = batch.column(embOrd)
@@ -254,6 +322,15 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
     while (i < n) { buf(i) = if (a.isNullAt(i)) 0f else a.getFloat(i); i += 1 }
     n
   }
+
+  /** What `keep` reads for a kept row: the row itself, or a resident
+    * row joined with its vector. */
+  private def keepInput(row: InternalRow, n: Int): InternalRow =
+    if (block == null) row
+    else {
+      if (n < 0) vector.setNullAt(0) else vector.update(0, block.vector(at, buf, n))
+      withVector(row, vector)
+    }
 
   /** Score the row whose vector is in `buf` (`n` < 0: a null vector). */
   private def score(row: InternalRow, n: Int): Unit = {
@@ -281,7 +358,7 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
       if (h.admits(isNull, s, row, itemOrd)) {
         head.setInt(0, slots(j))
         if (isNull) head.setNullAt(1) else head.setDouble(1, s)
-        h.offer(isNull, s, project(joined.withRight(row)).copy(), itemAt)
+        h.offer(isNull, s, project(joined.withRight(keepInput(row, n))).copy(), itemAt)
       }
       j += 1
     }

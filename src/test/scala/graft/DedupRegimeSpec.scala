@@ -262,4 +262,39 @@ class DedupRegimeSpec extends SparkSpec {
       .select("op", "regime").collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows.get("jaccard_pairs").contains("dense"), rows.toString)
   }
+
+  test("dict_bitmap compiles inside a generated method that already declares i") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator, CodegenContext}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val dict = graft.operators.DenseJaccard.dictFromEls(Array(5L, 9L, 42L))
+    val e = graft.functions.DictBitmap(BoundReference(0, ArrayType(LongType), nullable = true), dict, 1)
+    val ctx = new CodegenContext
+    ctx.INPUT_ROW = "row"
+    val ev = e.genCode(ctx)
+    // the kernel's code sits in a scope whose `i`, `out` and `idx` are
+    // taken, as in a caller's generated loop
+    val body =
+      s"""public java.lang.Object generate(Object[] references) { return new Probe(references); }
+         |public class Probe {
+         |  private Object[] references;
+         |  ${ctx.declareMutableStates()}
+         |  public Probe(Object[] references) { this.references = references; ${ctx.initMutableStates()} }
+         |  public byte[] eval(InternalRow row) {
+         |    int i = 0; byte[] out = null; int idx = -1;
+         |    ${ev.code}
+         |    return ${ev.isNull} ? null : ${ev.value};
+         |  }
+         |  ${ctx.declareAddedFunctions()}
+         |}""".stripMargin
+    val (clazz, _) = CodeGenerator.compile(new CodeAndComment(body, ctx.getPlaceHolderToComments()))
+    val probe = clazz.generate(ctx.references.toArray)
+    val eval = probe.getClass.getMethod("eval", classOf[InternalRow])
+    val bits = eval.invoke(probe, InternalRow(ArrayData.toArrayData(Array(42L, 7L, 5L))))
+      .asInstanceOf[Array[Byte]]
+    assert(bits.toSeq == Seq(5.toByte)) // dictionary slots 0 and 2
+    assert(eval.invoke(probe, InternalRow(null)) == null)
+  }
 }

@@ -153,4 +153,23 @@ class MeasuringPathSpec extends SparkSpec {
       assert(settled, s"jobs of the timed-out run: $started, ended: $ended")
     } finally spark.sparkContext.removeSparkListener(jobs)
   }
+
+  test("a run that builds SemanticIndex resident blocks reports their bytes in its line") {
+    import org.apache.spark.sql.functions.{array, lit}
+    val searching: Builder = (s, _) => {
+      val recs = s.range(0, 500, 1, 2).select(col("id").cast("string").as("item"),
+        array(col("id").cast("float"), lit(1f)).as("embedding"))
+      graft.index.SemanticIndex.fromRecords(s, recs).search(Array(1f, 0f), 3)
+    }
+    val o = Diag.run(spark, "search", searching, sfDir, 60.seconds)
+    val c = o match {
+      case Diag.Outcome.Ok(_, c) => c
+      case other => fail(other.toString)
+    }
+    // 500 two-float vectors, plus their rows
+    assert(c.residentBytes > 500L * 2 * 4, c.toString)
+    assert(json.readTree(Diag.line("search", o)).get("resident_bytes").asLong == c.residentBytes)
+    assert(!json.readTree(Diag.line("fine", Diag.run(spark, "fine", fine, sfDir, 60.seconds)))
+      .has("resident_bytes"))
+  }
 }

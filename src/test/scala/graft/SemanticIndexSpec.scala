@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.QueryBatch
 import graft.index._
 
 /** The reference SemanticDatabase surface, re-expressed (SURVEY.md §2.1). */
@@ -282,17 +283,61 @@ class SemanticIndexSpec extends SparkSpec {
       id -> sorted
     }
 
-  /** A copy of `idx` saved to parquet and loaded again: the operator
-    * reads it batch by batch from the vectorized scan, where `idx`
-    * itself goes through the row adapter. */
-  private def onParquet(idx: SemanticIndex): SemanticIndex = {
+  /** `idx` saved to parquet: a loader of fresh instances over the copy,
+    * whose child is the vectorized scan, where `idx` itself is read
+    * through the row adapter. */
+  private def parquetCopy(idx: SemanticIndex): () => SemanticIndex = {
     val dir = java.nio.file.Files.createTempDirectory("graft_topk").toString
     idx.save(s"$dir/idx")
-    val back = SemanticIndex.load(spark, s"$dir/idx")
-    val top = back.search(Array.emptyFloatArray, 1).queryExecution.executedPlan
+    val load = () => SemanticIndex.load(spark, s"$dir/idx")
+    val top = load().search(Array.emptyFloatArray, 1).queryExecution.executedPlan
       .collect { case t: graft.plans.VectorTopKExec => t }
     assert(top.size == 1 && top.head.child.supportsColumnar, top)
-    back
+    load
+  }
+
+  private def onParquet(idx: SemanticIndex): SemanticIndex = parquetCopy(idx)()
+
+  /** One way to run the operator over an index's records. */
+  private final case class Input(name: String, search: (Array[Float], Int, Boolean) => DataFrame,
+      many: (DataFrame, Int) => DataFrame)
+
+  /** The scan inputs: VectorTopK over `records` with no resident blocks. */
+  private def scanned(name: String, records: DataFrame) = {
+    import graft.plans.VectorTopK
+    Input(name,
+      (q, k, cos) => VectorTopK.frame(records, "item", "embedding", QueryBatch.single(q), k, cos, batch = false),
+      (qs, k) => VectorTopK.frame(records, "item", "embedding", QueryBatch.collect(qs), k, cosine = false,
+        batch = true))
+  }
+
+  /** A resident input: the searches of `fresh()` instances. `warm`: of
+    * one instance whose blocks a null-query search built first; else of
+    * a new instance every call, so every call builds the blocks. */
+  private def residentInput(name: String, fresh: () => SemanticIndex, warm: Boolean) = {
+    lazy val warmed = {
+      val ix = fresh()
+      assert(ix.residentBlocks.isEmpty)
+      ix.search(null, 1).collect()
+      assert(ix.residentBlocks.nonEmpty)
+      ix
+    }
+    def ix() = if (warm) warmed else { val i = fresh(); assert(i.residentBlocks.isEmpty); i }
+    Input(name, (q, k, cos) => if (cos) ix().searchCosine(q, k) else ix().search(q, k),
+      (qs, k) => ix().searchMany(qs, k))
+  }
+
+  /** Every input over `idx`'s rows: the row and the columnar adapter,
+    * and resident blocks built from either, on their building search
+    * and on a warm one. */
+  private def inputs(idx: SemanticIndex): Seq[Input] = {
+    val pq = parquetCopy(idx)
+    val inMemory = () => SemanticIndex.fromRecords(spark, idx.records)
+    Seq(scanned("row", idx.records), scanned("columnar", pq().records),
+      residentInput("resident from rows, building", inMemory, warm = false),
+      residentInput("resident from rows, warm", inMemory, warm = true),
+      residentInput("resident from parquet, building", pq, warm = false),
+      residentInput("resident from parquet, warm", pq, warm = true))
   }
 
   /** The formula `search`/`searchCosine` replaced: score every record,
@@ -303,20 +348,22 @@ class SemanticIndexSpec extends SparkSpec {
       .orderBy(col("score").desc, col("item")).limit(k)
   }
 
-  /** For every query, on the row and the columnar adapter: searchMany
-    * gives the same ordered (item, score) list as search, which gives
-    * the same as the sort-and-cut formula. */
+  /** For every query, on every input: searchMany gives the same
+    * ordered (item, score bits) list as search, which gives the same as
+    * the sort-and-cut formula. */
   private def assertMatchesSearch(idx: SemanticIndex, idType: DataType, k: Int,
-      queries: (Any, Array[Float])*): Unit =
-    Seq(idx, onParquet(idx)).foreach { ix =>
-      val got = byQuery(ix.searchMany(queryFrame(idType, queries: _*), k))
-      assert(got.keySet == queries.map(_._1).toSet)
-      queries.foreach { case (id, q) =>
-        val viaSearch = hits(ix.search(q, k).collect().toSeq)
-        assert(hits(got(id)) == viaSearch, s"query $id")
-        assert(viaSearch == hits(formula(ix, q, k, cosine = false).collect().toSeq), s"query $id")
+      queries: (Any, Array[Float])*): Unit = {
+    val want = queries.map { case (id, q) => id -> hits(formula(idx, q, k, cosine = false).collect().toSeq) }
+    inputs(idx).foreach { in =>
+      val got = byQuery(in.many(queryFrame(idType, queries: _*), k))
+      assert(got.keySet == queries.map(_._1).toSet, in.name)
+      queries.zip(want).foreach { case ((id, q), (_, w)) =>
+        val viaSearch = hits(in.search(q, k, false).collect().toSeq)
+        assert(hits(got(id)) == viaSearch, s"${in.name}: query $id")
+        assert(viaSearch == w, s"${in.name}: query $id")
       }
     }
+  }
 
   private val tieRows: Seq[(Any, Array[Float])] = Seq(
     "d" -> Array(1f, 0f), "b" -> Array(1f, 0f), "a" -> Array(0.5f, 0.5f),
@@ -376,17 +423,21 @@ class SemanticIndexSpec extends SparkSpec {
   }
 
   test("a null vector element reads as 0 on both adapters") {
+    // every input: both scan adapters and resident blocks built from
+    // either; a returned row keeps its null element
     // parquet dictionary-encodes the floats, and a null slot's column
     // vector value is a dictionary entry (2.0 here), not 0
     val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("a", Array(2f, 3f)),
       Row("b", Array[Any](1f, null)), Row("c", Array(0.5f, 0.5f))), 2),
       StructType(Seq(StructField("item", StringType), StructField("embedding", vecType))))
     val idx = SemanticIndex.fromRecords(spark, df)
-    Seq(idx, onParquet(idx)).foreach { ix =>
-      assert(ix.search(Array(1f, 1f), 3).collect().map(r => r.getString(0) -> r.getDouble(2)).toSeq ==
-        Seq("a" -> 5.0, "b" -> 1.0, "c" -> 1.0))
-      assert(hits(byQuery(ix.searchMany(queryFrame(LongType, 1L -> Array(1f, 1f)), 3))(1L)) ==
-        hits(ix.search(Array(1f, 1f), 3).collect().toSeq))
+    inputs(idx).foreach { in =>
+      val rows = in.search(Array(1f, 1f), 3, false).collect()
+      assert(rows.map(r => r.getString(0) -> r.getDouble(2)).toSeq ==
+        Seq("a" -> 5.0, "b" -> 1.0, "c" -> 1.0), in.name)
+      assert(rows.map(_.getSeq[Any](1)).toSeq == Seq(Seq(2f, 3f), Seq(1f, null), Seq(0.5f, 0.5f)), in.name)
+      assert(hits(byQuery(in.many(queryFrame(LongType, 1L -> Array(1f, 1f)), 3))(1L)) == hits(rows.toSeq),
+        in.name)
     }
   }
 
@@ -416,14 +467,14 @@ class SemanticIndexSpec extends SparkSpec {
     val idx = vecIndex(StringType, tieRows: _*)
     val viaDot = cause(intercept[Exception](
       formula(idx, Array(1f, 0f, 0f), 2, cosine = false).collect()))
-    Seq(idx, onParquet(idx)).foreach { ix =>
-      val viaSearch = cause(intercept[Exception](ix.search(Array(1f, 0f, 0f), 2).collect()))
+    inputs(idx).foreach { in =>
+      val viaSearch = cause(intercept[Exception](in.search(Array(1f, 0f, 0f), 2, false).collect()))
       val viaMany = cause(intercept[Exception](
-        ix.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
-      assert(viaMany.isInstanceOf[IllegalArgumentException], viaMany)
+        in.many(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
+      assert(viaMany.isInstanceOf[IllegalArgumentException], s"${in.name}: $viaMany")
       assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
-      assert(viaMany.getMessage == viaSearch.getMessage)
-      assert(viaSearch.getMessage == viaDot.getMessage)
+      assert(viaMany.getMessage == viaSearch.getMessage, in.name)
+      assert(viaSearch.getMessage == viaDot.getMessage, in.name)
     }
   }
 
@@ -437,16 +488,22 @@ class SemanticIndexSpec extends SparkSpec {
   }
 
   test("search and searchCosine ≡ sort-and-cut on both adapters, k = 0 and k > n") {
+    // every input: both scan adapters and resident blocks built from either
     val idx = vecIndex(StringType, tieRows ++ Seq("z" -> Array(0f, 0f), "nan" -> Array(Float.NaN, 0f),
       "nul" -> null, "inf" -> Array(Float.PositiveInfinity, 0f), "ninf" -> Array(0f, Float.NegativeInfinity),
       "w" -> Array(3f, -4f)): _*)
     val n = idx.count().toInt
-    for (ix <- Seq(idx, onParquet(idx)); q <- Seq(Array(1f, 0f), Array(0.3f, -2f), Array(0f, 0f));
+    for (in <- inputs(idx); q <- Seq(Array(1f, 0f), Array(0.3f, -2f), Array(0f, 0f));
          k <- Seq(0, 1, 3, n + 5); cosine <- Seq(false, true)) {
-      val got = if (cosine) ix.searchCosine(q, k) else ix.search(q, k)
-      val want = formula(ix, q, k, cosine)
+      val got = in.search(q, k, cosine)
+      val want = formula(idx, q, k, cosine)
       assert(got.schema == want.schema)
-      assert(hits(got.collect().toSeq) == hits(want.collect().toSeq), s"k=$k cosine=$cosine q=${q.toSeq}")
+      val rows = got.collect().toSeq
+      assert(hits(rows) == hits(want.collect().toSeq), s"${in.name}: k=$k cosine=$cosine q=${q.toSeq}")
+      // every returned column is the record's own, the vector included
+      assert(rows.map(r => r.getAs[String]("item") -> Option(r.getSeq[Float](1)).map(_.map(_.toString))) ==
+        want.collect().toSeq.map(r => r.getAs[String]("item") -> Option(r.getSeq[Float](1)).map(_.map(_.toString))),
+        in.name)
     }
   }
 
@@ -507,9 +564,16 @@ class SemanticIndexSpec extends SparkSpec {
     assert(many.collect().isEmpty)
   }
 
-  /** Node names of `df`'s executed plan, and the jobs and stages one
-    * collect of it runs. */
-  private def profile(df: DataFrame): (Seq[String], Int, Int) = {
+  /** Bytes the local file system has read so far (parquet reads go
+    * through it). */
+  private def fileBytesRead(): Long = {
+    val stats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
+    if (stats == null) 0L else Option(stats.getLong("bytesRead")).map(_.longValue).getOrElse(0L)
+  }
+
+  /** Node names of `df`'s executed plan, and the jobs, stages and local
+    * file bytes one collect of it runs and reads. */
+  private def profile(df: DataFrame): (Seq[String], Int, Int, Long, Seq[Row]) = {
     val nodes = df.queryExecution.executedPlan.collect { case p => p.nodeName }
     def drain(): Unit = org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     @volatile var jobs = 0
@@ -521,29 +585,135 @@ class SemanticIndexSpec extends SparkSpec {
     }
     drain()
     spark.sparkContext.addSparkListener(jl)
-    try { df.collect(); drain() } finally spark.sparkContext.removeSparkListener(jl)
-    (nodes, jobs, stages)
+    val read0 = fileBytesRead()
+    val rows = try df.collect().toSeq finally { drain(); spark.sparkContext.removeSparkListener(jl) }
+    (nodes, jobs, stages, fileBytesRead() - read0, rows)
   }
 
   /** The executed plan of `df` is the operator over the columnar scan,
-    * and one collect runs one job of one stage. */
-  private def assertOneStage(df: DataFrame): Unit = {
-    val (nodes, jobs, stages) = profile(df)
+    * and one collect runs one job of one stage; the bytes it read from
+    * the parquet files. */
+  private def assertOneStage(df: DataFrame): Long = oneStage(df)._1
+
+  private def oneStage(df: DataFrame): (Long, Seq[Row]) = {
+    val (nodes, jobs, stages, read, rows) = profile(df)
     assert(nodes.contains("VectorTopK") && nodes.exists(_.startsWith("Scan parquet")), nodes)
     Seq("ColumnarToRow", "ObjectHashAggregate", "Exchange", "TakeOrderedAndProject", "Window",
         "NestedLoopJoin", "CartesianProduct").foreach(op =>
       assert(!nodes.exists(_.contains(op)), s"$op in $nodes"))
     assert(jobs == 1 && stages == 1, s"$jobs jobs, $stages stages for $nodes")
+    (read, rows)
+  }
+
+  /** The building search and a warm one are each one job of one stage;
+    * the building one reads the parquet files, the warm one reads none
+    * of their bytes. */
+  private def assertBuildThenWarm(idx: SemanticIndex, search: SemanticIndex => DataFrame): Unit = {
+    assert(idx.residentBlocks.isEmpty)
+    val (read, building) = oneStage(search(idx))
+    assert(idx.residentBlocks.nonEmpty)
+    assert(read > 0, "the building search read no parquet bytes")
+    val (warmRead, warm) = oneStage(search(idx))
+    assert(warmRead == 0, "a warm search read the parquet files")
+    assert(warm == building && building.nonEmpty)
   }
 
   test("search plan: VectorTopK over the columnar scan, one job, one stage") {
-    val idx = onParquet(vecIndex(StringType, tieRows: _*))
-    assertOneStage(idx.search(Array(1f, 0f), 2))
-    assertOneStage(idx.searchCosine(Array(1f, 0f), 2))
+    // the building search and a warm one, and the scan without blocks
+    val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
+    assertBuildThenWarm(pq(), _.search(Array(1f, 0f), 2))
+    assertBuildThenWarm(pq(), _.searchCosine(Array(1f, 0f), 2))
+    // without resident blocks the operator reads the scan's batches
+    val scan = scanned("columnar", pq().records)
+    assert(assertOneStage(scan.search(Array(1f, 0f), 2, false)) > 0)
   }
 
   test("searchMany plan: VectorTopK over the columnar scan, one job, one stage") {
+    // the building search and a warm one, and the scan without blocks
+    val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
+    val qs = queryFrame(LongType, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f))
+    assertBuildThenWarm(pq(), _.searchMany(qs, 2))
+    assert(assertOneStage(scanned("columnar", pq().records).many(qs, 2)) > 0)
+  }
+
+  test("add, remove and clear give instances with their own blocks; the old one keeps its own") {
+    val pq = parquetCopy(SemanticIndex.fromItems(spark,
+      items("apple pie", "banana bread", "cherry tart", "date loaf")))
+    val old = pq()
+    val q = HashEmbedder().embedOne("apple pie")
+    val before = old.search(q, 10).collect().toSeq
+    val blocks = old.residentBlocks.get
+    val added = old.add(items("apple pie recipe"))
+    val removed = old.remove(items("apple pie"))
+    val cleared = old.clear()
+    Seq(added, removed, cleared).foreach(ix => assert(ix.residentBlocks.isEmpty))
+    for ((ix, n) <- Seq(added -> 5, removed -> 3, cleared -> 0)) {
+      val got = hits(ix.search(q, 10).collect().toSeq)
+      assert(got.size == n && got == hits(formula(ix, q, 10, cosine = false).collect().toSeq))
+    }
+    assert(hits(added.search(q, 10).collect().toSeq).map(_._1).contains("apple pie recipe"))
+    assert(!hits(removed.search(q, 10).collect().toSeq).map(_._1).contains("apple pie"))
+    val ids = Seq(added, removed, cleared).map(_.residentBlocks.get.id)
+    assert((ids :+ blocks.id).distinct.size == 4, ids)
+    assert(old.residentBlocks.get eq blocks)
+    assert(assertOneStage(old.search(q, 10)) == 0)
+    assert(old.search(q, 10).collect().toSeq == before && before.size == 4)
+  }
+
+  test("blocks dropped from the block manager or unpersisted are rebuilt from lineage") {
     val idx = onParquet(vecIndex(StringType, tieRows: _*))
-    assertOneStage(idx.searchMany(queryFrame(LongType, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f)), 2))
+    val q = Array(1f, 0f)
+    val want = idx.search(q, 4).collect().toSeq
+    val rdd = idx.residentBlocks.get
+    assert(idx.residentBytes > 0)
+    org.apache.spark.BlockManagerBridge.removeRdd(spark.sparkContext, rdd.id)
+    assert(idx.residentBytes == 0)
+    assert(assertOneStage(idx.search(q, 4)) > 0, "evicted blocks were not rebuilt from the files")
+    assert(idx.residentBlocks.get eq rdd)
+    assert(idx.residentBytes > 0)
+    assert(idx.search(q, 4).collect().toSeq == want)
+    rdd.unpersist(blocking = true)
+    assert(idx.search(q, 4).collect().toSeq == want)
+    assert(idx.residentBlocks.get.id != rdd.id && idx.residentBytes > 0)
+    assert(assertOneStage(idx.search(q, 4)) == 0)
+  }
+
+  test("searching one instance builds no blocks for another; count, contains and save build none") {
+    val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
+    val (a, b) = (pq(), pq())
+    a.search(Array(1f, 0f), 2).collect()
+    assert(a.residentBlocks.nonEmpty && a.residentBytes > 0)
+    assert(b.residentBlocks.isEmpty && b.residentBytes == 0)
+    assert(b.count() == tieRows.size && b.contains("a") && !b.contains("zz"))
+    b.getAll().collect()
+    b.save(java.nio.file.Files.createTempDirectory("graft_resident").resolve("idx").toString)
+    assert(b.add(items("new")).count() == tieRows.size + 1)
+    assert(b.residentBlocks.isEmpty && b.residentBytes == 0)
+  }
+
+  test("residentBytes: rows x dims x 4 plus the payload rows, within the block headers") {
+    val rnd = new scala.util.Random(3)
+    val (n, dims) = (2000, 16)
+    val idx = onParquet(vecIndex(StringType,
+      (0 until n).map(i => (s"item-$i": Any) -> Array.fill(dims)(rnd.nextFloat())): _*))
+    assert(idx.residentBytes == 0)
+    idx.search(Array.fill(dims)(1f), 5).collect()
+    // each payload row is the record with its vector left null, plus 8
+    // bytes of per-row lengths
+    val rowBytes = idx.records.select(col("item"), lit(null).cast("array<float>")).collect()
+      .map { r =>
+        val p = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
+          Array[DataType](StringType, vecType))
+        p(org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)), null)).getSizeInBytes + 8L
+      }.sum
+    val want = n.toLong * dims * 4 + rowBytes
+    val blocks = idx.residentBlocks.get.getNumPartitions
+    val got = idx.residentBytes
+    assert(got >= want && got <= want + blocks * 256L, s"$got bytes for $want in $blocks blocks")
+    // a block travels between JVMs as bytes (a remote cache read, here
+    // a collect) and arrives whole
+    val fetched = idx.residentBlocks.get.collect()
+    assert(fetched.map(_.rows).sum == n && fetched.map(_.estimatedSize).sum <= got)
   }
 }

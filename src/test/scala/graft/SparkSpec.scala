@@ -12,6 +12,10 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a generated-code compile error fails the test instead of
+      // running the expression or stage interpreted
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.registerAll(s)
