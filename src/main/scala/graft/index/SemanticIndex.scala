@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.plans.{Resident, ResidentBlock, VectorTopK}
+import graft.plans.{Resident, VectorTopK}
 
 /** Duplicate-handling strategies, mirroring the reference enum
   * (/root/reference/ChatAIze.SemanticIndex/DuplicateHandling.cs). */
@@ -60,7 +60,10 @@ final class DuplicateItemException(msg: String) extends RuntimeException(msg)
  *    vectors in a contiguous off-heap float region, the other columns
  *    as off-heap rows — cached `MEMORY_ONLY` across the executors. Later
  *    searches read only the blocks; an evicted block is rebuilt from
- *    the scan's lineage. [[residentBytes]] reports what is held.
+ *    the scan's lineage. A block that storage memory could not hold
+ *    (or a partition past the 2 GiB one block holds) is not built
+ *    again: later searches score that partition's scan directly.
+ *    [[residentBytes]] reports what is held.
  *  - Snapshot rule: an instance answers from what its first search
  *    read. Files written under a loaded path afterwards are not seen
  *    until the path is loaded again. Mutators return a new instance,
@@ -79,17 +82,13 @@ final class SemanticIndex private (
     new SemanticIndex(spark, df, embedder, duplicateHandling)
 
   // this instance's records, held resident by its first search
-  @transient private lazy val resident = new Resident
+  @transient private[graft] lazy val resident = new Resident
 
   /** Bytes this instance's resident blocks hold now: its vectors as
     * floats off-heap, plus the other columns and a small header per
     * block; 0 before the first search. Not heap: the vector and row
     * bytes live in direct buffers. */
   def residentBytes: Long = resident.bytes(spark.sparkContext)
-
-  /** The RDD of this instance's resident blocks, once a search has
-    * built it; unpersisting it makes the next search build it again. */
-  def residentBlocks: Option[org.apache.spark.rdd.RDD[ResidentBlock]] = resident.rdd
 
   /** Number of records (reference `Count`). */
   def count(): Long = records.count()
@@ -177,12 +176,12 @@ final class SemanticIndex private (
    */
   def search(embedding: Array[Float], k: Int = 10): DataFrame =
     VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = false, batch = false,
-      Some(resident))
+      resident)
 
   /** Cosine variant for non-normalized embedding spaces. */
   def searchCosine(embedding: Array[Float], k: Int = 10): DataFrame =
     VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.single(embedding), k, cosine = true, batch = false,
-      Some(resident))
+      resident)
 
   /** Top-1 (reference `SearchFirst`). */
   def searchFirst(embedding: Array[Float]): Option[String] =
@@ -206,7 +205,7 @@ final class SemanticIndex private (
    */
   def searchMany(queries: DataFrame, k: Int = 10): DataFrame =
     VectorTopK.frame(records, ITEM, EMBEDDING, QueryBatch.collect(queries), k, cosine = false, batch = true,
-      Some(resident))
+      resident)
 
   /** Text-query search (reference `SearchAsync(query, count)`):
     * embed the query with the same embedder, then vector search. */

@@ -2,7 +2,9 @@ package graft.plans
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.{SparkContext, StorageBridge}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{OneToOneDependency, Partition, SparkContext, StorageBridge, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeArrayData, UnsafeProjection}
@@ -11,6 +13,7 @@ import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 /**
  * The records of one scan partition, held resident for [[VectorTopK]]:
@@ -20,7 +23,9 @@ import org.apache.spark.unsafe.Platform
  * holds the vector's length (-1: a null vector) and the payload row's
  * size; rows are read in order. A null vector element is stored as 0,
  * as every kernel reads it, and listed in `nullElems` (row << 32 |
- * element) so that a returned row keeps it.
+ * element) so that a returned row keeps it. `rows` < 0 marks a
+ * partition too large for one block: it holds nothing, and its searches
+ * score the scan.
  *
  * The buffers are GC-managed direct `ByteBuffer`s: a block that Spark
  * evicts is freed by the collector once no task still reads it. The
@@ -64,6 +69,9 @@ object ResidentBlock {
   /** The object and its three buffers. */
   private[plans] val Header = 160L
 
+  /** The most bytes one direct buffer holds. */
+  private[plans] val MaxBuffer: Long = Int.MaxValue - 8
+
   private def direct(n: Int): ByteBuffer = ByteBuffer.allocateDirect(n).order(ByteOrder.LITTLE_ENDIAN)
 
   private final case class Wire(rows: Int, meta: Array[Byte], vectors: Array[Byte], payload: Array[Byte],
@@ -75,9 +83,10 @@ object ResidentBlock {
   }
 
   /** Collects one partition's rows, laid out as `types` with the vector
-    * (`array<float>`) at `embOrd`, on heap; [[result]] moves them into
-    * the block's direct buffers. */
-  final class Builder(types: Seq[DataType], embOrd: Int) {
+    * (`array<float>`) at `embOrd`, on heap, and moves them into a
+    * block's direct buffers; a partition whose floats, payload or
+    * per-row lengths pass `limit` bytes gives the too-large block. */
+  final class Builder(types: Seq[DataType], embOrd: Int, limit: Long = MaxBuffer) {
     private val project = UnsafeProjection.create(types.zipWithIndex.map { case (t, i) =>
       if (i == embOrd) Literal(null, t) else BoundReference(i, t, nullable = true)
     })
@@ -87,14 +96,25 @@ object ResidentBlock {
     private var rows = 0
     private var nf = 0 // floats held
     private var nb = 0 // payload bytes held
+    private var over = false
     private val nulls = Array.newBuilder[Long]
 
-    def addRow(row: InternalRow): Unit = add(row, if (row.isNullAt(embOrd)) null else row.getArray(embOrd))
+    /** The block of `records`, the scan's `ColumnarBatch`es or rows. */
+    def fill(records: Iterator[Any]): ResidentBlock = {
+      while (!over && records.hasNext) records.next() match {
+        case batch: ColumnarBatch => addBatch(batch)
+        case row: InternalRow => addRow(row)
+      }
+      if (over) new ResidentBlock(-1, direct(0), direct(0), direct(0), Array.emptyLongArray) else result()
+    }
 
-    def addBatch(batch: ColumnarBatch): Unit = {
+    private def addRow(row: InternalRow): Unit =
+      add(row, if (row.isNullAt(embOrd)) null else row.getArray(embOrd))
+
+    private def addBatch(batch: ColumnarBatch): Unit = {
       val col = batch.column(embOrd)
       var r = 0
-      while (r < batch.numRows) {
+      while (!over && r < batch.numRows) {
         add(batch.getRow(r), if (col.isNullAt(r)) null else col.getArray(r))
         r += 1
       }
@@ -104,9 +124,10 @@ object ResidentBlock {
       val u = project(row)
       val p = u.getSizeInBytes
       val n = if (vec == null) -1 else vec.numElements()
-      // a direct buffer holds at most 2 GiB
-      if (nf.toLong + math.max(n, 0) > Int.MaxValue / 4 || nb.toLong + p > Int.MaxValue - 8)
-        throw new IllegalStateException(s"resident block: partition past 2 GiB after $rows rows")
+      if (4L * (nf.toLong + math.max(n, 0)) > limit || nb.toLong + p > limit || 8L * (rows + 1) > limit) {
+        over = true
+        return
+      }
       if (meta.length < 2 * rows + 2) meta = java.util.Arrays.copyOf(meta, 2 * meta.length)
       if (bytes.length < nb + p) bytes = java.util.Arrays.copyOf(bytes, grown(bytes.length, nb + p))
       u.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + nb)
@@ -126,10 +147,10 @@ object ResidentBlock {
       rows += 1
     }
 
-    /** Doubled, or `need` if more; both are under 2^31 (checked above). */
-    private def grown(length: Int, need: Int): Int = math.max(math.min(2L * length, Int.MaxValue - 8).toInt, need)
+    /** Doubled, or `need` if more; both are under 2^31 (`limit`). */
+    private def grown(length: Int, need: Int): Int = math.max(math.min(2L * length, MaxBuffer).toInt, need)
 
-    def result(): ResidentBlock = {
+    private def result(): ResidentBlock = {
       val m = direct(8 * rows)
       m.asIntBuffer().put(meta, 0, 2 * rows)
       val v = direct(4 * nf)
@@ -146,31 +167,38 @@ object ResidentBlock {
  * persisted `MEMORY_ONLY`. The instance's first search builds it in the
  * same single-stage scan that answers that search; later searches read
  * the blocks and skip the scan. A block that is lost or evicted is
- * rebuilt from the scan's lineage, like any cached partition; blocks
- * unpersisted outright are built again by the next search.
+ * rebuilt from the scan's lineage by the next search, like any cached
+ * partition; blocks unpersisted outright are built again from that
+ * search's scan.
+ *
+ * A partition whose block was built but could not be cached (storage
+ * memory too small for it) is not built again: its later searches score
+ * the scan's rows directly, as a search without blocks would. So is a
+ * partition too large for one block.
  *
  * The blocks are a snapshot: they hold what the first search read.
  */
 final class Resident {
-  private var built: Option[(RDD[ResidentBlock], Seq[DataType], Int)] = None
+  private var built: Option[Resident.Built] = None
 
-  /** The blocks for rows laid out as `types` with the vector at
-    * `embOrd`, building them with `build` if there are none; None when
-    * the blocks hold another layout. */
-  private[plans] def blocks(types: Seq[DataType], embOrd: Int)(
-      build: => RDD[ResidentBlock]): Option[RDD[ResidentBlock]] = synchronized {
-    built match {
-      case Some((rdd, t, e)) if rdd.getStorageLevel != StorageLevel.NONE =>
-        if (t == types && e == embOrd) Some(rdd) else None
-      case _ =>
-        val rdd = build.setName(Resident.Name).persist(StorageLevel.MEMORY_ONLY)
-        built = Some((rdd, types, embOrd))
-        Some(rdd)
-    }
+  /** One task per scan partition of the instance's records, each
+    * running `score` on the partition's block (cached, or built now
+    * from `scan`, laid out as `types` with the vector at `embOrd`) or,
+    * where a block cannot be held, on the scan's records. `scan` is
+    * used only when there are no blocks to read or rebuild. */
+  private[plans] def scored(scan: => RDD[_], types: Seq[DataType], embOrd: Int)(
+      score: Either[ResidentBlock, Iterator[Any]] => Iterator[InternalRow]): RDD[InternalRow] = synchronized {
+    val b = built.filter(_.blocks.getStorageLevel != StorageLevel.NONE)
+      .getOrElse(Resident.Built(scan, types, embOrd))
+    built = Some(b)
+    new Resident.Scored(b.blocks, b.scan, b.uncached, b.uncached.value.asScala.toSet, score)
   }
 
   /** The blocks' RDD, once a search has built it. */
-  def rdd: Option[RDD[ResidentBlock]] = synchronized(built.map(_._1))
+  private[graft] def rdd: Option[RDD[ResidentBlock]] = synchronized(built.map(_.blocks))
+
+  /** Blocks built from the scan so far, into the current RDD. */
+  private[graft] def builds: Long = synchronized(built.fold(0L)(_.builds.value.longValue))
 
   /** Bytes the cached blocks hold now (0 before the first search). */
   def bytes(sc: SparkContext): Long =
@@ -185,5 +213,43 @@ object Resident {
   def bytesByRdd(sc: SparkContext): Map[Int, Long] = {
     val ids = sc.getPersistentRDDs.collect { case (id, r) if r.name == Name => id }.toSet
     if (ids.isEmpty) Map.empty else StorageBridge.memoryBytes(sc, ids)
+  }
+
+  /** The scan, the blocks built from it, how many were built, and the
+    * partitions whose block was built but not cached. */
+  private final case class Built(scan: RDD[_], blocks: RDD[ResidentBlock], builds: LongAccumulator,
+      uncached: CollectionAccumulator[Int])
+
+  private object Built {
+    def apply(scan: RDD[_], types: Seq[DataType], embOrd: Int): Built = {
+      val sc = scan.sparkContext
+      val builds = sc.longAccumulator
+      val blocks = scan.mapPartitions { (records: Iterator[Any]) =>
+        builds.add(1)
+        Iterator.single(new ResidentBlock.Builder(types, embOrd).fill(records))
+      }.setName(Name).persist(StorageLevel.MEMORY_ONLY)
+      Built(scan, blocks, builds, sc.collectionAccumulator[Int])
+    }
+  }
+
+  /** A search's tasks: partition `i` reads its cached block; or builds
+    * it (recording in `uncached` a block it could not cache); or, in
+    * `streamed` or too large for a block, scores the scan's records. */
+  private final class Scored(blocks: RDD[ResidentBlock], scan: RDD[_], uncached: CollectionAccumulator[Int],
+      streamed: Set[Int], score: Either[ResidentBlock, Iterator[Any]] => Iterator[InternalRow])
+      extends RDD[InternalRow](blocks.sparkContext,
+        Seq(new OneToOneDependency(blocks), new OneToOneDependency(scan))) {
+    override protected def getPartitions: Array[Partition] = blocks.partitions
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      def scanned = score(Right(scan.iterator(split, context)))
+      if (streamed(split.index)) scanned
+      else {
+        val cached = StorageBridge.cachedHere(blocks, split.index)
+        val block = blocks.iterator(split, context).next()
+        if (!cached && !StorageBridge.cachedAnywhere(blocks, split.index)) uncached.add(split.index)
+        if (block.rows < 0) scanned else score(Left(block))
+      }
+    }
   }
 }

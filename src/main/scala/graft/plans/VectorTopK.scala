@@ -33,16 +33,17 @@ import graft.functions.{ItemTopKHeap, QueryBatch}
  * `item`, `score`, `rank`. `item` and `embedding` are attributes of the
  * child, so column pruning keeps them under the node.
  *
- * With a [[Resident]] handle the node reads every child column, so that
- * the child stays the whole record plan its blocks are built from.
+ * The records are read through `resident`, the [[Resident]] form of
+ * the index instance they belong to; the node references every child
+ * column, so that the child stays the whole record plan the resident
+ * blocks are built from.
  */
 case class VectorTopK(item: Attribute, embedding: Attribute, queries: QueryBatch, k: Int,
-    cosine: Boolean, produced: Seq[Attribute], resident: Option[Resident], child: LogicalPlan)
+    cosine: Boolean, produced: Seq[Attribute], resident: Resident, child: LogicalPlan)
     extends UnaryNode with MultiInstanceRelation {
   override def output: Seq[Attribute] = VectorTopK.output(item, produced, child.output)
   override def producedAttributes: AttributeSet = AttributeSet(produced)
-  override def references: AttributeSet =
-    if (resident.isDefined) child.outputSet else super.references
+  override def references: AttributeSet = child.outputSet
   // a frame read twice in one plan (a self-join) gets fresh produced
   // attributes on one side; Spark's DeduplicateRelations renews the
   // child's relations before it asks this node for a new instance
@@ -55,7 +56,7 @@ case class VectorTopK(item: Attribute, embedding: Attribute, queries: QueryBatch
     Statistics(EstimationUtils.getOutputSize(output, rows), Some(rows))
   }
   override protected def stringArgs: Iterator[Any] =
-    VectorTopK.args(cosine, k, queries, item, embedding, resident)
+    VectorTopK.args(cosine, k, queries, item, embedding)
   override protected def withNewChildInternal(c: LogicalPlan): VectorTopK = copy(child = c)
 }
 
@@ -67,24 +68,22 @@ object VectorTopK {
     }
 
   /** The explain form: metric, k, query count and dims, never the
-    * floats; and whether the records are read from resident blocks. */
+    * floats; and that the records are read from resident blocks. */
   private[plans] def args(cosine: Boolean, k: Int, queries: QueryBatch, item: Attribute,
-      embedding: Attribute, resident: Option[Resident]): Iterator[Any] =
-    Iterator(if (cosine) "cosine" else "dot", s"k=$k", queries, item, embedding) ++
-      resident.map(_ => "resident")
+      embedding: Attribute): Iterator[Any] =
+    Iterator(if (cosine) "cosine" else "dot", s"k=$k", queries, item, embedding, "resident")
 
   /** `records` ranked against `queries`: the frame `search` (`batch`
-    * false, one query) or `searchMany` (`batch` true) returns. With
-    * `resident`, the records are read from its blocks, built by the
-    * first search that runs. A negative `k` is rejected before the
-    * queries are collected. */
+    * false, one query) or `searchMany` (`batch` true) returns. The
+    * records are read from `resident`'s blocks, built by the first
+    * search that runs. A negative `k` is rejected before the queries
+    * are collected. */
   def frame(records: DataFrame, itemCol: String, embeddingCol: String, queries: => QueryBatch,
-      k: Int, cosine: Boolean, batch: Boolean, resident: Option[Resident] = None): DataFrame = {
+      k: Int, cosine: Boolean, batch: Boolean, resident: Resident): DataFrame = {
     if (k < 0) throw new IllegalArgumentException(s"search: k must not be negative, got $k")
     val spark = records.sparkSession
     graft.functions.registerAll(spark) // the strategy, and graft's SQL functions stay callable
-    val plan = (if (batch && resident.isEmpty) records.select(itemCol, embeddingCol) else records)
-      .queryExecution.analyzed
+    val plan = records.queryExecution.analyzed
     def attr(name: String) = plan.output.find(a => spark.sessionState.conf.resolver(a.name, name))
       .getOrElse(throw new IllegalArgumentException(s"search: no column $name in ${plan.schema.simpleString}"))
     val (item, embedding) = (attr(itemCol), attr(embeddingCol))
@@ -133,20 +132,19 @@ object VectorTopKStrategy extends SparkStrategy {
  * collect merges on the driver, so it runs one stage; `execute()` merges
  * in one task behind a one-partition shuffle.
  *
- * The records come from one of three inputs. With a [[Resident]]
- * handle they are read from its blocks, which the first search builds
- * from the child in the same stage: each row's vector is copied from
- * the block's off-heap float region into the scoring buffer, and its
- * other columns are read as an `UnsafeRow`. Otherwise a columnar child (a vectorized parquet scan)
- * is read batch by batch: each embedding is read through a
- * `ColumnarArray` view, by offset into the float child vector, with no
- * copy. Any other child is read row by row through
- * `InternalRow.getArray`. The scoring loop and the heaps are shared;
- * only a row that enters a heap is copied. The child stays in the plan
- * on every input, for explain and as the blocks' lineage.
+ * The records are read from the [[Resident]] blocks, which the first
+ * search builds from the child in the same stage: each row's vector is
+ * copied from the block's off-heap float region into the scoring
+ * buffer, and its other columns are read as an `UnsafeRow`. A partition
+ * whose block cannot be held is scored from the child's own output: a
+ * columnar child (a vectorized parquet scan) batch by batch, each
+ * embedding read through a `ColumnarArray` view with no copy; any other
+ * child row by row through `InternalRow.getArray`. The scoring loop and
+ * the heaps are shared; only a row that enters a heap is copied. The
+ * child stays in the plan, for explain and as the blocks' lineage.
  */
 case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryBatch, k: Int,
-    cosine: Boolean, produced: Seq[Attribute], resident: Option[Resident],
+    cosine: Boolean, produced: Seq[Attribute], resident: Resident,
     project: Option[Seq[NamedExpression]], child: SparkPlan) extends UnaryExecNode {
 
   /** The ranked rows before the folded projection. */
@@ -155,7 +153,7 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
   override def producedAttributes: AttributeSet = AttributeSet(produced)
   override def outputPartitioning: Partitioning = SinglePartition
   override protected def stringArgs: Iterator[Any] =
-    VectorTopK.args(cosine, k, queries, item, embedding, resident) ++ project.iterator
+    VectorTopK.args(cosine, k, queries, item, embedding) ++ project.iterator
 
   // this operator reads batches itself, so the ColumnarToRow that Spark
   // puts over a columnar child is dropped
@@ -180,29 +178,20 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
     val in = child.output
     def ord(a: Attribute) = in.indexWhere(_.exprId == a.exprId)
     val (itemOrd, embOrd, itemType, itemAt) = (ord(item), ord(embedding), item.dataType, keptItemAt)
-    // a resident row holds no vector: the kept row's is put after the
-    // row's last field (`vectorAt`)
+    // `keep` reads a row joined with its vector, put after the row's
+    // last field: a resident row holds no vector of its own
     val fields = in.length
-    val Seq(keepScanned, keepResident) = Seq(embOrd, fields).map(vectorAt =>
-      Seq(BoundReference(0, IntegerType, nullable = false), BoundReference(1, DoubleType, nullable = true)) ++
-        payload.map(a => BoundReference(2 + (if (a.exprId == embedding.exprId) vectorAt else ord(a)),
-          a.dataType, a.nullable)))
-    val scan = (keep: Seq[Expression]) => new TopKScan(qs, topK, cos, itemOrd, itemAt, itemType, embOrd, keep)
-    val types = in.map(_.dataType)
-    val blocks = resident.flatMap(_.blocks(types, embOrd) {
-      if (child.supportsColumnar) child.executeColumnar().mapPartitions { it =>
-        val b = new ResidentBlock.Builder(types, embOrd); it.foreach(b.addBatch); Iterator.single(b.result())
-      } else child.execute().mapPartitions { it =>
-        val b = new ResidentBlock.Builder(types, embOrd); it.foreach(b.addRow); Iterator.single(b.result())
+    val keep = Seq(BoundReference(0, IntegerType, nullable = false), BoundReference(1, DoubleType, nullable = true)) ++
+      payload.map(a => BoundReference(2 + (if (a.exprId == embedding.exprId) fields else ord(a)),
+        a.dataType, a.nullable))
+    resident.scored(if (child.supportsColumnar) child.executeColumnar() else child.execute(),
+        in.map(_.dataType), embOrd) { records =>
+      val s = new TopKScan(qs, topK, cos, itemOrd, itemAt, itemType, embOrd, keep)
+      records match {
+        case scala.util.Left(block) => s.addBlock(block, fields)
+        case scala.util.Right(scanned) => scanned.foreach(s.add)
       }
-    })
-    blocks match {
-      case Some(rdd) =>
-        rdd.mapPartitions { it => val s = scan(keepResident); it.foreach(s.addBlock(_, fields)); s.kept }
-      case None if child.supportsColumnar =>
-        child.executeColumnar().mapPartitions { it => val s = scan(keepScanned); it.foreach(s.addBatch); s.kept }
-      case None =>
-        child.execute().mapPartitions { it => val s = scan(keepScanned); it.foreach(s.addRow); s.kept }
+      s.kept
     }
   }
 
@@ -249,9 +238,10 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
     local().coalesce(1, shuffle = true).mapPartitions(merge())
 }
 
-/** One task's scan: scores every record against every query into the
-  * query's heap, copying (through `keep`, bound to (slot, score) joined
-  * with the input row) only the rows that enter. */
+/** One task's scan: scores every record (a resident block's rows, or a
+  * scan's batches or rows) against every query into the query's heap,
+  * copying (through `keep`, bound to (slot, score) joined with the row
+  * and then its vector) only the rows that enter. */
 private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemOrd: Int,
     itemAt: Int, itemType: DataType, embOrd: Int, keep: Seq[Expression]) {
   private val vecs = queries.vecs
@@ -265,16 +255,19 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
   private val head = new GenericInternalRow(2)
   private val joined = new JoinedRow(head, null)
   private val project = UnsafeProjection.create(keep)
-  // a resident block's row: its payload, and its vector (row `at`, of
-  // `block`) after it once the row is kept
+  // a kept row is joined with its vector (`withVector`); a resident
+  // row's payload is read into `bytes` from row `at` of `block`
   private var block: ResidentBlock = _
   private var at = -1
   private var bytes = new Array[Byte](64)
   private val vector = new GenericInternalRow(1)
   private val withVector = new JoinedRow()
 
-  def addRow(row: InternalRow): Unit =
-    score(row, if (row.isNullAt(embOrd)) -1 else load(row.getArray(embOrd)))
+  /** Scores one of a scan's records: a `ColumnarBatch` or a row. */
+  def add(record: Any): Unit = record match {
+    case batch: ColumnarBatch => addBatch(batch)
+    case row: InternalRow => score(row, if (row.isNullAt(embOrd)) -1 else load(row.getArray(embOrd)))
+  }
 
   /** Scores a block's rows in order: each vector is copied from the
     * float region into `buf`, and `row` is pointed at its payload. */
@@ -302,7 +295,7 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
     block = null
   }
 
-  def addBatch(batch: ColumnarBatch): Unit = {
+  private def addBatch(batch: ColumnarBatch): Unit = {
     val col = batch.column(embOrd)
     var r = 0
     while (r < batch.numRows) {
@@ -323,14 +316,13 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
     n
   }
 
-  /** What `keep` reads for a kept row: the row itself, or a resident
-    * row joined with its vector. */
-  private def keepInput(row: InternalRow, n: Int): InternalRow =
-    if (block == null) row
-    else {
-      if (n < 0) vector.setNullAt(0) else vector.update(0, block.vector(at, buf, n))
-      withVector(row, vector)
-    }
+  /** What `keep` reads for a kept row: the row joined with its vector
+    * (a resident row's from the block, with its null elements). */
+  private def keepInput(row: InternalRow, n: Int): InternalRow = {
+    if (n < 0) vector.setNullAt(0)
+    else vector.update(0, if (block == null) row.getArray(embOrd) else block.vector(at, buf, n))
+    withVector(row, vector)
+  }
 
   /** Score the row whose vector is in `buf` (`n` < 0: a null vector). */
   private def score(row: InternalRow, n: Int): Unit = {

@@ -302,13 +302,21 @@ class SemanticIndexSpec extends SparkSpec {
   private final case class Input(name: String, search: (Array[Float], Int, Boolean) => DataFrame,
       many: (DataFrame, Int) => DataFrame)
 
-  /** The scan inputs: VectorTopK over `records` with no resident blocks. */
-  private def scanned(name: String, records: DataFrame) = {
-    import graft.plans.VectorTopK
-    Input(name,
-      (q, k, cos) => VectorTopK.frame(records, "item", "embedding", QueryBatch.single(q), k, cos, batch = false),
-      (qs, k) => VectorTopK.frame(records, "item", "embedding", QueryBatch.collect(qs), k, cosine = false,
-        batch = true))
+  /** Runs `f` while storage memory can take no new block. */
+  private def storageFull[T](f: => T): T = org.apache.spark.BlockManagerBridge.withStorageFull(spark.sparkContext)(f)
+
+  /** A scan input: the searches of one `fresh()` instance whose building
+    * search ran while storage memory could cache none of its blocks, so
+    * that every later search scores the scan's own batches or rows. */
+  private def scanned(name: String, fresh: () => SemanticIndex) = {
+    lazy val ix = {
+      val i = fresh()
+      storageFull(i.search(null, 1).collect())
+      assert(i.residentBytes == 0 && i.resident.builds == i.resident.rdd.get.getNumPartitions)
+      i
+    }
+    Input(name, (q, k, cos) => if (cos) ix.searchCosine(q, k) else ix.search(q, k),
+      (qs, k) => ix.searchMany(qs, k))
   }
 
   /** A resident input: the searches of `fresh()` instances. `warm`: of
@@ -317,23 +325,23 @@ class SemanticIndexSpec extends SparkSpec {
   private def residentInput(name: String, fresh: () => SemanticIndex, warm: Boolean) = {
     lazy val warmed = {
       val ix = fresh()
-      assert(ix.residentBlocks.isEmpty)
+      assert(ix.resident.rdd.isEmpty)
       ix.search(null, 1).collect()
-      assert(ix.residentBlocks.nonEmpty)
+      assert(ix.residentBytes > 0)
       ix
     }
-    def ix() = if (warm) warmed else { val i = fresh(); assert(i.residentBlocks.isEmpty); i }
+    def ix() = if (warm) warmed else { val i = fresh(); assert(i.resident.rdd.isEmpty); i }
     Input(name, (q, k, cos) => if (cos) ix().searchCosine(q, k) else ix().search(q, k),
       (qs, k) => ix().searchMany(qs, k))
   }
 
-  /** Every input over `idx`'s rows: the row and the columnar adapter,
-    * and resident blocks built from either, on their building search
-    * and on a warm one. */
+  /** Every input over `idx`'s rows: the row and the columnar adapter
+    * (blocks that could not be cached), and resident blocks built from
+    * either, on their building search and on a warm one. */
   private def inputs(idx: SemanticIndex): Seq[Input] = {
     val pq = parquetCopy(idx)
     val inMemory = () => SemanticIndex.fromRecords(spark, idx.records)
-    Seq(scanned("row", idx.records), scanned("columnar", pq().records),
+    Seq(scanned("scan of rows", inMemory), scanned("scan of parquet", pq),
       residentInput("resident from rows, building", inMemory, warm = false),
       residentInput("resident from rows, warm", inMemory, warm = true),
       residentInput("resident from parquet, building", pq, warm = false),
@@ -609,9 +617,9 @@ class SemanticIndexSpec extends SparkSpec {
     * the building one reads the parquet files, the warm one reads none
     * of their bytes. */
   private def assertBuildThenWarm(idx: SemanticIndex, search: SemanticIndex => DataFrame): Unit = {
-    assert(idx.residentBlocks.isEmpty)
+    assert(idx.resident.rdd.isEmpty)
     val (read, building) = oneStage(search(idx))
-    assert(idx.residentBlocks.nonEmpty)
+    assert(idx.residentBytes > 0)
     assert(read > 0, "the building search read no parquet bytes")
     val (warmRead, warm) = oneStage(search(idx))
     assert(warmRead == 0, "a warm search read the parquet files")
@@ -619,21 +627,22 @@ class SemanticIndexSpec extends SparkSpec {
   }
 
   test("search plan: VectorTopK over the columnar scan, one job, one stage") {
-    // the building search and a warm one, and the scan without blocks
+    // the building search and a warm one, and the scan of an instance
+    // whose blocks could not be cached
     val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
     assertBuildThenWarm(pq(), _.search(Array(1f, 0f), 2))
     assertBuildThenWarm(pq(), _.searchCosine(Array(1f, 0f), 2))
-    // without resident blocks the operator reads the scan's batches
-    val scan = scanned("columnar", pq().records)
+    val scan = scanned("scan of parquet", pq)
     assert(assertOneStage(scan.search(Array(1f, 0f), 2, false)) > 0)
   }
 
   test("searchMany plan: VectorTopK over the columnar scan, one job, one stage") {
-    // the building search and a warm one, and the scan without blocks
+    // the building search and a warm one, and the scan of an instance
+    // whose blocks could not be cached
     val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
     val qs = queryFrame(LongType, 1L -> Array(1f, 0f), 2L -> Array(0f, 1f))
     assertBuildThenWarm(pq(), _.searchMany(qs, 2))
-    assert(assertOneStage(scanned("columnar", pq().records).many(qs, 2)) > 0)
+    assert(assertOneStage(scanned("scan of parquet", pq).many(qs, 2)) > 0)
   }
 
   test("add, remove and clear give instances with their own blocks; the old one keeps its own") {
@@ -642,20 +651,20 @@ class SemanticIndexSpec extends SparkSpec {
     val old = pq()
     val q = HashEmbedder().embedOne("apple pie")
     val before = old.search(q, 10).collect().toSeq
-    val blocks = old.residentBlocks.get
+    val blocks = old.resident.rdd.get
     val added = old.add(items("apple pie recipe"))
     val removed = old.remove(items("apple pie"))
     val cleared = old.clear()
-    Seq(added, removed, cleared).foreach(ix => assert(ix.residentBlocks.isEmpty))
+    Seq(added, removed, cleared).foreach(ix => assert(ix.resident.rdd.isEmpty))
     for ((ix, n) <- Seq(added -> 5, removed -> 3, cleared -> 0)) {
       val got = hits(ix.search(q, 10).collect().toSeq)
       assert(got.size == n && got == hits(formula(ix, q, 10, cosine = false).collect().toSeq))
     }
     assert(hits(added.search(q, 10).collect().toSeq).map(_._1).contains("apple pie recipe"))
     assert(!hits(removed.search(q, 10).collect().toSeq).map(_._1).contains("apple pie"))
-    val ids = Seq(added, removed, cleared).map(_.residentBlocks.get.id)
+    val ids = Seq(added, removed, cleared).map(_.resident.rdd.get.id)
     assert((ids :+ blocks.id).distinct.size == 4, ids)
-    assert(old.residentBlocks.get eq blocks)
+    assert(old.resident.rdd.get eq blocks)
     assert(assertOneStage(old.search(q, 10)) == 0)
     assert(old.search(q, 10).collect().toSeq == before && before.size == 4)
   }
@@ -664,17 +673,18 @@ class SemanticIndexSpec extends SparkSpec {
     val idx = onParquet(vecIndex(StringType, tieRows: _*))
     val q = Array(1f, 0f)
     val want = idx.search(q, 4).collect().toSeq
-    val rdd = idx.residentBlocks.get
-    assert(idx.residentBytes > 0)
+    val rdd = idx.resident.rdd.get
+    val parts = rdd.getNumPartitions
+    assert(idx.residentBytes > 0 && idx.resident.builds == parts)
     org.apache.spark.BlockManagerBridge.removeRdd(spark.sparkContext, rdd.id)
     assert(idx.residentBytes == 0)
     assert(assertOneStage(idx.search(q, 4)) > 0, "evicted blocks were not rebuilt from the files")
-    assert(idx.residentBlocks.get eq rdd)
-    assert(idx.residentBytes > 0)
+    assert(idx.resident.rdd.get eq rdd)
+    assert(idx.residentBytes > 0 && idx.resident.builds == 2 * parts)
     assert(idx.search(q, 4).collect().toSeq == want)
     rdd.unpersist(blocking = true)
     assert(idx.search(q, 4).collect().toSeq == want)
-    assert(idx.residentBlocks.get.id != rdd.id && idx.residentBytes > 0)
+    assert(idx.resident.rdd.get.id != rdd.id && idx.residentBytes > 0)
     assert(assertOneStage(idx.search(q, 4)) == 0)
   }
 
@@ -682,13 +692,45 @@ class SemanticIndexSpec extends SparkSpec {
     val pq = parquetCopy(vecIndex(StringType, tieRows: _*))
     val (a, b) = (pq(), pq())
     a.search(Array(1f, 0f), 2).collect()
-    assert(a.residentBlocks.nonEmpty && a.residentBytes > 0)
-    assert(b.residentBlocks.isEmpty && b.residentBytes == 0)
+    assert(a.resident.rdd.nonEmpty && a.residentBytes > 0)
+    assert(b.resident.rdd.isEmpty && b.residentBytes == 0)
     assert(b.count() == tieRows.size && b.contains("a") && !b.contains("zz"))
     b.getAll().collect()
     b.save(java.nio.file.Files.createTempDirectory("graft_resident").resolve("idx").toString)
     assert(b.add(items("new")).count() == tieRows.size + 1)
-    assert(b.residentBlocks.isEmpty && b.residentBytes == 0)
+    assert(b.resident.rdd.isEmpty && b.residentBytes == 0)
+  }
+
+  test("blocks storage memory cannot hold are built once; later searches score the scan") {
+    val idx = onParquet(vecIndex(StringType, tieRows: _*))
+    val q = Array(1f, 0f)
+    val want = hits(formula(idx, q, 4, cosine = false).collect().toSeq)
+    val (read, first) = storageFull(oneStage(idx.search(q, 4)))
+    assert(read > 0 && hits(first) == want)
+    val parts = idx.resident.rdd.get.getNumPartitions
+    assert(idx.resident.builds == parts && idx.residentBytes == 0)
+    // with storage memory still full, and after it has room again: each
+    // search reads the files in one stage and builds no block
+    for (full <- Seq(true, true, false)) {
+      val (read, rows) = if (full) storageFull(oneStage(idx.search(q, 4))) else oneStage(idx.search(q, 4))
+      assert(read > 0 && hits(rows) == want, s"full=$full")
+      assert(idx.resident.builds == parts && idx.residentBytes == 0, s"full=$full")
+    }
+    assert(hits(byQuery(idx.searchMany(queryFrame(LongType, 1L -> q), 4))(1L)) == want)
+    assert(idx.resident.builds == parts)
+  }
+
+  test("a partition past what one block holds gives the too-large block") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import graft.plans.ResidentBlock
+    def rows(n: Int): Iterator[Any] = Iterator.tabulate(n)(i => InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s"r$i"), UnsafeArrayData.fromPrimitiveArray(Array(1f, 2f))))
+    val types = Seq(StringType, vecType)
+    assert(new ResidentBlock.Builder(types, 1).fill(rows(100)).rows == 100)
+    // 100 vectors of 2 floats are 800 bytes
+    val over = new ResidentBlock.Builder(types, 1, limit = 400).fill(rows(100))
+    assert(over.rows < 0 && over.estimatedSize < 256)
   }
 
   test("residentBytes: rows x dims x 4 plus the payload rows, within the block headers") {
@@ -708,12 +750,12 @@ class SemanticIndexSpec extends SparkSpec {
           org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)), null)).getSizeInBytes + 8L
       }.sum
     val want = n.toLong * dims * 4 + rowBytes
-    val blocks = idx.residentBlocks.get.getNumPartitions
+    val blocks = idx.resident.rdd.get.getNumPartitions
     val got = idx.residentBytes
     assert(got >= want && got <= want + blocks * 256L, s"$got bytes for $want in $blocks blocks")
     // a block travels between JVMs as bytes (a remote cache read, here
     // a collect) and arrives whole
-    val fetched = idx.residentBlocks.get.collect()
+    val fetched = idx.resident.rdd.get.collect()
     assert(fetched.map(_.rows).sum == n && fetched.map(_.estimatedSize).sum <= got)
   }
 }

@@ -1,9 +1,24 @@
 package org.apache.spark
 
-/** Access to the `private[spark]` block manager master, to drop an
-  * RDD's cached blocks the way an eviction does: the RDD keeps its
-  * storage level, so its next job rebuilds and caches them again. */
+import org.apache.spark.memory.MemoryMode
+import org.apache.spark.storage.TestBlockId
+
+/** Access to the `private[spark]` block manager master and memory
+  * manager: to drop an RDD's cached blocks the way an eviction does (the
+  * RDD keeps its storage level, so its next job rebuilds and caches them
+  * again), and to run code while no new block fits in storage memory. */
 object BlockManagerBridge {
   def removeRdd(sc: SparkContext, rddId: Int): Unit =
     sc.env.blockManager.master.removeRdd(rddId, blocking = true)
+
+  /** Runs `f` while all but 1 KB of this JVM's on-heap storage memory is
+    * taken: every other cached block is evicted first, and a new block
+    * put in that time is not cached. */
+  def withStorageFull[T](sc: SparkContext)(f: => T): T = {
+    val mm = sc.env.memoryManager
+    val held = mm.maxOnHeapStorageMemory - 1024
+    require(mm.acquireStorageMemory(TestBlockId("storage-full"), held, MemoryMode.ON_HEAP),
+      s"could not take $held bytes of storage memory")
+    try f finally mm.releaseStorageMemory(held, MemoryMode.ON_HEAP)
+  }
 }
