@@ -211,9 +211,11 @@ final class ItemTopKHeap(val k: Int, itemType: DataType) {
 
   /** Whether an entry scored (`isNull`: a null score, `s` ignored)
     * whose item is `row`'s field `itemOrd` would enter. The item is read
-    * only on a tie with the worst kept score. */
+    * only on a tie with the worst kept score. A number below the full
+    * heap's worst number is turned away by one primitive compare, which
+    * is false on NaN, and on ±0.0 and ties, so those take the full order. */
   def admits(isNull: Boolean, s: Double, row: InternalRow, itemOrd: Int): Boolean =
-    size < k || (k > 0 && {
+    size < k || (k > 0 && (isNull || nullScore(0) || !(s < scores(0))) && {
       val c = compareScores(isNull, s, nullScore(0), scores(0))
       c > 0 || (c == 0 && itemFirst(itemOf(row, itemOrd), items(0)))
     })
@@ -279,7 +281,8 @@ object QueryBatch {
     new QueryBatch(IntegerType, Array(0), Array(0), Array(vec))
 
   /** Collect `(query_id, embedding)` — the first two columns of
-    * `queries`, embedding `array<float>` — into a batch. */
+    * `queries`, embedding `array<float>` — into a batch, read as the
+    * plan's internal rows. */
   def collect(queries: org.apache.spark.sql.DataFrame): QueryBatch = {
     val Array(idField, vecField) = queries.schema.fields.take(2)
     vecField.dataType match {
@@ -287,22 +290,25 @@ object QueryBatch {
       case dt => throw new IllegalArgumentException(
         s"searchMany: query vectors must be array<float>, got ${dt.catalogString}")
     }
-    val toId = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(idField.dataType)
     // ids are keyed by their binary form, so equal ids of any type
     // (binary and struct ids included) share one slot
-    val keyOf = UnsafeProjection.create(Array(idField.dataType))
+    val keyOf = UnsafeProjection.create(Seq(BoundReference(0, idField.dataType, nullable = true)))
     val slotOf = scala.collection.mutable.LinkedHashMap.empty[UnsafeRow, Int]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val rows = queries.select(queries.columns.take(2).map(queries.col).toIndexedSeq: _*).collect()
+    val rows = queries.select(queries.columns.take(2).map(queries.col).toIndexedSeq: _*)
+      .queryExecution.executedPlan.executeCollect()
     val slots = rows.map { r =>
-      val id = toId(r.get(0))
-      slotOf.getOrElseUpdate(keyOf(InternalRow(id)).copy(), { ids += id; ids.length - 1 })
+      slotOf.getOrElseUpdate(keyOf(r).copy(),
+        { ids += InternalRow.copyValue(r.get(0, idField.dataType)); ids.length - 1 })
     }
     // a null element reads as 0 in vec_dot (UnsafeArrayData stores it
     // zeroed), so it reads as 0 here too
-    val vecs = rows.map(r => if (r.isNullAt(1)) null else
-      r.getSeq[Any](1).iterator.map(x => if (x == null) 0f else x.asInstanceOf[Float]).toArray)
+    val vecs = rows.map { r =>
+      if (r.isNullAt(1)) null else {
+        val a = r.getArray(1)
+        Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) 0f else a.getFloat(i))
+      }
+    }
     new QueryBatch(idField.dataType, ids.toArray, slots, vecs)
   }
 }

@@ -195,7 +195,11 @@ final class SemanticIndex private (
    * task therefore emits at most q×k rows however many records it
    * reads, the corpus never shuffles, and the merge that assigns `rank`
    * 1..k runs on the driver, so a collect is one Spark stage. For q
-   * queries this replaces q corpus passes with one.
+   * queries this replaces q corpus passes with one. Inside that pass the
+   * queries of one length are scored 8 at a time over the record's
+   * floats, each into its own accumulator in element order, so every
+   * score keeps `vec_dot`'s bits; the queries left over take one pass
+   * over the floats each.
    *
    * The query batch is COLLECTED to the driver when `searchMany` is
    * called (it is a constant of the returned plan), so it must stay

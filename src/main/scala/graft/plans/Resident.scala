@@ -9,6 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.storage.StorageLevel
@@ -109,18 +110,24 @@ object ResidentBlock {
     }
 
     private def addRow(row: InternalRow): Unit =
-      add(row, if (row.isNullAt(embOrd)) null else row.getArray(embOrd))
+      add(row, if (row.isNullAt(embOrd)) null else row.getArray(embOrd), elementNulls = true)
 
+    /** A batch whose element vector is known to hold no null copies
+      * each row's floats in bulk. */
     private def addBatch(batch: ColumnarBatch): Unit = {
       val col = batch.column(embOrd)
+      val elementNulls = col match {
+        case w: WritableColumnVector => w.arrayData.numNulls > 0
+        case _ => true
+      }
       var r = 0
       while (!over && r < batch.numRows) {
-        add(batch.getRow(r), if (col.isNullAt(r)) null else col.getArray(r))
+        add(batch.getRow(r), if (col.isNullAt(r)) null else col.getArray(r), elementNulls)
         r += 1
       }
     }
 
-    private def add(row: InternalRow, vec: ArrayData): Unit = {
+    private def add(row: InternalRow, vec: ArrayData, elementNulls: Boolean): Unit = {
       val u = project(row)
       val p = u.getSizeInBytes
       val n = if (vec == null) -1 else vec.numElements()
@@ -134,12 +141,14 @@ object ResidentBlock {
       nb += p
       if (n > 0) {
         if (floats.length < nf + n) floats = java.util.Arrays.copyOf(floats, grown(floats.length, nf + n))
-        var i = 0
-        while (i < n) {
-          if (vec.isNullAt(i)) { floats(nf + i) = 0f; nulls += (rows.toLong << 32 | i) }
-          else floats(nf + i) = vec.getFloat(i)
-          i += 1
-        }
+        if (elementNulls) {
+          var i = 0
+          while (i < n) {
+            if (vec.isNullAt(i)) { floats(nf + i) = 0f; nulls += (rows.toLong << 32 | i) }
+            else floats(nf + i) = vec.getFloat(i)
+            i += 1
+          }
+        } else System.arraycopy(vec.toFloatArray(), 0, floats, nf, n)
         nf += n
       }
       meta(2 * rows) = n

@@ -25,7 +25,9 @@ import graft.functions.{ItemTopKHeap, QueryBatch}
  * null score (null record or query vector) last, then `item` asc. Scores
  * accumulate in double in element order, exactly as `vec_dot` and
  * `vec_cosine` do, so they are bit-identical to those kernels; a null
- * vector element reads as 0 on every input.
+ * vector element reads as 0 on every input. A batch scores its queries
+ * 8 at a time per pass over a record's floats ([[TopKScan]]); the
+ * remainder, and a single search, take one query per pass.
  *
  * `produced` holds the attributes the operator makes: `Seq(score)` for a
  * single search, whose output is every child column plus `score`; or
@@ -241,15 +243,42 @@ case class VectorTopKExec(item: Attribute, embedding: Attribute, queries: QueryB
 /** One task's scan: scores every record (a resident block's rows, or a
   * scan's batches or rows) against every query into the query's heap,
   * copying (through `keep`, bound to (slot, score) joined with the row
-  * and then its vector) only the rows that enter. */
+  * and then its vector) only the rows that enter.
+  *
+  * The queries of one length are scored in register blocks of
+  * [[TopKScan.Block]]: a record's floats are widened to double once, and
+  * one pass over them feeds 8 independent accumulators, one per query,
+  * where one chain per (record, query) waits on each add before it. Each
+  * accumulator sums `x(d) * q(d)` from 0.0 in element order, as `vec_dot`
+  * does, and a product of two floats is exact in double, so every score
+  * keeps `vec_dot`'s bits. A query outside a full block (the remainder, a
+  * null vector, another length than the record's) takes the scalar loop,
+  * which raises `vec_dot`'s length-mismatch error; so does every query of
+  * a single search. */
 private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemOrd: Int,
     itemAt: Int, itemType: DataType, embOrd: Int, keep: Seq[Expression]) {
+  import TopKScan.Block
   private val vecs = queries.vecs
   private val slots = queries.slots
   // cosine divides by ‖record‖·‖query‖; the query's norm, summed in
   // element order like vec_cosine's, is computed once
   private val qNorms = vecs.map(q =>
     if (q == null) 0.0 else math.sqrt(q.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
+  // per query length with a full block, in ascending order: the queries
+  // in full blocks; their vectors, transposed per block (element d of
+  // the block's query c at 8 * d + c); and the queries left to the
+  // scalar loop for a record of that length
+  private val (blockLength, blocks) = vecs.indices.filter(vecs(_) != null).groupBy(vecs(_).length).toArray
+    .collect { case (n, js) if n > 0 && js.length >= Block => n -> js.take(js.length / Block * Block).toArray }
+    .sortBy(_._1).unzip
+  private val transposed = blockLength.zip(blocks).map { case (n, js) =>
+    val t = new Array[Double](n * js.length)
+    for (i <- js.indices; d <- 0 until n) t(i / Block * Block * n + Block * d + i % Block) = vecs(js(i))(d).toDouble
+    t
+  }
+  private val scalar = blocks.map(js => vecs.indices.filterNot(js.toSet).toArray)
+  private val allScalar = vecs.indices.toArray
+  private var x = new Array[Double](64)
   private val heaps = Array.fill(queries.ids.length)(new ItemTopKHeap(k, itemType))
   private var buf = new Array[Float](64)
   private val head = new GenericInternalRow(2)
@@ -332,8 +361,12 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
       while (d < n) { norm += buf(d).toDouble * buf(d).toDouble; d += 1 }
       norm = math.sqrt(norm)
     }
-    var j = 0
-    while (j < vecs.length) {
+    val l = java.util.Arrays.binarySearch(blockLength, n)
+    if (l >= 0) scoreBlocks(row, n, norm, blocks(l), transposed(l))
+    val rest = if (l >= 0) scalar(l) else allScalar
+    var i = 0
+    while (i < rest.length) {
+      val j = rest(i)
       val q = vecs(j)
       val isNull = n < 0 || q == null
       var s = 0.0
@@ -341,18 +374,57 @@ private final class TopKScan(queries: QueryBatch, k: Int, cosine: Boolean, itemO
         if (n != q.length) throw new IllegalArgumentException(s"vector length mismatch: $n vs ${q.length}")
         var d = 0
         while (d < n) { s += buf(d).toDouble * q(d).toDouble; d += 1 }
-        if (cosine) {
-          val denom = norm * qNorms(j)
-          s = if (denom == 0.0) 0.0 else s / denom
-        }
       }
-      val h = heaps(slots(j))
-      if (h.admits(isNull, s, row, itemOrd)) {
-        head.setInt(0, slots(j))
-        if (isNull) head.setNullAt(1) else head.setDouble(1, s)
-        h.offer(isNull, s, project(joined.withRight(keepInput(row, n))).copy(), itemAt)
-      }
-      j += 1
+      offer(row, n, norm, j, isNull, s)
+      i += 1
     }
   }
+
+  /** Scores the row against the full blocks of queries `js` of its
+    * length `n`, transposed in `t`. */
+  private def scoreBlocks(row: InternalRow, n: Int, norm: Double, js: Array[Int], t: Array[Double]): Unit = {
+    if (x.length < n) x = new Array[Double](n)
+    var d = 0
+    while (d < n) { x(d) = buf(d).toDouble; d += 1 }
+    var b = 0
+    while (b < js.length) {
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var s4 = 0.0; var s5 = 0.0; var s6 = 0.0; var s7 = 0.0
+      var o = b * n
+      d = 0
+      while (d < n) {
+        val xd = x(d)
+        s0 += xd * t(o); s1 += xd * t(o + 1); s2 += xd * t(o + 2); s3 += xd * t(o + 3)
+        s4 += xd * t(o + 4); s5 += xd * t(o + 5); s6 += xd * t(o + 6); s7 += xd * t(o + 7)
+        o += Block
+        d += 1
+      }
+      offer(row, n, norm, js(b), isNull = false, s0); offer(row, n, norm, js(b + 1), isNull = false, s1)
+      offer(row, n, norm, js(b + 2), isNull = false, s2); offer(row, n, norm, js(b + 3), isNull = false, s3)
+      offer(row, n, norm, js(b + 4), isNull = false, s4); offer(row, n, norm, js(b + 5), isNull = false, s5)
+      offer(row, n, norm, js(b + 6), isNull = false, s6); offer(row, n, norm, js(b + 7), isNull = false, s7)
+      b += Block
+    }
+  }
+
+  /** Offers query `j`'s dot product `dot` with the row (a cosine divided
+    * by both norms) to the query's heap. */
+  private def offer(row: InternalRow, n: Int, norm: Double, j: Int, isNull: Boolean, dot: Double): Unit = {
+    var s = dot
+    if (cosine && !isNull) {
+      val denom = norm * qNorms(j)
+      s = if (denom == 0.0) 0.0 else s / denom
+    }
+    val h = heaps(slots(j))
+    if (h.admits(isNull, s, row, itemOrd)) {
+      head.setInt(0, slots(j))
+      if (isNull) head.setNullAt(1) else head.setDouble(1, s)
+      h.offer(isNull, s, project(joined.withRight(keepInput(row, n))).copy(), itemAt)
+    }
+  }
+}
+
+private object TopKScan {
+  /** Queries scored per pass over a record's floats. */
+  val Block = 8
 }

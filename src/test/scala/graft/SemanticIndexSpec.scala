@@ -449,23 +449,65 @@ class SemanticIndexSpec extends SparkSpec {
     }
   }
 
+  /** The crossJoin + row_number window searchMany replaced: `vec_dot`
+    * of every record with every query row, top-k per `query_id`, as
+    * (query_id, item, score bits, rank) rows; a binary id as a `Seq`. */
+  private def windowTopK(idx: SemanticIndex, queries: DataFrame, k: Int): Set[(Any, Any, Option[Long], Int)] = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("item"))
+    ranked(idx.records.crossJoin(queries.toDF("query_id", "qvec"))
+      .select(col("query_id"), col("item"), graft.functions.vec_dot(col("embedding"), col("qvec")).as("score"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k))
+  }
+
+  /** A ranked frame's (query_id, item, score bits, rank) rows. */
+  private def ranked(df: DataFrame): Set[(Any, Any, Option[Long], Int)] = {
+    val rows = df.collect().toSeq.map { r =>
+      val id = r.getAs[Any]("query_id") match { case b: Array[Byte] => b.toSeq; case v => v }
+      val Seq((item, bits)) = hits(Seq(r))
+      (id, item, bits, r.getAs[Int]("rank"))
+    }
+    assert(rows.distinct.size == rows.size)
+    rows.toSet
+  }
+
   test("searchMany: a repeated query_id merges both vectors' candidates into one top-k") {
     val idx = vecIndex(StringType, tieRows: _*)
     val qs = Seq[(Any, Array[Float])](1L -> Array(1f, 0f), 1L -> Array(0f, 1f), 2L -> Array(-1f, 0f))
     val got = byQuery(idx.searchMany(queryFrame(LongType, qs: _*), 4))
-    // the crossJoin + row_number window this operator replaced
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("item"))
-    val window = byQuery(idx.records.crossJoin(queryFrame(LongType, qs: _*))
-      .select(col("query_id"), col("item"),
-        graft.functions.vec_dot(col("embedding"), col("qvec")).as("score"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 4))
     assert(got.keySet == Set(1L, 2L))
-    assert(got.map { case (id, rs) => id -> hits(rs) } == window.map { case (id, rs) => id -> hits(rs) })
+    assert(ranked(idx.searchMany(queryFrame(LongType, qs: _*), 4)) == windowTopK(idx, queryFrame(LongType, qs: _*), 4))
     // both vectors feed id 1: b, c, d score 1 on the first, e on the second
     assert(hits(got(1L)).map(_._1) == Seq("b", "c", "d", "e"))
     assert(got(1L).map(_.getAs[Double]("score")) == Seq(1.0, 1.0, 1.0, 1.0))
     assert(hits(got(2L)) == hits(idx.search(Array(-1f, 0f), 4).collect().toSeq))
+
+    // struct and binary ids are keyed by their binary form; a frame read
+    // from parquet is collected by a job; every id keeps its type
+    val struct = StructType(Seq(StructField("a", LongType), StructField("b", StringType)))
+    val vs = Seq(Array(1f, 0f), Array(0f, 1f), Array(-1f, 0f), Array(1f, 1f))
+    val dir = java.nio.file.Files.createTempDirectory("graft_queries").resolve("q").toString
+    queryFrame(StringType, Seq("q1", "q2", "q1", "q3").zip(vs): _*).withColumn("extra", lit(1)).write.parquet(dir)
+    for ((idType, frame, distinct) <- Seq[(DataType, DataFrame, Int)](
+        (struct, queryFrame(struct, Seq(Row(1L, "x"), Row(2L, null), Row(1L, "x"), Row(2L, null)).zip(vs): _*), 2),
+        (BinaryType, queryFrame(BinaryType,
+          Seq(Array[Byte](1, 2), Array[Byte](3), Array[Byte](1, 2), Array.emptyByteArray).zip(vs): _*), 3),
+        (StringType, spark.read.parquet(dir), 3))) {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val many = try idx.searchMany(frame, 3) finally {
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      if (idType == StringType) assert(jobs.get > 0, "collecting the parquet query frame ran no job")
+      assert(many.schema("query_id").dataType == idType)
+      val want = windowTopK(idx, frame.select(frame.columns.take(2).map(col).toIndexedSeq: _*), 3)
+      assert(ranked(many) == want, idType)
+      assert(want.map(_._1).size == distinct, want)
+    }
   }
 
   test("searchMany: a query/record dimension mismatch raises vec_dot's error") {
@@ -475,13 +517,17 @@ class SemanticIndexSpec extends SparkSpec {
     val idx = vecIndex(StringType, tieRows: _*)
     val viaDot = cause(intercept[Exception](
       formula(idx, Array(1f, 0f, 0f), 2, cosine = false).collect()))
+    // alone, and inside a block: eight queries of the records' length
+    // around it
+    val inBlock = (0 until 9).map(j => (j.toLong: Any) -> (if (j == 3) Array(1f, 0f, 0f) else Array(j.toFloat, 1f)))
     inputs(idx).foreach { in =>
       val viaSearch = cause(intercept[Exception](in.search(Array(1f, 0f, 0f), 2, false).collect()))
-      val viaMany = cause(intercept[Exception](
-        in.many(queryFrame(LongType, 1L -> Array(1f, 0f, 0f)), 2).collect()))
-      assert(viaMany.isInstanceOf[IllegalArgumentException], s"${in.name}: $viaMany")
-      assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
-      assert(viaMany.getMessage == viaSearch.getMessage, in.name)
+      for (qs <- Seq(Seq[(Any, Array[Float])](1L -> Array(1f, 0f, 0f)), inBlock)) {
+        val viaMany = cause(intercept[Exception](in.many(queryFrame(LongType, qs: _*), 2).collect()))
+        assert(viaMany.isInstanceOf[IllegalArgumentException], s"${in.name}: $viaMany")
+        assert(viaMany.getMessage.contains("vector length mismatch"), viaMany.getMessage)
+        assert(viaMany.getMessage == viaSearch.getMessage, in.name)
+      }
       assert(viaSearch.getMessage == viaDot.getMessage, in.name)
     }
   }
@@ -493,6 +539,78 @@ class SemanticIndexSpec extends SparkSpec {
     val qs = (0 until 5).map(j => (j: Any) -> v())
     assertMatchesSearch(idx, IntegerType, 7, qs: _*)
     assertMatchesSearch(idx, IntegerType, 40, qs: _*)
+  }
+
+  /** A query frame of (Long id, vector) rows whose vectors may hold
+    * null elements. */
+  private def queryRows(rows: Seq[(Long, Seq[Any])]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (i, q) => Row(i, q) }, 2),
+      StructType(Seq(StructField("query_id", LongType), StructField("qvec", vecType))))
+
+  test("searchMany ≡ search ≡ vec_dot over two full query blocks and a remainder, dims 1, 7, 64, 65") {
+    val rnd = new scala.util.Random(12)
+    for (dims <- Seq(1, 7, 64, 65)) {
+      // floats that round when summed, each record vector held by two
+      // items so that scores tie
+      def v(): Seq[Any] = Seq.fill(dims)(rnd.nextGaussian().toFloat)
+      val records = (0 until 20).flatMap { i => val e = v(); Seq(Row(f"r$i%02d", e), Row(f"s$i%02d", e)) } ++
+        Seq(Row("nul", null), Row("nan", Float.NaN +: v().tail), Row("hole", v().init :+ null))
+      val idx = SemanticIndex.fromRecords(spark, spark.createDataFrame(spark.sparkContext.parallelize(records, 3),
+        StructType(Seq(StructField("item", StringType), StructField("embedding", vecType)))))
+      // 22 rows: 21 vectors of the records' length make two blocks of 8
+      // and a remainder of 5; the first block's rows hold a null query,
+      // a zero one and ones with a NaN and a null element, and id 1 is
+      // repeated in the second block
+      val vecs: Seq[Seq[Any]] = Seq(v(), v(), null, Seq.fill(dims)(0f), Float.NaN +: v().tail,
+        null +: v().tail) ++ Seq.fill(16)(v())
+      val ids = vecs.indices.map(j => if (j == 12) 1L else j.toLong)
+      val qs = ids.zip(vecs)
+      val frame = queryRows(qs)
+      for (k <- Seq(5, 50)) {
+        val want = windowTopK(idx, frame, k)
+        inputs(idx).foreach { in =>
+          assert(ranked(in.many(frame, k)) == want, s"${in.name}: dims=$dims k=$k")
+          qs.filter(_._1 != 1L).foreach { case (id, q) =>
+            val floats = Option(q).map(_.map(x => if (x == null) 0f else x.asInstanceOf[Float]).toArray).orNull
+            assert(hits(in.search(floats, k, false).collect().toSeq).zipWithIndex.map { case ((i, b), r) =>
+              (id, i, b, r + 1) }.toSet == want.filter(_._1 == id), s"${in.name}: dims=$dims k=$k query $id")
+          }
+        }
+      }
+    }
+  }
+
+  test("a full heap still breaks a tie with its worst score on item; NaN enters, a null score never displaces") {
+    // the tied items arrive in descending order, so every later one
+    // enters a full heap on the tie with its worst score
+    val tied = "jihgfedcba".map(c => (c.toString: Any) -> Array(1f, 0f))
+    val idx = vecIndex(StringType, tied ++ Seq("low" -> Array(0.5f, 0f), "nul" -> null,
+      "nan" -> Array(Float.NaN, 0f)): _*)
+    val q = Array(1f, 0f)
+    // nine copies of the query: a block of 8 and the scalar remainder
+    val many = queryRows((0 until 9).map(j => j.toLong -> q.toSeq))
+    val ins = inputs(idx)
+    for (k <- Seq(1, 3, 11, 12)) {
+      val want = hits(formula(idx, q, k, cosine = false).collect().toSeq)
+      assert(want.head._1 == "nan" && !want.map(_._1).contains("nul"), s"k=$k: $want")
+      ins.foreach { in =>
+        assert(hits(in.search(q, k, false).collect().toSeq) == want, s"${in.name}: k=$k")
+        val got = byQuery(in.many(many, k))
+        assert(got.keySet == (0 until 9).map(_.toLong).toSet)
+        got.values.foreach(rs => assert(hits(rs) == want, s"${in.name}: k=$k searchMany"))
+      }
+    }
+    assert(hits(formula(idx, q, 3, cosine = false).collect().toSeq).map(_._1) == Seq("nan", "a", "b"))
+    // ±0.0 compare equal: -0.0 ties a full heap's 0.0 and wins on item
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val heap = new graft.functions.ItemTopKHeap(1, StringType)
+    heap.offer(isNull = false, 0.0, InternalRow(UTF8String.fromString("b")), 0)
+    assert(heap.admits(isNull = false, -0.0, InternalRow(UTF8String.fromString("a")), 0))
+    assert(!heap.admits(isNull = false, -0.0, InternalRow(UTF8String.fromString("c")), 0))
+    assert(!heap.admits(isNull = true, 0.0, InternalRow(UTF8String.fromString("a")), 0))
+    assert(heap.admits(isNull = false, Double.NaN, InternalRow(UTF8String.fromString("z")), 0))
+    assert(!heap.admits(isNull = false, -1.0, InternalRow(UTF8String.fromString("a")), 0))
   }
 
   test("search and searchCosine ≡ sort-and-cut on both adapters, k = 0 and k > n") {
