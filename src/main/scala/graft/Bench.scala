@@ -33,7 +33,7 @@ object Bench {
   val setupBudgets: Map[String, Double] = Map(
     "ann_ivf" -> 6.5, "ann_ivfpq" -> 12.0, "ann_pq_topk" -> 2.0,
     "ann_bq_layout" -> 2.5, "ann_cascade_layout" -> 1.5,
-    "ann_bq_mutated" -> 6.0, "mm_phash_incremental" -> 4.0,
+    "ann_bq_mutated" -> 6.0,
     "dedup_near_incremental" -> 22.0, "dedup_cosine_incremental" -> 4.5,
     "dedup_edit_incremental" -> 5.0)
 

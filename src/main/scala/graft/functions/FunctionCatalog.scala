@@ -73,10 +73,6 @@ object FunctionCatalog {
       (es: Seq[Expression]) => QuantizedDot(es(0), es(1))),
     ("vec_signbits", "binary-quantize an array<float> to its sign-bit long",
       (es: Seq[Expression]) => VectorSignBits(es.head)),
-    ("vec_pack", "pack array<float> into binary",
-      (es: Seq[Expression]) => VecPack(es.head)),
-    ("vec_unpack", "unpack binary into array<float>",
-      (es: Seq[Expression]) => VecUnpack(es.head)),
     ("vec_topk", "per-group exact top-k (score desc, id asc) aggregate",
       (es: Seq[Expression]) => TopKByScore(es(0), es(1), int(es(2)))),
     ("vec_micros", "array<float> as exact integer micro-units",

@@ -123,7 +123,6 @@ package object functions {
   /** Approximate dot product of two quantized vectors (double). */
   def vec_dot_q8(a: Column, b: Column): Column = call_function("vec_dot_q8", a, b)
 
-  /** Pack an array<float> into little-endian binary (flat storage). */
   /** Per-group exact top-k (score desc, id asc) as a partial-capable
     * aggregate — array<struct<score,id>>, best-first. */
   def vec_topk(score: Column, id: Column, k: Int): Column =
@@ -148,9 +147,4 @@ package object functions {
   /** Exact integer test `cos(a, b) ≥ num/den` on micro-unit vectors. */
   def sim_micro_ge(a: Column, b: Column, num: Int, den: Int): Column =
     call_function("sim_micro_ge", a, b, lit(num), lit(den))
-
-  def vec_pack(v: Column): Column = call_function("vec_pack", v)
-
-  /** Unpack a binary packed vector back to array<float>. */
-  def vec_unpack(b: Column): Column = call_function("vec_unpack", b)
 }

@@ -527,9 +527,6 @@ object Queries {
     "text_classify" -> ((s: SparkSession, d: String) => TextQueries.textClassify(s, d)),
     "ann_hybrid" -> ((s: SparkSession, d: String) => AnnQueries.annHybrid(s, d)),
     "ann_filtered" -> ((s: SparkSession, d: String) => AnnQueries.annFiltered(s, d)),
-    "mm_features" -> (MultimodalQueries.mmFeatures _),
-    "mm_profile" -> (MultimodalQueries.mmProfile _),
-    "mm_phash" -> ((s: SparkSession, d: String) => MultimodalQueries.mmPhash(s, d)),
     "q_pivot" -> (RelationalQueries.qPivot _),
     "q_asof" -> (RelationalQueries.qAsof _),
     "q_asof_fast" -> (RelationalQueries.qAsofFast _),
@@ -572,18 +569,6 @@ object Queries {
     "text_dup_ngrams" -> ((s: SparkSession, d: String) =>
       TextQueries.textDupNgrams(s, d)),
     "q_cross_corr" -> ((s: SparkSession, d: String) => RelationalQueries.qCrossCorr(s, d)),
-    "mm_phash_incremental" -> ((s: SparkSession, d: String) => MultimodalQueries.mmPhashIncremental(s, d)),
-    "mm_luma" -> (MultimodalQueries.mmLuma _),
-    "mm_jpeg" -> (MultimodalQueries.mmJpeg _),
-    "mm_wav" -> (MultimodalQueries.mmWav _),
-    "mm_bmp" -> (MultimodalQueries.mmBmp _),
-    "mm_channel_stats" -> (MultimodalQueries.mmChannelStats _),
-    "mm_jpeg_channels" -> (MultimodalQueries.mmJpegChannels _),
-    "mm_video" -> (MultimodalQueries.mmVideo _),
-    "mm_wav_resample" -> (MultimodalQueries.mmWavResample _),
-    "mm_gif" -> (MultimodalQueries.mmGif _),
-    "mm_gif_channels" -> (MultimodalQueries.mmGifChannels _),
-    "mm_resize" -> (MultimodalQueries.mmResize _),
     "dedup_phrase" -> ((s: SparkSession, d: String) => DedupQueries.dedupPhrase(s, d)),
     "emb_dist_hist" -> ((s: SparkSession, d: String) => PipelineQueries.embDistHist(s, d)),
     "q_attribution" -> (RelationalQueries.qAttribution _),
@@ -612,8 +597,6 @@ object Queries {
     "q_split" -> (PipelineQueries.qSplit _),
     "ann_hard_negatives" -> ((s: SparkSession, d: String) => AnnQueries.annHardNegatives(s, d)),
     "q_gdpr_delete" -> (PipelineQueries.qGdprDelete _),
-    "mm_dedup_exact" -> (MultimodalQueries.mmDedupExact _),
-    "mm_framesample" -> ((s: SparkSession, d: String) => MultimodalQueries.mmFrameSample(s, d)),
     "text_canary" -> (TextQueries.textCanary _),
     "q_table_profile" -> (RelationalQueries.qTableProfile _),
     "q_expectations" -> (RelationalQueries.qExpectations _),
@@ -818,10 +801,6 @@ object Queries {
     "dedup_cosine_emb" -> DedupQueries.dedupCosineEmbSql,
     "dedup_cosine_incremental" -> DedupQueries.dedupCosineIncrementalSql,
     "dedup_cosine" -> DedupQueries.dedupCosineSql,
-    "mm_profile" -> MultimodalQueries.mmProfileSql,
-    "mm_phash" -> MultimodalQueries.mmPhashSql,
-    // byte-level payload reconstruction + CRC32-in-SQL (r4 upgrade)
-    "mm_features" -> MultimodalQueries.mmFeaturesSql,
     "dedup_decontaminate" -> PipelineQueries.decontaminateSql,
     "text_pii" -> PipelineQueries.textPiiSql,
     "q_pack" -> PipelineQueries.qPackSql,
@@ -873,18 +852,6 @@ object Queries {
     "q_kendall" -> RelationalQueries.qKendallSql,
     "text_dup_ngrams" -> TextQueries.textDupNgramsSql,
     "q_cross_corr" -> RelationalQueries.qCrossCorrSql,
-    "mm_phash_incremental" -> MultimodalQueries.mmPhashIncrementalSql,
-    "mm_luma" -> MultimodalQueries.mmLumaSql,
-    "mm_jpeg" -> MultimodalQueries.mmJpegSql,
-    "mm_wav" -> MultimodalQueries.mmWavSql,
-    "mm_bmp" -> MultimodalQueries.mmBmpSql,
-    "mm_channel_stats" -> MultimodalQueries.mmChannelStatsSql,
-    "mm_jpeg_channels" -> MultimodalQueries.mmJpegChannelsSql,
-    "mm_video" -> MultimodalQueries.mmVideoSql,
-    "mm_wav_resample" -> MultimodalQueries.mmWavResampleSql,
-    "mm_gif" -> MultimodalQueries.mmGifSql,
-    "mm_gif_channels" -> MultimodalQueries.mmGifChannelsSql,
-    "mm_resize" -> MultimodalQueries.mmResizeSql,
     "dedup_phrase" -> DedupQueries.dedupPhraseSql,
     "emb_dist_hist" -> PipelineQueries.embDistHistSql,
     "q_attribution" -> RelationalQueries.qAttributionSql,
@@ -918,8 +885,6 @@ object Queries {
     "q_split" -> PipelineQueries.qSplitSql,
     "ann_hard_negatives" -> AnnQueries.annHardNegativesSql,
     "q_gdpr_delete" -> PipelineQueries.qGdprDeleteSql,
-    "mm_dedup_exact" -> MultimodalQueries.mmDedupExactSql,
-    "mm_framesample" -> MultimodalQueries.mmFrameSampleSql,
     "text_canary" -> TextQueries.textCanarySql,
     "q_table_profile" -> RelationalQueries.qTableProfileSql,
     "q_expectations" -> RelationalQueries.qExpectationsSql,

@@ -348,17 +348,6 @@ class PlanAuditSpec extends SparkSpec {
       "one scan reading exactly (vec_id, embedding)")
   }
 
-  test("mm_phash: payloads hash partition-wise; only (doc_id, sig) rows shuffle") {
-    val p = plan("mm_phash")
-    assert(p.contains("MapPartitions"),
-      "asset build + dHash must ride the partition-wise decode map")
-    assert(p.contains("Exchange hashpartitioning(sig"),
-      "the collapse shuffles 16-byte (doc_id, sig) rows")
-    assert(!p.contains("Exchange hashpartitioning(payload") &&
-      !p.contains("CartesianProduct"),
-      "payload bytes never shuffle and no quadratic join appears")
-  }
-
   test("audit/segmentation trio: no Window at all — unpartitioned or " +
       "low-cardinality-key windows over corpus/entity frames are the one " +
       "plan class that funnels 100 TB through single tasks (the r7 weak set)") {

@@ -61,29 +61,6 @@ class RobustStatsSpec extends SparkSpec {
     assert(got(2L) == ((1L, 0L, 1L, 0.333333)), s"$got")
   }
 
-  test("mm_luma round-trip: the decoded pixel stats equal the stats of the " +
-      "SOURCE luma plane computed without touching the PNG path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ml").toString
-    Seq((17L, "alpha beta"), (40L, "gamma delta epsilon"))
-      .toDF("doc_id", "text")
-      .write.parquet(s"$dir/documents.parquet")
-    val got = graft.queries.MultimodalQueries.mmLuma(spark, dir).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getLong(3),
-        r.getDouble(4), r.getLong(5))).toMap
-    for ((id, text) <- Seq((17L, "alpha beta"), (40L, "gamma delta epsilon"))) {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(text.getBytes("UTF-8"))
-      val w = (16 + id % 16).toInt; val h = (16 + (id / 16) % 16).toInt
-      val luma = Array.tabulate(w * h)(i => md(i % 16))
-      val sum = luma.map(_ & 0xFF).map(_.toLong).sum
-      val want = (w, h, sum,
-        math.floor(sum.toDouble / (w * h) * 1e4 + 0.5) / 1e4,
-        graft.queries.MultimodalQueries.phash64Luma(w, h, luma).get)
-      assert(got(id) == want,
-        s"doc $id: PNG encode+decode must be identity: ${got(id)} vs $want")
-    }
-  }
-
   private def eventsDir(countsByUser: Seq[(Long, Int, Int)]): String = {
     // (user, n_events, day)
     val dir = java.nio.file.Files.createTempDirectory("graft_ev").toString

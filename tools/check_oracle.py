@@ -8,6 +8,8 @@ matching oracle SQL from oracle_sql.json in DuckDB over the sfDir
 tables, sorts columns by name + rows, and diffs values. A result
 directory with no oracle entry prints `UNCHECKED <name>`: it is not
 counted in the summary, so the summary alone cannot show it.
+
+Exits 1 if any key prints FAIL, ERR or UNCHECKED, else 0.
 """
 import json
 import os
@@ -25,7 +27,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str) -> None:
+def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -44,7 +46,8 @@ def main(sf_dir: str, out_dir: str) -> None:
                 continue
             # normalize dtypes for compare — but flag int-vs-float first:
             # the driver hashes rendered values, so BIGINT 150 vs HUGEINT
-            # 150.0 is a real failure (the mm_profile/q_sessionize bug class)
+            # 150.0 is a real failure (an integer result that one engine
+            # widens to float; q_sessionize had this bug)
             bad = None
             for c in g.columns:
                 gk, wk = g[c].dtype.kind, w[c].dtype.kind
@@ -68,11 +71,13 @@ def main(sf_dir: str, out_dir: str) -> None:
                 print(f"ok   {name} ({len(g)} rows)")
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {type(e).__name__}: {e}")
-    for name in sorted(os.listdir(out_dir)):
-        if name not in oracles and os.path.isdir(f"{out_dir}/{name}"):
-            print(f"UNCHECKED {name}")
+    unchecked = [name for name in sorted(os.listdir(out_dir))
+                 if name not in oracles and os.path.isdir(f"{out_dir}/{name}")]
+    for name in unchecked:
+        print(f"UNCHECKED {name}")
     print(f"{n_ok}/{len(oracles)} matched")
+    return 0 if n_ok == len(oracles) and not unchecked else 1
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
